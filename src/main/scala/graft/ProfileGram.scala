@@ -1,10 +1,9 @@
 package graft
 
 /** Dev profiling: the gram-assembly hot path at corpus scale —
-  * order-k build (allGramCountsK), legacy order-2 build (allCounts23)
-  * and full-corpus persisted scoring (kRows under scoreWithK), on the
-  * SoakLm synthetic corpus (30 uniform-random tokens per doc, the
-  * worst case for gram tables). The r16 A/B vehicle for the
+  * order-k build (allGramCountsK) and full-corpus persisted scoring
+  * (kRows under scoreWithK), on the SoakLm synthetic corpus (30
+  * uniform-random tokens per doc, the worst case for gram tables). The r16 A/B vehicle for the
   * interpreted-HOF → codegen gram kernels.
   * {{{ runMain graft.ProfileGram [nDocs] [k] [passes] }}} */
 object ProfileGram {
@@ -29,8 +28,6 @@ object ProfileGram {
       println(s"[gramprof] ---- pass $pass (n=$n, k=$k) ----")
       timed(s"buildK$k ")(
         graft.llm.Lm.lmBuildIndexK(corpus, "text", "doc_id", s"$dir/m$pass", k))
-      timed("build2   ")(
-        graft.llm.Lm.lmBuildIndex(corpus, "text", "doc_id", s"$dir/b$pass"))
       timed("scoreIdxK")(
         graft.llm.Lm.lmScoreIndexK(corpus, "text", "doc_id", s"$dir/m$pass")
           .write.format("noop").mode("overwrite").save())

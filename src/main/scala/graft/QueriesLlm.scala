@@ -3179,8 +3179,8 @@ FROM ann"""
       Retrieval.phraseSearchIndexSelective(queries, idx, k = 10)
     },
     Some(phraseOracleSql)) :+ QueryDef(
-    // CCNet-style n-gram LM quality scoring (Lm.lmScore): bigram +
-    // unigram counts with stupid backoff, every step integer
+    // CCNet-style n-gram LM quality scoring (Lm.lmScoreK at k = 2):
+    // bigram + unigram counts with stupid backoff, every step integer
     // fixed-point (ppm with floor division) so the score is hash-exact
     // across engines. Train split = even doc ids, score = the whole
     // corpus — odd documents exercise the unseen-context backoff and
@@ -3190,13 +3190,13 @@ FROM ann"""
     "llm_lm_score",
     (s, dir) => {
       val docs = t(s, dir, "documents")
-      Lm.lmScore(docs.filter(pmod(col("doc_id"), lit(2)) === 0), docs,
-        "text", "doc_id")
+      Lm.lmScoreK(docs.filter(pmod(col("doc_id"), lit(2)) === 0), docs,
+        "text", "doc_id", k = 2)
     },
     Some(lmOracleSql)) :+ QueryDef(
     // the persisted LM lifecycle: build on one train half, append the
-    // other (generations fold on read), compact through the crash-safe
-    // swap, completeness-check, score against the folded model — must
+    // other (generations fold on read), compact into the next GenDir
+    // generation, completeness-check, score against the folded model — must
     // be row-identical to the ad-hoc path over the same training
     // corpus (%4 in {0,2} == %2 == 0), so the oracle is reused
     // VERBATIM (the bm25/ivf index-pinning discipline)
@@ -3204,13 +3204,13 @@ FROM ann"""
     (s, dir) => {
       val idx = java.nio.file.Files.createTempDirectory("graft-lm-index-").toString
       val docs = t(s, dir, "documents")
-      Lm.lmBuildIndex(docs.filter(pmod(col("doc_id"), lit(4)) === 0),
+      Lm.lmBuildIndexK(docs.filter(pmod(col("doc_id"), lit(4)) === 0),
+        "text", "doc_id", idx, k = 2)
+      Lm.lmIndexAppendK(docs.filter(pmod(col("doc_id"), lit(4)) === 2),
         "text", "doc_id", idx)
-      Lm.lmIndexAppend(docs.filter(pmod(col("doc_id"), lit(4)) === 2),
-        "text", "doc_id", idx)
-      Lm.lmIndexCompact(s, idx)
-      require(Lm.lmIndexRecover(s, idx), "complete LM index expected")
-      Lm.lmScoreIndex(docs, "text", "doc_id", idx)
+      Lm.lmIndexCompactK(s, idx)
+      require(Lm.lmIndexRecoverK(s, idx), "complete LM index expected")
+      Lm.lmScoreIndexK(docs, "text", "doc_id", idx)
     },
     Some(lmOracleSql)) :+ QueryDef(
     // trigram order (two-level stupid backoff: tri -> 0.4 bi -> 0.16
@@ -3219,8 +3219,8 @@ FROM ann"""
     "llm_lm3_score",
     (s, dir) => {
       val docs = t(s, dir, "documents")
-      Lm.lmScore3(docs.filter(pmod(col("doc_id"), lit(2)) === 0), docs,
-        "text", "doc_id")
+      Lm.lmScoreK(docs.filter(pmod(col("doc_id"), lit(2)) === 0), docs,
+        "text", "doc_id", k = 3)
     },
     Some(lm3OracleSql)) :+ QueryDef(
     // the order-3 persisted lifecycle (build %4==0 / append %4==2 /
@@ -3241,21 +3241,20 @@ FROM ann"""
     (s, dir) => {
       val idx = java.nio.file.Files.createTempDirectory("graft-lm3-index-").toString
       val docs = t(s, dir, "documents")
-      Lm.lmBuildIndex(docs.filter(pmod(col("doc_id"), lit(4)) === 0),
-        "text", "doc_id", idx, order = 3)
-      Lm.lmIndexAppend(docs.filter(pmod(col("doc_id"), lit(4)) === 2),
+      Lm.lmBuildIndexK(docs.filter(pmod(col("doc_id"), lit(4)) === 0),
+        "text", "doc_id", idx, k = 3)
+      Lm.lmIndexAppendK(docs.filter(pmod(col("doc_id"), lit(4)) === 2),
         "text", "doc_id", idx)
-      Lm.lmIndexCompact(s, idx)
-      require(Lm.lmIndexRecover(s, idx), "complete order-3 LM index expected")
-      Lm.lmScoreIndex(docs, "text", "doc_id", idx)
+      Lm.lmIndexCompactK(s, idx)
+      require(Lm.lmIndexRecoverK(s, idx), "complete order-3 LM index expected")
+      Lm.lmScoreIndexK(docs, "text", "doc_id", idx)
     },
     Some(lm3OracleSql)) :+ QueryDef(
     // CCNet's production order: 5-gram with four-level stupid backoff
-    // (0.4^j down the orders), through the ORDER-GENERAL scorer
-    // (Lm.lmScoreK — the hand-rolled 2/3 paths are its spec-pinned
-    // special cases). The oracle re-derives all five count orders and
-    // the fifteen-branch contribution CASE over lockstep unnest
-    // positions, floor division everywhere.
+    // (0.4^j down the orders), through the same order-k scorer as
+    // llm_lm_score/llm_lm3_score. The oracle re-derives all five count
+    // orders and the fifteen-branch contribution CASE over lockstep
+    // unnest positions, floor division everywhere.
     "llm_lm5_score",
     (s, dir) => {
       val docs = t(s, dir, "documents")
@@ -3317,8 +3316,8 @@ FROM ann"""
     "llm_lm_buckets",
     (s, dir) => {
       val docs = t(s, dir, "documents")
-      val scored = Lm.lmScore(docs.filter(pmod(col("doc_id"), lit(2)) === 0),
-        docs, "text", "doc_id")
+      val scored = Lm.lmScoreK(docs.filter(pmod(col("doc_id"), lit(2)) === 0),
+        docs, "text", "doc_id", k = 2)
       Lm.lmQualityBuckets(scored, nBuckets = 3)
         .withColumn("tier", element_at(
           array(lit("head"), lit("middle"), lit("tail")), col("bucket")))
@@ -3495,7 +3494,7 @@ FROM ann"""
         CAST(SUM(c) AS BIGINT) // CAST(COUNT(*) AS BIGINT) AS lm_score_ppm
       FROM contrib GROUP BY doc_id"""
 
-  /** DuckDB twin of Lm.lmScore3 (same split): trigram counts via two
+  /** DuckDB twin of Lm.lmScoreK at k = 3 (same split): trigram counts via two
     * pos self-joins, the five-branch two-level backoff CASE, floor
     * division everywhere. */
   private def lm3OracleSql: String =
@@ -3536,7 +3535,7 @@ FROM ann"""
         CAST(SUM(c) AS BIGINT) // CAST(COUNT(*) AS BIGINT) AS lm_score_ppm
       FROM contrib GROUP BY doc_id"""
 
-  /** DuckDB twin of Lm.lmScore with train = doc_id % 2 = 0: counts over
+  /** DuckDB twin of Lm.lmScoreK at k = 2 with train = doc_id % 2 = 0: counts over
     * lockstep-unnest token positions, prev via a pos-1 self-join, the
     * same three-branch fixed-point contribution, floor division
     * everywhere (`//` == Spark `div` on nonnegative operands). */

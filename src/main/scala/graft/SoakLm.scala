@@ -5,7 +5,7 @@ import java.util.concurrent.atomic.AtomicLong
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 
 /** Scale soak for the n-gram LM quality scorer
-  * ([[graft.llm.Lm.lmScore]] / the persisted `lmBuildIndex` family): a
+  * ([[graft.llm.Lm.lmScoreK]] / the persisted `lmBuildIndexK` family): a
   * training corpus far past the oracle SFs builds the count model once,
   * then scoring batches run against it — the CCNet loop (train on the
   * trusted corpus, score the crawl). Observables: train wall + model
@@ -46,18 +46,18 @@ object SoakLm {
     def settleBytes(): Long = { Thread.sleep(2000); bytesRead.get() }
 
     var t0 = System.nanoTime()
-    graft.llm.Lm.lmBuildIndex(corpus, "text", "doc_id", s"$dir/model")
+    graft.llm.Lm.lmBuildIndexK(corpus, "text", "doc_id", s"$dir/model", k = 2)
     val buildSec = (System.nanoTime() - t0) / 1e9
     val modelBytes = java.nio.file.Files
       .walk(java.nio.file.Paths.get(s"$dir/model"))
       .filter(java.nio.file.Files.isRegularFile(_))
       .mapToLong(java.nio.file.Files.size(_)).sum()
-    val biRows = spark.read.parquet(s"$dir/model/bigrams").count()
+    val biRows = spark.read.parquet(s"$dir/model/grams_2").count()
 
     // bulk curation pass: score the whole corpus against the model
     t0 = System.nanoTime()
     val nScored = graft.llm.Lm
-      .lmScoreIndex(corpus, "text", "doc_id", s"$dir/model").count()
+      .lmScoreIndexK(corpus, "text", "doc_id", s"$dir/model").count()
     val scoreAllSec = (System.nanoTime() - t0) / 1e9
 
     // trickle batch: 5 docs touch <=150 of the 256 term buckets — the
@@ -65,37 +65,37 @@ object SoakLm {
     val trickle = corpus.filter("doc_id % 400000 = 7").localCheckpoint(true)
     val beforeTrickle = settleBytes()
     t0 = System.nanoTime()
-    graft.llm.Lm.lmScoreIndex(trickle, "text", "doc_id", s"$dir/model").count()
+    graft.llm.Lm.lmScoreIndexK(trickle, "text", "doc_id", s"$dir/model").count()
     val trickleSec = (System.nanoTime() - t0) / 1e9
     val trickleBytes = settleBytes() - beforeTrickle
 
     // parity at scale: persisted-model scores == ad-hoc scores (1k docs)
     val sample = corpus.filter("doc_id % 2000 = 3").localCheckpoint(true)
     val fromIndex = graft.llm.Lm
-      .lmScoreIndex(sample, "text", "doc_id", s"$dir/model")
-    val adhoc = graft.llm.Lm.lmScore(corpus, sample, "text", "doc_id")
+      .lmScoreIndexK(sample, "text", "doc_id", s"$dir/model")
+    val adhoc = graft.llm.Lm.lmScoreK(corpus, sample, "text", "doc_id", k = 2)
     val parityDiff = fromIndex.unionByName(adhoc)
       .groupBy("doc_id", "ntok", "lm_score_ppm").count()
       .filter("count <> 2").count()
 
     t0 = System.nanoTime()
-    graft.llm.Lm.lmIndexAppend(
+    graft.llm.Lm.lmIndexAppendK(
       spark.range(n, n + 100000L)
         .selectExpr("id AS doc_id", s"concat_ws(' ', ${toks("id", 30)}) AS text"),
       "text", "doc_id", s"$dir/model")
     val appendSec = (System.nanoTime() - t0) / 1e9
     t0 = System.nanoTime()
-    graft.llm.Lm.lmIndexCompact(spark, s"$dir/model")
+    graft.llm.Lm.lmIndexCompactK(spark, s"$dir/model")
     val compactSec = (System.nanoTime() - t0) / 1e9
     // count-cutoff pruning: at uniform-random bigrams nearly all pairs
-    // are singletons, so minBigramCount=2 collapses the model to the
+    // are singletons, so minCount=2 collapses the model to the
     // (tiny) repeated-pair head — the size lever a deployment pulls.
     // Post-compact slices live in GenDir generations — resolve them.
     def liveBigrams(): String =
-      graft.llm.GenDir.live(spark, s"$dir/model/bigrams")
+      graft.llm.GenDir.live(spark, s"$dir/model/grams_2")
     val prePrune = spark.read.parquet(liveBigrams()).count()
     t0 = System.nanoTime()
-    graft.llm.Lm.lmIndexCompact(spark, s"$dir/model", minBigramCount = 2L)
+    graft.llm.Lm.lmIndexCompactK(spark, s"$dir/model", minCount = 2L)
     val pruneSec = (System.nanoTime() - t0) / 1e9
     val postPrune = spark.read.parquet(liveBigrams()).count()
 
@@ -103,17 +103,15 @@ object SoakLm {
     // another ~token-count rows at this worst-case corpus, so the
     // build/score deltas here bound the real-text cost from above
     t0 = System.nanoTime()
-    graft.llm.Lm.lmBuildIndex(corpus, "text", "doc_id", s"$dir/model3",
-      order = 3)
+    graft.llm.Lm.lmBuildIndexK(corpus, "text", "doc_id", s"$dir/model3", k = 3)
     val build3Sec = (System.nanoTime() - t0) / 1e9
     t0 = System.nanoTime()
     val nScored3 = graft.llm.Lm
-      .lmScoreIndex(corpus, "text", "doc_id", s"$dir/model3").count()
+      .lmScoreIndexK(corpus, "text", "doc_id", s"$dir/model3").count()
     val score3Sec = (System.nanoTime() - t0) / 1e9
 
-    // order-5 leg through the ORDER-GENERAL family (CCNet's production
-    // order): four count slices past unigrams, gram keys as space-joined
-    // strings — at uniform-random tokens every 5-gram is distinct, so
+    // order-5 leg (CCNet's production order): four count slices past
+    // unigrams, gram keys as space-joined strings — at uniform-random tokens every 5-gram is distinct, so
     // slice sizes ~ token count bound the real-text cost from above.
     // The trickle leg re-checks catalog pruning at the widest order.
     t0 = System.nanoTime()

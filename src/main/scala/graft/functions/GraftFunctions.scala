@@ -1,6 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{SparkSession, functions}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.expressions.UserDefinedFunction
 
 /** SQL registration for graft's function surface, so `spark.sql` users
   * can call the engine's primitives directly (the reference's plugin
@@ -12,26 +15,30 @@ import org.apache.spark.sql.SparkSession
   */
 object GraftFunctions {
 
+  /** Idempotent: a name already in the session registry is left as is
+    * (re-registering replaces it and logs a WARN per function, once
+    * per session factory call). */
   def registerAll(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("graft_cosine",
-      exprs => CosineSimFloat(exprs(0), exprs(1)), "scala_udf")
-    reg.createOrReplaceTempFunction("graft_dot",
-      exprs => DotProductFloat(exprs(0), exprs(1)), "scala_udf")
-    reg.createOrReplaceTempFunction("graft_dup_ngram_ppm",
-      exprs => DupNgramPpm(exprs(0),
-        exprs(1).eval(null).asInstanceOf[Int]), "scala_udf")
-    reg.createOrReplaceTempFunction("graft_window_hashes",
-      exprs => WindowHashes(exprs(0),
-        exprs(1).eval(null).asInstanceOf[Int], 7L), "scala_udf")
-    reg.createOrReplaceTempFunction("graft_bow_score",
-      exprs => HashedBowScore(exprs(0), exprs(1)), "scala_udf")
+    def absent(name: String) = !reg.functionExists(FunctionIdentifier(name))
+    def expression(name: String)(build: Seq[Expression] => Expression): Unit =
+      if (absent(name)) reg.createOrReplaceTempFunction(name, build, "scala_udf")
+    def udf(name: String, f: UserDefinedFunction): Unit =
+      if (absent(name)) spark.udf.register(name, f)
 
-    spark.udf.register("graft_jump_hash",
-      (key: Long, n: Int) => HashFunctions.jumpHash(key, n))
-    spark.udf.register("graft_replica_buckets",
-      (key: Long, n: Int, buckets: Int) => HashFunctions.replicaBuckets(key, n, buckets))
-    spark.udf.register("graft_simhash",
+    expression("graft_cosine")(exprs => CosineSimFloat(exprs(0), exprs(1)))
+    expression("graft_dot")(exprs => DotProductFloat(exprs(0), exprs(1)))
+    expression("graft_dup_ngram_ppm")(exprs => DupNgramPpm(exprs(0),
+      exprs(1).eval(null).asInstanceOf[Int]))
+    expression("graft_window_hashes")(exprs => WindowHashes(exprs(0),
+      exprs(1).eval(null).asInstanceOf[Int], 7L))
+    expression("graft_bow_score")(exprs => HashedBowScore(exprs(0), exprs(1)))
+
+    udf("graft_jump_hash",
+      functions.udf((key: Long, n: Int) => HashFunctions.jumpHash(key, n)))
+    udf("graft_replica_buckets", functions.udf(
+      (key: Long, n: Int, buckets: Int) => HashFunctions.replicaBuckets(key, n, buckets)))
+    udf("graft_simhash", functions.udf(
       (tokens: Seq[String]) => {
         val votes = new Array[Int](64)
         tokens.foreach { t =>
@@ -43,8 +50,8 @@ object GraftFunctions {
         var b = 0
         while (b < 64) { if (votes(b) > 0) sig |= (1L << b); b += 1 }
         sig
-      })
-    spark.udf.register("graft_shingle_hashes",
+      }))
+    udf("graft_shingle_hashes", functions.udf(
       (tokens: Seq[String], n: Int) => {
         val th = tokens.map(t => HashFunctions.hashString(t, 7L)).toArray
         val out = scala.collection.mutable.LinkedHashSet.empty[Long]
@@ -63,6 +70,6 @@ object GraftFunctions {
           }
         }
         out.toSeq
-      })
+      }))
   }
 }

@@ -33,9 +33,6 @@ import org.apache.spark.unsafe.types.UTF8String
   *  - [[GramVariants]](tk, k): every order-1..k gram of every position
   *    as (ord, space-joined gram) — the exploded variants frame of
   *    `allGramCountsK` without the intermediate context structs.
-  *  - [[GramContexts23]](tk, order): the legacy named-column variants
-  *    frame of `allCounts23` — (ord, prev2, prev, term) with ord-1
-  *    rows carrying null prev/prev2 and ord-2 rows null prev2.
   */
 case class TokenContexts(child: Expression, k: Int)
     extends UnaryExpression with ImplicitCastInputTypes {
@@ -144,62 +141,4 @@ object GramVariants {
 
   def apply(c: Column, k: Int): Column =
     GraftBridge.column(GramVariants(GraftBridge.expression(c), k))
-}
-
-case class GramContexts23(child: Expression, order: Int)
-    extends UnaryExpression with ImplicitCastInputTypes {
-  require(order == 2 || order == 3, s"order must be 2 or 3, got $order")
-
-  override def inputTypes: Seq[DataType] = Seq(ArrayType(StringType))
-  override def dataType: DataType = ArrayType(StructType(Seq(
-    StructField("ord", IntegerType, nullable = false),
-    StructField("prev2", StringType, nullable = true),
-    StructField("prev", StringType, nullable = true),
-    StructField("term", StringType, nullable = false))),
-    containsNull = false)
-
-  override def nullSafeEval(input: Any): Any =
-    GramContexts23.variants(input.asInstanceOf[ArrayData], order)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.GramContexts23.variants($c, $order)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-object GramContexts23 {
-  /** Called from generated code. Position i emits (1, null, null, t_i);
-    * i >= 1 adds (2, null, t_{i-1}, t_i); order 3 and i >= 2 adds
-    * (3, t_{i-2}, t_{i-1}, t_i) — the exact allCounts23 variant rows. */
-  def variants(arr: ArrayData, order: Int): ArrayData = {
-    val n = arr.numElements()
-    if (n == 0) return new GenericArrayData(Array.empty[Any])
-    var total = n.toLong + math.max(n - 1, 0)
-    if (order == 3) total += math.max(n - 2, 0)
-    val out = new Array[Any](total.toInt)
-    var idx = 0
-    var i = 0
-    while (i < n) {
-      val t = arr.getUTF8String(i)
-      out(idx) = new GenericInternalRow(Array[Any](1, null, null, t))
-      idx += 1
-      if (i >= 1) {
-        out(idx) = new GenericInternalRow(
-          Array[Any](2, null, arr.getUTF8String(i - 1), t))
-        idx += 1
-        if (order == 3 && i >= 2) {
-          out(idx) = new GenericInternalRow(
-            Array[Any](3, arr.getUTF8String(i - 2), arr.getUTF8String(i - 1), t))
-          idx += 1
-        }
-      }
-      i += 1
-    }
-    new GenericArrayData(out)
-  }
-
-  def apply(c: Column, order: Int): Column =
-    GraftBridge.column(GramContexts23(GraftBridge.expression(c), order))
 }

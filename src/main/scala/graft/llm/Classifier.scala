@@ -247,7 +247,7 @@ object Classifier {
 
   /** Persist trained weights as the model artifact (one (b, w_micro)
     * parquet, KBs) — the train-once/score-many form every other model
-    * family here has ([[Lm.lmBuildIndex]], [[Bpe.saveMerges]]). */
+    * family here has ([[Lm.lmBuildIndexK]], [[Bpe.saveMerges]]). */
   def saveWeights(spark: org.apache.spark.sql.SparkSession, w: Array[Long],
                   path: String): Unit = {
     import spark.implicits._

@@ -19,13 +19,13 @@ import graft.functions.{HashedBowScore, TextFunctions}
   * them — cheap row-wise gates first, the LM model last, dedup among
   * full-pass survivors only). Every stage reuses an already
   * oracle-verified operator: gopherSignals, c4KeptLines, the
-  * deterministic md5-bucket HashedBowScore, Lm.lmScore self-scoring,
+  * deterministic md5-bucket HashedBowScore, Lm.lmScoreK (k = 2) self-scoring,
   * Dedup-style min-id exact dedup — so the composed
   * `llm_curation_scorecard` oracle is the same verified SQL pieces
   * joined together.
   *
   * Scale shape: gopher/C4/classifier are map-only codegen column
-  * arithmetic; the LM stage is the lmScore join pipeline (term-keyed
+  * arithmetic; the LM stage is the lmScoreK join pipeline (gram-keyed
   * shuffles, never driver state); dedup is one md5 groupBy. Counters
   * ride `Dataset.observe` (accumulator-backed, zero extra passes).
   */
@@ -82,7 +82,7 @@ object Curation {
     // LM stage: self-scored over the WHOLE input (the zero-reference
     // self-perplexity form); zero-token docs score 0 and fail any
     // positive cutoff
-    val lm = Lm.lmScore(in, in, textCol, idCol)
+    val lm = Lm.lmScoreK(in, in, textCol, idCol, k = 2)
       .select(col(idCol), col("lm_score_ppm"))
     val annotated = annotated0.join(lm, Seq(idCol), "left")
       .withColumn("lm_score_ppm", coalesce(col("lm_score_ppm"), lit(0L)))

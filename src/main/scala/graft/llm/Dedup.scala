@@ -938,15 +938,15 @@ object Dedup {
         df.repartition(parts).write.mode("overwrite"))))
   }
 
-  /** Heal any interrupted compaction swap on a persisted LSH dedup
+  /** Heal any interrupted compaction on a persisted LSH dedup
     * index and report whether `dir` holds a complete index (meta,
     * shingles AND bands) — the bootstrap check of
     * [[graft.streaming.StreamingIndexDedup]]; same contract as
     * [[Retrieval.bm25IndexRecover]]. */
   def lshIndexRecover(spark: org.apache.spark.sql.SparkSession,
                       dir: String): Boolean = {
-    GenDir.heal(spark, s"$dir/shingles")
-    GenDir.heal(spark, s"$dir/bands")
+    GenDir.recover(spark, s"$dir/shingles")
+    GenDir.recover(spark, s"$dir/bands")
     // completeness demands FINISHED writes ([[GenDir.completeDir]] /
     // existsLiveComplete): a build that died mid-slice leaves torn
     // directories bare fs.exists would bless. Meta here is build-time
@@ -959,7 +959,7 @@ object Dedup {
   /** [[lshIndexRecover]] for the span index's single window slice. */
   def spanIndexRecover(spark: org.apache.spark.sql.SparkSession,
                        dir: String): Boolean = {
-    GenDir.heal(spark, s"$dir/windows")
+    GenDir.recover(spark, s"$dir/windows")
     GenDir.completeDir(spark, s"$dir/meta") &&
       GenDir.existsLiveComplete(spark, s"$dir/windows")
   }

@@ -4,13 +4,10 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 
 /** Generation-directory protocol: crash-safe index compaction whose
-  * rewrites are CONCURRENT WITH READS — the serving upgrade over
-  * [[IndexSwap]], whose rename-aside window requires a read quiesce.
-  * Every persisted index family (BM25 postings/stats, phrase
-  * positions/stats, LM count slices, LSH shingles/bands, span windows,
-  * IVF cells, IVFADC codes) compacts through this protocol; IndexSwap
-  * remains only as the LEGACY protocol that [[heal]] still recovers
-  * (indexes compacted by earlier versions may have crashed mid-swap).
+  * rewrites are CONCURRENT WITH READS (no rename-aside window, so no
+  * read quiesce). Every persisted index family (BM25 postings/stats,
+  * phrase positions/stats, LM count slices, LSH shingles/bands, span
+  * windows, IVF cells, IVFADC codes) compacts through this protocol.
   *
   * Layout for an artifact base path `P` (e.g. `dir/postings`):
   *
@@ -36,7 +33,7 @@ import org.apache.spark.sql.SparkSession
   * ever leaves the resolvable state incomplete — and unlike the rename
   * protocol there is no moment when NO live directory exists.
   *
-  * Writer contract (unchanged from IndexSwap): ONE writer at a time —
+  * Writer contract: ONE writer at a time —
   * appends land in the current generation, so an append racing a
   * compaction could write rows into a generation about to be
   * superseded. Reads are what this protocol makes concurrent.
@@ -200,13 +197,10 @@ private[graft] object GenDir {
     fs.exists(p) && !fs.exists(new Path(p, "_SUCCESS"))
   }
 
-  /** Heal BOTH compaction protocols at `path`: [[IndexSwap]] rename
-    * crashes (indexes compacted by earlier versions) and uncommitted
-    * generation directories (the current protocol). Index recover
-    * entry points call this per artifact before trusting existence. */
-  def heal(spark: SparkSession, path: String): Unit = {
+  /** [[recover]] by path string — index recover entry points call this
+    * per artifact before trusting existence. */
+  def recover(spark: SparkSession, path: String): Unit = {
     val (fs, p) = fsOf(spark, path)
-    IndexSwap.recover(fs, p)
     recover(fs, p)
   }
 

@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
   * Datasets from Web Crawl Data", 2020): train a count LM on a trusted
   * reference split, score every candidate document by how predictable
   * its token stream is under that model, and keep/bucket documents by
-  * the score. Bigram + unigram counts with STUPID BACKOFF smoothing
+  * the score. Order-k counts (k in [2, 7]) with STUPID BACKOFF smoothing
   * (Brants et al., "Large Language Models in Machine Translation",
   * 2007 — the backoff designed for exactly this distributed count-based
   * setting: no discounting pass, score quality approaches Kneser–Ney as
@@ -21,13 +21,14 @@ import org.apache.spark.sql.functions._
   * engines and row orders and the operator stays DuckDB-oracle-
   * checkable (log-space floats would hash-mismatch on summation order).
   * For token position i of a document (tokens split on single spaces,
-  * empties dropped before adjacency):
+  * empties dropped before adjacency), at k = 2:
   *
   *  - i = 0 (no context):          c1(w) * 1e6  div T
   *  - c2(prev, w) > 0:             c2(prev, w) * 1e6 div c1(prev)
   *  - else (backoff, alpha = 0.4): c1(w) * 4e5  div T
   *
-  * with 0 for unseen tokens. Document score = sum(contrib) div ntok —
+  * with 0 for unseen tokens; higher orders continue the chain with
+  * 0.4^j factors (see [[scoreWithK]]). Document score = sum(contrib) div ntok —
   * a mean per-token predictability in ppm (high = fluent under the
   * reference model, low = gibberish/boilerplate/wrong-language), the
   * quality signal CCNet thresholds into head/middle/tail buckets.
@@ -35,19 +36,19 @@ import org.apache.spark.sql.functions._
   * tokens per shard; past that, shard the model and sum scores.
   *
   * Scale shape (100 TB):
-  *  - training = two groupBy shuffles over the train token stream
-  *    (unigrams, bigram pairs), both map-side combined; the model is
-  *    vocabulary-sized, orders of magnitude smaller than the corpus;
+  *  - training = one groupBy shuffle per order over the train token
+  *    stream (one shared shuffle for the persisted form), map-side
+  *    combined; the model is vocabulary-sized, orders of magnitude
+  *    smaller than the corpus;
   *  - scoring pre-aggregates the candidate stream to per-document
-  *    DISTINCT (prev, term) pairs with multiplicity, so each document
-  *    joins each of its pairs once however often it repeats (floor'd
-  *    contributions of identical pairs are equal — multiplying by m is
-  *    exact);
-  *  - the three count joins (bigram, context unigram, token unigram)
-  *    broadcast when the model fits the budget and fall back to
-  *    shuffle joins keyed by the model side otherwise; count tables
-  *    never shuffle corpus-sized data;
-  *  - the persisted-index form prunes both count slices to the scored
+  *    DISTINCT (context, term) tuples with multiplicity, so each
+  *    document joins each of its grams once however often it repeats
+  *    (floor'd contributions of identical grams are equal —
+  *    multiplying by m is exact);
+  *  - the 2k-1 count joins broadcast when the model fits the budget
+  *    and fall back to shuffle joins keyed by the model side
+  *    otherwise; count tables never shuffle corpus-sized data;
+  *  - the persisted-index form prunes every count slice to the scored
   *    batch's term buckets at the catalog level before reading — a
   *    small batch against a 100-TB-trained model reads only its own
   *    terms' slices.
@@ -65,67 +66,10 @@ object Lm {
   private def bucket(c: Column): Column =
     pmod(xxhash64(c), lit(TermBuckets)).cast("int")
 
-  /** (doc_id, first, prev, term) per token: prev = preceding token
-    * AFTER empty removal (adjacency over the cleaned stream), null at
-    * position 0. Built map-side by the codegen'd
-    * [[graft.functions.TokenContexts]] kernel (one static call per row
-    * — the pre-r16 zip_with-with-null-prefixed-shift formulation ran
-    * INTERPRETED and broke whole-stage codegen in the hot loop of
-    * every LM pass; GramExpressionsSpec pins row equality), so no
-    * positional self-join ever shuffles. */
-  private def pairRows(docs: DataFrame, textCol: String,
-                       idCol: String): DataFrame = {
-    val tk = graft.functions.TextFunctions.tokens(col(textCol))
-    docs.select(col(idCol).as("doc_id"), tk.as("tk"))
-      .select(col("doc_id"),
-        posexplode(graft.functions.TokenContexts(col("tk"), 2))
-          .as(Seq("p0", "tp")))
-      .select(col("doc_id"), (col("p0") === 0).as("first"),
-        col("tp.prev1").as("prev"), col("tp.term").as("term"))
-  }
-
-  /** (doc_id, p0, prev2, prev, term) per token — [[pairRows]] extended
-    * one context level (prev2 = token at p0-2, null for p0 < 2), the
-    * same codegen kernel at k = 3. */
-  private def tripleRows(docs: DataFrame, textCol: String,
-                         idCol: String): DataFrame = {
-    val tk = graft.functions.TextFunctions.tokens(col(textCol))
-    docs.select(col(idCol).as("doc_id"), tk.as("tk"))
-      .select(col("doc_id"),
-        posexplode(graft.functions.TokenContexts(col("tk"), 3))
-          .as(Seq("p0", "tp")))
-      .select(col("doc_id"), col("p0"), col("tp.prev2").as("prev2"),
-        col("tp.prev1").as("prev"), col("tp.term").as("term"))
-  }
-
-  /** (unigrams (term, c1), bigrams (prev, term, c2), total (t)) of a
-    * training corpus — all lazy frames, no driver materialization. */
-  private def counts(train: DataFrame, textCol: String, idCol: String) = {
-    val rows = pairRows(train, textCol, idCol)
-    val uni = rows.groupBy(col("term")).agg(count(lit(1)).as("c1"))
-    val bi = rows.filter(col("prev").isNotNull)
-      .groupBy(col("prev"), col("term")).agg(count(lit(1)).as("c2"))
-    val total = uni.agg(coalesce(sum(col("c1")), lit(0L)).as("t"))
-    (uni, bi, total)
-  }
-
-  /** [[pairRows]] carrying a language key (the column is per-document,
-    * so it rides the explode unchanged). */
-  private def pairRowsLang(docs: DataFrame, textCol: String, idCol: String,
-                           langCol: String): DataFrame = {
-    val tk = graft.functions.TextFunctions.tokens(col(textCol))
-    docs.select(col(idCol).as("doc_id"), col(langCol).as("lang"), tk.as("tk"))
-      .select(col("doc_id"), col("lang"),
-        posexplode(graft.functions.TokenContexts(col("tk"), 2))
-          .as(Seq("p0", "tp")))
-      .select(col("doc_id"), col("lang"), (col("p0") === 0).as("first"),
-        col("tp.prev1").as("prev"), col("tp.term").as("term"))
-  }
-
-  /** PER-LANGUAGE [[lmScore]] — CCNet's actual configuration (Wenzek
-    * et al. §4.3 score each language against ITS OWN reference model):
-    * counts key on (lang, gram), totals are per-language, and scoring
-    * joins carry the language — so a multilingual corpus never scores
+  /** PER-LANGUAGE [[lmScoreK]] at k = 2 — CCNet's actual configuration
+    * (Wenzek et al. §4.3 score each language against ITS OWN reference
+    * model): the order-k counts, totals and scoring joins all carry the
+    * language key — so a multilingual corpus never scores
     * minority-language documents against the majority language's
     * statistics. A GLOBAL model distorts exactly the branches that
     * divide by the corpus-wide total (first-token and unseen-backoff:
@@ -137,34 +81,10 @@ object Lm {
     * 0), exactly like unseen tokens under the global model. */
   def lmScorePerLang(train: DataFrame, docs: DataFrame, textCol: String,
                      idCol: String, langCol: String): DataFrame = {
-    val trows = pairRowsLang(train, textCol, idCol, langCol)
-    val uni = trows.groupBy(col("lang"), col("term")).agg(count(lit(1)).as("c1"))
-    val bi = trows.filter(col("prev").isNotNull)
-      .groupBy(col("lang"), col("prev"), col("term")).agg(count(lit(1)).as("c2"))
-    // per-language totals: one row per language — broadcast-joined on
-    // lang (the per-lang analog of the scoreWith crossJoin total)
-    val total = uni.groupBy(col("lang")).agg(sum(col("c1")).as("t"))
-    val rows = pairRowsLang(docs, textCol, idCol, langCol)
-      .groupBy(col("doc_id"), col("lang"), col("first"), col("prev"),
-        col("term"))
-      .agg(count(lit(1)).as("m"))
-    val uniPrev = uni.select(col("lang"), col("term").as("prev"),
-      col("c1").as("c1_prev"))
-    val uniTerm = uni.select(col("lang"), col("term"), col("c1").as("c1_term"))
-    rows
-      .join(bi, Seq("lang", "prev", "term"), "left")
-      .join(uniPrev, Seq("lang", "prev"), "left")
-      .join(uniTerm, Seq("lang", "term"), "left")
-      .join(broadcast(total), Seq("lang"), "left")
-      .withColumn("contrib_ppm",
-        when(col("first"), coalesce(expr("(c1_term * 1000000) div t"), lit(0L)))
-          .when(col("c2").isNotNull, expr("(c2 * 1000000) div c1_prev"))
-          .otherwise(coalesce(expr("(c1_term * 400000) div t"), lit(0L))))
-      .groupBy(col("doc_id"), col("lang"))
-      .agg(sum(col("m")).as("ntok"),
-        sum(col("m") * col("contrib_ppm")).as("s"))
-      .select(col("doc_id"), col("lang"), col("ntok"),
-        expr("s div ntok").as("lm_score_ppm"))
+    def keyed(df: DataFrame) = df.withColumn("lang", col(langCol))
+    val keys = Seq("lang")
+    val (cnts, total) = kGramCounts(keyed(train), textCol, idCol, 2, keys)
+    scoreWithK(keyed(docs), textCol, idCol, cnts, total, 2, keys)
   }
 
   /** CCNet head/middle/tail WITHIN each language: ntile over (lang)
@@ -197,7 +117,6 @@ object Lm {
       .collect().map(_.getString(0)).sorted
     langs.foreach { l =>
       require(!l.contains("/") && l.nonEmpty, s"unsafe lang value '$l'")
-      // the order-general (grams_n) family — lmScoreIndexK scores it
       lmBuildIndexK(train.filter(col(langCol) === l), textCol, idCol,
         s"$dir/lang=$l", order)
     }
@@ -211,10 +130,8 @@ object Lm {
   def lmScoreIndexPerLang(docs: DataFrame, textCol: String, idCol: String,
                           langCol: String, dir: String): DataFrame = {
     val spark = docs.sparkSession
-    val (fs, p) = {
-      val pp = new org.apache.hadoop.fs.Path(dir)
-      (pp.getFileSystem(spark.sparkContext.hadoopConfiguration), pp)
-    }
+    val p = new Path(dir)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val modeled = fs.listStatus(p).toSeq.map(_.getPath.getName)
       .filter(_.startsWith("lang=")).map(_.stripPrefix("lang=")).sorted
     val docLangs = docs.select(col(langCol).cast("string")).distinct()
@@ -245,154 +162,56 @@ object Lm {
       }
   }
 
-  /** Trigram counts (prev2, prev, term, c3) of a training corpus. */
-  private def triCounts(train: DataFrame, textCol: String,
-                        idCol: String): DataFrame =
-    tripleRows(train, textCol, idCol).filter(col("prev2").isNotNull)
-      .groupBy(col("prev2"), col("prev"), col("term"))
-      .agg(count(lit(1)).as("c3"))
-
-  /** Shared scoring tail of the ad-hoc and persisted-index paths.
-    * `uni` (term, c1), `bi` (prev, term, c2), `total` one row (t). */
-  private def scoreWith(docs: DataFrame, textCol: String, idCol: String,
-                        uni: DataFrame, bi: DataFrame,
-                        total: DataFrame): DataFrame = {
-    val rows = pairRows(docs, textCol, idCol)
-      .groupBy(col("doc_id"), col("first"), col("prev"), col("term"))
-      .agg(count(lit(1)).as("m"))
-    val uniPrev = uni.select(col("term").as("prev"), col("c1").as("c1_prev"))
-    val uniTerm = uni.select(col("term"), col("c1").as("c1_term"))
-    rows
-      .join(bi, Seq("prev", "term"), "left")
-      .join(uniPrev, Seq("prev"), "left")
-      .join(uniTerm, Seq("term"), "left")
-      .crossJoin(broadcast(total))
-      // c1_prev >= c2 > 0 whenever the bigram branch fires (both counts
-      // come from the same training rows), so no ANSI zero-division;
-      // unseen tokens null out the arithmetic and coalesce to 0
-      .withColumn("contrib_ppm",
-        when(col("first"), coalesce(expr("(c1_term * 1000000) div t"), lit(0L)))
-          .when(col("c2").isNotNull, expr("(c2 * 1000000) div c1_prev"))
-          .otherwise(coalesce(expr("(c1_term * 400000) div t"), lit(0L))))
-      .groupBy(col("doc_id"))
-      .agg(sum(col("m")).as("ntok"),
-        sum(col("m") * col("contrib_ppm")).as("s"))
-      .select(col("doc_id"), col("ntok"),
-        expr("s div ntok").as("lm_score_ppm"))
-  }
-
-  /** Score `docs` under a model trained ad-hoc on `train` — one row
-    * (doc_id, ntok, lm_score_ppm) per document with at least one
-    * token. The build-once/query-many form is [[lmBuildIndex]] /
-    * [[lmScoreIndex]]; this path re-counts the training corpus per
-    * call, which an index retires at scale. */
-  def lmScore(train: DataFrame, docs: DataFrame, textCol: String,
-              idCol: String): DataFrame = {
-    val (uni, bi, total) = counts(train, textCol, idCol)
-    scoreWith(docs, textCol, idCol, uni, bi, total)
-  }
-
-  /** Trigram scoring tail: two-level stupid backoff
-    * (tri → 0.4·bi → 0.16·uni), token positions 0/1 scored by the
-    * shorter orders they have context for. `tri` (prev2, prev, term,
-    * c3); the trigram denominator is the CONTEXT bigram's count
-    * c2(prev2, prev) — guaranteed present and >= c3 whenever the
-    * trigram row exists (both counted from the same training rows). */
-  private def scoreWith3(docs: DataFrame, textCol: String, idCol: String,
-                         uni: DataFrame, bi: DataFrame, tri: DataFrame,
-                         total: DataFrame): DataFrame = {
-    val rows = tripleRows(docs, textCol, idCol)
-      .withColumn("lvl", least(col("p0"), lit(2)))
-      .groupBy(col("doc_id"), col("lvl"), col("prev2"), col("prev"),
-        col("term"))
-      .agg(count(lit(1)).as("m"))
-    val biCtx = bi.select(col("prev").as("prev2"), col("term").as("prev"),
-      col("c2").as("c2_ctx"))
-    val biPt = bi.withColumnRenamed("c2", "c2_pt")
-    val uniPrev = uni.select(col("term").as("prev"), col("c1").as("c1_prev"))
-    val uniTerm = uni.select(col("term"), col("c1").as("c1_term"))
-    rows
-      .join(tri, Seq("prev2", "prev", "term"), "left")
-      .join(biCtx, Seq("prev2", "prev"), "left")
-      .join(biPt, Seq("prev", "term"), "left")
-      .join(uniPrev, Seq("prev"), "left")
-      .join(uniTerm, Seq("term"), "left")
-      .crossJoin(broadcast(total))
-      .withColumn("contrib_ppm",
-        when(col("lvl") === 0,
-          coalesce(expr("(c1_term * 1000000) div t"), lit(0L)))
-        .when(col("lvl") === 1,
-          when(col("c2_pt").isNotNull, expr("(c2_pt * 1000000) div c1_prev"))
-            .otherwise(coalesce(expr("(c1_term * 400000) div t"), lit(0L))))
-        .otherwise(
-          when(col("c3").isNotNull, expr("(c3 * 1000000) div c2_ctx"))
-            .when(col("c2_pt").isNotNull, expr("(c2_pt * 400000) div c1_prev"))
-            .otherwise(coalesce(expr("(c1_term * 160000) div t"), lit(0L)))))
-      .groupBy(col("doc_id"))
-      .agg(sum(col("m")).as("ntok"),
-        sum(col("m") * col("contrib_ppm")).as("s"))
-      .select(col("doc_id"), col("ntok"),
-        expr("s div ntok").as("lm_score_ppm"))
-  }
-
-  /** [[lmScore]] at trigram order — the next rung toward CCNet's
-    * 5-gram KenLM, same integer-exact discipline (the llm_lm3 oracles
-    * re-derive the whole three-order chain in DuckDB). Build/append/
-    * compact/score the persisted form with `order = 3`. */
-  def lmScore3(train: DataFrame, docs: DataFrame, textCol: String,
-               idCol: String): DataFrame = {
-    val (uni, bi, total) = counts(train, textCol, idCol)
-    scoreWith3(docs, textCol, idCol, uni, bi,
-      triCounts(train, textCol, idCol), total)
-  }
-
   // ---- order-general (k as a parameter) ---------------------------------
   //
-  // CCNet's production filter is a 5-gram model; hand-rolling one order
-  // at a time (lmScore bigram, lmScore3 trigram) multiplies code and
-  // oracles per rung. The order-k family below generalizes the
-  // null-prefixed zip to k context levels and the backoff to
+  // CCNet's production filter is a 5-gram model. One order-k family
+  // serves every order: k context levels and the backoff
   // 0.4^j · c_n/c_{n-1} over space-joined gram strings (tokens are
   // split on single spaces, so a space-joined n-gram is an injective
   // key — and the same key works verbatim in the DuckDB oracle).
-  // lmScoreK(k=2/3) is spec-pinned row-identical to lmScore/lmScore3.
+  // `keys` (empty for the global model, `lang` per language) ride every
+  // row, count group, total and scoring join.
 
-  /** (doc_id, p0, prev1..prev_{k-1}, term) per token — [[pairRows]]
-    * generalized: prev_j = the token j positions back after empty
-    * removal (null for p0 < j), one codegen'd
+  /** (doc_id, keys..., p0, prev1..prev_{k-1}, term) per token: prev_j =
+    * the token j positions back after empty removal (null for p0 < j),
+    * so no positional self-join ever shuffles; one codegen'd
     * [[graft.functions.TokenContexts]] call per row (the pre-r16
     * formulation folded k interpreted zip_with levels per row — k
     * intermediate struct arrays and a lambda call per element per
     * level, outside whole-stage codegen; GramExpressionsSpec pins row
     * equality). */
   private def kRows(docs: DataFrame, textCol: String, idCol: String,
-                    k: Int): DataFrame = {
+                    k: Int, keys: Seq[String]): DataFrame = {
     val tk = graft.functions.TextFunctions.tokens(col(textCol))
-    docs.select(col(idCol).as("doc_id"), tk.as("tk"))
-      .select(col("doc_id"),
+    val carried = ("doc_id" +: keys).map(col)
+    docs.select((col(idCol).as("doc_id") +: keys.map(col)) :+ tk.as("tk"): _*)
+      .select(carried :+
         posexplode(graft.functions.TokenContexts(col("tk"), k))
-          .as(Seq("p0", "tp")))
-      .select(col("doc_id") +: col("p0") +:
+          .as(Seq("p0", "tp")): _*)
+      .select((carried :+ col("p0")) ++
         (1 until k).map(j => col(s"tp.prev$j").as(s"prev$j")) :+
         col("tp.term").as("term"): _*)
   }
 
-  /** Count tables (gram → c) for every order 1..k over one training
-    * pass lineage, plus the unigram total. Gram keys are space-joined
-    * token runs (injective: tokens cannot contain spaces). */
+  /** Count tables (keys..., gram → c) for every order 1..k over one
+    * training pass lineage, plus the unigram total per key (one row
+    * for the global model). Gram keys are space-joined token runs
+    * (injective: tokens cannot contain spaces). */
   private def kGramCounts(train: DataFrame, textCol: String, idCol: String,
-                          k: Int): (Map[Int, DataFrame], DataFrame) = {
-    val rows = kRows(train, textCol, idCol, k)
+                          k: Int, keys: Seq[String] = Nil)
+      : (Map[Int, DataFrame], DataFrame) = {
+    val rows = kRows(train, textCol, idCol, k, keys)
     val cnts = (1 to k).map { n =>
-      val grouped =
-        if (n == 1) rows.groupBy(col("term").as("gram"))
-        else rows.filter(col(s"prev${n - 1}").isNotNull)
-          .groupBy(concat_ws(" ",
-            ((n - 1) to 1 by -1).map(j => col(s"prev$j")) :+ col("term"): _*)
-            .as("gram"))
-      n -> grouped.agg(count(lit(1)).as("c"))
+      val gram =
+        if (n == 1) col("term")
+        else concat_ws(" ",
+          ((n - 1) to 1 by -1).map(j => col(s"prev$j")) :+ col("term"): _*)
+      val from = if (n == 1) rows else rows.filter(col(s"prev${n - 1}").isNotNull)
+      n -> from.groupBy(keys.map(col) :+ gram.as("gram"): _*)
+        .agg(count(lit(1)).as("c"))
     }.toMap
-    val total = cnts(1).agg(coalesce(sum(col("c")), lit(0L)).as("t"))
+    val total = cnts(1).groupBy(keys.map(col): _*)
+      .agg(coalesce(sum(col("c")), lit(0L)).as("t"))
     (cnts, total)
   }
 
@@ -429,29 +248,27 @@ object Lm {
       .agg(coalesce(sum(col("c")), lit(0L))).head().getLong(0)
 
   /** Exact 0.4^j backoff factors in ppm (1e6, 4e5, 1.6e5, 64000,
-    * 25600, ...) as a Spark SQL array literal — integer-exact out to
-    * j = 8 (4^8 · 10^{-2} = 655.36 would break; ks above 8 are refused
-    * upstream, j ≤ k-1 = 7 → 40.96... let's see: j=5 → 10240, j=6 →
-    * 4096, j=7 → 1638.4 NOT integral — hence the k ≤ 7 bound below). */
+    * 25600, 10240, 4096) — integral through j = 6; j = 7 would be
+    * 1638.4, hence the k ≤ 7 bound below. */
   private def backoffFactors(k: Int): Seq[Long] =
     (0 until k).scanLeft(1000000L)((f, _) => f * 2 / 5).take(k)
 
-  /** The order-k scoring tail. `cnts(n)` carries (gram, c) for order n;
-    * `total` one row (t). For token position p0, the usable context
-    * level is lvl = min(p0, k-1); the highest order n with a counted
-    * gram scores 0.4^(lvl+1-n) · c_n(g_n)/c_{n-1}(x_n) (floor ppm at
-    * every step), falling to the unigram 0.4^lvl · c_1(term)/T, and 0
-    * for unseen tokens — exactly the lmScore/lmScore3 chain continued
-    * upward. c_{n-1}(x_n) ≥ c_n(g_n) > 0 whenever the order-n branch
-    * fires (both counted from the same training rows), so no ANSI
-    * zero-division. */
+  /** The order-k scoring tail. `cnts(n)` carries (keys..., gram, c)
+    * for order n; `total` (keys..., t). For token position p0, the
+    * usable context level is lvl = min(p0, k-1); the highest order n
+    * with a counted gram scores 0.4^(lvl+1-n) · c_n(g_n)/c_{n-1}(x_n)
+    * (floor ppm at every step), falling to the unigram
+    * 0.4^lvl · c_1(term)/T, and 0 for unseen tokens (and for every
+    * token of a key absent from the training side). c_{n-1}(x_n) ≥
+    * c_n(g_n) > 0 whenever the order-n branch fires (both counted from
+    * the same training rows), so no ANSI zero-division. */
   private def scoreWithK(docs: DataFrame, textCol: String, idCol: String,
                          cnts: Map[Int, DataFrame], total: DataFrame,
-                         k: Int): DataFrame = {
+                         k: Int, keys: Seq[String] = Nil): DataFrame = {
     val prevCols = (1 until k).map(j => s"prev$j")
-    var rows = kRows(docs, textCol, idCol, k)
+    var rows = kRows(docs, textCol, idCol, k, keys)
       .withColumn("lvl", least(col("p0"), lit(k - 1)))
-      .groupBy(("doc_id" +: "lvl" +: prevCols :+ "term").map(col): _*)
+      .groupBy((("doc_id" +: keys) ++ ("lvl" +: prevCols :+ "term")).map(col): _*)
       .agg(count(lit(1)).as("m"))
     for (n <- 2 to k) {
       // prev_j null only at doc starts (monotone in j), so guarding the
@@ -461,32 +278,41 @@ object Lm {
       rows = rows
         .withColumn(s"g_$n", when(col(s"prev${n - 1}").isNotNull,
           concat_ws(" ", ws: _*)))
-        .withColumn(s"x_$n", when(col(s"prev${n - 1}").isNotNull,
-          concat_ws(" ", ws.dropRight(1): _*)))
+        // the order-2 context is the single token prev1: no string copy
+        .withColumn(s"x_$n", if (n == 2) col("prev1")
+          else when(col(s"prev${n - 1}").isNotNull,
+            concat_ws(" ", ws.dropRight(1): _*)))
     }
-    var joined = rows.join(
-      cnts(1).select(col("gram").as("term"), col("c").as("c1_term")),
-      Seq("term"), "left")
+    def counted(n: Int, gram: String, c: String) =
+      cnts(n).select(keys.map(col) :+ col("gram").as(gram) :+ col("c").as(c): _*)
+    var joined = rows.join(counted(1, "term", "c1_term"), keys :+ "term", "left")
     for (n <- 2 to k) joined = joined
-      .join(cnts(n).select(col("gram").as(s"g_$n"), col("c").as(s"c_$n")),
-        Seq(s"g_$n"), "left")
-      .join(cnts(n - 1).select(col("gram").as(s"x_$n"), col("c").as(s"cx_$n")),
-        Seq(s"x_$n"), "left")
+      .join(counted(n, s"g_$n", s"c_$n"), keys :+ s"g_$n", "left")
+      .join(counted(n - 1, s"x_$n", s"cx_$n"), keys :+ s"x_$n", "left")
+    val withTotal =
+      if (keys.isEmpty) joined.crossJoin(broadcast(total))
+      else joined.join(broadcast(total), keys, "left")
     val factSql = backoffFactors(k).mkString("array(", "L, ", "L)")
-    var contrib: Column = coalesce(
-      expr(s"(c1_term * element_at($factSql, lvl + 1)) div t"), lit(0L))
+    // the unigram count is clamped to the total: a crash between the
+    // grams_1 move and the meta write of a plain append leaves c1 > t,
+    // which would push a contribution past 1e6 ppm (in every committed
+    // state c1 <= t, so this never changes a committed score). `if`,
+    // not least(): least() skips nulls and would turn an unseen
+    // token's null c1 into t
+    var contrib: Column = coalesce(expr(
+      s"(if(c1_term > t, t, c1_term) * element_at($factSql, lvl + 1)) div t"),
+      lit(0L))
     for (n <- 2 to k) // ascending, so the HIGHEST order ends outermost
       contrib = when(col(s"c_$n").isNotNull,
         expr(s"(c_$n * element_at($factSql, lvl + 2 - $n)) div cx_$n"))
         .otherwise(contrib)
-    joined
-      .crossJoin(broadcast(total))
+    withTotal
       .withColumn("contrib_ppm", contrib)
-      .groupBy(col("doc_id"))
+      .groupBy(("doc_id" +: keys).map(col): _*)
       .agg(sum(col("m")).as("ntok"),
         sum(col("m") * col("contrib_ppm")).as("s"))
-      .select(col("doc_id"), col("ntok"),
-        expr("s div ntok").as("lm_score_ppm"))
+      .select(("doc_id" +: keys).map(col) :+ col("ntok") :+
+        expr("s div ntok").as("lm_score_ppm"): _*)
   }
 
   private def requireOrder(k: Int): Unit =
@@ -494,9 +320,12 @@ object Lm {
       s"order must be in [2, 7], got $k (0.4^j ppm factors stay integral " +
         "through j = 6; higher orders would break the integer-exact contract)")
 
-  /** [[lmScore]] at order `k` — spec-pinned row-identical to
-    * [[lmScore]]/[[lmScore3]] at k = 2/3, and the llm_lm5 oracles
-    * re-derive the whole five-order chain in DuckDB at k = 5. */
+  /** Score `docs` under an order-`k` model trained ad-hoc on `train` —
+    * one row (doc_id, ntok, lm_score_ppm) per document with at least
+    * one token. The llm_lm/lm3/lm5 oracles re-derive the whole chain
+    * in DuckDB at k = 2/3/5. The build-once/query-many form is
+    * [[lmBuildIndexK]] / [[lmScoreIndexK]]; this path re-counts the
+    * training corpus per call, which an index retires at scale. */
   def lmScoreK(train: DataFrame, docs: DataFrame, textCol: String,
                idCol: String, k: Int): DataFrame = {
     requireOrder(k)
@@ -507,33 +336,48 @@ object Lm {
   private def gramSlices(dir: String, k: Int): Seq[String] =
     (1 to k).map(n => s"$dir/grams_$n")
 
+  /** ONE corpus pass for all k orders: the [[allGramCountsK]]
+    * aggregate, persisted (DISK_ONLY — the bm25BuildIndex lesson: never
+    * race execution memory at scale) so `write` (one staged slice-write
+    * job) and the unigram total both re-read the model-sized aggregate.
+    * Returns the total. */
+  private def writeCountsK(train: DataFrame, textCol: String, idCol: String,
+                           k: Int)(write: DataFrame => Unit): Long = {
+    val all = allGramCountsK(train, textCol, idCol, k)
+      .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
+    try { write(all); totalFromAll(all) } finally all.unpersist()
+  }
+
+  private def writeMetaK(spark: SparkSession, dir: String, t: Long,
+                         nDocs: Long, k: Int): Unit = {
+    import spark.implicits._
+    Seq((t, nDocs, k.toLong)).toDF("t", "n_docs", "ord")
+      .coalesce(1).write.mode("overwrite").parquet(s"$dir/meta")
+  }
+
+  /** Fresh build: reset the generation history AND increment log, write
+    * every slice from one staged job, run `beforeMeta`, then meta. */
+  private def buildK(train: DataFrame, textCol: String, idCol: String,
+                     dir: String, k: Int)(beforeMeta: => Unit): Unit = {
+    requireOrder(k)
+    val spark = train.sparkSession
+    GenDir.resetAll(spark, gramSlices(dir, k): _*)
+    IncLog.reset(spark, dir, gramSlices(dir, k))
+    val t = writeCountsK(train, textCol, idCol, k)(
+      writeGramSlicesStaged(_, k, dir, n => s"$dir/grams_$n"))
+    beforeMeta
+    writeMetaK(spark, dir, t, train.count(), k)
+  }
+
   /** Persist an order-k model: one `grams_n/` slice per order (gram,
     * c), partitioned by the hash bucket of the gram's FIRST token —
     * every token of a gram a scored batch needs is a batch token, so
     * the batch's term buckets prune every slice at the catalog level
-    * (the [[lmScoreIndex]] discipline, order-general). Meta (t, n_docs,
-    * ord) lands LAST as the commit marker. */
+    * (see [[lmScoreIndexK]]). Meta (t, n_docs, ord) lands LAST as the
+    * commit marker. */
   def lmBuildIndexK(train: DataFrame, textCol: String, idCol: String,
-                    dir: String, k: Int): Unit = {
-    requireOrder(k)
-    val spark = train.sparkSession
-    import spark.implicits._
-    // fresh build starts the generation history AND increment log over
-    GenDir.resetAll(spark, gramSlices(dir, k): _*)
-    IncLog.reset(spark, dir, gramSlices(dir, k))
-    // ONE corpus pass for all k orders; the slice writes and the
-    // unigram total re-read the model-sized aggregate (DISK_ONLY — the
-    // bm25BuildIndex lesson: never race execution memory at scale).
-    // All k slices land from ONE staged write job + renames (r15
-    // overlapped k jobs; this removes the other k-1 entirely).
-    val all = allGramCountsK(train, textCol, idCol, k)
-      .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
-    writeGramSlicesStaged(all, k, dir, n => s"$dir/grams_$n")
-    val t = totalFromAll(all)
-    all.unpersist()
-    Seq((t, train.count(), k.toLong)).toDF("t", "n_docs", "ord")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/meta")
-  }
+                    dir: String, k: Int): Unit =
+    buildK(train, textCol, idCol, dir, k)(())
 
   // ---- exactly-once batch ingest (the [[IncLog]] protocol) --------------
 
@@ -551,23 +395,9 @@ object Lm {
     * are already in meta. */
   def lmBuildIndexBatchK(train: DataFrame, textCol: String, idCol: String,
                          dir: String, k: Int, batchId: Long,
-                         streamId: String = ""): Unit = {
-    requireOrder(k)
-    val spark = train.sparkSession
-    import spark.implicits._
-    GenDir.resetAll(spark, gramSlices(dir, k): _*)
-    IncLog.reset(spark, dir, gramSlices(dir, k))
-    // one corpus pass for all k orders, one staged slice-write job —
-    // see [[lmBuildIndexK]]
-    val all = allGramCountsK(train, textCol, idCol, k)
-      .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
-    writeGramSlicesStaged(all, k, dir, n => s"$dir/grams_$n")
-    val t = totalFromAll(all)
-    all.unpersist()
-    IncLog.commitBatch(spark, dir, batchId, 0L, 0L, streamId)
-    Seq((t, train.count(), k.toLong)).toDF("t", "n_docs", "ord")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/meta")
-  }
+                         streamId: String = ""): Unit =
+    buildK(train, textCol, idCol, dir, k)(
+      IncLog.commitBatch(train.sparkSession, dir, batchId, 0L, 0L, streamId))
 
   /** Append one stream batch EXACTLY ONCE: counts land as increment
     * directories (`grams_n.inc/batch-<id>` — overwrite, so redelivery
@@ -582,16 +412,12 @@ object Lm {
     val spark = train.sparkSession
     if (IncLog.isApplied(spark, dir, batchId, streamId)) return false
     val ord = readMetaK(spark, dir)._2
-    // one corpus pass for all ord orders, one staged slice-write job
-    // into the batch's increment dirs (idempotent: the stage rename
-    // deletes a redelivered batch's leftovers first; nothing is
-    // visible until the commit marker below) — see [[lmBuildIndexK]]
-    val all = allGramCountsK(train, textCol, idCol, ord)
-      .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
-    writeGramSlicesStaged(all, ord, dir,
-      n => IncLog.incPath(s"$dir/grams_$n", batchId, streamId))
-    val t = totalFromAll(all)
-    all.unpersist()
+    // one staged slice-write job into the batch's increment dirs
+    // (idempotent: the stage rename deletes a redelivered batch's
+    // leftovers first; nothing is visible until the commit marker below)
+    val t = writeCountsK(train, textCol, idCol, ord)(
+      writeGramSlicesStaged(_, ord, dir,
+        n => IncLog.incPath(s"$dir/grams_$n", batchId, streamId)))
     IncLog.commitBatch(spark, dir, batchId, t, train.count(), streamId)
     true
   }
@@ -636,27 +462,36 @@ object Lm {
     * generations). */
   private def writeGramSlicesStaged(all: DataFrame, k: Int,
                                     stagingBase: String,
-                                    destFor: Int => String): Unit = {
-    val spark = all.sparkSession
-    val staging = s"$stagingBase/.stage-${java.util.UUID.randomUUID()}"
-    val stagingP = new org.apache.hadoop.fs.Path(staging)
-    val fs = stagingP.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    try {
-      all.withColumn("pt", bucket(substring_index(col("gram"), " ", 1)))
-        .repartition(col("ord"), col("pt"))
-        .sortWithinPartitions(col("ord"), col("pt"), col("gram"))
-        .write.mode("overwrite").partitionBy("ord", "pt").parquet(staging)
+                                    destFor: Int => String): Unit =
+    staged(all, stagingBase) { (fs, staging) =>
       (1 to k).foreach { n =>
-        val src = new org.apache.hadoop.fs.Path(s"$staging/ord=$n")
-        val dst = new org.apache.hadoop.fs.Path(destFor(n))
+        val src = new Path(staging, s"ord=$n")
+        val dst = new Path(destFor(n))
         fs.delete(dst, true)
         Option(dst.getParent).foreach(fs.mkdirs)
         if (fs.exists(src))
           require(fs.rename(src, dst), s"rename $src -> $dst failed")
         else fs.mkdirs(dst) // an order with zero grams: empty slice
-        fs.create(new org.apache.hadoop.fs.Path(dst, "_SUCCESS"), true).close()
+        fs.create(new Path(dst, "_SUCCESS"), true).close()
       }
-    } finally fs.delete(stagingP, true)
+    }
+
+  /** The one (ord, pt)-partitioned job both staged writes share, into a
+    * fresh `.stage-<uuid>` dir under `stagingBase`; `move` then takes
+    * the staged orders out, and the dir is deleted whatever happens
+    * (a killed driver leaves it for [[lmIndexRecoverK]]). */
+  private def staged(all: DataFrame, stagingBase: String)(
+      move: (org.apache.hadoop.fs.FileSystem, Path) => Unit): Unit = {
+    val staging = new Path(s"$stagingBase/.stage-${java.util.UUID.randomUUID()}")
+    val fs = staging.getFileSystem(
+      all.sparkSession.sparkContext.hadoopConfiguration)
+    try {
+      all.withColumn("pt", bucket(substring_index(col("gram"), " ", 1)))
+        .repartition(col("ord"), col("pt"))
+        .sortWithinPartitions(col("ord"), col("pt"), col("gram"))
+        .write.mode("overwrite").partitionBy("ord", "pt").parquet(staging.toString)
+      move(fs, staging)
+    } finally fs.delete(staging, true)
   }
 
   /** The staged ONE-JOB write for PLAIN APPENDS: stage all orders in
@@ -673,58 +508,42 @@ object Lm {
     * bucket can never collide with prior generations' files. */
   private def appendGramSlicesStaged(all: DataFrame, k: Int,
                                      stagingBase: String,
-                                     liveFor: Int => String): Unit = {
-    val spark = all.sparkSession
-    val staging = s"$stagingBase/.stage-${java.util.UUID.randomUUID()}"
-    val stagingP = new org.apache.hadoop.fs.Path(staging)
-    val fs = stagingP.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    try {
-      all.withColumn("pt", bucket(substring_index(col("gram"), " ", 1)))
-        .repartition(col("ord"), col("pt"))
-        .sortWithinPartitions(col("ord"), col("pt"), col("gram"))
-        .write.mode("overwrite").partitionBy("ord", "pt").parquet(staging)
+                                     liveFor: Int => String): Unit =
+    staged(all, stagingBase) { (fs, staging) =>
       (1 to k).foreach { n => // ascending: the crash-prefix invariant
-        val src = new org.apache.hadoop.fs.Path(s"$staging/ord=$n")
+        val src = new Path(staging, s"ord=$n")
         if (fs.exists(src)) {
-          val dstBase = new org.apache.hadoop.fs.Path(liveFor(n))
+          val dstBase = new Path(liveFor(n))
           fs.listStatus(src).filter(_.isDirectory).foreach { ptDir =>
-            val dstPt = new org.apache.hadoop.fs.Path(
-              dstBase, ptDir.getPath.getName)
+            val dstPt = new Path(dstBase, ptDir.getPath.getName)
             if (!fs.exists(dstPt))
               require(fs.rename(ptDir.getPath, dstPt),
                 s"rename ${ptDir.getPath} -> $dstPt failed")
             else fs.listStatus(ptDir.getPath)
               .filter(st => !st.getPath.getName.startsWith("_"))
               .foreach { f =>
-                val dstF = new org.apache.hadoop.fs.Path(
-                  dstPt, f.getPath.getName)
+                val dstF = new Path(dstPt, f.getPath.getName)
                 require(fs.rename(f.getPath, dstF),
                   s"rename ${f.getPath} -> $dstF failed")
               }
           }
         }
       }
-    } finally fs.delete(stagingP, true)
-  }
-
-  private def writeGramSlice(cnt: DataFrame, path: String,
-                             mode: String): Unit =
-    cnt.withColumn("pt", bucket(substring_index(col("gram"), " ", 1)))
-      .repartition(col("pt")) // AQE-sized: the model is vocabulary-sized
-      .sortWithinPartitions(col("gram"))
-      // in-place appends keep committer v1 so a crashed job leaves the
-      // slice row-identical (see [[GenDir.V1AppendCommitter]]); marker-
-      // protected overwrites ride the v2 session default
-      .write.options(if (mode == "append") GenDir.V1AppendCommitter
-                     else Map.empty[String, String])
-      .mode(mode).partitionBy("pt").parquet(path)
+    }
 
   /** Append a training batch as a new generation of every slice (reads
-    * fold with sum — counts are additive); meta totals advance last. */
+    * fold with sum — counts are additive); meta totals advance last.
+    *
+    * Retry contract: a plain append is NOT idempotent. Re-running a
+    * COMPLETED append on the same batch counts it twice (the model
+    * scores as train ∪ batch ∪ batch — LmSpec pins this); a retry is
+    * safe only when the previous attempt died inside its staged write
+    * job, before any move into a live slice. Exactly-once callers must
+    * use the [[IncLog]] path, [[lmIndexAppendBatchK]], whose batch
+    * marker turns a redelivery into a skip. */
   def lmIndexAppendK(train: DataFrame, textCol: String, idCol: String,
                      dir: String): Unit = {
     val spark = train.sparkSession
-    import spark.implicits._
     // lifecycles are disjoint (see [[graft.llm.IncLog.requireNoCommits]]):
     // a plain append's meta rewrite onto an xo-marked index would make
     // a torn meta look like the bootstrap's own and auto-rebuild away
@@ -742,15 +561,10 @@ object Lm {
     // relies on (appended higher-order counts without their
     // lower-order contexts would break it silently — no recover path
     // can see a stale-meta append)
-    val all = allGramCountsK(train, textCol, idCol, ord)
-      .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
-    appendGramSlicesStaged(all, ord, dir,
-      n => GenDir.live(spark, s"$dir/grams_$n"))
-    val batchT = totalFromAll(all)
-    all.unpersist()
-    Seq((oldT + batchT, oldN + train.count(), ord.toLong))
-      .toDF("t", "n_docs", "ord")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/meta")
+    val batchT = writeCountsK(train, textCol, idCol, ord)(
+      appendGramSlicesStaged(_, ord, dir,
+        n => GenDir.live(spark, s"$dir/grams_$n")))
+    writeMetaK(spark, dir, oldT + batchT, oldN + train.count(), ord)
   }
 
   /** Fold append generations AND committed batch increments of every
@@ -790,10 +604,17 @@ object Lm {
     IncLog.finishFold(spark, dir, gramSlices(dir, ord), v, w0, w)
   }
 
-  /** Heal interrupted compactions (either protocol) and report whether
-    * `dir` holds a complete order-k model (meta plus every
-    * grams_1..grams_ord slice). */
+  /** Heal interrupted compactions and report whether `dir` holds a
+    * complete order-k model (meta plus every grams_1..grams_ord
+    * slice). Also deletes the `.stage-*` dirs a killed staged write
+    * ([[writeGramSlicesStaged]] / [[appendGramSlicesStaged]]) left
+    * behind — model-sized, invisible to readers, and otherwise never
+    * collected. Run it from the single writer, never beside one. */
   def lmIndexRecoverK(spark: SparkSession, dir: String): Boolean = {
+    val dirP = new Path(dir)
+    val fs = dirP.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    Option(fs.globStatus(new Path(dirP, ".stage-*"))).toSeq.flatten
+      .foreach(st => fs.delete(st.getPath, true))
     // torn meta (a write that never finished) must not be READ — and
     // over complete count slices it means a plain append crashed
     // mid-meta-overwrite, where a silent rebuild would discard the
@@ -815,7 +636,7 @@ object Lm {
     if (!GenDir.completeDir(spark, s"$dir/meta")) return false
     val ord = spark.read.parquet(s"$dir/meta").head().getLong(2).toInt
     (1 to ord).forall { n =>
-      GenDir.heal(spark, s"$dir/grams_$n")
+      GenDir.recover(spark, s"$dir/grams_$n")
       GenDir.existsLiveComplete(spark, s"$dir/grams_$n")
     }
   }
@@ -849,211 +670,6 @@ object Lm {
     }.toMap
     val total = Seq(t).toDF("t")
     scoreWithK(docs, textCol, idCol, cnts, total, ord)
-  }
-
-  /** Persist an LM count model under `dir`:
-    *
-    *  - `unigrams/` (term, c1) partitioned by `term_pt`;
-    *  - `bigrams/` (prev, term, c2) partitioned by `prev_pt` — both
-    *    hash-bucketed so scoring prunes to a batch's terms at the
-    *    catalog level ([[Retrieval.bm25BuildIndex]] discipline);
-    *  - `meta` one row (t, n_docs), written LAST as the commit marker
-    *    (a crash mid-build leaves counts without meta, which reads as
-    *    "no index" — never the reverse).
-    *
-    * Appends lay generation rows beside existing ones (counts are
-    * additive; reads fold with sum), so no read-modify-write. */
-  /** [[allGramCountsK]] for the legacy named-column slices: every
-    * order's counts in ONE corpus pass as (ord, prev2, prev, term, c)
-    * — ord 1 rows carry null prev/prev2, ord 2 null prev2. Groups are
-    * bit-identical to [[counts]]/[[triCounts]]. */
-  private def allCounts23(train: DataFrame, textCol: String, idCol: String,
-                          order: Int): DataFrame = {
-    // one codegen'd GramContexts23 call per document (see
-    // [[allGramCountsK]]; GramExpressionsSpec pins row equality with
-    // the pre-r16 explode-of-variant-structs chain)
-    val tk = graft.functions.TextFunctions.tokens(col(textCol))
-    train.select(tk.as("tk"))
-      .select(explode(graft.functions.GramContexts23(col("tk"), order)).as("og"))
-      .select(col("og.ord").as("ord"), col("og.prev2").as("prev2"),
-        col("og.prev").as("prev"), col("og.term").as("term"))
-      .groupBy(col("ord"), col("prev2"), col("prev"), col("term"))
-      .agg(count(lit(1)).as("c"))
-  }
-
-  def lmBuildIndex(train: DataFrame, textCol: String, idCol: String,
-                   dir: String, order: Int = 2): Unit = {
-    val spark = train.sparkSession
-    import spark.implicits._
-    require(order == 2 || order == 3, s"order must be 2 or 3, got $order")
-    // fresh build starts every slice's generation history over
-    GenDir.resetAll(spark,
-      s"$dir/unigrams", s"$dir/bigrams", s"$dir/trigrams")
-    // ONE corpus pass for every order (pre-r15: one tokenize+explode
-    // lineage per slice plus one for the total — guide §1.2/§2.4);
-    // slice writes re-read the model-sized aggregate, DISK_ONLY so the
-    // cache never races execution memory (the bm25BuildIndex lesson)
-    val all = allCounts23(train, textCol, idCol, order)
-      .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
-    // slice writes target independent directories — overlapped jobs
-    // (guide §2.6); AQE-sized repartitions: the model is vocabulary-
-    // sized and a fixed N-way exchange would mint N x 256 near-empty
-    // bucket files
-    val writeTri = () =>
-      all.filter(col("ord") === 3)
-        .select(col("prev2"), col("prev"), col("term"), col("c").as("c3"))
-        .withColumn("prev2_pt", bucket(col("prev2")))
-        .repartition(col("prev2_pt"))
-        .sortWithinPartitions(col("prev2"), col("prev"), col("term"))
-        .write.mode("overwrite").partitionBy("prev2_pt").parquet(s"$dir/trigrams")
-    val writeBi = () =>
-      all.filter(col("ord") === 2)
-        .select(col("prev"), col("term"), col("c").as("c2"))
-        .withColumn("prev_pt", bucket(col("prev")))
-        .repartition(col("prev_pt"))
-        .sortWithinPartitions(col("prev"), col("term"))
-        .write.mode("overwrite").partitionBy("prev_pt").parquet(s"$dir/bigrams")
-    val writeUni = () =>
-      all.filter(col("ord") === 1)
-        .select(col("term"), col("c").as("c1"))
-        .withColumn("term_pt", bucket(col("term")))
-        .repartition(col("term_pt"))
-        .sortWithinPartitions(col("term"))
-        .write.mode("overwrite").partitionBy("term_pt").parquet(s"$dir/unigrams")
-    Par.run((if (order == 3) Seq(writeTri) else Seq.empty) ++
-      Seq(writeBi, writeUni))
-    val t = totalFromAll(all)
-    all.unpersist()
-    Seq((t, train.count(), order.toLong)).toDF("t", "n_docs", "ord")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/meta")
-  }
-
-  /** Append a training batch's counts as a new generation: count rows
-    * land beside the existing ones (reads fold with sum — exact, counts
-    * are additive), meta totals advance. Old totals are read BEFORE any
-    * write ([[Retrieval.bm25IndexAppend]] ordering), meta lands last. */
-  def lmIndexAppend(train: DataFrame, textCol: String, idCol: String,
-                    dir: String): Unit = {
-    val spark = train.sparkSession
-    import spark.implicits._
-    val meta0 = spark.read.parquet(s"$dir/meta").head()
-    val (oldT, oldN, ord) =
-      (meta0.getLong(0), meta0.getLong(1), meta0.getLong(2))
-    // one corpus pass for every order — see [[lmBuildIndex]]
-    val all = allCounts23(train, textCol, idCol, ord.toInt)
-      .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
-    // SEQUENTIAL appends into each slice's CURRENT generation, LOWEST
-    // order first, each under committer v1 (see [[lmIndexAppendK]] /
-    // [[GenDir.V1AppendCommitter]]): any crash prefix leaves every
-    // landed order's context order fully landed, preserving
-    // c_{n-1}(x_n) >= c_n(g_n); the model's order rides meta, so
-    // appends can't drift it
-    val appendUni = () =>
-      all.filter(col("ord") === 1)
-        .select(col("term"), col("c").as("c1"))
-        .withColumn("term_pt", bucket(col("term")))
-        .repartition(col("term_pt"))
-        .sortWithinPartitions(col("term"))
-        .write.options(GenDir.V1AppendCommitter)
-        .mode("append").partitionBy("term_pt")
-        .parquet(GenDir.live(spark, s"$dir/unigrams"))
-    val appendBi = () =>
-      all.filter(col("ord") === 2)
-        .select(col("prev"), col("term"), col("c").as("c2"))
-        .withColumn("prev_pt", bucket(col("prev")))
-        .repartition(col("prev_pt"))
-        .sortWithinPartitions(col("prev"), col("term"))
-        .write.options(GenDir.V1AppendCommitter)
-        .mode("append").partitionBy("prev_pt")
-        .parquet(GenDir.live(spark, s"$dir/bigrams"))
-    val appendTri = () =>
-      all.filter(col("ord") === 3)
-        .select(col("prev2"), col("prev"), col("term"), col("c").as("c3"))
-        .withColumn("prev2_pt", bucket(col("prev2")))
-        .repartition(col("prev2_pt"))
-        .sortWithinPartitions(col("prev2"), col("prev"), col("term"))
-        .write.options(GenDir.V1AppendCommitter)
-        .mode("append").partitionBy("prev2_pt")
-        .parquet(GenDir.live(spark, s"$dir/trigrams"))
-    (Seq(appendUni, appendBi) ++
-      (if (ord == 3L) Seq(appendTri) else Seq.empty)).foreach(_.apply())
-    val batchT = totalFromAll(all)
-    all.unpersist()
-    Seq((oldT + batchT, oldN + train.count(), ord)).toDF("t", "n_docs", "ord")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/meta")
-  }
-
-  /** Fold append generations back to one row per n-gram. Each slice's
-    * rewrite lands as the next [[GenDir]] generation, so a standing
-    * scorer runs CONCURRENTLY with the compaction (see
-    * [[lmIndexCompactK]]). `minBigramCount` > 1 applies the classic
-    * count-cutoff model pruning (Brants et al. §4: drop rare
-    * higher-order n-grams — the bigram slice, and the trigram slice of
-    * an order-3 model — and let those contexts fall to backoff) — an
-    * explicit APPROXIMATION that shrinks the model, off by default;
-    * unigrams are never pruned (backoff mass and T depend on them). */
-  def lmIndexCompact(spark: SparkSession, dir: String,
-                     minBigramCount: Long = 1L): Unit = {
-    // each slice rewrites within its own GenDir — independent
-    // directories, overlapped jobs (guide §2.6)
-    val foldBi = () =>
-      GenDir.rewriteGen(spark, s"$dir/bigrams") { (live, next) =>
-        spark.read.parquet(live)
-          .groupBy(col("prev"), col("term"), col("prev_pt"))
-          .agg(sum(col("c2")).as("c2"))
-          .filter(col("c2") >= minBigramCount)
-          .repartition(col("prev_pt"))
-          .sortWithinPartitions(col("prev"), col("term"))
-          .write.mode("overwrite").partitionBy("prev_pt").parquet(next)
-      }
-    val foldTri = () =>
-      GenDir.rewriteGen(spark, s"$dir/trigrams") { (live, next) =>
-        spark.read.parquet(live)
-          .groupBy(col("prev2"), col("prev"), col("term"), col("prev2_pt"))
-          .agg(sum(col("c3")).as("c3"))
-          .filter(col("c3") >= minBigramCount)
-          .repartition(col("prev2_pt"))
-          .sortWithinPartitions(col("prev2"), col("prev"), col("term"))
-          .write.mode("overwrite").partitionBy("prev2_pt").parquet(next)
-      }
-    val foldUni = () =>
-      GenDir.rewriteGen(spark, s"$dir/unigrams") { (live, next) =>
-        spark.read.parquet(live)
-          .groupBy(col("term"), col("term_pt"))
-          .agg(sum(col("c1")).as("c1"))
-          .repartition(col("term_pt"))
-          .sortWithinPartitions(col("term"))
-          .write.mode("overwrite").partitionBy("term_pt").parquet(next)
-      }
-    Par.run(Seq(foldBi) ++
-      (if (GenDir.existsLive(spark, s"$dir/trigrams")) Seq(foldTri)
-       else Seq.empty) ++ Seq(foldUni))
-  }
-
-  /** Heal any interrupted compaction (either protocol) and report
-    * whether `dir` holds a complete model (meta AND both count slices)
-    * — ingest bootstraps call this before choosing append over build. */
-  def lmIndexRecover(spark: SparkSession, dir: String): Boolean = {
-    GenDir.heal(spark, s"$dir/bigrams")
-    GenDir.heal(spark, s"$dir/unigrams")
-    GenDir.heal(spark, s"$dir/trigrams")
-    // torn meta handling: see [[lmIndexRecoverK]] — loud over complete
-    // slices (an append's meta crash; rebuilding loses the model),
-    // "no index" over absent/torn slices (a build crash; rebuild)
-    if (GenDir.tornDir(spark, s"$dir/meta")) {
-      if (GenDir.existsLiveComplete(spark, s"$dir/unigrams"))
-        throw new IllegalStateException(
-          s"torn meta over complete count slices at $dir: an append " +
-            "crashed mid-meta-overwrite; restore meta (t, n_docs, ord) " +
-            "or delete the model directory to rebuild from scratch")
-      return false
-    }
-    val base = GenDir.completeDir(spark, s"$dir/meta") &&
-      GenDir.existsLiveComplete(spark, s"$dir/bigrams") &&
-      GenDir.existsLiveComplete(spark, s"$dir/unigrams")
-    // an order-3 model additionally demands its trigram slice
-    base && (spark.read.parquet(s"$dir/meta").head().getLong(2) != 3L ||
-      GenDir.existsLiveComplete(spark, s"$dir/trigrams"))
   }
 
   // ---- CCNet head/middle/tail bucketing ---------------------------------
@@ -1143,7 +759,7 @@ object Lm {
 
   /** CCNet's head/middle/tail split (Wenzek et al. §4.3: rank the
     * corpus by language-model quality, cut into equal parts): score
-    * buckets 1..nBuckets by descending [[lmScore]] ppm. One narrow
+    * buckets 1..nBuckets by descending [[lmScoreK]] ppm. One narrow
     * (budgeted — see [[lmBucketCutoffs]]) sort for the cutoffs + one
     * map-side pass to assign. */
   def lmQualityBuckets(scored: DataFrame, nBuckets: Int = 3,
@@ -1153,44 +769,5 @@ object Lm {
     // the assignment would each re-execute it from scratch
     val pinned = scored.localCheckpoint(true)
     lmAssignBuckets(pinned, lmBucketCutoffs(pinned, nBuckets, maxExactRows))
-  }
-
-  /** Score `docs` against a persisted model — row-identical to
-    * [[lmScore]] over the same training corpus (the llm_lm_index
-    * oracle reuses llm_lm_score's DuckDB twin verbatim to pin that).
-    * The scored batch's distinct terms drive catalog pruning on both
-    * count slices (bounded <= [[TermBuckets]] bucket collect) and a
-    * broadcast semi-join drops non-batch model rows at the scan; T
-    * comes from meta (the FULL training total — pruned unigram rows
-    * must not shrink it). */
-  def lmScoreIndex(docs: DataFrame, textCol: String, idCol: String,
-                   dir: String): DataFrame = {
-    val spark = docs.sparkSession
-    val batchTerms = pairRows(docs, textCol, idCol)
-      .select(col("term")).distinct()
-      .localCheckpoint(true) // feeds the bucket collect and every semi-join
-    val hitBuckets = batchTerms.select(bucket(col("term")).as("pt"))
-      .distinct().collect().map(_.getInt(0)).toSeq
-    val uni = spark.read.parquet(GenDir.live(spark, s"$dir/unigrams"))
-      .filter(col("term_pt").isInCollection(hitBuckets))
-      .join(broadcast(batchTerms), "term")
-      .groupBy(col("term")).agg(sum(col("c1")).as("c1"))
-    val bi = spark.read.parquet(GenDir.live(spark, s"$dir/bigrams"))
-      .filter(col("prev_pt").isInCollection(hitBuckets))
-      .join(broadcast(batchTerms.select(col("term").as("prev"))), "prev")
-      .join(broadcast(batchTerms), "term")
-      .groupBy(col("prev"), col("term")).agg(sum(col("c2")).as("c2"))
-    val meta = spark.read.parquet(s"$dir/meta")
-    val total = meta.select(col("t"))
-    if (meta.head().getLong(2) == 3L) {
-      val tri = spark.read.parquet(GenDir.live(spark, s"$dir/trigrams"))
-        .filter(col("prev2_pt").isInCollection(hitBuckets))
-        .join(broadcast(batchTerms.select(col("term").as("prev2"))), "prev2")
-        .join(broadcast(batchTerms.select(col("term").as("prev"))), "prev")
-        .join(broadcast(batchTerms), "term")
-        .groupBy(col("prev2"), col("prev"), col("term"))
-        .agg(sum(col("c3")).as("c3"))
-      scoreWith3(docs, textCol, idCol, uni, bi, tri, total)
-    } else scoreWith(docs, textCol, idCol, uni, bi, total)
   }
 }

@@ -390,9 +390,8 @@ object Retrieval {
     * and a search opens N times the files a fresh build would. The
     * rewrite lands as the NEXT [[GenDir]] generation — readers keep
     * resolving generation N until the commit marker of N+1 appears, so
-    * standing queries run concurrently with the compaction (the
-    * maintenance-slot quiesce the other families' [[IndexSwap]] still
-    * requires). Search results are unchanged; meta is untouched.
+    * standing queries run concurrently with the compaction. Search
+    * results are unchanged; meta is untouched.
     *
     * Stats REGENERATE from the compacted postings instead of folding
     * existing generations: a pre-stats index that later took appends
@@ -427,13 +426,12 @@ object Retrieval {
   /** Heal any interrupted compaction and report whether `dir` holds a
     * complete index (meta AND resolvable postings). Ingest bootstraps
     * call this before choosing append over build — meta existence alone
-    * is not proof of postings. Heals BOTH protocols: [[GenDir]]
-    * uncommitted leftovers (the current compaction) and [[IndexSwap]]
-    * rename crashes (indexes compacted by earlier versions). */
+    * is not proof of postings. Heals [[GenDir]] uncommitted leftovers
+    * (an interrupted compaction). */
   def bm25IndexRecover(spark: org.apache.spark.sql.SparkSession,
                        dir: String): Boolean = {
-    GenDir.heal(spark, s"$dir/postings")
-    GenDir.heal(spark, s"$dir/stats")
+    GenDir.recover(spark, s"$dir/postings")
+    GenDir.recover(spark, s"$dir/stats")
     // completeness demands FINISHED writes, not bare directories: a
     // build that died mid-postings (or mid-meta) leaves torn debris
     // that bare fs.exists would bless — appends onto a torn base lose
@@ -928,13 +926,12 @@ object Retrieval {
       v, w0, w)
   }
 
-  /** Heal any interrupted compaction (either protocol — see
-    * [[GenDir.heal]]) and report whether `dir` holds a positional
-    * index. */
+  /** Heal any interrupted compaction (see [[GenDir.recover]]) and
+    * report whether `dir` holds a positional index. */
   def phraseIndexRecover(spark: org.apache.spark.sql.SparkSession,
                          dir: String): Boolean = {
-    GenDir.heal(spark, s"$dir/positions")
-    GenDir.heal(spark, s"$dir/stats")
+    GenDir.recover(spark, s"$dir/positions")
+    GenDir.recover(spark, s"$dir/stats")
     // a build that died mid-positions leaves a torn directory: bare
     // existence would bless it (the batch's data lost, its redelivery
     // marker-skipped), so completeness demands the write FINISHED

@@ -643,12 +643,12 @@ object Similarity {
                       dir: String): Unit =
     compactCellSlice(spark, s"$dir/cells")
 
-  /** Heal any interrupted compaction swap and report whether `dir`
+  /** Heal any interrupted compaction and report whether `dir`
     * holds a complete IVF index (centroids AND cells) — same bootstrap
     * contract as [[Retrieval.bm25IndexRecover]]. */
   def ivfIndexRecover(spark: org.apache.spark.sql.SparkSession,
                       dir: String): Boolean = {
-    GenDir.heal(spark, s"$dir/cells")
+    GenDir.recover(spark, s"$dir/cells")
     // FINISHED writes only (GenDir.completeDir/existsLiveComplete): a
     // build that died mid-write leaves torn directories that bare
     // fs.exists would bless; both artifacts here are build-time-only
@@ -1457,7 +1457,7 @@ object Similarity {
   /** [[ivfIndexRecover]] for an IVFADC index (codebooks AND codes). */
   def ivfPqIndexRecover(spark: org.apache.spark.sql.SparkSession,
                         dir: String): Boolean = {
-    GenDir.heal(spark, s"$dir/codes")
+    GenDir.recover(spark, s"$dir/codes")
     GenDir.completeDir(spark, s"$dir/codebooks") &&
       GenDir.existsLiveComplete(spark, s"$dir/codes")
   }

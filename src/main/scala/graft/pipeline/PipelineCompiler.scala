@@ -733,7 +733,7 @@ class PipelineCompiler(spark: SparkSession, cfg0: PipelineConfig) {
 
     // n-gram LM quality annotate/gate (params: column, id, score_column,
     // min_score_ppm: optional — absent = annotate only, and EITHER
-    // model_path — a persisted Lm.lmBuildIndex model, the standing-
+    // model_path — a persisted Lm.lmBuildIndexK model, the standing-
     // pipeline shape — OR nothing to self-score the flowing batch, the
     // self-perplexity form that flags gibberish/boilerplate without a
     // reference corpus). Each message gains its mean per-token
@@ -754,8 +754,8 @@ class PipelineCompiler(spark: SparkSession, cfg0: PipelineConfig) {
         case (Some(langCol), None) =>
           graft.llm.Lm.lmScorePerLang(in, in, c, idc, langCol)
         case (None, Some(path)) =>
-          graft.llm.Lm.lmScoreIndex(in, c, idc, path)
-        case (None, None) => graft.llm.Lm.lmScore(in, in, c, idc)
+          graft.llm.Lm.lmScoreIndexK(in, c, idc, path)
+        case (None, None) => graft.llm.Lm.lmScoreK(in, in, c, idc, k = 2)
       }).select(col("doc_id").as(idc), col("lm_score_ppm").as(scoreCol))
       val annotated = in.join(scores, Seq(idc), "left")
         .withColumn(scoreCol, coalesce(col(scoreCol), lit(0L)))

@@ -308,7 +308,7 @@ object Warc {
   // dedup each monthly snapshot against ALL prior snapshots without
   // reloading them. The payload-digest SET is the smallest possible
   // index payload (one short string per unique document body), carried
-  // under the same GenDir/IndexSwap build/append/compact/recover
+  // under the same GenDir build/append/compact/recover
   // discipline as the other six families.
   //
   // Layout under `dir`:
@@ -366,7 +366,7 @@ object Warc {
     * layout rewrite only: the digest SET is unchanged. */
   def digestIndexCompact(spark: SparkSession, dir: String): Unit = {
     val base = s"$dir/digests"
-    graft.llm.GenDir.heal(spark, base)
+    graft.llm.GenDir.recover(spark, base)
     val fs = new org.apache.hadoop.fs.Path(base)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val live = graft.llm.GenDir.live(spark, base)
@@ -382,10 +382,10 @@ object Warc {
     graft.llm.GenDir.gc(fs, new org.apache.hadoop.fs.Path(base))
   }
 
-  /** Heal crash leftovers (uncommitted generations, interrupted
-    * swaps) — call before trusting the index after a restart. */
+  /** Heal crash leftovers (uncommitted generations) — call before
+    * trusting the index after a restart. */
   def digestIndexRecover(spark: SparkSession, dir: String): Unit =
-    graft.llm.GenDir.heal(spark, s"$dir/digests")
+    graft.llm.GenDir.recover(spark, s"$dir/digests")
 
   /** [[dedupByDigest]] against the PERSISTED index: within-batch
     * first-copy dedup, then an anti-join that drops every record whose

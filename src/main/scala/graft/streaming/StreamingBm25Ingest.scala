@@ -47,7 +47,7 @@ object StreamingBm25Ingest {
         .localCheckpoint(true)
       val n = batch.count()
       if (n > 0) {
-        // bm25IndexRecover heals any interrupted compaction swap and
+        // bm25IndexRecover heals any interrupted compaction and
         // demands meta AND postings before append — meta existence
         // alone could be a half-built or gutted index, and appending
         // to one silently overcounts lost documents forever

@@ -50,8 +50,8 @@ object StreamingIndexDedup {
   def run(docs: DataFrame, textCol: String, idCol: String, indexDir: String,
           threshold: Double,
           onBatch: (DataFrame, Long) => Unit = (_, _) => ()): StreamingQuery = {
-    // heal any interrupted compaction swap before trusting the index
-    // (see IndexSwap) and refuse to run against an incomplete one —
+    // heal any interrupted compaction before trusting the index (see
+    // GenDir) and refuse to run against an incomplete one —
     // appending novel docs to a gutted index would silently lose the
     // pre-crash dedup horizon
     require(Dedup.lshIndexRecover(docs.sparkSession, indexDir),

@@ -15,7 +15,7 @@ import graft.llm.Retrieval
   * `phraseSearchIndexSelective`) run against the on-disk index between
   * or after batches; no executor state, unbounded corpus horizon.
   *
-  * Bootstrap: recover heals any interrupted swap and the first
+  * Bootstrap: recover heals any interrupted compaction and the first
   * non-empty batch builds when no positions directory exists yet.
   * [[run]] carries the usual at-least-once caveat;
   * [[runExactlyOnce]] closes it ([[graft.llm.IncLog]]).

@@ -32,7 +32,7 @@ object StreamingSpanCut {
     * admitted to the index) and the batch id. */
   def run(docs: DataFrame, textCol: String, idCol: String, indexDir: String,
           onBatch: (DataFrame, Long) => Unit = (_, _) => ()): StreamingQuery = {
-    // heal any interrupted compaction swap, refuse an incomplete index
+    // heal any interrupted compaction, refuse an incomplete index
     // (same bootstrap contract as StreamingIndexDedup / Bm25Ingest)
     require(Dedup.spanIndexRecover(docs.sparkSession, indexDir),
       s"incomplete span index at $indexDir (build it first)")

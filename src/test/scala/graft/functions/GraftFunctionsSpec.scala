@@ -47,4 +47,18 @@ class GraftFunctionsSpec extends SparkSpec {
         |""".stripMargin).as[Long].head()
     assert(bow == 2 * one + oneY) // additivity over token occurrences
   }
+
+  test("registerAll is idempotent: a second call replaces no function") {
+    GraftFunctions.registerAll(spark)
+    val reg = spark.sessionState.functionRegistry
+    val names = Seq("graft_cosine", "graft_dot", "graft_dup_ngram_ppm",
+      "graft_window_hashes", "graft_bow_score", "graft_jump_hash",
+      "graft_replica_buckets", "graft_simhash", "graft_shingle_hashes")
+    def builders() = names.map(n => reg.lookupFunctionBuilder(
+      org.apache.spark.sql.catalyst.FunctionIdentifier(n)))
+    val before = builders()
+    assert(before.forall(_.isDefined))
+    GraftFunctions.registerAll(spark)
+    assert(builders().zip(before).forall { case (a, b) => a.get eq b.get })
+  }
 }

@@ -72,36 +72,6 @@ class GramExpressionsSpec extends SparkSpec {
     docs.select(col("doc_id"), explode(GramVariants(tk, k)).as("og"))
       .select(col("doc_id"), col("og.ord").as("ord"), col("og.gram").as("gram"))
 
-  private def hofContexts23(order: Int): DataFrame = {
-    val nul = lit(null).cast("string")
-    val base = hofKRows(3)
-    val rows =
-      if (order == 3) base
-      else base.drop("prev2").withColumn("prev2", nul)
-    val variants = (1 to order).map { n =>
-      val valid = n match {
-        case 1 => col("term")
-        case 2 => when(col("prev1").isNotNull, col("term"))
-        case _ => when(col("prev2").isNotNull, col("term"))
-      }
-      struct(lit(n).as("ord"),
-        (if (n >= 3) col("prev2") else nul).as("prev2"),
-        (if (n >= 2) col("prev1") else nul).as("prev"),
-        valid.as("term"))
-    }
-    rows.select(col("doc_id"), explode(array(variants: _*)).as("og"))
-      .filter(col("og.term").isNotNull)
-      .select(col("doc_id"), col("og.ord").as("ord"),
-        col("og.prev2").as("prev2"), col("og.prev").as("prev"),
-        col("og.term").as("term"))
-  }
-
-  private def newContexts23(order: Int): DataFrame =
-    docs.select(col("doc_id"), explode(GramContexts23(tk, order)).as("og"))
-      .select(col("doc_id"), col("og.ord").as("ord"),
-        col("og.prev2").as("prev2"), col("og.prev").as("prev"),
-        col("og.term").as("term"))
-
   private def bag(df: DataFrame): Map[String, Long] =
     df.collect().map(_.mkString("|")).groupBy(identity).map {
       case (k, v) => k -> v.length.toLong
@@ -115,12 +85,6 @@ class GramExpressionsSpec extends SparkSpec {
   test("GramVariants matches the exploded variant structs at every order") {
     for (k <- Seq(1, 2, 3, 5, 7))
       assert(bag(newVariants(k)) == bag(hofVariants(k)), s"k=$k")
-  }
-
-  test("GramContexts23 matches the legacy named-column variants") {
-    for (order <- Seq(2, 3))
-      assert(bag(newContexts23(order)) == bag(hofContexts23(order)),
-        s"order=$order")
   }
 
   test("null text yields no rows, like the HOF chain") {

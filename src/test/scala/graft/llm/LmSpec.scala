@@ -4,10 +4,10 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 
-/** [[Lm]]: CCNet-style bigram/stupid-backoff quality scoring, the
-  * integer fixed-point arithmetic hand-checked, and the persisted model
-  * lifecycle (build/append/compact/recover) pinned row-identical to the
-  * ad-hoc path. */
+/** [[Lm]]: CCNet-style order-k stupid-backoff quality scoring, the
+  * integer fixed-point arithmetic hand-checked at k = 2, 3 and 5, and
+  * the persisted model lifecycle (build/append/compact/recover) pinned
+  * row-identical to the ad-hoc path. */
 class LmSpec extends SparkSpec {
   import spark.implicits._
 
@@ -42,11 +42,11 @@ class LmSpec extends SparkSpec {
     (3L, 2L, 420000L), (5L, 4L, 608333L))
 
   test("stupid-backoff fixed-point scoring matches the hand derivation") {
-    assert(rows(Lm.lmScore(train, corpus, "text", "doc_id")) == expected)
+    assert(rows(Lm.lmScoreK(train, corpus, "text", "doc_id", k = 2)) == expected)
   }
 
   test("head/middle/tail buckets equal ntile over (score desc, ntok, doc_id)") {
-    val scored = Lm.lmScore(train, corpus, "text", "doc_id")
+    val scored = Lm.lmScoreK(train, corpus, "text", "doc_id", k = 2)
     val got = Lm.lmQualityBuckets(scored, nBuckets = 3)
       .select($"doc_id", $"bucket").as[(Long, Int)].collect().toMap
     // desc order: d2 633333, d5 608333, d0 588888, d3 420000, d1 200000
@@ -74,8 +74,8 @@ class LmSpec extends SparkSpec {
   }
 
   test("empty training corpus scores every document 0") {
-    val got = rows(Lm.lmScore(corpus.filter($"doc_id" < 0), corpus,
-      "text", "doc_id"))
+    val got = rows(Lm.lmScoreK(corpus.filter($"doc_id" < 0), corpus,
+      "text", "doc_id", k = 2))
     assert(got.nonEmpty && got.forall(_._3 == 0L))
   }
 
@@ -84,20 +84,21 @@ class LmSpec extends SparkSpec {
       .toDF("doc_id", "text")
     // same cleaned token streams as train -> identical model, and the
     // all-spaces doc neither trains nor scores
-    val a = rows(Lm.lmScore(spaced, corpus, "text", "doc_id"))
-    val b = rows(Lm.lmScore(train, corpus, "text", "doc_id"))
+    val a = rows(Lm.lmScoreK(spaced, corpus, "text", "doc_id", k = 2))
+    val b = rows(Lm.lmScoreK(train, corpus, "text", "doc_id", k = 2))
     assert(a == b)
   }
 
   test("persisted model: build+append+compact is row-identical to ad-hoc") {
     val dir = freshDir()
-    Lm.lmBuildIndex(corpus.filter($"doc_id" === 0L), "text", "doc_id", dir)
-    Lm.lmIndexAppend(corpus.filter($"doc_id" === 2L), "text", "doc_id", dir)
-    Lm.lmIndexAppend(corpus.filter($"doc_id" === 4L), "text", "doc_id", dir)
+    Lm.lmBuildIndexK(corpus.filter($"doc_id" === 0L), "text", "doc_id", dir,
+      k = 2)
+    Lm.lmIndexAppendK(corpus.filter($"doc_id" === 2L), "text", "doc_id", dir)
+    Lm.lmIndexAppendK(corpus.filter($"doc_id" === 4L), "text", "doc_id", dir)
     // pre-compact: generations fold on read
-    assert(rows(Lm.lmScoreIndex(corpus, "text", "doc_id", dir)) == expected)
-    Lm.lmIndexCompact(spark, dir)
-    assert(rows(Lm.lmScoreIndex(corpus, "text", "doc_id", dir)) == expected)
+    assert(rows(Lm.lmScoreIndexK(corpus, "text", "doc_id", dir)) == expected)
+    Lm.lmIndexCompactK(spark, dir)
+    assert(rows(Lm.lmScoreIndexK(corpus, "text", "doc_id", dir)) == expected)
     // meta totals advanced across appends: t = 5 train tokens, 3 docs,
     // order 2 preserved
     val meta = spark.read.parquet(s"$dir/meta").as[(Long, Long, Long)].head()
@@ -117,39 +118,30 @@ class LmSpec extends SparkSpec {
     (3L, 2L, 420000L), (5L, 4L, 508333L))
 
   test("trigram scoring matches the hand derivation (two-level backoff)") {
-    assert(rows(Lm.lmScore3(train, corpus, "text", "doc_id")) == expected3)
+    assert(rows(Lm.lmScoreK(train, corpus, "text", "doc_id", k = 3)) == expected3)
   }
 
   test("order-3 persisted model: lifecycle is row-identical to ad-hoc trigram") {
     val dir = freshDir()
-    Lm.lmBuildIndex(corpus.filter($"doc_id" === 0L), "text", "doc_id", dir,
-      order = 3)
-    Lm.lmIndexAppend(corpus.filter($"doc_id" === 2L), "text", "doc_id", dir)
-    Lm.lmIndexAppend(corpus.filter($"doc_id" === 4L), "text", "doc_id", dir)
-    assert(rows(Lm.lmScoreIndex(corpus, "text", "doc_id", dir)) == expected3)
-    Lm.lmIndexCompact(spark, dir)
-    assert(Lm.lmIndexRecover(spark, dir))
-    assert(rows(Lm.lmScoreIndex(corpus, "text", "doc_id", dir)) == expected3)
+    Lm.lmBuildIndexK(corpus.filter($"doc_id" === 0L), "text", "doc_id", dir,
+      k = 3)
+    Lm.lmIndexAppendK(corpus.filter($"doc_id" === 2L), "text", "doc_id", dir)
+    Lm.lmIndexAppendK(corpus.filter($"doc_id" === 4L), "text", "doc_id", dir)
+    assert(rows(Lm.lmScoreIndexK(corpus, "text", "doc_id", dir)) == expected3)
+    Lm.lmIndexCompactK(spark, dir)
+    assert(Lm.lmIndexRecoverK(spark, dir))
+    assert(rows(Lm.lmScoreIndexK(corpus, "text", "doc_id", dir)) == expected3)
     val meta = spark.read.parquet(s"$dir/meta").as[(Long, Long, Long)].head()
     assert(meta == ((5L, 3L, 3L))) // appends preserve the order
   }
 
-  test("order-3 model missing its trigram slice reports incomplete") {
-    val dir = freshDir()
-    Lm.lmBuildIndex(train, "text", "doc_id", dir, order = 3)
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(s"$dir/trigrams"), true)
-    assert(!Lm.lmIndexRecover(spark, dir))
-  }
-
   test("count-cutoff pruning drops rare bigrams to backoff") {
     val dir = freshDir()
-    Lm.lmBuildIndex(train, "text", "doc_id", dir)
-    Lm.lmIndexCompact(spark, dir, minBigramCount = 2L)
+    Lm.lmBuildIndexK(train, "text", "doc_id", dir, k = 2)
+    Lm.lmIndexCompactK(spark, dir, minCount = 2L)
     // c2(b,a)=1 pruned -> d0 pos2 backs off: 600000 + 666666 + 240000
     // = 1506666 div 3 = 502222; d5 likewise loses its (b,a) pair
-    val got = rows(Lm.lmScoreIndex(corpus, "text", "doc_id", dir))
+    val got = rows(Lm.lmScoreIndexK(corpus, "text", "doc_id", dir))
     assert(got == Set(
       (0L, 3L, 502222L), (1L, 2L, 200000L), (2L, 2L, 633333L),
       (3L, 2L, 420000L),
@@ -158,56 +150,84 @@ class LmSpec extends SparkSpec {
 
   test("scoring resolves generation N while N+1 is mid-write (concurrent compact)") {
     val dir = freshDir()
-    Lm.lmBuildIndex(corpus.filter($"doc_id" === 0L), "text", "doc_id", dir)
-    Lm.lmIndexAppend(corpus.filter($"doc_id" === 2L), "text", "doc_id", dir)
-    Lm.lmIndexAppend(corpus.filter($"doc_id" === 4L), "text", "doc_id", dir)
-    def score() = rows(Lm.lmScoreIndex(corpus, "text", "doc_id", dir))
+    Lm.lmBuildIndexK(corpus.filter($"doc_id" === 0L), "text", "doc_id", dir,
+      k = 2)
+    Lm.lmIndexAppendK(corpus.filter($"doc_id" === 2L), "text", "doc_id", dir)
+    Lm.lmIndexAppendK(corpus.filter($"doc_id" === 4L), "text", "doc_id", dir)
+    def score() = rows(Lm.lmScoreIndexK(corpus, "text", "doc_id", dir))
     assert(score() == expected)
     val fs = org.apache.hadoop.fs.FileSystem.get(
       spark.sparkContext.hadoopConfiguration)
     // a compaction MID-WRITE on the bigram slice: uncommitted garbage
     // generation — scorers must never resolve it
-    val midWrite = new org.apache.hadoop.fs.Path(s"$dir/bigrams.gen-1")
+    val midWrite = new org.apache.hadoop.fs.Path(s"$dir/grams_2.gen-1")
     fs.mkdirs(midWrite)
     assert(score() == expected, "a scorer resolved an uncommitted generation")
-    Lm.lmIndexCompact(spark, dir)
+    Lm.lmIndexCompactK(spark, dir)
     assert(score() == expected)
     assert(fs.exists(new org.apache.hadoop.fs.Path(
-      s"$dir/bigrams.gen-1/_GEN_COMMITTED")))
+      s"$dir/grams_2.gen-1/_GEN_COMMITTED")))
     // previous generation survives one compaction, GC'd by the next
-    assert(fs.exists(new org.apache.hadoop.fs.Path(s"$dir/bigrams")))
-    Lm.lmIndexCompact(spark, dir)
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$dir/bigrams")),
+    assert(fs.exists(new org.apache.hadoop.fs.Path(s"$dir/grams_2")))
+    Lm.lmIndexCompactK(spark, dir)
+    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$dir/grams_2")),
       "two-generation retention should have GC'd generation 0")
     assert(score() == expected)
     // appends keep landing in the current generation; reads still fold
-    Lm.lmIndexAppend(corpus.filter($"doc_id" === 2L), "text", "doc_id", dir)
-    assert(rows(Lm.lmScoreIndex(corpus, "text", "doc_id", dir)) ==
-      rows(Lm.lmScore(train.union(corpus.filter($"doc_id" === 2L)),
-        corpus, "text", "doc_id")))
-  }
-
-  test("interrupted compaction swap heals: recover finishes the rename") {
-    val dir = freshDir()
-    Lm.lmBuildIndex(train, "text", "doc_id", dir)
-    // simulate a crash between aside and swap-in: live -> tmp by hand
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val live = new org.apache.hadoop.fs.Path(s"$dir/bigrams")
-    val tmp = new org.apache.hadoop.fs.Path(s"$dir/bigrams.compact-tmp")
-    assert(fs.rename(live, tmp))
-    assert(!fs.exists(live))
-    assert(Lm.lmIndexRecover(spark, dir), "recover must heal to complete")
-    assert(rows(Lm.lmScoreIndex(corpus, "text", "doc_id", dir)) == expected)
+    Lm.lmIndexAppendK(corpus.filter($"doc_id" === 2L), "text", "doc_id", dir)
+    assert(rows(Lm.lmScoreIndexK(corpus, "text", "doc_id", dir)) ==
+      rows(Lm.lmScoreK(train.union(corpus.filter($"doc_id" === 2L)),
+        corpus, "text", "doc_id", k = 2)))
   }
 
   test("half-built model (no meta) reports incomplete") {
     val dir = freshDir()
-    Lm.lmBuildIndex(train, "text", "doc_id", dir)
+    Lm.lmBuildIndexK(train, "text", "doc_id", dir, k = 2)
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.delete(new org.apache.hadoop.fs.Path(s"$dir/meta"), true)
-    assert(!Lm.lmIndexRecover(spark, dir))
+    assert(!Lm.lmIndexRecoverK(spark, dir))
+  }
+
+  test("recover deletes a killed staged write's .stage-* dir; scores unchanged") {
+    val dir = freshDir()
+    Lm.lmBuildIndexK(train, "text", "doc_id", dir, k = 2)
+    val fs = new org.apache.hadoop.fs.Path(dir)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // what a kill -9 inside the one-job staged write leaves: a staging
+    // dir beside the slices holding (ord, pt)-partitioned part files
+    val stage = new org.apache.hadoop.fs.Path(
+      s"$dir/.stage-${java.util.UUID.randomUUID()}")
+    Seq(("a", 100L)).toDF("gram", "c")
+      .write.parquet(s"$stage/ord=1/pt=0")
+    assert(fs.listStatus(new org.apache.hadoop.fs.Path(s"$stage/ord=1/pt=0"))
+      .exists(_.getPath.getName.endsWith(".parquet")))
+    assert(Lm.lmIndexRecoverK(spark, dir))
+    assert(!fs.exists(stage), "recover left the orphaned staging dir")
+    assert(rows(Lm.lmScoreIndexK(corpus, "text", "doc_id", dir)) == expected)
+  }
+
+  test("retry contract: a completed plain append re-run double-counts; " +
+      "a redelivered batch append is skipped") {
+    val batch = corpus.filter($"doc_id" === 2L)
+    def adhoc(t: org.apache.spark.sql.DataFrame) =
+      rows(Lm.lmScoreK(t, corpus, "text", "doc_id", k = 2))
+    // plain appends carry no idempotence marker: the re-run counts the
+    // batch a second time
+    val plain = freshDir()
+    Lm.lmBuildIndexK(train, "text", "doc_id", plain, k = 2)
+    Lm.lmIndexAppendK(batch, "text", "doc_id", plain)
+    Lm.lmIndexAppendK(batch, "text", "doc_id", plain)
+    val twice = adhoc(train.union(batch).union(batch))
+    assert(twice != adhoc(train.union(batch)))
+    assert(rows(Lm.lmScoreIndexK(corpus, "text", "doc_id", plain)) == twice)
+    // the exactly-once path: the same batch id is a skip
+    val xo = freshDir()
+    Lm.lmBuildIndexBatchK(train, "text", "doc_id", xo, k = 2, batchId = 0L)
+    assert(Lm.lmIndexAppendBatchK(batch, "text", "doc_id", xo, batchId = 1L))
+    assert(!Lm.lmIndexAppendBatchK(batch, "text", "doc_id", xo, batchId = 1L))
+    assert(rows(Lm.lmScoreIndexK(corpus, "text", "doc_id", xo)) ==
+      adhoc(train.union(batch)))
   }
 
   // ---- order-general (k as a parameter) --------------------------------

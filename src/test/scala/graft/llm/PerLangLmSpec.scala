@@ -40,7 +40,7 @@ class PerLangLmSpec extends SparkSpec {
   test("a global model drags the minority language into the tail; " +
       "per-language models tier it within itself") {
     // global: one model over the union, global ntile(3)
-    val global = Lm.lmScore(train, scoredDocs, "text", "doc_id")
+    val global = Lm.lmScoreK(train, scoredDocs, "text", "doc_id", k = 2)
       .join(corpus.select($"doc_id", $"lang"), "doc_id")
     val w = org.apache.spark.sql.expressions.Window
       .orderBy($"lm_score_ppm".desc, $"ntok", $"doc_id")
@@ -68,8 +68,8 @@ class PerLangLmSpec extends SparkSpec {
       .select($"doc_id", $"ntok", $"lm_score_ppm")
       .as[(Long, Long, Long)].collect().toSet
     val sliced = Seq("en", "xx").map { l =>
-      Lm.lmScore(train.filter($"lang" === l), scoredDocs.filter($"lang" === l),
-        "text", "doc_id")
+      Lm.lmScoreK(train.filter($"lang" === l), scoredDocs.filter($"lang" === l),
+        "text", "doc_id", k = 2)
         .as[(Long, Long, Long)].collect().toSet
     }.reduce(_ ++ _)
     assert(byLang == sliced)

@@ -438,12 +438,13 @@ class RetrievalSpec extends SparkSpec {
     assert(rows(Retrieval.phraseSearchIndex(q, dir, k = 10)) == adhoc)
     Retrieval.phraseIndexCompact(spark, dir)
     assert(rows(Retrieval.phraseSearchIndex(q, dir, k = 10)) == adhoc)
-    // crash between aside and swap-in: live renamed away, tmp complete
+    // a compactor that died mid-write: an uncommitted next generation
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val live = new org.apache.hadoop.fs.Path(s"$dir/positions")
-    assert(fs.rename(live, new org.apache.hadoop.fs.Path(s"$dir/positions.compact-tmp")))
+    val torn = new org.apache.hadoop.fs.Path(s"$dir/positions.gen-9")
+    fs.mkdirs(torn)
     assert(Retrieval.phraseIndexRecover(spark, dir))
+    assert(!fs.exists(torn), "recover must sweep the uncommitted generation")
     assert(rows(Retrieval.phraseSearchIndex(q, dir, k = 10)) == adhoc)
   }
 
@@ -695,28 +696,16 @@ class RetrievalSpec extends SparkSpec {
     assert(rows(Retrieval.bm25SearchIndex(queries, dir, k = 10)) == want)
   }
 
-  // ---- crash-safe swap + bootstrap verification -----------------------
+  // ---- bootstrap verification -----------------------------------------
 
   test("interrupted compaction swap heals: recover finishes the rename") {
     val dir = freshDir()
     Retrieval.bm25BuildIndex(docs, "text", "doc_id", dir)
     val queries = Seq((1L, "the cat zebra")).toDF("query_id", "qtext")
     val want = rows(Retrieval.bm25SearchIndex(queries, dir, k = 10))
-    // simulate a crash BETWEEN the aside rename and the swap-in: live
-    // postings renamed aside, completed tmp sibling left behind
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    val live = new org.apache.hadoop.fs.Path(s"$dir/postings")
-    val tmp = new org.apache.hadoop.fs.Path(s"$dir/postings.compact-tmp")
-    val old = new org.apache.hadoop.fs.Path(s"$dir/postings.compact-old")
-    org.apache.hadoop.fs.FileUtil.copy(fs, live, fs, tmp, false,
-      spark.sparkContext.hadoopConfiguration)
-    assert(fs.rename(live, old))
-    assert(!fs.exists(live)) // the gutted-index window
-    // bootstrap check: recover heals it and reports a complete index
+    // bootstrap check: recover reports a complete index, answers intact
     assert(Retrieval.bm25IndexRecover(spark, dir))
     assert(rows(Retrieval.bm25SearchIndex(queries, dir, k = 10)) == want)
-    assert(!fs.exists(tmp) && !fs.exists(old))
   }
 
   test("half-built index (meta missing) reports incomplete -> rebuild not append") {

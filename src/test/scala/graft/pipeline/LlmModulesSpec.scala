@@ -607,8 +607,8 @@ class LlmModulesSpec extends SparkSpec {
     val model = Files.createTempDirectory("graft-lm-pipe-model-").toString
     // reference model = the well-formed English docs only
     val docs = spark.read.parquet(in)
-    graft.llm.Lm.lmBuildIndex(docs.filter($"doc_id" === 1L || $"doc_id" === 4L),
-      "text", "doc_id", model)
+    graft.llm.Lm.lmBuildIndexK(docs.filter($"doc_id" === 1L || $"doc_id" === 4L),
+      "text", "doc_id", model, k = 2)
     val yaml =
       s"""actors:
         |  src: {module: core.receiver, params: {path: "$in"}}
@@ -624,7 +624,7 @@ class LlmModulesSpec extends SparkSpec {
     val scores = ann.select($"doc_id", $"lm_score_ppm").as[(Long, Long)]
       .collect().toMap
     // the annotation equals the query-surface contract
-    val direct = graft.llm.Lm.lmScoreIndex(docs, "text", "doc_id", model)
+    val direct = graft.llm.Lm.lmScoreIndexK(docs, "text", "doc_id", model)
       .select($"doc_id", $"lm_score_ppm").as[(Long, Long)].collect().toMap
     assert(scores == direct)
     // fluent-under-the-model text outscores junk and Spanish

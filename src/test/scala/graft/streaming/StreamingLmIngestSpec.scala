@@ -4,9 +4,9 @@ import graft.SparkSpec
 import graft.llm.Lm
 
 /** Streaming training ingest into the persisted n-gram LM: micro-batches
-  * append count generations (first batch bootstraps the model), and the
-  * drained model scores row-identically to an ad-hoc model over the
-  * union of every batch. */
+  * land as exactly-once count increments (first batch bootstraps the
+  * model), and the drained model scores row-identically to an ad-hoc
+  * model over the union of every batch. */
 class StreamingLmIngestSpec extends SparkSpec {
   import spark.implicits._
 
@@ -34,8 +34,8 @@ class StreamingLmIngestSpec extends SparkSpec {
     val schema = spark.read.parquet(srcDir).schema
     val src = Streams.fileSource(spark, srcDir, schema, maxFilesPerTrigger = Some(1))
     val seen = scala.collection.mutable.ArrayBuffer.empty[Long]
-    StreamingLmIngest.run(src, "text", "doc_id", idx,
-      compactEvery = compactEvery, (_, n) => seen += n)
+    StreamingLmIngest.runExactlyOnceK(src, "text", "doc_id", idx, order = 2,
+      compactEvery = compactEvery, (_, n, _) => seen += n)
     assert(seen.sum == train.length, s"trained docs: $seen")
     assert(seen.size == 3) // one callback per non-empty micro-batch
     idx
@@ -43,17 +43,19 @@ class StreamingLmIngestSpec extends SparkSpec {
 
   test("drained ingest scores identically to an ad-hoc model on the union") {
     val idx = runIngest(compactEvery = 0)
-    assert(rows(Lm.lmScoreIndex(scored, "text", "doc_id", idx)) ==
-      rows(Lm.lmScore(train.toDF("doc_id", "text"), scored, "text", "doc_id")))
-    // meta totals reflect the full admitted training set
-    val meta = spark.read.parquet(s"$idx/meta").as[(Long, Long, Long)].head()
-    assert(meta == ((12L, 6L, 2L))) // 12 tokens, 6 docs (one empty)
+    assert(rows(Lm.lmScoreIndexK(scored, "text", "doc_id", idx)) ==
+      rows(Lm.lmScoreK(train.toDF("doc_id", "text"), scored, "text", "doc_id",
+        k = 2)))
+    // effective totals reflect the full admitted training set
+    assert(Lm.lmIndexTotalsK(spark, idx) == ((12L, 6L))) // one doc empty
+    assert(spark.read.parquet(s"$idx/meta").head().getLong(2) == 2L)
   }
 
   test("per-batch compaction cadence preserves scores") {
     val idx = runIngest(compactEvery = 1)
-    assert(rows(Lm.lmScoreIndex(scored, "text", "doc_id", idx)) ==
-      rows(Lm.lmScore(train.toDF("doc_id", "text"), scored, "text", "doc_id")))
+    assert(rows(Lm.lmScoreIndexK(scored, "text", "doc_id", idx)) ==
+      rows(Lm.lmScoreK(train.toDF("doc_id", "text"), scored, "text", "doc_id",
+        k = 2)))
   }
 
   test("a scorer between batches sees exactly the model of batches 0..N") {
@@ -81,13 +83,13 @@ class StreamingLmIngestSpec extends SparkSpec {
     // stream thread
     val snaps = scala.collection.mutable.ArrayBuffer
       .empty[(Long, Set[(Long, Long, Long)], Set[(Long, Long, Long)])]
-    StreamingLmIngest.run(src, "text", "doc_id", idx, compactEvery = 0,
-      (_, n) => {
+    StreamingLmIngest.runExactlyOnceK(src, "text", "doc_id", idx, order = 2,
+      compactEvery = 0, (_, n, _) => {
         admitted ++= bySize(n)
         snaps += ((n,
-          rows(Lm.lmScoreIndex(scored, "text", "doc_id", idx)),
-          rows(Lm.lmScore(admitted.toSeq.toDF("doc_id", "text"), scored,
-            "text", "doc_id"))))
+          rows(Lm.lmScoreIndexK(scored, "text", "doc_id", idx)),
+          rows(Lm.lmScoreK(admitted.toSeq.toDF("doc_id", "text"), scored,
+            "text", "doc_id", k = 2))))
       })
     assert(snaps.size == 3, s"expected 3 commits, saw ${snaps.size}")
     snaps.zipWithIndex.foreach { case ((n, got, want), i) =>
