@@ -1,6 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, GraftBridge}
+import org.apache.spark.sql.catalyst.expressions.Base64
 import org.apache.spark.sql.functions._
 
 /** One-to-one body transforms: the Spark analogs of the reference's
@@ -10,8 +11,13 @@ import org.apache.spark.sql.functions._
   */
 object Transforms {
 
-  /** base64-encode a column (reference: x/encoder_base64.go:58-70). */
-  def base64Encode(c: Column): Column = base64(c.cast("binary"))
+  /** base64-encode a column as one unwrapped line, like the reference's
+    * StdEncoding (x/encoder_base64.go:58-70). Spark's `base64` function
+    * follows `spark.sql.chunkBase64String.enabled` and may insert CRLF
+    * every 76 characters, which a line-framed sink would split into
+    * several messages, so the expression is built with chunking off. */
+  def base64Encode(c: Column): Column =
+    GraftBridge.column(Base64(GraftBridge.expression(c.cast("binary")), chunkBase64 = false))
 
   /** base64-decode; invalid input yields null, which callers route to a
     * dead-letter branch (reference rejects the message,

@@ -1,6 +1,7 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftBridge, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LeafNode
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Compressor, FlowEventModel, Routing, Throttler, Transforms}
@@ -24,9 +25,18 @@ import graft.streaming.{NetSinks, Streams}
   *  - sinks write parquet/console/memory; in streaming mode each sink
   *    branch becomes one foreachBatch query over the shared source.
   *
-  * The per-node DataFrame is memoized so a diamond topology evaluates
-  * each upstream once per action (and Catalyst reuses the scan across
-  * branches of the same query).
+  * The per-node DataFrame is memoized, so a diamond topology builds
+  * each node's plan once. Evaluation is once per batch run: an actor
+  * that reads its input more than once ([[PipelineCompiler.readsInputTwice]]:
+  * a self-join, or a driver action such as training during the build)
+  * gets that input as one eager `localCheckpoint` inside `runBatch`,
+  * memoized per upstream node like the plans; otherwise each read would
+  * re-execute the whole upstream lineage, and each self-join would
+  * double the plan every later actor analyzes. Streaming inputs and
+  * inputs that already are plan leaves (a receiver scan, a checkpoint)
+  * pass through unchanged. `runBatch` releases the checkpoints once its
+  * sinks are written, and `close()` releases any a direct [[outputOf]]
+  * left behind.
   */
 object PipelineCompiler {
   /** Module param key sets, derived from the typed [[ParamSchema]] — the
@@ -44,6 +54,24 @@ object PipelineCompiler {
     * config with typed param values. */
   def validateParams(cfg: PipelineConfig): PipelineConfig =
     ParamSchema.validate(cfg)
+
+  /** Whether `a`'s batch build reads its input more than once: it joins
+    * a result derived from the input back onto the input, or it runs a
+    * driver action on it while building (self-trained BPE merges,
+    * unigram vocabulary, classifier weights). A batch run hands such an
+    * actor a materialized input (class scaladoc), and
+    * [[PipelineConfig.toDot]] marks those edges. */
+  def readsInputTwice(a: ActorDef): Boolean = a.module match {
+    case "llm.main_content" | "llm.curation_scorecard" |
+         "llm.dedup_paragraph" | "llm.unigram_encode" | "llm.lm_score" |
+         "llm.dedup_exact" | "llm.cut_dup_spans" | "llm.decontaminate_cut" |
+         "llm.decontaminate" => true
+    case "llm.url_normalize" => a.params.get("dedup").exists(_.toString.toBoolean)
+    case "llm.classifier" => a.params.contains("label_column")
+    case "llm.bpe_encode" => !a.params.contains("merges_path")
+    case "llm.dedup_near" => !a.params.get("emit").contains("pairs")
+    case _ => false
+  }
 }
 
 class PipelineCompiler(spark: SparkSession, cfg0: PipelineConfig) {
@@ -55,19 +83,46 @@ class PipelineCompiler(spark: SparkSession, cfg0: PipelineConfig) {
     * downstream-agnostic). */
   private val memo = scala.collection.mutable.Map.empty[(String, String), DataFrame]
 
+  /** Eager checkpoints of upstream outputs that multi-read actors
+    * consume, keyed like [[memo]]; released by [[releaseCheckpoints]]. */
+  private val checkpoints = scala.collection.mutable.Map.empty[(String, String), DataFrame]
+
   private def inputOf(name: String): DataFrame = {
     val ups = cfg.upstream(name)
     require(ups.nonEmpty, s"$name has no upstream")
-    Routing.mux(ups.map(u => outputOf(u, name)))
+    val shared = PipelineCompiler.readsInputTwice(cfg.actors(name))
+    Routing.mux(ups.map(u => if (shared) materialized(u, name) else outputOf(u, name)))
   }
 
-  def outputOf(name: String, forDownstream: String = ""): DataFrame = {
-    val a = cfg.actors(name)
-    // router and replicator emit a DIFFERENT branch per downstream; all
-    // other actors are downstream-agnostic and share one memo entry
-    val routeSensitive = a.module == "core.router" || a.module == "core.replicator"
-    val key = (name, if (routeSensitive) forDownstream else "")
-    memo.getOrElseUpdate(key, build(a, forDownstream))
+  /** Router and replicator emit a DIFFERENT branch per downstream; all
+    * other actors are downstream-agnostic and share one memo entry. */
+  private def memoKey(name: String, forDownstream: String): (String, String) = {
+    val module = cfg.actors(name).module
+    val routeSensitive = module == "core.router" || module == "core.replicator"
+    (name, if (routeSensitive) forDownstream else "")
+  }
+
+  def outputOf(name: String, forDownstream: String = ""): DataFrame =
+    memo.getOrElseUpdate(memoKey(name, forDownstream),
+      build(cfg.actors(name), forDownstream))
+
+  /** `name`'s output toward `forDownstream`, evaluated once into an eager
+    * localCheckpoint (MEMORY_AND_DISK blocks) unless it is streaming or
+    * already a plan leaf, where there is nothing to recompute. */
+  private def materialized(name: String, forDownstream: String): DataFrame = {
+    val df = outputOf(name, forDownstream)
+    if (df.isStreaming || GraftBridge.logicalPlan(df).isInstanceOf[LeafNode]) df
+    else checkpoints.getOrElseUpdate(memoKey(name, forDownstream),
+      df.localCheckpoint(eager = true))
+  }
+
+  /** Frees every checkpoint's blocks and forgets the memoized plans,
+    * some of which read them, so the next run builds (and re-reads its
+    * receivers) afresh. Rows a memory sink cached stay in its cache. */
+  private def releaseCheckpoints(): Unit = {
+    checkpoints.values.foreach(GraftBridge.releaseCheckpoint)
+    checkpoints.clear()
+    memo.clear()
   }
 
   private def p(a: ActorDef, k: String): Option[String] =
@@ -199,10 +254,12 @@ class PipelineCompiler(spark: SparkSession, cfg0: PipelineConfig) {
   def boundPort(name: String): Option[Int] =
     listeners.synchronized(listeners.get(name).map(_.port))
 
-  /** Stop every listener this compiler started. */
+  /** Stop every listener this compiler started and release its batch
+    * checkpoints. */
   def close(): Unit = listeners.synchronized {
     listeners.values.foreach(_.close())
     listeners.clear()
+    releaseCheckpoints()
   }
 
   /** Batch rendering of a push channel: snapshot of everything pushed so
@@ -999,9 +1056,10 @@ class PipelineCompiler(spark: SparkSession, cfg0: PipelineConfig) {
     * console sinks — whose `show` is LIMITed by design — persist across
     * the count+show pair (human-scale output, the one place a cache is
     * still the honest answer); memory sinks pin their temp view to the
-    * very rows that were counted. */
+    * very rows that were counted. Multi-read inputs are checkpointed
+    * once for all sinks and released when the last sink is written. */
   def runBatch(): Map[String, Long] =
-    cfg.sinks.map { s =>
+    try cfg.sinks.map { s =>
       val a = cfg.actors(s)
       require(a.module == "core.sink", s"terminal actor $s must be core.sink")
       val df = outputOf(s)
@@ -1018,12 +1076,15 @@ class PipelineCompiler(spark: SparkSession, cfg0: PipelineConfig) {
       }
       s -> n
     }.toMap
+    finally releaseCheckpoints()
 
   /** Runs exactly one full-pass `action` over `df`, returning the row
     * count of the SAME evaluation the action consumed — observed
-    * in-flight through `Dataset.observe`, so nothing is persisted and
-    * the pipeline runs once. Only valid for actions that evaluate every
-    * row (writes, socket sends — not LIMITed `show`). */
+    * in-flight through `Dataset.observe`, so nothing is persisted here
+    * and the action is the only evaluation of `df`'s plan above the
+    * run's checkpoints (the class scaladoc). Only valid for actions
+    * that evaluate every row (writes, socket sends — not LIMITed
+    * `show`). */
   private def countedAction(df: DataFrame)(action: DataFrame => Unit): Long = {
     val obs = org.apache.spark.sql.Observation()
     action(df.observe(obs, count(lit(1)).as("rows")))

@@ -143,13 +143,23 @@ object PipelineConfig {
 
   /** Graphviz DOT rendering — parity with the reference's
     * /pipeline/describe admin endpoint (web/app/agent/graphviz.go:31,
-    * template util/explain/graphiviz_pipeline.go:12-24). */
+    * template util/explain/graphiviz_pipeline.go:12-24). An edge a batch
+    * run materializes (its downstream reads the input more than once,
+    * [[PipelineCompiler.readsInputTwice]]) is drawn dashed and labelled
+    * `materialized`; edges out of receivers stay plain, since a receiver
+    * scan is already a plan leaf. */
   def toDot(cfg: PipelineConfig): String = {
     val nodes = cfg.actors.values.toSeq.sortBy(_.name).map { a =>
       s"""  "${a.name}" [label="${a.name}\\n${a.module}"];"""
     }
+    def materialized(from: String, to: String): Boolean =
+      PipelineCompiler.readsInputTwice(cfg.actors(to)) &&
+        !Set("core.receiver", "core.push_receiver")(cfg.actors(from).module)
     val edges = cfg.edges.toSeq.sortBy(_._1).flatMap { case (from, tos) =>
-      tos.map(to => s"""  "$from" -> "$to";""")
+      tos.map { to =>
+        val attrs = if (materialized(from, to)) """ [style=dashed, label="materialized"]""" else ""
+        s"""  "$from" -> "$to"$attrs;"""
+      }
     }
     ("digraph pipeline {" +: (nodes ++ edges) :+ "}").mkString("\n")
   }

@@ -40,6 +40,16 @@ object GraftBridge {
       exp.extraOptimizations = exp.extraOptimizations :+ rule
   }
 
+  /** Frees the blocks behind a `localCheckpoint`ed frame now, instead of
+    * when the ContextCleaner collects it. Goes through the context, not
+    * `RDD.unpersist`, which logs a WARN per call that the truncated
+    * lineage cannot be recomputed: the caller drops every plan reading
+    * the frame. A frame that is no checkpoint is left alone. */
+  def releaseCheckpoint(df: DataFrame): Unit = logicalPlan(df) match {
+    case r: execution.LogicalRDD => r.rdd.sparkContext.unpersistRDD(r.rdd.id, blocking = false)
+    case _ =>
+  }
+
   /** True when the session's CacheManager pins no cached plans — the spec
     * hook for operators contracted to release their internal caches
     * before returning (localCheckpoint blocks are NOT CacheManager

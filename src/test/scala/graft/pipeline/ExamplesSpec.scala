@@ -48,6 +48,36 @@ class ExamplesSpec extends SparkSpec {
     assert(ranks == Seq(1, 1, 1, 2, 2, 2, 3, 3, 3))
   }
 
+  test("llm_curation example's DOT marks the edges a batch run materializes") {
+    val cfg = PipelineConfig.parse(Files.readString(Paths.get("examples/llm_curation.yml")))
+    def node(n: String, module: String) = s"""  "$n" [label="$n\\n$module"];"""
+    val mat = """ [style=dashed, label="materialized"]"""
+    def edge(from: String, to: String, materialized: Boolean = false) =
+      s"""  "$from" -> "$to"${if (materialized) mat else ""};"""
+    val want = Seq("digraph pipeline {",
+      node("bpe", "llm.bpe_encode"), node("clf", "llm.classifier"),
+      node("decon", "llm.decontaminate_cut"), node("dedup", "llm.dedup_exact"),
+      node("lang", "llm.langid"), node("lm", "llm.lm_score"),
+      node("near", "llm.dedup_near"), node("out", "core.sink"),
+      node("quality", "llm.quality_filter"),
+      node("repetition", "llm.repetition_filter"),
+      node("scorecard", "llm.curation_scorecard"),
+      node("spans", "llm.cut_dup_spans"), node("src", "core.receiver"),
+      edge("bpe", "out"), edge("clf", "dedup", materialized = true),
+      edge("decon", "bpe", materialized = true),
+      edge("dedup", "near", materialized = true),
+      edge("lang", "lm", materialized = true), edge("lm", "clf"),
+      edge("near", "spans", materialized = true),
+      edge("quality", "repetition"), edge("repetition", "lang"),
+      edge("scorecard", "quality"),
+      edge("spans", "decon", materialized = true),
+      // the scorecard reads its input twice too, but a receiver scan is
+      // already a plan leaf: nothing to materialize
+      edge("src", "scorecard"),
+      "}").mkString("\n")
+    assert(PipelineConfig.toDot(cfg) == want)
+  }
+
   test("llm_curation example filters, gates and dedups the documents table") {
     val counts = run("llm_curation.yml")
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")

@@ -539,6 +539,26 @@ class LlmModulesSpec extends SparkSpec {
     assert(counts("n_clf") == 6L) // permissive floor: all pass
     assert(counts("n_lm") == 6L) // every doc's tokens were trained on
     assert(counts("n_kept") == 5L) // dup pair collapsed
+    // downstream multi-read actors materialize the scorecard's output
+    // once: the counters come from that single evaluation, unchanged
+    val chained =
+      s"""actors:
+        |  src: {module: core.receiver, params: {path: "$in"}}
+        |  card: {module: llm.curation_scorecard, params: {column: text,
+        |         id: doc_id, lm_min_score_ppm: "1",
+        |         clf_min_score: "-999999999999"}}
+        |  lm: {module: llm.lm_score, params: {column: text, id: doc_id}}
+        |  dedup: {module: llm.dedup_exact, params: {column: text, id: doc_id}}
+        |  scorecard_chain_out: {module: core.sink, params: {format: memory}}
+        |pipeline:
+        |  src:  {connect: [card]}
+        |  card: {connect: [lm]}
+        |  lm: {connect: [dedup]}
+        |  dedup: {connect: [scorecard_chain_out]}
+        |""".stripMargin
+    val chainedCompiler = new PipelineCompiler(spark, PipelineConfig.parse(chained))
+    assert(chainedCompiler.runBatch()("scorecard_chain_out") == 5L)
+    assert(chainedCompiler.scorecardCounts("card") == counts)
   }
 
   test("llm.unigram_encode actor annotates piece sequences; zero-token " +

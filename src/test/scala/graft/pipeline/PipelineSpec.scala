@@ -2,7 +2,26 @@ package graft.pipeline
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{col, udf}
+import org.apache.spark.util.LongAccumulator
+
 import graft.SparkSpec
+
+/** Passes rows through unchanged, counting each row it evaluates with a
+  * deterministic UDF: how many times a batch run computes this node. */
+class RowCounterPlugin extends ActorPlugin {
+  def transform(spark: SparkSession, input: DataFrame,
+                params: Map[String, Any]): DataFrame = {
+    val rows = RowCounterPlugin.rows
+    val bump = udf { (id: Long) => rows.add(1L); id }
+    input.withColumn("doc_id", bump(col("doc_id")))
+  }
+}
+
+object RowCounterPlugin {
+  @volatile var rows: LongAccumulator = _
+}
 
 class PipelineSpec extends SparkSpec {
   import spark.implicits._
@@ -316,24 +335,95 @@ class PipelineSpec extends SparkSpec {
   test("re-running a memory-sink pipeline releases the replaced view's cache") {
     val in = Files.createTempDirectory("graft-pipe-cache-").toString
     writeEvents(in)
-    val yaml =
+    val plain =
       s"""actors:
         |  src: {module: core.receiver, params: {path: "$in"}}
         |  out: {module: core.sink, params: {format: memory}}
         |pipeline:
         |  src: {connect: [out]}
         |""".stripMargin
-    val compiler = new PipelineCompiler(spark, PipelineConfig.parse(yaml))
-    val before = spark.sparkContext.getPersistentRDDs.size
-    compiler.runBatch()
-    compiler.runBatch()
-    compiler.runBatch()
-    // config-reload loop on a long-lived session: each run replaces the
-    // view, so at most ONE cache (the live view's) may remain pinned
-    val after = spark.sparkContext.getPersistentRDDs.size
-    assert(after - before <= 1,
-      s"memory sink leaked ${after - before} caches across 3 runs")
-    assert(spark.table("out").count() == 5L)
+    // dedup_exact reads lm_score's output twice, so each run also
+    // checkpoints that input — the checkpoint must not outlive the run
+    val multiRead =
+      s"""actors:
+        |  src: {module: core.receiver, params: {path: "$in"}}
+        |  lm: {module: llm.lm_score, params: {column: body, id: id}}
+        |  dedup: {module: llm.dedup_exact, params: {column: body, id: id}}
+        |  out: {module: core.sink, params: {format: memory}}
+        |pipeline:
+        |  src: {connect: [lm]}
+        |  lm: {connect: [dedup]}
+        |  dedup: {connect: [out]}
+        |""".stripMargin
+    Seq(plain, multiRead).foreach { yaml =>
+      val compiler = new PipelineCompiler(spark, PipelineConfig.parse(yaml))
+      val before = spark.sparkContext.getPersistentRDDs.size
+      compiler.runBatch()
+      compiler.runBatch()
+      compiler.runBatch()
+      // config-reload loop on a long-lived session: each run replaces the
+      // view, so at most ONE cache (the live view's) may remain pinned
+      val after = spark.sparkContext.getPersistentRDDs.size
+      assert(after - before <= 1,
+        s"memory sink leaked ${after - before} caches across 3 runs")
+      assert(spark.table("out").count() == 5L)
+      compiler.close()
+    }
+  }
+
+  test("a batch run evaluates the upstream of multi-read actors once") {
+    val in = Files.createTempDirectory("graft-pipe-once-").toString
+    val words = (0 until 40).map(i => s"w$i")
+    // 30 distinct docs, 5 exact copies, 5 near copies (one word changed)
+    val base = (0 until 30).map(i => i.toLong -> (0 until 24)
+      .map(j => words((i * 7 + j * 3) % 40)).mkString(" "))
+    val docs = base ++ (0 until 5).map(i => (100L + i) -> base(i)._2) ++
+      (0 until 5).map(i => (200L + i) -> (base(i + 10)._2 + " extra"))
+    docs.toDF("doc_id", "text").write.parquet(s"$in/src")
+    val chain = Seq(
+      "lm" -> "{module: llm.lm_score, params: {column: text, id: doc_id}}",
+      "exact" -> "{module: llm.dedup_exact, params: {column: text, id: doc_id}}",
+      "near" -> "{module: llm.dedup_near, params: {column: text, id: doc_id, threshold: \"0.7\"}}",
+      "bpe" -> "{module: llm.bpe_encode, params: {column: text, num_merges: \"8\"}}")
+    def pipeline(src: String, actors: Seq[(String, String)], out: String): String = {
+      val names = "src" +: actors.map(_._1) :+ "out"
+      (Seq("actors:", s"""  src: {module: core.receiver, params: {path: "$src"}}""") ++
+        actors.map { case (n, m) => s"  $n: $m" } ++
+        Seq(s"""  out: {module: core.sink, params: {format: parquet, path: "$out"}}""",
+          "pipeline:") ++
+        names.zip(names.tail).map { case (a, b) => s"  $a: {connect: [$b]}" })
+        .mkString("\n")
+    }
+    RowCounterPlugin.rows = spark.sparkContext.longAccumulator("rows")
+    val counter = "counter" -> s"{module: \"plugin:${classOf[RowCounterPlugin].getName}\"}"
+    var sink: DataFrame = null
+    val compiler = new PipelineCompiler(spark,
+        PipelineConfig.parse(pipeline(s"$in/src", counter +: chain, s"$in/fused"))) {
+      override def outputOf(name: String, forDownstream: String): DataFrame = {
+        val df = super.outputOf(name, forDownstream)
+        if (name == "out") sink = df
+        df
+      }
+    }
+    val kept = compiler.runBatch()("out")
+    assert(RowCounterPlugin.rows.value == docs.size,
+      s"counter evaluated ${RowCounterPlugin.rows.value} rows for ${docs.size} source rows")
+    // the sink's plan starts at the bpe input's checkpoint, not at the source
+    val planLines = sink.queryExecution.analyzed.treeString.linesIterator.size
+    assert(planLines <= 10, s"sink plan has $planLines lines")
+    // the same chain compiled one actor per pipeline, through parquet
+    val perActor = chain.zipWithIndex.foldLeft(s"$in/src") { case (src, (actor, i)) =>
+      new PipelineCompiler(spark,
+        PipelineConfig.parse(pipeline(src, Seq(actor), s"$in/step$i"))).runBatch()
+      s"$in/step$i"
+    }
+    def rows(path: String) = {
+      val df = spark.read.parquet(path)
+      df.select(df.columns.sorted.map(col): _*)
+        .collect().map(_.toSeq.mkString("|")).sorted.toSeq
+    }
+    assert(kept < docs.size)
+    assert(rows(s"$in/fused") == rows(perActor))
   }
 
   test("a bind sink carrying a stray format param still loads (format is never read)") {
