@@ -18,7 +18,10 @@ import graft.pipeline.{PipelineCompiler, PipelineConfig}
   * key with the provider that won it and the layers it shadowed (the
   * reference's repository explain surface); --stream runs each sink as an
   * availableNow streaming query (file receivers need `schema_from`
-  * params pointing at a parquet file to infer from); --admin-port serves
+  * params pointing at a parquet file to infer from), and refuses before
+  * any sink writes a pipeline with an actor that has no streaming form
+  * (warc receivers, replicator mode fanout, wet sinks:
+  * [[graft.pipeline.PipelineCompiler.cannotStream]]); --admin-port serves
   * the LIVE admin surface ([[graft.streaming.AdminServer]]: /config,
   * /pipeline/describe, /progress, /sinks) on 127.0.0.1:N while the
   * pipeline runs

@@ -187,7 +187,9 @@ object ParamSchema {
       "ngram_n" -> PLong, "min_shared" -> PLong, "bloom" -> PBool),
     "core.sink" -> Map("format" -> PString, "path" -> PString,
       "mode" -> PString, "partition_by" -> PStringList, "rows" -> PLong,
-      "checkpoint" -> PString, // daemon-restart resume (startStreaming)
+      // daemon-restart resume: startStreaming only; runStreamingOnce
+      // starts from a fresh checkpoint on every run
+      "checkpoint" -> PString,
       // sink transport by URI scheme (sink_head_factory.go:17-46):
       // tcp://host:port, udp://host:port, unix:///path, file://STDOUT
       // (console) or file:///path (raw column text)
@@ -225,10 +227,10 @@ object ParamSchema {
     // dead-letters exhausted batches, which is the right discipline for
     // transient I/O but would repeat-and-swallow a config error forever
     actors.values.foreach { a =>
-      // format rules apply only to format-dispatched sinks: the compiler
-      // (runBatch/writeSinkBatch) ignores `format` entirely when `bind`
-      // is present, so a bind sink carrying a stray format must still
-      // load — the param is never read
+      // format rules apply only to format-dispatched sinks: the sink
+      // dispatch (PipelineCompiler.writeSink) ignores `format` entirely
+      // when `bind` is present, so a bind sink carrying a stray format
+      // must still load — the param is never read
       if (a.module == "core.sink" && !a.params.contains("bind")) {
         a.params.get("format").foreach(f => require(
           Set("parquet", "json", "csv", "console", "memory", "noop",

@@ -3,10 +3,13 @@ package graft.pipeline
 import org.apache.spark.sql.{Column, DataFrame, GraftBridge, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.LeafNode
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.types.StructType
 
+import graft.llm.GenDir
 import graft.operators.{Compressor, FlowEventModel, Routing, Throttler, Transforms}
-import graft.sources.{NetReceivers, PushReceiver}
-import graft.streaming.{NetSinks, Streams}
+import graft.sources.{NetReceivers, PushReceiver, PushReceiverProvider, Warc}
+import graft.streaming.{NetSinks, ReliableSink, Streams}
 
 /** Compiles a PipelineConfig into DataFrame dataflow and runs it — the
   * Spark rendering of the reference's pipeline assembly
@@ -22,8 +25,15 @@ import graft.streaming.{NetSinks, Streams}
   *    branch (LinkTo/replicate-to-all semantics, README.md:177-181);
   *    core.router restricts each downstream branch to its route
   *    (RouteTo/at-most-one semantics) with an implicit dead-letter;
-  *  - sinks write parquet/console/memory; in streaming mode each sink
-  *    branch becomes one foreachBatch query over the shared source.
+  *  - every sink writes through one dispatch ([[writeSink]]: bind heads
+  *    and formats), the whole output in a batch run, appended per
+  *    micro-batch in a streaming one.
+  *
+  * Batch and streaming runs share one [[build]]; only the receivers
+  * differ (scan or channel snapshot vs file or DSv2 stream). Streaming
+  * runs refuse, before anything starts, a pipeline with an actor that
+  * has no streaming form ([[PipelineCompiler.cannotStream]]), then run
+  * each sink branch as one foreachBatch query over the shared source.
   *
   * The per-node DataFrame is memoized, so a diamond topology builds
   * each node's plan once. Evaluation is once per batch run: an actor
@@ -39,17 +49,6 @@ import graft.streaming.{NetSinks, Streams}
   * left behind.
   */
 object PipelineCompiler {
-  /** Module param key sets, derived from the typed [[ParamSchema]] — the
-    * analog of the reference's pkg/cast config mapper (convert-or-give-up
-    * validation of every config key against the module's schema,
-    * pkg/cast/mapper.go + schema.go:18-73): a typo'd param (`treshold`,
-    * `max_dupppm`) or a wrongly-typed value (`rps: "fast"`) fails loudly
-    * at config-load time instead of silently falling back to the default
-    * or erupting as a bare NumberFormatException mid-construction.
-    * `plugin:<fqcn>` modules take arbitrary params and are exempt. */
-  val KnownParams: Map[String, Set[String]] =
-    ParamSchema.Modules.map { case (m, s) => m -> s.keySet }
-
   /** Validate names AND convert values per [[ParamSchema]]; returns the
     * config with typed param values. */
   def validateParams(cfg: PipelineConfig): PipelineConfig =
@@ -71,6 +70,25 @@ object PipelineCompiler {
     case "llm.bpe_encode" => !a.params.contains("merges_path")
     case "llm.dedup_near" => !a.params.get("emit").contains("pairs")
     case _ => false
+  }
+
+  /** Why `a` has no streaming form, if it has none. Streaming runs
+    * check every actor before any listener or query starts. */
+  def cannotStream(a: ActorDef): Option[String] = {
+    def is(k: String, vs: String*) = a.params.get(k).exists(v => vs.contains(v.toString))
+    val bound = a.params.contains("bind")
+    a.module match {
+      case "core.receiver" if !bound && is("format", "warc", "warc_records") =>
+        Some("warc receivers have no file-stream form; drive streaming " +
+          "crawl ingest via StreamingWarcIngest instead")
+      case "core.replicator" if is("mode", "fanout") =>
+        Some("replicator mode fanout uses monotonically_increasing_id, " +
+          "which streaming queries reject")
+      // Warc.writeWet rewrites part-<pid> on every call
+      case "core.sink" if !bound && is("format", "wet") =>
+        Some("wet sinks cannot append micro-batches")
+      case _ => None
+    }
   }
 }
 
@@ -125,8 +143,18 @@ class PipelineCompiler(spark: SparkSession, cfg0: PipelineConfig) {
     memo.clear()
   }
 
+  /** Receiver schemas of the streaming run whose plans are being built;
+    * None while building batch plans. Picks each receiver's source in
+    * [[build]]: batch scan or push-channel snapshot, or file or DSv2
+    * stream. */
+  private var streamSchemas: Option[Map[String, StructType]] = None
+
   private def p(a: ActorDef, k: String): Option[String] =
     a.params.get(k).map(_.toString)
+
+  /** A list param: [[ParamSchema.validate]] casts every one to Seq[String]. */
+  private def list(a: ActorDef, k: String): Option[Seq[String]] =
+    a.params.get(k).map(_.asInstanceOf[Seq[String]])
 
   /** Total row count of a parquet directory from file FOOTERS — a
     * driver-side metadata read, no Spark job, no table scan. Sizes the
@@ -179,9 +207,7 @@ class PipelineCompiler(spark: SparkSession, cfg0: PipelineConfig) {
   // A bind receiver starts the matching NetReceivers listener feeding a
   // push channel; the node then compiles like core.push_receiver.
 
-  /** Live listeners started for bind:// receivers, actor name -> handle.
-    * The streaming sub-compiler registers into its OUTER compiler, so
-    * boundPort/close work on the instance the caller holds. */
+  /** Live listeners started for bind:// receivers, actor name -> handle. */
   private val listeners = scala.collection.mutable.Map.empty[String, NetReceivers.Handle]
 
   /** Batch-mode scorecard observations, actor name -> Observation;
@@ -262,29 +288,38 @@ class PipelineCompiler(spark: SparkSession, cfg0: PipelineConfig) {
     releaseCheckpoints()
   }
 
-  /** Batch rendering of a push channel: snapshot of everything pushed so
-    * far, as the engine's event schema. */
-  private def pushSnapshot(channel: String): DataFrame = {
-    val msgs = PushReceiver.snapshot(channel)
-      .map(m => graft.operators.FlowEvent(m.body, m.meta,
-        new java.sql.Timestamp(m.tsMicros / 1000L)))
-    import spark.implicits._
-    msgs.toDF("body", "meta", "ingest_ts")
-  }
+  /** A push channel as the engine's event schema: in batch mode a
+    * snapshot of everything pushed so far, in streaming mode the live
+    * DSv2 stream. */
+  private def pushChannel(a: ActorDef, channel: String): DataFrame =
+    if (streamSchemas.isEmpty) {
+      val msgs = PushReceiver.snapshot(channel)
+        .map(m => graft.operators.FlowEvent(m.body, m.meta,
+          new java.sql.Timestamp(m.tsMicros / 1000L)))
+      import spark.implicits._
+      msgs.toDF("body", "meta", "ingest_ts")
+    } else {
+      val reader = spark.readStream
+        .format(classOf[PushReceiverProvider].getName)
+        .option("channel", channel)
+      p(a, "maxMsgsPerTrigger").foreach(reader.option("maxMsgsPerTrigger", _))
+      reader.load()
+    }
 
   private def build(a: ActorDef, forDownstream: String): DataFrame = a.module match {
     // network receiver by bind:// scheme; batch mode snapshots what has
     // arrived on the channel by build time (call startReceivers() before
     // pushing, then compile — or run streaming, where arrival is live)
     case "core.receiver" if a.params.contains("bind") =>
-      pushSnapshot(ensureListener(a))
+      pushChannel(a, ensureListener(a))
 
     case "core.receiver" =>
       val path = p(a, "path").getOrElse(sys.error(s"${a.name}: receiver needs path"))
       val format = p(a, "format").getOrElse("parquet")
       // WARC/WET crawl containers resolve through the streaming
       // per-file kernel, not a DataSource format — the raw-crawl front
-      // door (records) or the assembled documents frame
+      // door (records) or the assembled documents frame; batch runs only
+      // ([[PipelineCompiler.cannotStream]])
       if (format == "warc") {
         // dedup_digest drops CommonCrawl-repeated payloads from the
         // header columns alone, before extraction runs;
@@ -310,19 +345,20 @@ class PipelineCompiler(spark: SparkSession, cfg0: PipelineConfig) {
       // TIMESTAMP(NANOS) reads as a long (truncated to micros), standard
       // TIMESTAMP/NTZ passes through — fixture encodings vary by generation
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val raw = spark.read.format(format).load(path)
+      val raw = streamSchemas match {
+        case Some(schemas) => Streams.fileSource(spark, path, schemas(a.name), format)
+        case None => spark.read.format(format).load(path)
+      }
       p(a, "ts_nanos_to_micros").map(_.split(",").map(_.trim).filter(_.nonEmpty))
         .getOrElse(Array.empty[String])
         .foldLeft(raw)(graft.Tables.normalizeTs)
 
-    // network-receiver analog: the in-process push channel. Batch mode
-    // snapshots what has been pushed so far; the streaming runner
-    // overrides this with the DSv2 stream.
+    // network-receiver analog: the in-process push channel
     case "core.push_receiver" =>
       val channel = p(a, "channel").getOrElse("default")
       p(a, "journal_dir").foreach(d =>
         PushReceiver.configureJournal(channel, d))
-      pushSnapshot(channel)
+      pushChannel(a, channel)
 
     case "core.mux" => inputOf(a.name) // fan-in is implicit; node is a no-op marker
 
@@ -331,12 +367,8 @@ class PipelineCompiler(spark: SparkSession, cfg0: PipelineConfig) {
       // declared route; unroutable rows only flow to the dead_letter
       // downstream if declared (router.go:67-76)
       val keyCol = col(p(a, "key").getOrElse("route"))
-      val routes = a.params.get("routes") match {
-        case Some(sq: Seq[_]) => sq.map(_.toString) // schema-cast list
-        case Some(l: java.util.List[_]) =>
-          scala.jdk.CollectionConverters.ListHasAsScala(l).asScala.map(_.toString).toSeq
-        case _ => cfg.downstream(a.name).filterNot(_ == p(a, "dead_letter").getOrElse(""))
-      }
+      val routes = list(a, "routes").getOrElse(
+        cfg.downstream(a.name).filterNot(_ == p(a, "dead_letter").getOrElse("")))
       val annotated = Routing.annotateRoutes(inputOf(a.name), routes, keyCol)
       if (p(a, "dead_letter").contains(forDownstream))
         annotated.filter(col("route").isNull)
@@ -416,14 +448,8 @@ class PipelineCompiler(spark: SparkSession, cfg0: PipelineConfig) {
     // analytics actor: per-key top-k through the custom operator
     // (params: keys: [col], order: ["col desc", "col"], k)
     case "core.topk" =>
-      def strList(v: Any): Seq[String] = v match {
-        case sq: Seq[_] => sq.map(_.toString) // schema-cast list
-        case l: java.util.List[_] =>
-          scala.jdk.CollectionConverters.ListHasAsScala(l).asScala.map(_.toString).toSeq
-        case one => Seq(one.toString)
-      }
-      val keys = a.params.get("keys").map(strList).getOrElse(Nil).map(col)
-      val order = a.params.get("order").map(strList) match {
+      val keys = list(a, "keys").getOrElse(Nil).map(col)
+      val order = list(a, "order") match {
         case Some(specs) if specs.nonEmpty => specs.map { o =>
           o.trim.split("\\s+") match {
             case Array(c, d) if d.equalsIgnoreCase("desc") => col(c).desc
@@ -444,15 +470,8 @@ class PipelineCompiler(spark: SparkSession, cfg0: PipelineConfig) {
     // (params: base, keys, version, delete_flag)
     case "core.upsert" =>
       val basePath = p(a, "base").getOrElse(sys.error(s"${a.name}: upsert needs base path"))
-      val keys = a.params.get("keys") match {
-        case Some(sq: Seq[_]) => sq.map(_.toString)
-        case Some(l: java.util.List[_]) =>
-          scala.jdk.CollectionConverters.ListHasAsScala(l).asScala.map(_.toString).toSeq
-        case Some(one) => Seq(one.toString)
-        case None => Seq("id")
-      }
       graft.operators.Upsert(spark.read.parquet(basePath), inputOf(a.name),
-        keys, p(a, "version").getOrElse("version"), p(a, "delete_flag"))
+        list(a, "keys").getOrElse(Seq("id")), p(a, "version").getOrElse("version"), p(a, "delete_flag"))
 
     // ---- LLM-curation actors (flowspark extension namespace) ----------
     // HTML -> text extraction (params: column, text_column,
@@ -1038,7 +1057,7 @@ class PipelineCompiler(spark: SparkSession, cfg0: PipelineConfig) {
       in.filter(col(srcCol) =!= evalV)
         .join(contaminated, Seq(idc), "left_anti")
 
-    case "core.sink" => inputOf(a.name) // materialization handled by run()
+    case "core.sink" => inputOf(a.name) // written by writeSink
 
     // extension point: module "plugin:<fqcn>" resolves a user class from
     // the classpath (the Spark analog of the reference's Go .so plugins)
@@ -1048,99 +1067,74 @@ class PipelineCompiler(spark: SparkSession, cfg0: PipelineConfig) {
     case other => sys.error(s"${a.name}: unknown module $other")
   }
 
-  /** Batch run: writes every sink; returns sink name -> row count.
-    * Each sink evaluates its pipeline ONCE (a non-deterministic
-    * upstream — rand replicator — must not write one sample and report
-    * the count of another): full-pass writes observe their row count
-    * in-flight via [[countedAction]] (no persist, no second pass);
-    * console sinks — whose `show` is LIMITed by design — persist across
-    * the count+show pair (human-scale output, the one place a cache is
-    * still the honest answer); memory sinks pin their temp view to the
-    * very rows that were counted. Multi-read inputs are checkpointed
-    * once for all sinks and released when the last sink is written. */
+  /** The configured sinks, each checked to be a `core.sink`. */
+  private def sinkDefs: Seq[ActorDef] = cfg.sinks.map { s =>
+    val a = cfg.actors(s)
+    require(a.module == "core.sink", s"terminal actor $s must be core.sink")
+    a
+  }
+
+  /** Batch run: writes every sink through [[writeSink]] (`mode`,
+    * default overwrite); returns sink name -> row count. Each sink
+    * evaluates its pipeline ONCE, so a non-deterministic upstream (rand
+    * replicator) cannot write one sample and report the count of
+    * another. Multi-read inputs are checkpointed once for all sinks and
+    * released when the last sink is written. */
   def runBatch(): Map[String, Long] =
-    try cfg.sinks.map { s =>
-      val a = cfg.actors(s)
-      require(a.module == "core.sink", s"terminal actor $s must be core.sink")
-      val df = outputOf(s)
-      val showRows = p(a, "rows").map(_.toInt).getOrElse(20)
-      // bind:// sinks (sink_head_factory.go:17-46): tcp/udp/unix
-      // writers, file://STDOUT = console, file://<path> = raw
-      // column-bytes file
-      val n = p(a, "bind") match {
-        case Some("file://STDOUT") => countedConsole(df, showRows)
-        case Some(bind) =>
-          countedAction(df)(d => writeBound(d, bind,
-            p(a, "column").getOrElse("body"), append = false))
-        case None => writeFormat(a, s, df)
-      }
-      s -> n
-    }.toMap
+    try sinkDefs.map(a => a.name -> writeSink(a, outputOf(a.name), append = false)).toMap
     finally releaseCheckpoints()
 
-  /** Runs exactly one full-pass `action` over `df`, returning the row
-    * count of the SAME evaluation the action consumed — observed
-    * in-flight through `Dataset.observe`, so nothing is persisted here
-    * and the action is the only evaluation of `df`'s plan above the
-    * run's checkpoints (the class scaladoc). Only valid for actions
-    * that evaluate every row (writes, socket sends — not LIMITed
-    * `show`). */
-  private def countedAction(df: DataFrame)(action: DataFrame => Unit): Long = {
-    val obs = org.apache.spark.sql.Observation()
-    action(df.observe(obs, count(lit(1)).as("rows")))
-    obs.get("rows").asInstanceOf[Long]
-  }
-
-  /** Console sinks: `show` is LIMITed, so the full count needs its own
-    * action; persist across the pair so both read one evaluation. */
-  private def countedConsole(df: DataFrame, showRows: Int): Long = {
-    df.persist()
-    try {
-      val n = df.count()
-      df.show(showRows, truncate = false)
-      n
-    } finally df.unpersist()
-  }
-
-  /** One batch through a bind:// sink head. */
-  private def writeBound(df: DataFrame, bind: String, column: String,
-                         append: Boolean): Unit = bind match {
-    // file://STDOUT never reaches here: both call sites route it to
-    // countedConsole (its show is LIMITed, so it cannot share the
-    // full-pass observe counting this dispatch is wrapped in)
-    case s if s.startsWith("file://") =>
-      df.select(col(column).cast("string")).write
-        .mode(if (append) "append" else "overwrite").text(s.drop(7))
-    case s =>
-      NetSinks.writeBatch(df, NetSinks.writerFor(s, column))
-  }
-
-  /** The format-keyed (non-bind) batch sink dispatch; returns the row
-    * count of the single evaluation each write performed. */
-  private def writeFormat(a: ActorDef, s: String, df: DataFrame): Long =
-      p(a, "format").getOrElse("memory") match {
-        case "parquet" | "json" | "csv" =>
-          countedAction(df) { d =>
-            val path = p(a, "path").getOrElse(sys.error(s"$s: sink needs path"))
-            val w = d.write.mode(p(a, "mode").getOrElse("overwrite"))
-              .format(p(a, "format").get)
+  /** Writes `df` through sink `a` — a whole batch run's output
+    * (`append` false: the sink's `mode`, default overwrite) or one
+    * micro-batch (`append` true) — and returns the row count of the
+    * write's own evaluation, observed in-flight (no persist, no second
+    * pass above the run's checkpoints). Console sinks, whose `show` is
+    * LIMITed, persist across a count and the show instead. With
+    * `counted` false the write is one plain action and returns -1 (the
+    * daemon path). Every append commits through committer v1: a crashed
+    * append leaves the sink row-identical instead of v2's partial task
+    * commits ([[GenDir.V1AppendCommitter]]). */
+  private def writeSink(a: ActorDef, df: DataFrame, append: Boolean,
+                        counted: Boolean = true): Long = {
+    def run(action: DataFrame => Unit): Long =
+      if (!counted) { action(df); -1L } else {
+        val obs = org.apache.spark.sql.Observation()
+        action(df.observe(obs, count(lit(1)).as("rows")))
+        obs.get("rows").asInstanceOf[Long]
+      }
+    def console(): Long = {
+      if (counted) df.persist()
+      try {
+        val n = if (counted) df.count() else -1L
+        df.show(p(a, "rows").map(_.toInt).getOrElse(20), truncate = false)
+        n
+      } finally if (counted) df.unpersist()
+    }
+    val mode = if (append) "append" else p(a, "mode").getOrElse("overwrite")
+    val committer =
+      if (mode.equalsIgnoreCase("append")) GenDir.V1AppendCommitter else Map.empty[String, String]
+    def path = p(a, "path").getOrElse(sys.error(s"${a.name}: sink needs path"))
+    // bind:// sink heads (sink_head_factory.go:17-46): file://STDOUT =
+    // console, file://<path> = raw column text, tcp/udp/unix writers
+    // (per-call connections: the reconnect discipline of sink.go:80-110)
+    p(a, "bind") match {
+      case Some("file://STDOUT") => console()
+      case Some(bind) if bind.startsWith("file://") =>
+        run(_.select(col(p(a, "column").getOrElse("body")).cast("string")).write
+          .options(committer).mode(mode).text(bind.drop(7)))
+      case Some(bind) =>
+        run(NetSinks.writeBatch(_, NetSinks.writerFor(bind, p(a, "column").getOrElse("body"))))
+      case None => p(a, "format").getOrElse("memory") match {
+        case format @ ("parquet" | "json" | "csv") =>
+          run { d =>
+            val w = d.write.options(committer).mode(mode).format(format)
             // demux-to-directories: the batch rendering of content routing
             // (SURVEY §2.3 maps router's partitioned delivery to
             // df.write.partitionBy)
-            val partitioned = a.params.get("partition_by") match {
-              case Some(sq: Seq[_]) => w.partitionBy(sq.map(_.toString): _*)
-              case Some(l: java.util.List[_]) =>
-                w.partitionBy(
-                  scala.jdk.CollectionConverters.ListHasAsScala(l).asScala
-                    .map(_.toString).toSeq: _*)
-              case Some(c) => w.partitionBy(c.toString)
-              case None => w
-            }
-            partitioned.save(path)
+            list(a, "partition_by").fold(w)(w.partitionBy(_: _*)).save(path)
           }
-        case "console" =>
-          countedConsole(df, p(a, "rows").map(_.toInt).getOrElse(20))
-        case "memory" =>
+        case "console" => console()
+        case "memory" if !append =>
           // the view must expose the SAME rows the count reports: a
           // lazily-registered view would re-evaluate the pipeline, and a
           // nondeterministic upstream would disagree with the count. Pin
@@ -1150,136 +1144,68 @@ class PipelineCompiler(spark: SparkSession, cfg0: PipelineConfig) {
           // repeated runBatch replaces the view, so the PREVIOUS run's
           // cache is released here — otherwise a long-lived session
           // re-running batch pipelines leaks executor storage per run.
-          Option(memoryViewCaches.get(s)).foreach(prev =>
+          Option(memoryViewCaches.get(a.name)).foreach(prev =>
             scala.util.Try(prev.unpersist()))
           df.persist()
           val n = df.count()
-          df.createOrReplaceTempView(s)
-          memoryViewCaches.put(s, df)
+          df.createOrReplaceTempView(a.name)
+          memoryViewCaches.put(a.name, df)
           n
-        case "noop" =>
-          countedAction(df)(_.write.format("noop").mode("overwrite").save())
+        // a stream's memory sink only counts: a view cannot accumulate
+        // an unbounded stream
+        case "memory" | "noop" => run(_.write.format("noop").mode("overwrite").save())
         // crawl-interchange sink: (doc_id, url, text) out as WET
         // conversion records (Warc.writeWet — one gzip-member per
-        // record), the inverse of the warc receiver format
-        case "wet" =>
-          countedAction(df) { d =>
-            graft.sources.Warc.writeWet(d,
-              p(a, "path").getOrElse(sys.error(s"$s: sink needs path")))
-          }
-        case other => sys.error(s"$s: unknown sink format $other")
-      }
-
-  /** A compiler whose receivers compile to STREAMING sources (file-drop
-    * stream / DSv2 push stream) instead of batch scans. */
-  private def streamingCompiler(
-      receiverSchemas: Map[String, org.apache.spark.sql.types.StructType])
-      : PipelineCompiler =
-    new PipelineCompiler(spark, cfg) {
-      override def outputOf(name: String, forDownstream: String): DataFrame = {
-        val a = cfg.actors(name)
-        a.module match {
-          // bind:// receiver: start the listener (registered on the OUTER
-          // compiler, so its boundPort/close see it) and stream its push
-          // channel through the DSv2 source
-          case "core.receiver" if a.params.contains("bind") =>
-            val channel = PipelineCompiler.this.ensureListener(a)
-            spark.readStream
-              .format(classOf[graft.sources.PushReceiverProvider].getName)
-              .option("channel", channel)
-              .load()
-          case "core.receiver" =>
-            val fmt = a.params.getOrElse("format", "parquet").toString
-            // the warc formats are a batch per-file kernel, not a
-            // DataSource — streaming crawl ingest goes through the
-            // manifest-tailing loop, which a file stream cannot express
-            require(fmt != "warc" && fmt != "warc_records",
-              s"$name: warc receivers have no file-stream form — drive " +
-                "streaming crawl ingest via StreamingWarcIngest " +
-                "(manifest-tailing drop zone) instead")
-            Streams.fileSource(spark, a.params("path").toString,
-              receiverSchemas(name), fmt)
-          case "core.push_receiver" =>
-            val reader = spark.readStream
-              .format(classOf[graft.sources.PushReceiverProvider].getName)
-              .option("channel", a.params.getOrElse("channel", "default").toString)
-            a.params.get("maxMsgsPerTrigger")
-              .foreach(m => reader.option("maxMsgsPerTrigger", m.toString))
-            reader.load()
-          case _ => super.outputOf(name, forDownstream)
-        }
-      }
-    }
-
-  /** One micro-batch through sink actor `a`'s configured output: bind://
-    * head (per-epoch reconnect, sink.go:80-110 discipline), file formats
-    * append, console shows; memory/noop count-only (their batch semantics
-    * don't accumulate across an unbounded stream). With `needCount` the
-    * batch's row count is observed from the SAME single evaluation the
-    * write consumes (in-flight via [[countedAction]], console excepted);
-    * the daemon path passes `needCount = false` and discards the count,
-    * so its writes stay a single plain action per trigger — no extra
-    * materialization, no cache. */
-  private def writeSinkBatch(a: ActorDef, batch: DataFrame,
-                             needCount: Boolean = true): Long = {
-    val showRows = p(a, "rows").map(_.toInt).getOrElse(20)
-    def counted(action: DataFrame => Unit): Long =
-      if (needCount) countedAction(batch)(action) else { action(batch); -1L }
-    p(a, "bind") match {
-      case Some("file://STDOUT") =>
-        if (needCount) countedConsole(batch, showRows)
-        else { batch.show(showRows, truncate = false); -1L }
-      case Some(bind) =>
-        counted(d => writeBound(d, bind, p(a, "column").getOrElse("body"),
-          append = true))
-      case None => p(a, "format").getOrElse("memory") match {
-        case "parquet" | "json" | "csv" =>
-          // committer v1 on the user-facing append sink: a crashed
-          // write leaves the sink row-identical instead of v2's
-          // partial task commits (see [[graft.llm.GenDir.V1AppendCommitter]])
-          counted(_.write.options(graft.llm.GenDir.V1AppendCommitter)
-            .mode("append").format(p(a, "format").get)
-            .save(p(a, "path").getOrElse(sys.error(s"${a.name}: sink needs path"))))
-        case "console" =>
-          if (needCount) countedConsole(batch, showRows)
-          else { batch.show(showRows, truncate = false); -1L }
-        case _ => // memory/noop: the evaluation IS the sink's effect
-          if (needCount) batch.count()
-          else { batch.write.format("noop").mode("overwrite").save(); -1L }
+        // record), the inverse of the warc receiver format; batch runs
+        // only ([[PipelineCompiler.cannotStream]])
+        case "wet" => run(Warc.writeWet(_, path))
+        case other => sys.error(s"${a.name}: unknown sink format $other")
       }
     }
   }
 
-  /** Streaming run: the receiver becomes a file/push stream; each sink
-    * branch runs as one foreachBatch query with Trigger.AvailableNow
-    * (start/stop discipline per SURVEY §2.6.5 is inherent: queries are
-    * started per sink and awaited before returns). Sinks WRITE their
-    * configured outputs per micro-batch (same dispatch as the daemon
-    * mode), so `Flowd --stream` on a bind/console/file sink emits, not
-    * just counts. */
-  def runStreamingOnce(receiverSchemas: Map[String, org.apache.spark.sql.types.StructType])
-      : Map[String, Long] = {
-    val streamCompiler = streamingCompiler(receiverSchemas)
-    cfg.sinks.map { s =>
-      val a = cfg.actors(s)
-      require(a.module == "core.sink", s"terminal actor $s must be core.sink")
-      val df = streamCompiler.outputOf(s)
+  /** Every sink with its streaming plan: the same [[build]] as a batch
+    * run, with each receiver compiled to its stream. Refuses the whole
+    * pipeline, naming the actor, before any listener starts when an
+    * actor has no streaming form ([[PipelineCompiler.cannotStream]]). */
+  private def streamingPlans(schemas: Map[String, StructType]): Seq[(ActorDef, DataFrame)] = {
+    cfg.actors.values.toSeq.sortBy(_.name).foreach(a =>
+      PipelineCompiler.cannotStream(a).foreach(why =>
+        throw new IllegalArgumentException(s"${a.name}: $why")))
+    memo.clear()
+    streamSchemas = Some(schemas)
+    try sinkDefs.map(a => a -> outputOf(a.name))
+    finally { streamSchemas = None; memo.clear() }
+  }
+
+  /** Starts sink `a`'s foreachBatch query, named after the sink, over its
+    * streaming plan `df`. */
+  private def startQuery(a: ActorDef, df: DataFrame, trigger: Trigger, checkpoint: String,
+                         write: (DataFrame, Long) => Unit): StreamingQuery =
+    df.writeStream.queryName(a.name).foreachBatch(write)
+      .option("checkpointLocation", checkpoint).trigger(trigger).start()
+
+  /** Streaming run: each sink branch runs as one foreachBatch query with
+    * Trigger.AvailableNow under a fresh checkpoint, started once the
+    * previous sink's query finished (SURVEY §2.6.5). Sinks WRITE their
+    * outputs per micro-batch through [[writeSink]], so `Flowd --stream`
+    * emits, not just counts; a failing write fails the run. Returns sink
+    * name -> rows written. */
+  def runStreamingOnce(receiverSchemas: Map[String, StructType]): Map[String, Long] =
+    streamingPlans(receiverSchemas).map { case (a, df) =>
       var n = 0L
-      Streams.runForeachBatch(df, (batch, _) => {
-        n += writeSinkBatch(a, batch)
-      })
-      s -> n
+      startQuery(a, df, Trigger.AvailableNow(), Streams.newCheckpointDir(),
+        (batch, _) => n += writeSink(a, batch, append = true)).awaitTermination()
+      a.name -> n
     }.toMap
-  }
 
   /** Daemon mode (the reference's long-running flowd): start every sink
     * branch as a CONTINUOUS foreachBatch query and return the live
     * queries — the pipeline keeps draining newly-arriving files/messages
     * until each query is stopped (or `spark.streams.awaitAnyTermination`
-    * unblocks). File/object sinks append per micro-batch; console shows;
-    * memory/noop count (their batch semantics don't accumulate across an
-    * unbounded stream). Pair with [[graft.streaming.AdminServer]] for
-    * live /progress while it runs.
+    * unblocks). Sinks write through [[writeSink]] as in
+    * [[runStreamingOnce]], each micro-batch one plain action. Pair with
+    * [[graft.streaming.AdminServer]] for live /progress while it runs.
     *
     * A sink's `checkpoint` param pins its query's checkpointLocation, so
     * a restarted `--follow` daemon resumes from committed offsets instead
@@ -1287,15 +1213,10 @@ class PipelineCompiler(spark: SparkSession, cfg0: PipelineConfig) {
     * fresh ephemeral dir is used (every restart replays from scratch).
     * Caveat either way: foreachBatch + append is at-least-once — a batch
     * retried after a mid-write crash appends its rows twice. */
-  def startStreaming(receiverSchemas: Map[String, org.apache.spark.sql.types.StructType],
-                     trigger: org.apache.spark.sql.streaming.Trigger =
-                       org.apache.spark.sql.streaming.Trigger.ProcessingTime("1 second"))
-      : Map[String, org.apache.spark.sql.streaming.StreamingQuery] = {
-    val streamCompiler = streamingCompiler(receiverSchemas)
-    cfg.sinks.map { s =>
-      val a = cfg.actors(s)
-      require(a.module == "core.sink", s"terminal actor $s must be core.sink")
-      val df = streamCompiler.outputOf(s)
+  def startStreaming(receiverSchemas: Map[String, StructType],
+                     trigger: Trigger = Trigger.ProcessingTime("1 second"))
+      : Map[String, StreamingQuery] =
+    streamingPlans(receiverSchemas).map { case (a, df) =>
       // the reference sink's reconnect discipline (sink.go:80-110 /
       // buffer.go:33-93): a failing micro-batch write retries in-batch
       // with exponential backoff — every attempt opens fresh
@@ -1303,24 +1224,17 @@ class PipelineCompiler(spark: SparkSession, cfg0: PipelineConfig) {
       // exhausted batch is dead-lettered (counted via
       // [[deadLetterCounts]]), never thrown into the stream. Policy
       // knobs are sink params with the reference defaults.
-      val policy = graft.streaming.ReliableSink.RetryPolicy(
+      val policy = ReliableSink.RetryPolicy(
         maxAttempts = p(a, "max_attempts").map(_.toInt).getOrElse(16),
         minBackoffMs = p(a, "min_backoff_ms").map(_.toLong).getOrElse(50L),
         maxBackoffMs = p(a, "max_backoff_ms").map(_.toLong).getOrElse(5000L))
-      val write = graft.streaming.ReliableSink.withRetry(
-        (batch, _) => writeSinkBatch(a, batch, needCount = false): Unit,
-        (batch, batchId, err) => recordDeadLetter(s, batchId, batch, err),
+      val write = ReliableSink.withRetry(
+        (batch, _) => writeSink(a, batch, append = true, counted = false): Unit,
+        (batch, batchId, err) => recordDeadLetter(a.name, batchId, batch, err),
         policy)
-      val q = df.writeStream
-        .queryName(s)
-        .foreachBatch(write)
-        .option("checkpointLocation",
-          p(a, "checkpoint").getOrElse(Streams.newCheckpointDir()))
-        .trigger(trigger)
-        .start()
-      s -> q
+      a.name -> startQuery(a, df, trigger,
+        p(a, "checkpoint").getOrElse(Streams.newCheckpointDir()), write)
     }.toMap
-  }
 
   /** memory-sink name -> the persisted DataFrame backing its temp view;
     * consulted on view replacement so the superseded cache is released. */

@@ -2,8 +2,15 @@ package graft.pipeline
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.hadoop.fs.Path
+import org.apache.hadoop.mapreduce.TaskAttemptContext
+import org.apache.parquet.hadoop.ParquetOutputCommitter
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, udf}
+import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.types.TimestampType
 import org.apache.spark.util.LongAccumulator
 
 import graft.SparkSpec
@@ -21,6 +28,18 @@ class RowCounterPlugin extends ActorPlugin {
 
 object RowCounterPlugin {
   @volatile var rows: LongAccumulator = _
+}
+
+/** A parquet committer that records the committer algorithm version of
+  * every write it commits. */
+class RecordingParquetCommitter(out: Path, ctx: TaskAttemptContext)
+    extends ParquetOutputCommitter(out, ctx) {
+  RecordingParquetCommitter.versions.add(String.valueOf(
+    ctx.getConfiguration.get("mapreduce.fileoutputcommitter.algorithm.version")))
+}
+
+object RecordingParquetCommitter {
+  val versions = new java.util.concurrent.ConcurrentLinkedQueue[String]()
 }
 
 class PipelineSpec extends SparkSpec {
@@ -209,19 +228,25 @@ class PipelineSpec extends SparkSpec {
 
   test("partitioned parquet sink demuxes rows into per-key directories") {
     val in = Files.createTempDirectory("graft-pipe-part-in-").toString
-    val out = Files.createTempDirectory("graft-pipe-part-out-").toString + "/demux"
     writeEvents(in)
-    val yaml =
-      s"""actors:
-        |  src: {module: core.receiver, params: {path: "$in"}}
-        |  out: {module: core.sink, params: {format: parquet, path: "$out", partition_by: [kind]}}
-        |pipeline:
-        |  src: {connect: [out]}
-        |""".stripMargin
-    val counts = new PipelineCompiler(spark, PipelineConfig.parse(yaml)).runBatch()
-    assert(counts("out") == 5L)
-    val dirs = new java.io.File(out).listFiles().filter(_.isDirectory).map(_.getName).toSet
-    assert(dirs == Set("kind=click", "kind=view", "kind=bogus", "kind=purchase"))
+    // batch runs and micro-batches share the sink dispatch
+    for (streaming <- Seq(false, true)) {
+      val out = Files.createTempDirectory("graft-pipe-part-out-").toString + "/demux"
+      val yaml =
+        s"""actors:
+          |  src: {module: core.receiver, params: {path: "$in"}}
+          |  out: {module: core.sink, params: {format: parquet, path: "$out", partition_by: [kind]}}
+          |pipeline:
+          |  src: {connect: [out]}
+          |""".stripMargin
+      val compiler = new PipelineCompiler(spark, PipelineConfig.parse(yaml))
+      val counts =
+        if (streaming) compiler.runStreamingOnce(Map("src" -> spark.read.parquet(in).schema))
+        else compiler.runBatch()
+      assert(counts("out") == 5L)
+      val dirs = new java.io.File(out).listFiles().filter(_.isDirectory).map(_.getName).toSet
+      assert(dirs == Set("kind=click", "kind=view", "kind=bogus", "kind=purchase"), s"streaming=$streaming")
+    }
   }
 
   test("runStreamingOnce writes sink outputs per micro-batch, not just counts") {
@@ -448,5 +473,126 @@ class PipelineSpec extends SparkSpec {
         |""".stripMargin
     val e = intercept[IllegalArgumentException](PipelineConfig.parse(noBind))
     assert(e.getMessage.contains("path"))
+  }
+
+  test("startStreaming over a push_receiver journals to journal_dir") {
+    val ch = "pipe-push-journal"
+    graft.sources.PushReceiver.clear(ch)
+    val journal = Files.createTempDirectory("graft-pipe-journal-").toString
+    val out = Files.createTempDirectory("graft-pipe-journal-out-").toString + "/sink"
+    val yaml =
+      s"""actors:
+        |  src: {module: core.push_receiver, params: {channel: "$ch", journal_dir: "$journal"}}
+        |  out: {module: core.sink, params: {format: parquet, path: "$out"}}
+        |pipeline:
+        |  src: {connect: [out]}
+        |""".stripMargin
+    val compiler = new PipelineCompiler(spark, PipelineConfig.parse(yaml))
+    val queries = compiler.startStreaming(Map.empty,
+      Trigger.ProcessingTime("100 milliseconds"))
+    val bodies = Seq("alpha", "beta", "gamma")
+    try {
+      bodies.foreach(b => graft.sources.PushReceiver.push(ch, b.getBytes("UTF-8")))
+      queries("out").processAllAvailable()
+      assert(new java.io.File(journal, s"$ch.log").isFile)
+      assert(spark.read.parquet(out).select($"body".cast("string")).as[String]
+        .collect().sorted.toSeq == bodies)
+    } finally {
+      queries.values.foreach(_.stop())
+      compiler.close()
+      graft.sources.PushReceiver.clear(ch)
+    }
+  }
+
+  test("runStreamingOnce normalizes ts_nanos_to_micros columns like runBatch") {
+    val in = Files.createTempDirectory("graft-pipe-nanos-").toString
+    Seq((1L, 1700000000123456789L), (2L, 1700000001987654321L))
+      .toDF("id", "ts").write.mode("overwrite").parquet(in)
+    def run(streaming: Boolean): Seq[org.apache.spark.sql.Row] = {
+      val out = Files.createTempDirectory("graft-pipe-nanos-out-").toString + "/sink"
+      val yaml =
+        s"""actors:
+          |  src: {module: core.receiver, params: {path: "$in", ts_nanos_to_micros: ts}}
+          |  out: {module: core.sink, params: {format: parquet, path: "$out"}}
+          |pipeline:
+          |  src: {connect: [out]}
+          |""".stripMargin
+      val compiler = new PipelineCompiler(spark, PipelineConfig.parse(yaml))
+      if (streaming) compiler.runStreamingOnce(Map("src" -> spark.read.parquet(in).schema))
+      else compiler.runBatch()
+      val df = spark.read.parquet(out)
+      assert(df.schema("ts").dataType == TimestampType)
+      df.orderBy("id").collect().toSeq
+    }
+    assert(run(streaming = true) == run(streaming = false))
+  }
+
+  test("a streaming wet sink is refused, naming the sink") {
+    val in = Files.createTempDirectory("graft-pipe-swet-in-").toString
+    val out = Files.createTempDirectory("graft-pipe-swet-out-").toString + "/wet"
+    writeEvents(in)
+    val yaml =
+      s"""actors:
+        |  src: {module: core.receiver, params: {path: "$in"}}
+        |  crawl_out: {module: core.sink, params: {format: wet, path: "$out"}}
+        |pipeline:
+        |  src: {connect: [crawl_out]}
+        |""".stripMargin
+    val e = intercept[IllegalArgumentException](
+      new PipelineCompiler(spark, PipelineConfig.parse(yaml))
+        .runStreamingOnce(Map("src" -> spark.read.parquet(in).schema)))
+    assert(e.getMessage.contains("crawl_out"), e.getMessage)
+    assert(!new java.io.File(out).exists())
+  }
+
+  test("a pipeline with no streaming form is refused before any sink writes") {
+    val in = Files.createTempDirectory("graft-pipe-sfan-in-").toString
+    val aOut = Files.createTempDirectory("graft-pipe-sfan-out-").toString + "/a"
+    writeEvents(in)
+    // sinks run in name order: a_out would be written before the
+    // fanout branch's query is rejected at start
+    val yaml =
+      s"""actors:
+        |  src: {module: core.receiver, params: {path: "$in"}}
+        |  rep: {module: core.replicator, params: {mode: fanout}}
+        |  a_out: {module: core.sink, params: {format: parquet, path: "$aOut"}}
+        |  b_out: {module: core.sink, params: {format: memory}}
+        |pipeline:
+        |  src: {connect: [a_out, rep]}
+        |  rep: {connect: [b_out]}
+        |""".stripMargin
+    val e = intercept[IllegalArgumentException](
+      new PipelineCompiler(spark, PipelineConfig.parse(yaml))
+        .runStreamingOnce(Map("src" -> spark.read.parquet(in).schema)))
+    assert(e.getMessage.contains("rep") && e.getMessage.contains("fanout"), e.getMessage)
+    assert(!new java.io.File(aOut).exists())
+  }
+
+  test("a batch mode: append file sink commits through committer v1") {
+    val in = Files.createTempDirectory("graft-pipe-app-in-").toString
+    val out = Files.createTempDirectory("graft-pipe-app-out-").toString + "/sink"
+    writeEvents(in)
+    val yaml =
+      s"""actors:
+        |  src: {module: core.receiver, params: {path: "$in"}}
+        |  out: {module: core.sink, params: {format: parquet, path: "$out", mode: append}}
+        |pipeline:
+        |  src: {connect: [out]}
+        |""".stripMargin
+    val committerKey = "spark.sql.parquet.output.committer.class"
+    val versionKey = "mapreduce.fileoutputcommitter.algorithm.version"
+    RecordingParquetCommitter.versions.clear()
+    spark.conf.set(committerKey, classOf[RecordingParquetCommitter].getName)
+    // v2 is the shipping session's default (GraftSession)
+    spark.conf.set(versionKey, "2")
+    try (1 to 2).foreach(_ =>
+      new PipelineCompiler(spark, PipelineConfig.parse(yaml)).runBatch())
+    finally {
+      spark.conf.unset(committerKey)
+      spark.conf.unset(versionKey)
+    }
+    assert(spark.read.parquet(out).count() == 10L)
+    val seen = RecordingParquetCommitter.versions.asScala.toSet
+    assert(seen == Set("1"), seen)
   }
 }
