@@ -33,8 +33,7 @@ object ConnectedComponents {
     * streaming micro-batch ∪ a parquet read), pass a clean rebuild
     * (`spark.createDataFrame(edges.rdd, edges.schema)`): checkpointing
     * such a plan keeps origin constraints with foreign attribute ids and
-    * the rounds' unions then fail Catalyst constraint rewriting — see
-    * [[graft.streaming.StreamingCC.mergeBatch]].
+    * the rounds' unions then fail Catalyst constraint rewriting.
     */
   def run(edges: DataFrame, uCol: String, vCol: String,
           maxIter: Int = 50): DataFrame =

@@ -79,17 +79,6 @@ object Dedup {
         coalesce(col("clean_text"), lit("")).as("clean_text"))
   }
 
-  /** Streaming exact dedup: drops documents whose content hash was seen
-    * within the watermark horizon — the streaming rendering of `exact`
-    * (state = one 128-bit hash per distinct doc inside the horizon,
-    * evicted by watermark; unbounded-horizon dedup at 100 TB instead
-    * uses the batch groupBy over the accumulated corpus). */
-  def streamingExact(df: DataFrame, textCol: String, tsCol: String,
-                     watermark: String): DataFrame =
-    df.withColumn("content_hash", md5(col(textCol).cast("binary")))
-      .withWatermark(tsCol, watermark)
-      .dropDuplicatesWithinWatermark("content_hash")
-
   /** Cross-document duplicated-span extraction (the "dedup the span, not
     * the document" pass of Lee et al. 2022, arXiv:2107.06499): every
     * `w`-token window position is hashed (codegen
@@ -533,8 +522,7 @@ object Dedup {
     pmod(xxhash64(id), lit(IndexIdBuckets)).cast("int")
 
   /** (shingleN, numBands, rowsPerBand) a persisted index was built with —
-    * for callers that must sign OTHER frames compatibly (e.g. the
-    * streaming admission loop's intra-batch pass). */
+    * for callers that must sign OTHER frames compatibly. */
   def lshIndexParams(spark: org.apache.spark.sql.SparkSession,
                      dir: String): (Int, Int, Int) = readIndexMeta(spark, dir)
 
@@ -940,8 +928,7 @@ object Dedup {
 
   /** Heal any interrupted compaction on a persisted LSH dedup
     * index and report whether `dir` holds a complete index (meta,
-    * shingles AND bands) — the bootstrap check of
-    * [[graft.streaming.StreamingIndexDedup]]; same contract as
+    * shingles AND bands); same contract as
     * [[Retrieval.bm25IndexRecover]]. */
   def lshIndexRecover(spark: org.apache.spark.sql.SparkSession,
                       dir: String): Boolean = {

@@ -9,10 +9,9 @@ import org.apache.spark.sql.SparkSession
   * Structured Streaming's `foreachBatch` is at-least-once: a batch
   * whose side effect completed but whose checkpoint commit did not is
   * REDELIVERED after restart, and a plain additive append would apply
-  * its counts twice. The ingest docstrings ([[graft.streaming
-  * .StreamingLmIngest]], [[graft.streaming.StreamingBm25Ingest]])
-  * named the upgrade path — batchId-keyed staging plus an atomic
-  * commit — and this object implements it:
+  * its counts twice. This object closes that window for
+  * [[graft.streaming.IndexIngest]] with batchId-keyed staging plus an
+  * atomic commit:
   *
   *  - a batch's count deltas land under `slice.inc/batch-<id>[_<stream>]/`
   *    (full-directory overwrite, so REDELIVERY IS IDEMPOTENT — the
@@ -46,10 +45,9 @@ import org.apache.spark.sql.SparkSession
   * (batchId restarts at 0) under a FRESH stream id appends correctly
   * instead of colliding with the old lineage's markers and silently
   * skipping real batches. Redelivery detection stays per-stream:
-  * batch 3 of stream A is independent of batch 3 of stream B. Legacy
-  * markers written before this upgrade (`batch-<id>`, no stream
-  * token) parse as the empty-string stream and keep being honored —
-  * the empty stream id IS the legacy lineage. The single-writer
+  * batch 3 of stream A is independent of batch 3 of stream B. The
+  * empty stream id is a lineage like any other; its markers are named
+  * `batch-<id>`, with no stream token. The single-writer
   * contract (appends and compactions from one thread at a time) is
   * unchanged — the ingest loops still run one stream; the stream id
   * exists so SUCCESSIVE lineages (restart with fresh checkpoint)
@@ -78,9 +76,9 @@ private[graft] object IncLog {
   private val FoldedFile = "_folded"
   private val SliceFoldMarker = "_FOLDED_THROUGH"
   private val BatchPrefix = "batch-"
-  /** Sentinel token for the legacy empty-string stream id in v2
-    * watermark files (a bare "" would break whitespace tokenizing). */
-  private val LegacyTok = "-"
+  /** Token for the empty stream id in watermark files (a bare "" would
+    * break whitespace tokenizing). */
+  private val EmptyTok = "-"
 
   /** Per-stream watermarks: streamId -> highest folded batch id.
     * Absent stream = -1 (nothing folded for that lineage). */
@@ -94,12 +92,12 @@ private[graft] object IncLog {
 
   private def checkStreamId(streamId: String): Unit =
     require(!streamId.contains("_") && !streamId.contains("/") &&
-      !streamId.exists(_.isWhitespace) && streamId != LegacyTok,
-      s"stream id must not contain '_', '/', whitespace or be '$LegacyTok': " +
+      !streamId.exists(_.isWhitespace) && streamId != EmptyTok,
+      s"stream id must not contain '_', '/', whitespace or be '$EmptyTok': " +
         s"'$streamId' (UUIDs and hyphenated names are fine)")
 
   /** Marker / increment-directory name of a (stream, batch) pair.
-    * Legacy (empty stream): `batch-<id>`. Stream-scoped:
+    * Empty stream: `batch-<id>`. Stream-scoped:
     * `batch-<id>_<stream>` — batch ids are digits and stream ids may
     * not contain '_', so the first underscore splits unambiguously. */
   private def markerName(streamId: String, batchId: Long): String = {
@@ -188,17 +186,17 @@ private[graft] object IncLog {
     * watermarks. */
   case class FoldSummary(marks: Marks, t: Long, n: Long)
 
-  /** Serialize marks as "tok w" lines (legacy "" stream as the
-    * [[LegacyTok]] sentinel); inverse of [[parseMarkLines]]. */
+  /** Serialize marks as "tok w" lines (the "" stream as
+    * [[EmptyTok]]); inverse of [[parseMarkLines]]. */
   private def markLines(m: Marks): Seq[String] =
     m.toSeq.sortBy(_._1).map { case (s, w) =>
-      s"${if (s.isEmpty) LegacyTok else s} $w"
+      s"${if (s.isEmpty) EmptyTok else s} $w"
     }
 
   private def parseMarkLines(lines: Seq[String]): Marks =
     lines.filter(_.nonEmpty).map { ln =>
       val Array(tok, w) = ln.trim.split(" ")
-      (if (tok == LegacyTok) "" else tok) -> w.toLong
+      (if (tok == EmptyTok) "" else tok) -> w.toLong
     }.toMap
 
   def foldedSummary(spark: SparkSession, modelDir: String): FoldSummary = {
@@ -208,17 +206,12 @@ private[graft] object IncLog {
     val in = fs.open(f)
     val body = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
     finally in.close()
+    // "v2 t n", then one "stream w" line per lineage
     val lines = body.split("\n").toSeq.map(_.trim)
     val head = lines.head.split(" ")
-    if (head(0) == "v2")
-      // v2: "v2 t n" then one "stream w" line per lineage
-      FoldSummary(parseMarkLines(lines.tail), head(1).toLong, head(2).toLong)
-    else {
-      // legacy single-stream format: "w t n"
-      val Array(w, t, n) = head
-      val marks: Marks = if (w.toLong == -1L) Map.empty else Map("" -> w.toLong)
-      FoldSummary(marks, t.toLong, n.toLong)
-    }
+    require(head.length == 3 && head(0) == "v2",
+      s"unknown fold-summary format in $f")
+    FoldSummary(parseMarkLines(lines.tail), head(1).toLong, head(2).toLong)
   }
 
   /** True when the log's state is provably an exactly-once BOOTSTRAP's
@@ -262,18 +255,12 @@ private[graft] object IncLog {
         "exactly-once append path, or compact + delete _commits to " +
         "migrate the index to the plain lifecycle")
 
-  /** Advance the folded summary (temp-and-rename atomic). Writes the
-    * v2 multi-stream format unless only the legacy stream exists, in
-    * which case the legacy "w t n" single-line form is kept for
-    * backward readability. */
+  /** Advance the folded summary (temp-and-rename atomic). */
   def writeFoldedSummary(spark: SparkSession, modelDir: String, m: Marks,
                          t: Long, n: Long): Unit = {
     val (fs, c) = fsOf(spark, commitsPath(modelDir))
     fs.mkdirs(c)
-    val body =
-      if (m.keySet.subsetOf(Set("")))
-        s"${markOf(m, "")} $t $n"
-      else (s"v2 $t $n" +: markLines(m)).mkString("\n")
+    val body = (s"v2 $t $n" +: markLines(m)).mkString("\n")
     val tmp = new Path(c, s".$FoldedFile.tmp")
     val out = fs.create(tmp, true)
     out.write(body.getBytes("UTF-8"))
@@ -294,12 +281,10 @@ private[graft] object IncLog {
     val in = fs.open(f)
     val body = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
     finally in.close()
+    // "v2", then one "stream w" line per lineage
     val lines = body.split("\n").toSeq.map(_.trim)
-    if (lines.head == "v2") parseMarkLines(lines.tail)
-    else {
-      val w = lines.head.toLong
-      if (w == -1L) Map.empty else Map("" -> w)
-    }
+    require(lines.head == "v2", s"unknown fold-watermark format in $genPath")
+    parseMarkLines(lines.tail)
   }
 
   /** Record the fold watermarks inside a new generation directory —
@@ -309,25 +294,10 @@ private[graft] object IncLog {
   def writeSliceFoldedThrough(spark: SparkSession, genPath: String,
                               m: Marks): Unit = {
     val (fs, p) = fsOf(spark, genPath)
-    val body =
-      if (m.keySet.subsetOf(Set(""))) markOf(m, "").toString
-      else ("v2" +: markLines(m)).mkString("\n")
+    val body = ("v2" +: markLines(m)).mkString("\n")
     val out = fs.create(new Path(p, SliceFoldMarker), true)
     out.write(body.getBytes("UTF-8"))
     out.close()
-  }
-
-  /** Increment directories of committed batches above `after` for one
-    * slice — what a reader unions with the slice's live generation. A
-    * committed batch with no directory here contributed nothing to this
-    * slice (possible only for empty batches; the write precedes the
-    * marker). */
-  def liveIncPaths(spark: SparkSession, modelDir: String, sliceBase: String,
-                   after: Marks): Seq[String] = {
-    val (fs, _) = fsOf(spark, sliceBase)
-    committedAfter(spark, modelDir, after)
-      .map(cm => incPath(sliceBase, cm.id, cm.stream))
-      .filter(p => fs.exists(new Path(p)))
   }
 
   // ---- per-operation snapshot + the fold machinery shared by every

@@ -36,13 +36,9 @@ object Sampling {
     (conv(substring(md5(concat(id.cast("string"), lit(seed))), 1, 13), 16, 10)
       .cast("double") + lit(0.5)) / lit(4503599627370496.0) // 2^52
 
-  /** The A-ES rank key as a column — shared verbatim by the batch
-    * sampler below and the streaming reservoir
-    * ([[graft.streaming.StreamingWeightedSample]]), which is what makes
-    * their samples identical on identical data (the key is a pure row
-    * function; only the top-k maintenance differs). */
-  private[graft] def rankKey(id: Column, weight: Column,
-                             seed: String): Column =
+  /** The A-ES rank key as a column: a pure row function, so a sample
+    * is identical on identical data. */
+  private def rankKey(id: Column, weight: Column, seed: String): Column =
     round(pow(uniformOf(id, seed), lit(1.0) / weight.cast("double")), 9)
 
   /** @param groupCols strata; k rows kept per distinct combination

@@ -1,9 +1,10 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame, GraftBridge, SparkSession}
+import org.apache.spark.sql.{AnalysisException, Column, DataFrame, GraftBridge, SparkSession}
+import org.apache.spark.sql.catalyst.analysis.UnsupportedOperationChecker
 import org.apache.spark.sql.catalyst.plans.logical.LeafNode
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
 
 import graft.llm.GenDir
@@ -32,8 +33,9 @@ import graft.streaming.{NetSinks, ReliableSink, Streams}
   * Batch and streaming runs share one [[build]]; only the receivers
   * differ (scan or channel snapshot vs file or DSv2 stream). Streaming
   * runs refuse, before anything starts, a pipeline with an actor that
-  * has no streaming form ([[PipelineCompiler.cannotStream]]), then run
-  * each sink branch as one foreachBatch query over the shared source.
+  * has no streaming form ([[PipelineCompiler.cannotStream]]) or a sink
+  * plan Spark would refuse to stream, then run each sink branch as one
+  * foreachBatch query over the shared source.
   *
   * The per-node DataFrame is memoized, so a diamond topology builds
   * each node's plan once. Evaluation is once per batch run: an actor
@@ -79,8 +81,7 @@ object PipelineCompiler {
     val bound = a.params.contains("bind")
     a.module match {
       case "core.receiver" if !bound && is("format", "warc", "warc_records") =>
-        Some("warc receivers have no file-stream form; drive streaming " +
-          "crawl ingest via StreamingWarcIngest instead")
+        Some("warc receivers have no file-stream form")
       case "core.replicator" if is("mode", "fanout") =>
         Some("replicator mode fanout uses monotonically_increasing_id, " +
           "which streaming queries reject")
@@ -1166,16 +1167,28 @@ class PipelineCompiler(spark: SparkSession, cfg0: PipelineConfig) {
 
   /** Every sink with its streaming plan: the same [[build]] as a batch
     * run, with each receiver compiled to its stream. Refuses the whole
-    * pipeline, naming the actor, before any listener starts when an
-    * actor has no streaming form ([[PipelineCompiler.cannotStream]]). */
+    * pipeline, naming the actor, before any listener or query starts:
+    * when an actor has no streaming form
+    * ([[PipelineCompiler.cannotStream]]), and when a sink's plan fails
+    * the check Spark runs as its append-mode query starts (e.g. an
+    * aggregation without a watermark). */
   private def streamingPlans(schemas: Map[String, StructType]): Seq[(ActorDef, DataFrame)] = {
     cfg.actors.values.toSeq.sortBy(_.name).foreach(a =>
       PipelineCompiler.cannotStream(a).foreach(why =>
         throw new IllegalArgumentException(s"${a.name}: $why")))
     memo.clear()
     streamSchemas = Some(schemas)
-    try sinkDefs.map(a => a -> outputOf(a.name))
-    finally { streamSchemas = None; memo.clear() }
+    val plans =
+      try sinkDefs.map(a => a -> outputOf(a.name))
+      finally { streamSchemas = None; memo.clear() }
+    plans.foreach { case (a, df) =>
+      try UnsupportedOperationChecker.checkForStreaming(
+        df.queryExecution.analyzed, OutputMode.Append())
+      catch { case e: AnalysisException =>
+        throw new IllegalArgumentException(
+          s"${a.name}: cannot stream: ${e.getMessage}", e) }
+    }
+    plans
   }
 
   /** Starts sink `a`'s foreachBatch query, named after the sink, over its

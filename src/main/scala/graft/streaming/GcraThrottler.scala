@@ -30,94 +30,38 @@ object GcraThrottler {
   case class Event(key: String, eventTimeNs: Long, id: Long)
   case class Result(key: String, eventTimeNs: Long, id: Long, admitted: Boolean)
 
+  /** The TAT loop shared by both entry points: one key's events in
+    * (event time ns, `tie`) order, `state` carrying the TAT across
+    * micro-batches; `emit` pairs each event with its event time and
+    * verdict. */
+  private def admit[E, R](events: Iterator[E], state: GroupState[Long],
+                          rps: Double)(tsNs: E => Long, tie: E => Long)(
+      emit: (E, Long, Boolean) => R): Iterator[R] = {
+    val costNs = (1e9 / rps).toLong
+    val burstNs = math.max(0L, 1000000000L - costNs) // throttler.go:37-38
+    var tat = state.getOption.getOrElse(Long.MinValue)
+    val out = events.toSeq.sortBy(e => (tsNs(e), tie(e))).map { e =>
+      val t = tsNs(e)
+      val admitted = tat == Long.MinValue || tat - t <= burstNs
+      if (admitted) tat = math.max(tat, t) + costNs
+      emit(e, t, admitted)
+    }
+    state.update(tat)
+    out.iterator
+  }
+
   def throttle(events: Dataset[Event], rps: Double,
                timeout: GroupStateTimeout = GroupStateTimeout.NoTimeout())
       : Dataset[Result] = {
-    val costNs = (1e9 / rps).toLong
-    val burstNs = math.max(0L, 1000000000L - costNs) // throttler.go:37-38
     implicit val resEnc = Encoders.product[Result]
     implicit val keyEnc = Encoders.STRING
     implicit val longEnc = Encoders.scalaLong
     events.groupByKey(_.key)
       .flatMapGroupsWithState(OutputMode.Append(), timeout) {
         (key: String, it: Iterator[Event], state: GroupState[Long]) =>
-          var tat = state.getOption.getOrElse(Long.MinValue)
-          val out = it.toSeq.sortBy(e => (e.eventTimeNs, e.id)).map { e =>
-            val t = e.eventTimeNs
-            val admitted = tat == Long.MinValue || tat - t <= burstNs
-            if (admitted) tat = math.max(tat, t) + costNs
-            Result(key, t, e.id, admitted)
-          }
-          state.update(tat)
-          out.iterator
+          admit(it, state, rps)(_.eventTimeNs, _.id)(
+            (e, t, admitted) => Result(key, t, e.id, admitted))
       }
-  }
-
-  /** [[throttle]] on Spark 4's `transformWithState` — same TAT algorithm
-    * and results, state held in a RocksDB-backed ValueState (off-heap,
-    * spillable: the modern home for keyed operator state at scale).
-    * Without a TTL, TimeMode.None: GCRA is driven by EVENT time carried
-    * in the data, not processing-time timers — no housekeeping batches,
-    * and drain-based harnesses work unchanged. With a TTL the state runs
-    * in TimeMode.ProcessingTime and the native TTL evicts idle keys —
-    * the unbounded-key-cardinality case (per-client rate limiting over a
-    * churning client population): an idle client's 8-byte TAT register
-    * disappears for free instead of accumulating forever, and a client
-    * returning after the TTL starts fresh — semantically sound, since a
-    * TAT older than the TTL can only admit anyway once
-    * ttl >= burst + cost. */
-  class GcraProcessor(costNs: Long, burstNs: Long,
-                      ttl: Option[java.time.Duration] = None)
-      extends org.apache.spark.sql.streaming.StatefulProcessor[String, Event, Result] {
-    @transient private var tatState:
-      org.apache.spark.sql.streaming.ValueState[Long] = _
-
-    override def init(outputMode: OutputMode,
-                      timeMode: org.apache.spark.sql.streaming.TimeMode): Unit =
-      tatState = getHandle.getValueState[Long]("tat", Encoders.scalaLong,
-        ttl.map(org.apache.spark.sql.streaming.TTLConfig(_))
-          .getOrElse(org.apache.spark.sql.streaming.TTLConfig.NONE))
-
-    override def handleInputRows(key: String, it: Iterator[Event],
-        tv: org.apache.spark.sql.streaming.TimerValues): Iterator[Result] = {
-      var tat = if (tatState.exists()) tatState.get() else Long.MinValue
-      val out = it.toSeq.sortBy(e => (e.eventTimeNs, e.id)).map { e =>
-        val t = e.eventTimeNs
-        val admitted = tat == Long.MinValue || tat - t <= burstNs
-        if (admitted) tat = math.max(tat, t) + costNs
-        Result(key, t, e.id, admitted)
-      }
-      tatState.update(tat)
-      out.iterator
-    }
-  }
-
-  def throttleTws(events: Dataset[Event], rps: Double,
-                  ttl: Option[java.time.Duration] = None): Dataset[Result] = {
-    val costNs = (1e9 / rps).toLong
-    val burstNs = math.max(0L, 1000000000L - costNs)
-    // TTL soundness: a TAT older than the TTL must only be able to
-    // admit — otherwise eviction forgets live throttle debt and
-    // over-admits. ttl >= burst + cost guarantees it (the TAT can lead
-    // an event's time by at most burst + cost ns). ENFORCED, not just
-    // documented. Caveat: the native TTL evicts on PROCESSING time
-    // while the TAT advances on EVENT time — a replay/backfill whose
-    // batches are spaced further apart on the wall clock than in event
-    // time can still evict live state between batches; size the TTL to
-    // wall-clock batch spacing for backfill workloads (or run the
-    // backfill with ttl = None).
-    ttl.foreach(t => require(t.toNanos >= burstNs + costNs,
-      s"ttl must be >= burst + cost (${burstNs + costNs} ns) for sound " +
-        s"eviction; got ${t.toNanos} ns"))
-    implicit val resEnc = Encoders.product[Result]
-    implicit val keyEnc = Encoders.STRING
-    events.groupByKey(_.key)
-      .transformWithState(new GcraProcessor(costNs, burstNs, ttl),
-        // TTL requires processing-time tracking; without it stay in
-        // TimeMode.None so no housekeeping batches run
-        if (ttl.isDefined) org.apache.spark.sql.streaming.TimeMode.ProcessingTime()
-        else org.apache.spark.sql.streaming.TimeMode.None(),
-        OutputMode.Append())
   }
 
   /** Schema-generic GCRA: same admission algorithm over arbitrary rows —
@@ -128,15 +72,13 @@ object GcraThrottler {
     * streaming inputs (flatMapGroupsWithState runs stateless-per-group on
     * batch, keyed-state across micro-batches on streams).
     *
-    * Within-batch order is (event time ns, xxhash of the row's string
+    * Within-batch order is (event time ns, hashCode of the row's string
     * form) — deterministic for distinct-timestamp workloads and stable
     * under retries either way.
     */
   def throttleRows(df: DataFrame, keyCol: String, tsCol: String, rps: Double,
                    timeout: GroupStateTimeout = GroupStateTimeout.NoTimeout())
       : DataFrame = {
-    val costNs = (1e9 / rps).toLong
-    val burstNs = math.max(0L, 1000000000L - costNs)
     val schema = df.schema
     val keyIdx = schema.fieldIndex(keyCol)
     val tsIdx = schema.fieldIndex(tsCol)
@@ -151,17 +93,8 @@ object GcraThrottler {
     df.groupByKey(r => String.valueOf(r.get(keyIdx)))(Encoders.STRING)
       .flatMapGroupsWithState(OutputMode.Append(), timeout) {
         (_: String, it: Iterator[Row], state: GroupState[Long]) =>
-          var tat = state.getOption.getOrElse(Long.MinValue)
-          val out = it.toSeq
-            .sortBy(r => (tsNs(r), r.mkString("").hashCode))
-            .map { r =>
-              val t = tsNs(r)
-              val admitted = tat == Long.MinValue || tat - t <= burstNs
-              if (admitted) tat = math.max(tat, t) + costNs
-              Row.fromSeq(r.toSeq :+ admitted)
-            }
-          state.update(tat)
-          out.iterator
+          admit(it, state, rps)(tsNs, _.mkString("").hashCode.toLong)(
+            (r, _, admitted) => Row.fromSeq(r.toSeq :+ admitted))
       }(stateEnc, outEnc)
   }
 }

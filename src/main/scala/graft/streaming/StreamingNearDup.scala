@@ -22,9 +22,8 @@ import graft.functions.{HashFunctions, TextFunctions}
   * Emits one row per detected (earlier_id, later_id) candidate pair with
   * est_jaccard >= threshold. A pair found in several buckets is emitted
   * once per bucket within a batch group but deduplicated downstream by
-  * the caller (`.dropDuplicates("id_a","id_b")` on the output or in the
-  * sink's merge); the operator itself stays append-only so it composes
-  * with any sink mode.
+  * the caller (`.dropDuplicates("id_a","id_b")` on the output); the
+  * operator itself stays append-only so it composes with any sink mode.
   *
   * Scale: state is sharded by band key — uniformly-distributed 64-bit
   * hashes, so no key skew — and each bucket holds only near-colliding

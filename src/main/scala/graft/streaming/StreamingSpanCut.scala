@@ -17,11 +17,9 @@ import graft.llm.Dedup
   * of every substring, ever" with admission state ON DISK in the index,
   * not in executor state stores.
   *
-  * The sibling of [[StreamingIndexDedup]] at span granularity: that
-  * operator drops whole near-duplicate documents; this one rewrites
-  * documents, dropping only the repeated runs (docs cut to nothing
-  * disappear). Both share the replay property: a re-run batch cuts the
-  * same spans, because intra-batch cuts are min-id-deterministic and the
+  * It rewrites documents, dropping only the repeated runs (docs cut to
+  * nothing disappear), and replays safely: a re-run batch cuts the same
+  * spans, because intra-batch cuts are min-id-deterministic and the
   * index append is novel-only (re-appending is a no-op).
   */
 object StreamingSpanCut {
@@ -33,14 +31,14 @@ object StreamingSpanCut {
   def run(docs: DataFrame, textCol: String, idCol: String, indexDir: String,
           onBatch: (DataFrame, Long) => Unit = (_, _) => ()): StreamingQuery = {
     // heal any interrupted compaction, refuse an incomplete index
-    // (same bootstrap contract as StreamingIndexDedup / Bm25Ingest)
+    // (the bootstrap contract of the other persisted-index families)
     require(Dedup.spanIndexRecover(docs.sparkSession, indexDir),
       s"incomplete span index at $indexDir (build it first)")
     Streams.runForeachBatch(docs.toDF(), (raw, batchId) => {
       val spark = raw.sparkSession
-      // rebuild the lineage before mixing with parquet reads (see
-      // StreamingIndexDedup: foreachBatch frames carry origin constraints
-      // with foreign attribute ids)
+      // rebuild the lineage before mixing with parquet reads:
+      // foreachBatch frames carry origin constraints with foreign
+      // attribute ids
       val batch = spark.createDataFrame(raw.rdd, raw.schema)
         .localCheckpoint(true)
       if (batch.head(1).nonEmpty) {

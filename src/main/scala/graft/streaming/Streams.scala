@@ -2,13 +2,12 @@ package graft.streaming
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
 
-/** Structured-Streaming building blocks: sources, windowed aggregations
-  * with watermarks, dedup-within-watermark, and sink runners.
+/** Structured-Streaming building blocks: the file-drop source and the
+  * drain runners.
   *
   * Every operator in the engine is a DataFrame->DataFrame function, so the
   * same transformations compose under spark.read (batch) and
@@ -32,34 +31,6 @@ object Streams {
     maxFilesPerTrigger.foreach(n => r.option("maxFilesPerTrigger", n))
     r.load(path)
   }
-
-  /** Tumbling/sliding event-time aggregation with watermark. */
-  def windowedCounts(df: DataFrame, ts: Column, watermark: String,
-                     windowDuration: String, slide: Option[String] = None,
-                     keys: Seq[Column] = Nil, aggs: Seq[Column] = Seq(count(lit(1)).as("n")))
-      : DataFrame = {
-    val w = slide.map(s => window(ts, windowDuration, s))
-      .getOrElse(window(ts, windowDuration))
-    df.withWatermark(colName(ts), watermark)
-      .groupBy(w +: keys: _*)
-      .agg(aggs.head, aggs.tail: _*)
-  }
-
-  /** Session windows per key with gap timeout. */
-  def sessionAgg(df: DataFrame, ts: Column, watermark: String, gap: String,
-                 keys: Seq[Column], aggs: Seq[Column]): DataFrame =
-    df.withWatermark(colName(ts), watermark)
-      .groupBy(session_window(ts, gap) +: keys: _*)
-      .agg(aggs.head, aggs.tail: _*)
-
-  /** Event-time dedup: drops duplicates on `keys` among rows whose event
-    * times fall within the watermark delay of each other. */
-  def dedupWithinWatermark(df: DataFrame, ts: Column, watermark: String,
-                           keys: Seq[String]): DataFrame =
-    df.withWatermark(colName(ts), watermark)
-      .dropDuplicatesWithinWatermark(keys)
-
-  private def colName(c: Column): String = c.toString
 
   /** Run a streaming DF to an in-memory table with Trigger.AvailableNow,
     * block until drained, and return the result as a batch DF. */

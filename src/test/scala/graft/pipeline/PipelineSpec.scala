@@ -568,6 +568,30 @@ class PipelineSpec extends SparkSpec {
     assert(!new java.io.File(aOut).exists())
   }
 
+  test("a sink plan Spark cannot stream is refused before any sink writes") {
+    val in = Files.createTempDirectory("graft-pipe-slm-in-").toString
+    val aOut = Files.createTempDirectory("graft-pipe-slm-out-").toString + "/a"
+    Seq((1L, "a b a"), (2L, "b a b")).toDF("doc_id", "text")
+      .write.mode("overwrite").parquet(in)
+    // llm.lm_score self-joins its input through a count aggregation, which
+    // an append-mode stream rejects at query start; a_out runs first
+    val yaml =
+      s"""actors:
+        |  src: {module: core.receiver, params: {path: "$in"}}
+        |  lm: {module: llm.lm_score, params: {column: text, id: doc_id}}
+        |  a_out: {module: core.sink, params: {format: parquet, path: "$aOut"}}
+        |  b_out: {module: core.sink, params: {format: memory}}
+        |pipeline:
+        |  src: {connect: [a_out, lm]}
+        |  lm: {connect: [b_out]}
+        |""".stripMargin
+    val e = intercept[IllegalArgumentException](
+      new PipelineCompiler(spark, PipelineConfig.parse(yaml))
+        .runStreamingOnce(Map("src" -> spark.read.parquet(in).schema)))
+    assert(e.getMessage.contains("b_out"), e.getMessage)
+    assert(!new java.io.File(aOut).exists())
+  }
+
   test("a batch mode: append file sink commits through committer v1") {
     val in = Files.createTempDirectory("graft-pipe-app-in-").toString
     val out = Files.createTempDirectory("graft-pipe-app-out-").toString + "/sink"

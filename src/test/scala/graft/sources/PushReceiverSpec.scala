@@ -170,8 +170,8 @@ class PushReceiverSpec extends SparkSpec {
     // dies before the checkpoint commit (throw from onBatch = after
     // the append, before foreachBatch returns)
     val boom = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
-      graft.streaming.StreamingBm25Ingest.runExactlyOnce(
-        docs(), "text", "doc_id", idx,
+      graft.streaming.IndexIngest.run(
+        docs(), "text", "doc_id", idx, graft.streaming.IndexIngest.Bm25,
         onBatch = (batchId, _, _) =>
           if (batchId == 0) sys.error("driver died mid-commit"),
         streamId = "jxo", checkpointDir = ckpt)
@@ -186,8 +186,8 @@ class PushReceiverSpec extends SparkSpec {
     // run 2, SAME checkpoint: batch 0 re-serves FROM THE JOURNAL and
     // the IncLog marker skips its duplicate append (applied=false)
     var redelivered = Option.empty[Boolean]
-    graft.streaming.StreamingBm25Ingest.runExactlyOnce(
-      docs(), "text", "doc_id", idx,
+    graft.streaming.IndexIngest.run(
+      docs(), "text", "doc_id", idx, graft.streaming.IndexIngest.Bm25,
       onBatch = (batchId, _, applied) =>
         if (batchId == 0) redelivered = Some(applied),
       streamId = "jxo", checkpointDir = ckpt)

@@ -220,52 +220,22 @@ class WarcSpec extends SparkSpec {
       .select($"text").as[String].head().contains("First & second"))
   }
 
-  test("streaming manifest-driven crawl ingest drains containers into " +
-      "the documents schema") {
-    val root = Files.createTempDirectory("graft-warc-stream-")
-    val manifests = root.resolve("manifests"); Files.createDirectories(manifests)
-    val out = root.resolve("docs").toString
-    val w1 = tmpFile("seg1.warc", sampleWarc)
-    val w2 = tmpFile("seg2.warc.gz", gzipMembers(
-      record("conversion", "http://example.com/z",
-        "A second segment arrives later.".getBytes(UTF_8))))
-    // two manifest files -> the drain sees both (order per batch split)
-    Files.write(manifests.resolve("m1.txt"), s"$w1\n".getBytes(UTF_8))
-    Files.write(manifests.resolve("m2.txt"), s"$w2\n".getBytes(UTF_8))
-    var batches = 0
-    graft.streaming.StreamingWarcIngest.run(spark, manifests.toString, out,
-      onBatch = (_, n) => batches += n)
-    assert(batches == 2)
-    val docs = spark.read.parquet(out)
-    assert(docs.count() == 4) // 3 documents from seg1 + 1 from seg2
-    assert(docs.columns.toSet == Set("doc_id", "url", "text"))
-    val byUrl = docs.select($"url", $"text").as[(String, String)]
-      .collect().toMap
-    assert(byUrl("http://example.com/a").contains("First & second"))
-    assert(byUrl("http://example.com/z") == "A second segment arrives later.")
-  }
-
   test("crawl-to-index composition: manifest-driven WARC drain feeds " +
       "exactly-once BM25 ingest under a stream id") {
     val root = Files.createTempDirectory("graft-crawl2idx-")
-    val manifests = root.resolve("m"); Files.createDirectories(manifests)
-    val docsDir = root.resolve("docs").toString
     val idx = root.resolve("index").toString
     val seg = tmpFile("seg.warc", sampleWarc)
-    Files.write(manifests.resolve("m1.txt"), s"$seg\n".getBytes(UTF_8))
-    graft.streaming.StreamingWarcIngest.run(spark, manifests.toString,
-      docsDir)
     // hand the extracted documents to the xo index loop (numeric ids
     // derived deterministically from the record ids)
-    val extracted = spark.read.parquet(docsDir)
+    val extracted = Warc.documents(spark, seg.toString)
       .select(xxhash64($"doc_id").as("doc_id"), $"text")
     val schema = extracted.schema
     val staged = root.resolve("staged").toString
     extracted.write.parquet(staged)
     val src = graft.streaming.Streams.fileSource(spark, staged, schema,
       maxFilesPerTrigger = Some(1))
-    graft.streaming.StreamingBm25Ingest.runExactlyOnce(src, "text",
-      "doc_id", idx, streamId = "crawl-a")
+    graft.streaming.IndexIngest.run(src, "text", "doc_id", idx,
+      graft.streaming.IndexIngest.Bm25, streamId = "crawl-a")
     // query on whitespace-clean tokens of the extracted page (bm25
     // tokenizes on whitespace; "<escaped>" keeps its brackets)
     val hits = graft.llm.Retrieval.bm25SearchIndex(

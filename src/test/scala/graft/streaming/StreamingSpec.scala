@@ -1,6 +1,5 @@
 package graft.streaming
 
-import java.nio.file.Files
 import java.sql.Timestamp
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -56,73 +55,6 @@ class StreamingSpec extends SparkSpec {
     assert(out == Map(1L -> true, 2L -> false, 3L -> true))
   }
 
-  test("windowed streaming aggregation equals the batch aggregation") {
-    val dir = Files.createTempDirectory("graft-stream-in-").toString
-    val rows = Seq(
-      ("u1", tsOf("2024-01-01 00:01:00"), 1.0), ("u1", tsOf("2024-01-01 00:02:00"), 2.0),
-      ("u2", tsOf("2024-01-01 00:06:00"), 3.0), ("u1", tsOf("2024-01-01 00:07:30"), 4.0),
-      ("u2", tsOf("2024-01-01 00:11:00"), 5.0))
-    val batchDf = rows.toDF("user", "ts", "value")
-    batchDf.write.mode("overwrite").parquet(dir)
-
-    val stream = Streams.fileSource(spark, dir, batchDf.schema)
-    val agg = Streams.windowedCounts(stream, col("ts"), "10 minutes", "5 minutes",
-      keys = Seq(col("user")),
-      aggs = Seq(count(lit(1)).as("n"), sum($"value").as("sum_v")))
-      .select($"window.start".as("ws"), $"user", $"n", $"sum_v")
-    // complete mode: the tiny fixture never advances the watermark past
-    // any window end, so append mode would (correctly) emit nothing
-    val got = Streams.runToMemory(spark, agg, "win_out", outputMode = "complete")
-      .as[(Timestamp, String, Long, Double)].collect().toSet
-
-    val want = batchDf.groupBy(window($"ts", "5 minutes"), $"user")
-      .agg(count(lit(1)).as("n"), sum($"value").as("sum_v"))
-      .select($"window.start".as("ws"), $"user", $"n", $"sum_v")
-      .as[(Timestamp, String, Long, Double)].collect().toSet
-    assert(got == want)
-  }
-
-  test("streaming session windows group gap-separated bursts per key") {
-    val dir = Files.createTempDirectory("graft-sess-in-").toString
-    val rows = Seq(
-      // u1: burst of 3 within 5 min, then a separate event 2h later
-      ("u1", tsOf("2024-01-01 00:00:00"), 1.0), ("u1", tsOf("2024-01-01 00:03:00"), 2.0),
-      ("u1", tsOf("2024-01-01 00:06:00"), 3.0), ("u1", tsOf("2024-01-01 02:00:00"), 4.0),
-      ("u2", tsOf("2024-01-01 01:00:00"), 5.0))
-    val batchDf = rows.toDF("user", "ts", "value")
-    batchDf.write.mode("overwrite").parquet(dir)
-    val agg = Streams.sessionAgg(
-      Streams.fileSource(spark, dir, batchDf.schema),
-      col("ts"), watermark = "10 minutes", gap = "30 minutes",
-      keys = Seq(col("user")),
-      aggs = Seq(count(lit(1)).as("n"), sum($"value").as("sum_v")))
-      .select($"user", $"session_window.start".as("start"), $"n", $"sum_v")
-    val got = Streams.runToMemory(spark, agg, "sess_out", outputMode = "complete")
-      .as[(String, Timestamp, Long, Double)].collect().toSet
-    assert(got == Set(
-      ("u1", tsOf("2024-01-01 00:00:00"), 3L, 6.0),
-      ("u1", tsOf("2024-01-01 02:00:00"), 1L, 4.0),
-      ("u2", tsOf("2024-01-01 01:00:00"), 1L, 5.0)))
-  }
-
-  test("dropDuplicatesWithinWatermark removes event-time dups across batches") {
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[(Long, Timestamp)]
-    val dedup = Streams.dedupWithinWatermark(
-      mem.toDF().toDF("id", "ts"), col("ts"), "10 minutes", Seq("id"))
-    val q = dedup.writeStream.format("memory").queryName("dedup_out")
-      .outputMode("append")
-      .option("checkpointLocation", Streams.newCheckpointDir())
-      .start()
-    mem.addData((1L, tsOf("2024-01-01 00:00:00")), (2L, tsOf("2024-01-01 00:00:30")))
-    q.processAllAvailable()
-    mem.addData((1L, tsOf("2024-01-01 00:01:00"))) // dup within watermark
-    q.processAllAvailable()
-    q.stop()
-    val ids = spark.table("dedup_out").select($"id").as[Long].collect().sorted
-    assert(ids.toSeq == Seq(1L, 2L))
-  }
-
   test("stream-stream interval join matches clicks to impressions within the window") {
     implicit val sqlCtx = spark.sqlContext
     val impressions = MemoryStream[(Long, Timestamp)]
@@ -148,25 +80,6 @@ class StreamingSpec extends SparkSpec {
     val got = spark.table("ssj_out").select($"ad_id", $"click_ts")
       .as[(Long, Timestamp)].collect().toSet
     assert(got == Set((1L, tsOf("2024-01-01 00:05:00"))))
-  }
-
-  test("streaming exact dedup drops same-content docs across batches") {
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[(Long, String, Timestamp)]
-    val dedup = graft.llm.Dedup.streamingExact(
-      mem.toDF().toDF("doc_id", "text", "ts"), "text", "ts", "10 minutes")
-    val q = dedup.writeStream.format("memory").queryName("sdedup_out")
-      .outputMode("append")
-      .option("checkpointLocation", Streams.newCheckpointDir())
-      .start()
-    mem.addData((1L, "same content", tsOf("2024-01-01 00:00:00")),
-      (2L, "other content", tsOf("2024-01-01 00:00:10")))
-    q.processAllAvailable()
-    mem.addData((3L, "same content", tsOf("2024-01-01 00:01:00"))) // dup content
-    q.processAllAvailable()
-    q.stop()
-    val ids = spark.table("sdedup_out").select($"doc_id").as[Long].collect().sorted
-    assert(ids.toSeq == Seq(1L, 2L))
   }
 
   test("reliable sink retries transient failures then succeeds") {
