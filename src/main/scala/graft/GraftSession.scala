@@ -87,7 +87,7 @@ object GraftSession {
       // counts, postings) are highly-compressible short strings; at
       // scale the persist write/read is postings-scale I/O, so block
       // compression trades cheap CPU for it (guide §2.3). Local A/B
-      // (ProfileLmIndex, OPTIMIZATION_r16.md §6) shows no regression.
+      // (OPTIMIZATION_r16.md §6) shows no regression.
       .config("spark.rdd.compress", rddCompress)
       .config("spark.ui.enabled", "false")
   }

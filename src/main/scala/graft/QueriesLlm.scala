@@ -2988,12 +2988,12 @@ FROM ann"""
       val docs = t(s, dir, "documents")
       // the full index lifecycle sits inside the oracle gate: build on
       // half the corpus, append the other half, compact the append
-      // generations away — and the search must still be row-identical
+      // increment away — and the search must still be row-identical
       // to the ad-hoc bm25TopK over the whole corpus
       Retrieval.bm25BuildIndex(docs.filter(pmod(col("doc_id"), lit(2)) === 0),
         "text", "doc_id", idx)
-      Retrieval.bm25IndexAppend(docs.filter(pmod(col("doc_id"), lit(2)) === 1),
-        "text", "doc_id", idx)
+      Retrieval.bm25IndexAppendBatch(docs.filter(pmod(col("doc_id"), lit(2)) === 1),
+        "text", "doc_id", idx, batchId = 1L)
       Retrieval.bm25IndexCompact(s, idx)
       val queries = docs.filter(pmod(col("doc_id"), lit(20)) === 0)
         .select(col("doc_id").as("query_id"),
@@ -3154,8 +3154,8 @@ FROM ann"""
       val docs = t(s, dir, "documents")
       Retrieval.phraseBuildIndex(docs.filter(pmod(col("doc_id"), lit(2)) === 0),
         "text", "doc_id", idx)
-      Retrieval.phraseIndexAppend(docs.filter(pmod(col("doc_id"), lit(2)) === 1),
-        "text", "doc_id", idx)
+      Retrieval.phraseIndexAppendBatch(docs.filter(pmod(col("doc_id"), lit(2)) === 1),
+        "text", "doc_id", idx, batchId = 1L)
       Retrieval.phraseIndexCompact(s, idx)
       require(Retrieval.phraseIndexRecover(s, idx), "complete positions index expected")
       val queries = docs.filter(pmod(col("doc_id"), lit(50)) === 0)
@@ -3195,7 +3195,7 @@ FROM ann"""
     },
     Some(lmOracleSql)) :+ QueryDef(
     // the persisted LM lifecycle: build on one train half, append the
-    // other (generations fold on read), compact into the next GenDir
+    // other (its increment folds on read), compact into the next GenDir
     // generation, completeness-check, score against the folded model — must
     // be row-identical to the ad-hoc path over the same training
     // corpus (%4 in {0,2} == %2 == 0), so the oracle is reused
@@ -3206,8 +3206,8 @@ FROM ann"""
       val docs = t(s, dir, "documents")
       Lm.lmBuildIndexK(docs.filter(pmod(col("doc_id"), lit(4)) === 0),
         "text", "doc_id", idx, k = 2)
-      Lm.lmIndexAppendK(docs.filter(pmod(col("doc_id"), lit(4)) === 2),
-        "text", "doc_id", idx)
+      Lm.lmIndexAppendBatchK(docs.filter(pmod(col("doc_id"), lit(4)) === 2),
+        "text", "doc_id", idx, batchId = 1L)
       Lm.lmIndexCompactK(s, idx)
       require(Lm.lmIndexRecoverK(s, idx), "complete LM index expected")
       Lm.lmScoreIndexK(docs, "text", "doc_id", idx)
@@ -3243,8 +3243,8 @@ FROM ann"""
       val docs = t(s, dir, "documents")
       Lm.lmBuildIndexK(docs.filter(pmod(col("doc_id"), lit(4)) === 0),
         "text", "doc_id", idx, k = 3)
-      Lm.lmIndexAppendK(docs.filter(pmod(col("doc_id"), lit(4)) === 2),
-        "text", "doc_id", idx)
+      Lm.lmIndexAppendBatchK(docs.filter(pmod(col("doc_id"), lit(4)) === 2),
+        "text", "doc_id", idx, batchId = 1L)
       Lm.lmIndexCompactK(s, idx)
       require(Lm.lmIndexRecoverK(s, idx), "complete order-3 LM index expected")
       Lm.lmScoreIndexK(docs, "text", "doc_id", idx)
@@ -3271,8 +3271,8 @@ FROM ann"""
       val docs = t(s, dir, "documents")
       Lm.lmBuildIndexK(docs.filter(pmod(col("doc_id"), lit(4)) === 0),
         "text", "doc_id", idx, k = 5)
-      Lm.lmIndexAppendK(docs.filter(pmod(col("doc_id"), lit(4)) === 2),
-        "text", "doc_id", idx)
+      Lm.lmIndexAppendBatchK(docs.filter(pmod(col("doc_id"), lit(4)) === 2),
+        "text", "doc_id", idx, batchId = 1L)
       Lm.lmIndexCompactK(s, idx)
       require(Lm.lmIndexRecoverK(s, idx), "complete order-5 LM index expected")
       Lm.lmScoreIndexK(docs, "text", "doc_id", idx)

@@ -6,7 +6,7 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 
 /** Scale soak for the persisted BM25 inverted index
   * ([[graft.llm.Retrieval.bm25BuildIndex]] / `bm25SearchIndex` /
-  * `bm25IndexAppend`): a corpus far past the oracle SFs is indexed ONCE,
+  * `bm25IndexAppendBatch`): a corpus far past the oracle SFs is indexed ONCE,
   * then a query batch searches it — the standing-query loop the index
   * exists for (the ad-hoc `bm25TopK` recomputes corpus term statistics
   * on every call: a full-corpus tokenize+aggregate per query batch).
@@ -83,19 +83,20 @@ object SoakBm25Index {
     t0 = System.nanoTime()
     val batch = spark.range(nQ)
       .selectExpr(s"id + $n AS doc_id", s"concat_ws(' ', ${toks(s"id + ${3 * n}", 30)}) AS text")
-    graft.llm.Retrieval.bm25IndexAppend(batch, "text", "doc_id", s"$dir/index")
+    graft.llm.Retrieval.bm25IndexAppendBatch(batch, "text", "doc_id", s"$dir/index",
+      batchId = 1L)
     val appendSec = (System.nanoTime() - t0) / 1e9
 
-    // compaction observable at scale: 8 more append generations spread
-    // every bucket over ~10 file generations; the same search then reads
-    // more bytes (file/footer overhead per generation) until compact
+    // compaction observable at scale: 8 more batch increments spread
+    // every bucket over ~10 file sets; the same search then reads more
+    // bytes (file/footer overhead per increment) until compact
     // folds the layout back — post-compact bytes should return to the
     // fresh-build neighborhood
     (0 until 8).foreach { g =>
-      graft.llm.Retrieval.bm25IndexAppend(
+      graft.llm.Retrieval.bm25IndexAppendBatch(
         spark.range(nQ).selectExpr(s"id + ${n + (g + 1) * nQ} AS doc_id",
           s"concat_ws(' ', ${toks(s"id + ${(4 + g) * n}", 30)}) AS text"),
-        "text", "doc_id", s"$dir/index")
+        "text", "doc_id", s"$dir/index", batchId = g + 2L)
     }
     val beforeFrag = settleBytes()
     graft.llm.Retrieval.bm25SearchIndex(queries, s"$dir/index", k = 10).count()
@@ -184,8 +185,9 @@ object SoakBm25Index {
       .groupBy("query_id", "doc_id", "score_ppm", "rnk").count()
       .filter("count <> 2").count()
 
-    // EXACTLY-ONCE leg (IncLog): five batch appends land as committed
-    // increment directories on the main index; a search folds live
+    // REDELIVERY leg (IncLog): five more batch appends (ids 10..14,
+    // past the compacted watermark 9) land as committed increment
+    // directories on the main index; a search folds live
     // generations with the unfolded increments (bytes/sec vs the
     // compacted search above bound the cost of serving mid-stream); a
     // REDELIVERED batch is a driver-side marker check (no Spark job);
@@ -197,7 +199,7 @@ object SoakBm25Index {
       require(graft.llm.Retrieval.bm25IndexAppendBatch(
         spark.range(nQ).selectExpr(s"id + ${n + 20 * nQ + g * nQ} AS doc_id",
           s"concat_ws(' ', ${toks(s"id + ${(20 + g) * n}", 30)}) AS text"),
-        "text", "doc_id", s"$dir/index", batchId = g.toLong),
+        "text", "doc_id", s"$dir/index", batchId = g + 10L),
         s"first delivery of batch $g must apply")
     }
     val xoAppendSec = (System.nanoTime() - t0) / 1e9
@@ -213,7 +215,7 @@ object SoakBm25Index {
       require(!graft.llm.Retrieval.bm25IndexAppendBatch(
         spark.range(nQ).selectExpr(s"id + ${n + 20 * nQ + g * nQ} AS doc_id",
           s"concat_ws(' ', ${toks(s"id + ${(20 + g) * n}", 30)}) AS text"),
-        "text", "doc_id", s"$dir/index", batchId = g.toLong),
+        "text", "doc_id", s"$dir/index", batchId = g + 10L),
         s"redelivered batch $g must be skipped")
     }
     val xoRedeliverSec = (System.nanoTime() - t0) / 1e9

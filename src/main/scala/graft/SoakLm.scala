@@ -79,10 +79,10 @@ object SoakLm {
       .filter("count <> 2").count()
 
     t0 = System.nanoTime()
-    graft.llm.Lm.lmIndexAppendK(
+    graft.llm.Lm.lmIndexAppendBatchK(
       spark.range(n, n + 100000L)
         .selectExpr("id AS doc_id", s"concat_ws(' ', ${toks("id", 30)}) AS text"),
-      "text", "doc_id", s"$dir/model")
+      "text", "doc_id", s"$dir/model", batchId = 1L)
     val appendSec = (System.nanoTime() - t0) / 1e9
     t0 = System.nanoTime()
     graft.llm.Lm.lmIndexCompactK(spark, s"$dir/model")
@@ -131,7 +131,7 @@ object SoakLm {
     val trickle5Sec = (System.nanoTime() - t0) / 1e9
     val trickle5Bytes = settleBytes() - before5
 
-    // EXACTLY-ONCE leg (IncLog on the order-k family, the SoakBm25Index
+    // REDELIVERY leg (IncLog on the order-k family, the SoakBm25Index
     // xo leg's LM twin): three 50k-doc batch appends land as committed
     // increments on the order-5 model; a trickle score folds them (the
     // catalog-pruning claim must hold THROUGH increments — the scored

@@ -8,10 +8,11 @@ import org.apache.spark.sql.SparkSession
   *
   * Structured Streaming's `foreachBatch` is at-least-once: a batch
   * whose side effect completed but whose checkpoint commit did not is
-  * REDELIVERED after restart, and a plain additive append would apply
-  * its counts twice. This object closes that window for
-  * [[graft.streaming.IndexIngest]] with batchId-keyed staging plus an
-  * atomic commit:
+  * REDELIVERED after restart, and an unkeyed additive append would apply
+  * its counts twice. This object closes that window with batchId-keyed
+  * staging plus an atomic commit, and it is the ONLY way a batch joins
+  * a built BM25, phrase or LM index (the `*AppendBatch*` calls, driven
+  * by [[graft.streaming.IndexIngest]] or called directly):
   *
   *  - a batch's count deltas land under `slice.inc/batch-<id>[_<stream>]/`
   *    (full-directory overwrite, so REDELIVERY IS IDEMPOTENT — the
@@ -220,40 +221,15 @@ private[graft] object IncLog {
     * complete slices — the bootstrap commits its marker BEFORE writing
     * meta, so a crash during that first meta write leaves this exact
     * state, and redelivery can safely rebuild (a full overwrite of one
-    * batch). A plain-append meta crash cannot present it: plain
-    * lifecycles write no markers at all (Nil here — and the
-    * [[requireNoCommits]] guard keeps the lifecycles disjoint), and a
-    * post-bootstrap xo lifecycle has >= 2 markers or an advanced fold
-    * watermark. */
+    * batch). Appends never rewrite meta, so any other torn meta is
+    * damage: a build without a marker shows none, and a bootstrap
+    * followed by an append shows >= 2 markers or an advanced fold
+    * watermark. (A build without a marker followed by exactly one
+    * append also shows one marker; its meta can only be torn by
+    * damage after the fact.) */
   def bootstrapOnly(spark: SparkSession, modelDir: String): Boolean =
     foldedSummary(spark, modelDir).marks.isEmpty &&
       committedAfter(spark, modelDir, Map.empty).size == 1
-
-  /** True when the increment log has ever been touched: a fold summary
-    * or any commit marker exists. Plain (non-exactly-once) append
-    * paths use this to refuse mixing into an xo lifecycle. */
-  def hasCommits(spark: SparkSession, modelDir: String): Boolean = {
-    val (fs, c) = fsOf(spark, commitsPath(modelDir))
-    fs.exists(c) && fs.listStatus(c).exists { st =>
-      val n = st.getPath.getName
-      n == FoldedFile || parseMarker(n).isDefined
-    }
-  }
-
-  /** Guard for PLAIN append entry points: a plain append rewrites meta
-    * in place, and a crash mid-overwrite onto an index that ALSO
-    * carries exactly-once markers would present the same on-disk state
-    * as a bootstrap's own torn meta — recover would return false and
-    * the next rebuild would silently discard the appended corpus. The
-    * two lifecycles are therefore disjoint by construction: refuse the
-    * plain append loudly here instead of corrupting the loud-failure
-    * guarantee later. */
-  def requireNoCommits(spark: SparkSession, modelDir: String): Unit =
-    require(!hasCommits(spark, modelDir),
-      s"plain append refused: $modelDir carries exactly-once commit " +
-        "markers (streaming xo ingest built or fed this index); use the " +
-        "exactly-once append path, or compact + delete _commits to " +
-        "migrate the index to the plain lifecycle")
 
   /** Advance the folded summary (temp-and-rename atomic). */
   def writeFoldedSummary(spark: SparkSession, modelDir: String, m: Marks,
@@ -326,8 +302,8 @@ private[graft] object IncLog {
     * watermarks. With `schema` the union survives EMPTY increments (a
     * batch with no rows for this slice — schema inference would fail);
     * without it, increments holding no data files are skipped at the
-    * listing. Plain-append indexes have no increments and read exactly
-    * as a bare parquet read of the live path. */
+    * listing. An index that took no appends has no increments and
+    * reads exactly as a bare parquet read of the live path. */
   def readSlice(spark: SparkSession, modelDir: String, base: String,
                 v: IncView, schema: Option[String] = None): org.apache.spark
       .sql.DataFrame = {

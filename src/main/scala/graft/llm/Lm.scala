@@ -293,12 +293,12 @@ object Lm {
       if (keys.isEmpty) joined.crossJoin(broadcast(total))
       else joined.join(broadcast(total), keys, "left")
     val factSql = backoffFactors(k).mkString("array(", "L, ", "L)")
-    // the unigram count is clamped to the total: a crash between the
-    // grams_1 move and the meta write of a plain append leaves c1 > t,
-    // which would push a contribution past 1e6 ppm (in every committed
-    // state c1 <= t, so this never changes a committed score). `if`,
-    // not least(): least() skips nulls and would turn an unseen
-    // token's null c1 into t
+    // the unigram count is clamped to the total: a state where unigram
+    // counts outran the total (CommitterCrashSpec builds such a crash
+    // prefix by hand) has c1 > t, which would push a contribution past
+    // 1e6 ppm (in every committed state c1 <= t, so this never changes
+    // a committed score). `if`, not least(): least() skips nulls and
+    // would turn an unseen token's null c1 into t
     var contrib: Column = coalesce(expr(
       s"(if(c1_term > t, t, c1_term) * element_at($factSql, lvl + 1)) div t"),
       lit(0L))
@@ -388,18 +388,18 @@ object Lm {
     * rebuilds, a full overwrite), dying between marker and meta
     * likewise rebuilds, and once meta lands the marker makes
     * [[lmIndexAppendBatchK]] skip the redelivered batch. Dying DURING
-    * the meta write itself is detected LOUDLY by recover (torn meta
-    * over complete slices — on disk indistinguishable from a later
-    * plain append's meta crash, where auto-rebuilding would discard
-    * the model). The marker carries ZERO deltas — the build's totals
-    * are already in meta. */
+    * the meta write itself leaves torn meta beside this sole marker,
+    * which recover reads as "no model" ([[IncLog.bootstrapOnly]]), so
+    * redelivery rebuilds. The marker carries ZERO deltas — the build's
+    * totals are already in meta. */
   def lmBuildIndexBatchK(train: DataFrame, textCol: String, idCol: String,
                          dir: String, k: Int, batchId: Long,
                          streamId: String = ""): Unit =
     buildK(train, textCol, idCol, dir, k)(
       IncLog.commitBatch(train.sparkSession, dir, batchId, 0L, 0L, streamId))
 
-  /** Append one stream batch EXACTLY ONCE: counts land as increment
+  /** Append one batch to a built model EXACTLY ONCE — the one way
+    * training documents join it: counts land as increment
     * directories (`grams_n.inc/batch-<id>` — overwrite, so redelivery
     * is idempotent) made visible by the atomic batch commit marker,
     * which also carries the batch's token/doc deltas — meta is never
@@ -462,8 +462,17 @@ object Lm {
     * generations). */
   private def writeGramSlicesStaged(all: DataFrame, k: Int,
                                     stagingBase: String,
-                                    destFor: Int => String): Unit =
-    staged(all, stagingBase) { (fs, staging) =>
+                                    destFor: Int => String): Unit = {
+    val staging = new Path(s"$stagingBase/.stage-${java.util.UUID.randomUUID()}")
+    val fs = staging.getFileSystem(
+      all.sparkSession.sparkContext.hadoopConfiguration)
+    // the staging dir is deleted whatever happens (a killed driver
+    // leaves it for [[lmIndexRecoverK]])
+    try {
+      all.withColumn("pt", bucket(substring_index(col("gram"), " ", 1)))
+        .repartition(col("ord"), col("pt"))
+        .sortWithinPartitions(col("ord"), col("pt"), col("gram"))
+        .write.mode("overwrite").partitionBy("ord", "pt").parquet(staging.toString)
       (1 to k).foreach { n =>
         val src = new Path(staging, s"ord=$n")
         val dst = new Path(destFor(n))
@@ -474,101 +483,11 @@ object Lm {
         else fs.mkdirs(dst) // an order with zero grams: empty slice
         fs.create(new Path(dst, "_SUCCESS"), true).close()
       }
-    }
-
-  /** The one (ord, pt)-partitioned job both staged writes share, into a
-    * fresh `.stage-<uuid>` dir under `stagingBase`; `move` then takes
-    * the staged orders out, and the dir is deleted whatever happens
-    * (a killed driver leaves it for [[lmIndexRecoverK]]). */
-  private def staged(all: DataFrame, stagingBase: String)(
-      move: (org.apache.hadoop.fs.FileSystem, Path) => Unit): Unit = {
-    val staging = new Path(s"$stagingBase/.stage-${java.util.UUID.randomUUID()}")
-    val fs = staging.getFileSystem(
-      all.sparkSession.sparkContext.hadoopConfiguration)
-    try {
-      all.withColumn("pt", bucket(substring_index(col("gram"), " ", 1)))
-        .repartition(col("ord"), col("pt"))
-        .sortWithinPartitions(col("ord"), col("pt"), col("gram"))
-        .write.mode("overwrite").partitionBy("ord", "pt").parquet(staging.toString)
-      move(fs, staging)
     } finally fs.delete(staging, true)
   }
 
-  /** The staged ONE-JOB write for PLAIN APPENDS: stage all orders in
-    * one (ord, pt)-partitioned job (fresh dot-dir — a crash there is
-    * invisible), then MOVE the staged files into each live slice,
-    * LOWEST ORDER FIRST. The move order is the crash contract: counts
-    * are additive, so a crash after any prefix of the moves leaves
-    * every landed order-n gram's context order fully landed —
-    * c_{n-1}(x_n) >= c_n(g_n) holds at ANY granularity (whole slices,
-    * or a partial file subset of the highest landed order), exactly
-    * the invariant the sequential per-slice appends guaranteed — while
-    * meta (written after, as always) stays the stale-totals marker.
-    * Staged part filenames carry the job's UUID, so moves into a live
-    * bucket can never collide with prior generations' files. */
-  private def appendGramSlicesStaged(all: DataFrame, k: Int,
-                                     stagingBase: String,
-                                     liveFor: Int => String): Unit =
-    staged(all, stagingBase) { (fs, staging) =>
-      (1 to k).foreach { n => // ascending: the crash-prefix invariant
-        val src = new Path(staging, s"ord=$n")
-        if (fs.exists(src)) {
-          val dstBase = new Path(liveFor(n))
-          fs.listStatus(src).filter(_.isDirectory).foreach { ptDir =>
-            val dstPt = new Path(dstBase, ptDir.getPath.getName)
-            if (!fs.exists(dstPt))
-              require(fs.rename(ptDir.getPath, dstPt),
-                s"rename ${ptDir.getPath} -> $dstPt failed")
-            else fs.listStatus(ptDir.getPath)
-              .filter(st => !st.getPath.getName.startsWith("_"))
-              .foreach { f =>
-                val dstF = new Path(dstPt, f.getPath.getName)
-                require(fs.rename(f.getPath, dstF),
-                  s"rename ${f.getPath} -> $dstF failed")
-              }
-          }
-        }
-      }
-    }
-
-  /** Append a training batch as a new generation of every slice (reads
-    * fold with sum — counts are additive); meta totals advance last.
-    *
-    * Retry contract: a plain append is NOT idempotent. Re-running a
-    * COMPLETED append on the same batch counts it twice (the model
-    * scores as train ∪ batch ∪ batch — LmSpec pins this); a retry is
-    * safe only when the previous attempt died inside its staged write
-    * job, before any move into a live slice. Exactly-once callers must
-    * use the [[IncLog]] path, [[lmIndexAppendBatchK]], whose batch
-    * marker turns a redelivery into a skip. */
-  def lmIndexAppendK(train: DataFrame, textCol: String, idCol: String,
-                     dir: String): Unit = {
-    val spark = train.sparkSession
-    // lifecycles are disjoint (see [[graft.llm.IncLog.requireNoCommits]]):
-    // a plain append's meta rewrite onto an xo-marked index would make
-    // a torn meta look like the bootstrap's own and auto-rebuild away
-    // the appended corpus
-    IncLog.requireNoCommits(spark, dir)
-    val meta0 = spark.read.parquet(s"$dir/meta").head()
-    val (oldT, oldN, ord) =
-      (meta0.getLong(0), meta0.getLong(1), meta0.getLong(2).toInt)
-    // one corpus pass for all ord orders, ONE staged write job, then
-    // lowest-order-first moves into each slice's CURRENT generation —
-    // the move order is the crash contract (see
-    // [[appendGramSlicesStaged]]): any crash prefix leaves every
-    // landed order's context order fully landed, preserving the
-    // scoring invariant c_{n-1}(x_n) >= c_n(g_n) the backoff division
-    // relies on (appended higher-order counts without their
-    // lower-order contexts would break it silently — no recover path
-    // can see a stale-meta append)
-    val batchT = writeCountsK(train, textCol, idCol, ord)(
-      appendGramSlicesStaged(_, ord, dir,
-        n => GenDir.live(spark, s"$dir/grams_$n")))
-    writeMetaK(spark, dir, oldT + batchT, oldN + train.count(), ord)
-  }
-
-  /** Fold append generations AND committed batch increments of every
-    * slice to one row per gram. Each slice's rewrite lands as the next
+  /** Fold the committed batch increments of every slice into its live
+    * generation, one row per gram. Each slice's rewrite lands as the next
     * [[GenDir]] generation carrying its fold watermark, so a standing
     * scorer runs CONCURRENTLY with the compaction and flips atomically
     * per slice (each generation is complete, and skips exactly the
@@ -607,8 +526,7 @@ object Lm {
   /** Heal interrupted compactions and report whether `dir` holds a
     * complete order-k model (meta plus every grams_1..grams_ord
     * slice). Also deletes the `.stage-*` dirs a killed staged write
-    * ([[writeGramSlicesStaged]] / [[appendGramSlicesStaged]]) left
-    * behind — model-sized, invisible to readers, and otherwise never
+    * ([[writeGramSlicesStaged]]) left behind — model-sized, invisible to readers, and otherwise never
     * collected. Run it from the single writer, never beside one. */
   def lmIndexRecoverK(spark: SparkSession, dir: String): Boolean = {
     val dirP = new Path(dir)
@@ -616,10 +534,9 @@ object Lm {
     Option(fs.globStatus(new Path(dirP, ".stage-*"))).toSeq.flatten
       .foreach(st => fs.delete(st.getPath, true))
     // torn meta (a write that never finished) must not be READ — and
-    // over complete count slices it means a plain append crashed
-    // mid-meta-overwrite, where a silent rebuild would discard the
-    // accumulated model: fail loudly instead (the exactly-once batch
-    // path never rewrites meta past its bootstrap)
+    // over complete count slices past the bootstrap (appends never
+    // rewrite meta, so this is damage) a silent rebuild would discard
+    // every appended batch: fail loudly instead
     if (GenDir.tornDir(spark, s"$dir/meta")) {
       if (GenDir.existsLiveComplete(spark, s"$dir/grams_1") &&
           // exactly-once bootstrap exception: marker-before-meta means
@@ -628,9 +545,9 @@ object Lm {
           // stream (see [[IncLog.bootstrapOnly]])
           !IncLog.bootstrapOnly(spark, dir))
         throw new IllegalStateException(
-          s"torn meta over complete count slices at $dir: an append " +
-            "crashed mid-meta-overwrite; restore meta (t, n_docs, ord) " +
-            "or delete the model directory to rebuild from scratch")
+          s"torn meta over complete count slices at $dir: rebuilding " +
+            "would discard appended batches; restore meta (t, n_docs, " +
+            "ord) or delete the model directory to rebuild from scratch")
       return false // build crashed during its first meta write: rebuild
     }
     if (!GenDir.completeDir(spark, s"$dir/meta")) return false
@@ -645,8 +562,8 @@ object Lm {
     * [[lmScoreK]] over the same training corpus. The batch's distinct
     * terms drive catalog pruning on every slice (any gram the batch
     * needs starts with a batch token) and a broadcast first-token
-    * semi-join drops non-batch grams at the scan; generations fold
-    * with sum; T comes from meta. */
+    * semi-join drops non-batch grams at the scan; increments fold
+    * with sum; T is meta's total plus the committed increments'. */
   def lmScoreIndexK(docs: DataFrame, textCol: String, idCol: String,
                     dir: String): DataFrame = {
     val spark = docs.sparkSession

@@ -122,7 +122,7 @@ object Retrieval {
     * index: base meta plus the folded summary plus every
     * committed-but-unfolded batch delta — exact at every crash point
     * of the exactly-once ingest/compact loop, and just the meta row
-    * for plain-append indexes. */
+    * for an index that took no appends. */
   def bm25IndexTotals(spark: org.apache.spark.sql.SparkSession,
                       dir: String): (Long, Long) =
     totalsWith(spark, dir, IncLog.view(spark, dir))
@@ -134,25 +134,6 @@ object Retrieval {
     (meta0.getLong(0) + nD, meta0.getLong(1) + lenD)
   }
 
-  /** Build a persisted BM25 inverted index under `dir` — the
-    * build-once/query-many form of [[bm25TopK]], which recomputes corpus
-    * term statistics on every call (a full-corpus pass per query batch —
-    * exactly what an index retires at 100 TB). Mirrors the layout
-    * discipline of [[Dedup.lshBuildIndex]] / [[Similarity.ivfBuildIndex]]:
-    *
-    *  - `meta`: one row (n) — the corpus document count driving idf;
-    *  - `postings/` partitioned by `term_pt` (see [[TermBuckets]]):
-    *    (term, doc_id, tf), sorted by term within files so row-group
-    *    stats prune within a bucket too.
-    *
-    * Document frequency is NOT persisted: a search derives exact df for
-    * its query terms from the pruned postings slices it reads anyway
-    * (the bucket holds every posting of each term it owns), which makes
-    * append trivially correct — no incremental df merge to drift. The
-    * b=0 integer-exact scoring needs no doc-length/avgdl slice; a
-    * deployment flipping to length-normalized doubles would add one
-    * (doc_id, len) slice and an avgdl row in meta — plan shape unchanged.
-    */
   /** (doc_id, term, tf, dl) for a batch: tf per posting plus the
     * document length riding each row — dl = Σ tf over the doc's terms,
     * denormalized onto the posting so length-normalized scoring
@@ -168,23 +149,43 @@ object Retrieval {
     post.join(lens, "doc_id")
   }
 
-  /** Per-term statistics slice: (term, df, max_tf) of one build/append
-    * generation, bucketed like the postings. Searches aggregate the
-    * generations (sum df / max max_tf — exact because appends carry
-    * only new doc ids), so appends need no read-modify-write. This is
-    * what lets a search DECIDE about a term — e.g. the [[bm25SearchIndex]]
-    * df/N hot-term cap, or a future max-score bound via max_tf —
-    * WITHOUT reading a single posting of it: the stats row is a few
-    * bytes where a stopword's postings list is near-corpus-sized.
+  /** Σ tf over a postings frame: the batch's total token length. */
+  private def totalTf(post: DataFrame): Long =
+    post.agg(sum(col("tf"))).head() match {
+      case r if r.isNullAt(0) => 0L
+      case r => r.getLong(0)
+    }
+
+  /** Lay postings or positions down under `path` in their term
+    * buckets: co-locate each bucket's rows before the partitioned write
+    * (the lshBuildIndex small-files discipline), then sort by term so
+    * each file's row groups carry tight term ranges. */
+  private def writeBucketed(rows: DataFrame, path: String): Unit =
+    rows
+      .withColumn("term_pt", termBucket(col("term")))
+      .repartition(rows.sparkSession.sparkContext.defaultParallelism,
+        col("term_pt"))
+      .sortWithinPartitions(col("term"))
+      .write.mode("overwrite").partitionBy("term_pt").parquet(path)
+
+  /** Per-term statistics slice: (term, df, max_tf) of one build, batch
+    * increment or compacted generation, bucketed like the postings.
+    * Searches aggregate them (sum df / max max_tf — exact because
+    * appends carry only new doc ids), so appends need no
+    * read-modify-write. This is what lets a search DECIDE about a term
+    * — e.g. the [[bm25SearchIndex]] df/N hot-term cap, or a max-score
+    * bound via max_tf — WITHOUT reading a single posting of it: the
+    * stats row is a few bytes where a stopword's postings list is
+    * near-corpus-sized.
     *
-    * COVERAGE INVARIANT: a stats slice, when present, covers EVERY
-    * postings generation. Builds create it whole, appends extend it
-    * only when it already exists (see [[bm25IndexAppend]]), and compact
-    * regenerates it from the postings — so a search may trust any
-    * stats slice it finds (a partial slice would under-count df/max_tf
-    * and silently invalidate the max-score upper bounds). */
-  private def writeStats(post: DataFrame, statsPath: String,
-                         mode: String): Unit =
+    * COVERAGE INVARIANT: the stats slice covers EVERY postings
+    * generation and increment. Builds create it whole, each batch
+    * append writes its stats increment beside its postings increment
+    * under the same commit marker, and compact regenerates it from the
+    * postings — so a search may trust it (a partial slice would
+    * under-count df/max_tf and silently invalidate the max-score upper
+    * bounds). */
+  private def writeStats(post: DataFrame, statsPath: String): Unit =
     post.groupBy(col("term"))
       .agg(count(lit(1)).as("df"), max(col("tf")).as("max_tf"),
         sum(col("tf")).as("sum_tf"))
@@ -195,14 +196,36 @@ object Retrieval {
       // near-empty bucket files per generation
       .repartition(col("term_pt"))
       .sortWithinPartitions(col("term"))
-      // in-place appends keep committer v1 so a crashed job leaves the
-      // slice row-identical (see [[GenDir.V1AppendCommitter]])
-      .write.options(if (mode == "append") GenDir.V1AppendCommitter
-                     else Map.empty[String, String])
-      .mode(mode).partitionBy("term_pt").parquet(statsPath)
+      .write.mode("overwrite").partitionBy("term_pt").parquet(statsPath)
 
+  /** Build a persisted BM25 inverted index under `dir` — the
+    * build-once/query-many form of [[bm25TopK]], which recomputes corpus
+    * term statistics on every call (a full-corpus pass per query batch —
+    * exactly what an index retires at 100 TB). Mirrors the layout
+    * discipline of [[Dedup.lshBuildIndex]] / [[Similarity.ivfBuildIndex]]:
+    *
+    *  - `meta`: one row (n, total_len) — the corpus document count
+    *    driving idf and the token total behind avgdl;
+    *  - `postings/` partitioned by `term_pt` (see [[TermBuckets]]):
+    *    (term, doc_id, tf, dl), sorted by term within files so row-group
+    *    stats prune within a bucket too;
+    *  - `stats/` bucketed the same way (see [[writeStats]]).
+    *
+    * Document frequency is NOT persisted per posting: a search derives
+    * exact df for its query terms from the pruned postings slices it
+    * reads anyway (the bucket holds every posting of each term it owns),
+    * which makes appends trivially correct — no incremental df merge to
+    * drift. More documents join through [[bm25IndexAppendBatch]]. */
   def bm25BuildIndex(docs: DataFrame, textCol: String, idCol: String,
-                     dir: String): Unit = {
+                     dir: String): Unit =
+    buildBm25(docs, textCol, idCol, dir)(())
+
+  /** The one build body of [[bm25BuildIndex]] and
+    * [[bm25BuildIndexBatch]]: reset the generation history AND
+    * increment log, write postings and stats, run `beforeMeta`, then
+    * meta. */
+  private def buildBm25(docs: DataFrame, textCol: String, idCol: String,
+                        dir: String)(beforeMeta: => Unit): Unit = {
     val spark = docs.sparkSession
     import spark.implicits._
     // a fresh build starts the generation history AND increment log
@@ -211,143 +234,54 @@ object Retrieval {
     GenDir.resetAll(spark, s"$dir/postings", s"$dir/stats")
     IncLog.reset(spark, dir, Seq(s"$dir/postings", s"$dir/stats"))
     // ONE streamed pass over the corpus postings into a DISK_ONLY
-    // persist (the bm25IndexAppend discipline — disk-only never races
-    // the partial aggregation for unified memory, where MEMORY_AND_DISK
-    // caching observed AGGREGATE_OUT_OF_MEMORY at 60M postings on an 8g
-    // heap); postings and stats then write OVERLAPPED from the cache
-    // (guide §2.6 — order-free: meta below is the commit marker, so
-    // everything before it is invisible to recover either way) and
-    // total_len aggregates the cache instead of re-reading the written
-    // stats slice.
+    // persist — disk-only never races the partial aggregation for
+    // unified memory, where MEMORY_AND_DISK caching observed
+    // AGGREGATE_OUT_OF_MEMORY at 60M postings on an 8g heap; postings
+    // and stats then write OVERLAPPED from the cache (order-free: meta
+    // below is the commit marker, so everything before it is invisible
+    // to recover either way) and total_len aggregates the cache instead
+    // of re-reading the written stats slice.
     val post = postingsWithLen(docs, textCol, idCol)
       .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
-    val writePost = () =>
-      post
-        .withColumn("term_pt", termBucket(col("term")))
-        // co-locate each bucket's rows before the partitioned write (the
-        // lshBuildIndex small-files discipline), then sort by term so each
-        // file's row groups carry tight term ranges
-        .repartition(spark.sparkContext.defaultParallelism, col("term_pt"))
-        .sortWithinPartitions(col("term"))
-        .write.mode("overwrite").partitionBy("term_pt").parquet(s"$dir/postings")
-    val writeStat = () =>
-      writeStats(post.select(col("term"), col("tf")), s"$dir/stats", "overwrite")
-    Par.run(Seq(writePost, writeStat))
-    val totalLen = post.agg(sum(col("tf"))).head() match {
-        case r if r.isNullAt(0) => 0L
-        case r => r.getLong(0)
-      }
+    Par.run(Seq(() => writeBucketed(post, s"$dir/postings"),
+      () => writeStats(post, s"$dir/stats")))
+    val totalLen = totalTf(post)
     post.unpersist()
-    // meta is the COMMIT MARKER and therefore lands LAST (matching
-    // bm25IndexAppend's postings-then-meta order): a crash mid-build
-    // leaves postings without meta, which the ingest bootstrap treats
-    // as "no index" and re-builds — the reverse order would leave meta
-    // without postings and invite appends onto a missing corpus
+    beforeMeta
+    // meta is the COMMIT MARKER and therefore lands LAST: a crash
+    // mid-build leaves postings without meta, which the ingest
+    // bootstrap treats as "no index" and re-builds — the reverse order
+    // would leave meta without postings and invite appends onto a
+    // missing corpus
     Seq((docs.count(), totalLen)).toDF("n", "total_len")
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/meta")
   }
 
-  /** Append new documents to a persisted BM25 index: postings of the
-    * batch land in their term buckets (appended files keep the
-    * sort-by-term discipline, so their row-group stats prune too) and
-    * the corpus count in `meta` advances — df needs no merge because
-    * searches derive it from the postings (see [[bm25BuildIndex]]).
-    * Assumes batch doc ids are new, like every other index append. */
-  def bm25IndexAppend(docs: DataFrame, textCol: String, idCol: String,
-                      dir: String): Unit = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    // lifecycles are disjoint: a plain append's in-place meta rewrite
-    // onto an index carrying exactly-once markers would make a torn
-    // meta indistinguishable from the xo bootstrap's own (recover
-    // would auto-rebuild and discard this corpus) — refuse loudly
-    IncLog.requireNoCommits(spark, dir)
-    // collect the old totals BEFORE overwriting the slice they come from
-    val meta0 = spark.read.parquet(s"$dir/meta").head()
-    val (oldN, oldLen) = (meta0.getLong(0), meta0.getLong(1))
-    val batchN = docs.count()
-    val post = postingsWithLen(docs, textCol, idCol)
-      .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY) // see bm25BuildIndex
-    val batchLen = post.agg(sum(col("tf"))).head() match { // Σ tf, see build
-      case r if r.isNullAt(0) => 0L
-      case r => r.getLong(0)
-    }
-    post
-      .withColumn("term_pt", termBucket(col("term")))
-      .repartition(spark.sparkContext.defaultParallelism, col("term_pt"))
-      .sortWithinPartitions(col("term"))
-      // appends land in the CURRENT generation (single-writer contract;
-      // see [[GenDir]]) so the next compaction folds them forward —
-      // committer v1 so a crash leaves the slice row-identical
-      .write.options(GenDir.V1AppendCommitter)
-      .mode("append").partitionBy("term_pt")
-      .parquet(GenDir.live(spark, s"$dir/postings"))
-    // stats append ONLY onto an existing slice: creating one here on a
-    // pre-stats index would cover just this batch, and any search
-    // trusting it would under-count df/max_tf — invalid max-score
-    // bounds, silently broken row-identity. The coverage invariant
-    // (see [[writeStats]]) holds either way; a pre-stats index gains
-    // its slice at the next compact, which regenerates from postings.
-    val statsLive = GenDir.live(spark, s"$dir/stats")
-    val fs = new org.apache.hadoop.fs.Path(statsLive)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(new org.apache.hadoop.fs.Path(statsLive)))
-      writeStats(post, statsLive, "append")
-    post.unpersist()
-    Seq((oldN + batchN, oldLen + batchLen)).toDF("n", "total_len")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/meta")
-  }
-
-  // ---- exactly-once batch ingest (the [[IncLog]] protocol; the LM
-  // family's lmIndexAppendBatchK is the template) -----------------------
+  // ---- exactly-once batch append (the [[IncLog]] protocol) -------------
 
   /** Bootstrap from a stream's FIRST batch, exactly once under
     * redelivery: the batch's commit marker lands BEFORE meta, so every
     * crash point replays safely (no meta → recover false → redelivery
     * rebuilds, a full overwrite; meta present → the marker makes
-    * [[bm25IndexAppendBatch]] skip the redelivered batch) — except a
-    * crash DURING the meta write itself, which recover detects LOUDLY
-    * (torn meta over complete postings is on disk indistinguishable
-    * from a plain append's meta crash, where auto-rebuilding would
-    * discard the corpus). The marker carries ZERO deltas — the
-    * build's totals are already in meta. */
+    * [[bm25IndexAppendBatch]] skip the redelivered batch). A crash
+    * DURING the meta write leaves torn meta beside this sole marker,
+    * which recover reads as "no index" ([[IncLog.bootstrapOnly]]), so
+    * redelivery rebuilds. The marker carries ZERO deltas — the build's
+    * totals are already in meta. */
   def bm25BuildIndexBatch(docs: DataFrame, textCol: String, idCol: String,
                           dir: String, batchId: Long,
-                          streamId: String = ""): Unit = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    GenDir.resetAll(spark, s"$dir/postings", s"$dir/stats")
-    IncLog.reset(spark, dir, Seq(s"$dir/postings", s"$dir/stats"))
-    // DISK_ONLY persist + overlapped slice writes — see [[bm25BuildIndex]]
-    val post = postingsWithLen(docs, textCol, idCol)
-      .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
-    val writePost = () =>
-      post
-        .withColumn("term_pt", termBucket(col("term")))
-        .repartition(spark.sparkContext.defaultParallelism, col("term_pt"))
-        .sortWithinPartitions(col("term"))
-        .write.mode("overwrite").partitionBy("term_pt").parquet(s"$dir/postings")
-    val writeStat = () =>
-      writeStats(post.select(col("term"), col("tf")), s"$dir/stats", "overwrite")
-    Par.run(Seq(writePost, writeStat))
-    val totalLen = post.agg(sum(col("tf"))).head() match {
-        case r if r.isNullAt(0) => 0L
-        case r => r.getLong(0)
-      }
-    post.unpersist()
-    IncLog.commitBatch(spark, dir, batchId, 0L, 0L, streamId)
-    Seq((docs.count(), totalLen)).toDF("n", "total_len")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/meta")
-  }
+                          streamId: String = ""): Unit =
+    buildBm25(docs, textCol, idCol, dir)(
+      IncLog.commitBatch(docs.sparkSession, dir, batchId, 0L, 0L, streamId))
 
-  /** Append one stream batch EXACTLY ONCE: postings (and stats, when
-    * the index carries the slice) land as increment directories —
-    * idempotent overwrite — made visible by the atomic batch commit
-    * marker, which also carries the batch's (total_len, n) deltas so
-    * meta never sees a read-modify-write. Returns false (and does
-    * nothing) when the batch was already applied — the redelivery
-    * skip. Searches fold committed increments with the live
-    * generations, so results match a plain append row-for-row. */
+  /** Append one batch to a built BM25 index EXACTLY ONCE: postings and
+    * stats land as increment directories — idempotent overwrite — made
+    * visible by the atomic batch commit marker, which also carries the
+    * batch's (total_len, n) deltas so meta never sees a
+    * read-modify-write. Returns false (and does nothing) when the batch
+    * was already applied — the redelivery skip. Searches fold committed
+    * increments with the live generations. Assumes batch doc ids are
+    * new, like every other index append. */
   def bm25IndexAppendBatch(docs: DataFrame, textCol: String, idCol: String,
                            dir: String, batchId: Long,
                            streamId: String = ""): Boolean = {
@@ -355,30 +289,13 @@ object Retrieval {
     if (IncLog.isApplied(spark, dir, batchId, streamId)) return false
     val post = postingsWithLen(docs, textCol, idCol)
       .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
-    val batchLen = post.agg(sum(col("tf"))).head() match {
-      case r if r.isNullAt(0) => 0L
-      case r => r.getLong(0)
-    }
+    val batchLen = totalTf(post)
     // both increments are INVISIBLE until the commit marker below lands
-    // (the IncLog contract), so unlike the plain append's ordered
-    // writes they are order-free — overlapped jobs over the persisted
-    // postings (guide §2.6). Stats increment ONLY alongside an existing
-    // slice — the coverage invariant (see [[writeStats]] /
-    // [[bm25IndexAppend]]) must hold over live ∪ increments exactly as
-    // it does over generations.
-    val writePost = () =>
-      post
-        .withColumn("term_pt", termBucket(col("term")))
-        .repartition(spark.sparkContext.defaultParallelism, col("term_pt"))
-        .sortWithinPartitions(col("term"))
-        .write.mode("overwrite").partitionBy("term_pt")
-        .parquet(IncLog.incPath(s"$dir/postings", batchId, streamId))
-    val writeStat = () =>
-      writeStats(post, IncLog.incPath(s"$dir/stats", batchId, streamId),
-        "overwrite")
-    Par.run(Seq(writePost) ++
-      (if (GenDir.existsLive(spark, s"$dir/stats")) Seq(writeStat)
-       else Seq.empty))
+    // (the IncLog contract), so they are order-free — overlapped jobs
+    // over the persisted postings
+    Par.run(Seq(
+      () => writeBucketed(post, IncLog.incPath(s"$dir/postings", batchId, streamId)),
+      () => writeStats(post, IncLog.incPath(s"$dir/stats", batchId, streamId))))
     post.unpersist()
     IncLog.commitBatch(spark, dir, batchId, batchLen, docs.count(), streamId)
     true
@@ -394,29 +311,18 @@ object Retrieval {
     * results are unchanged; meta is untouched.
     *
     * Stats REGENERATE from the compacted postings instead of folding
-    * existing generations: a pre-stats index that later took appends
-    * would carry a stats slice covering only the appended batches, and
-    * a fold preserves the under-count forever (invalid max-score upper
-    * bounds, partial hot-term df). Recounting from the postings is
-    * exact whatever the index's history, restores the build-shape
-    * sum_tf column, and upgrades pre-stats indexes in the same pass —
-    * compact IS the migration path the search errors recommend. */
+    * their own increments: one recount, exact whatever the index's
+    * history, in the build's shape. */
   def bm25IndexCompact(spark: org.apache.spark.sql.SparkSession,
                        dir: String): Unit = {
     val v = IncLog.view(spark, dir)
     val (w0, w, wGen) = IncLog.foldBounds(spark, dir, s"$dir/postings", v)
-    IncLog.foldSliceGen(spark, dir, s"$dir/postings", wGen, v) { (rows, next) =>
-      rows
-        .repartition(spark.sparkContext.defaultParallelism, col("term_pt"))
-        .sortWithinPartitions(col("term"))
-        .write.mode("overwrite").partitionBy("term_pt").parquet(next)
-    }
+    IncLog.foldSliceGen(spark, dir, s"$dir/postings", wGen, v)(writeBucketed)
     GenDir.rewriteGen(spark, s"$dir/stats") { (_, next) =>
       // regenerated from the just-committed postings generation, which
       // already contains every folded increment — so this generation's
       // watermark skips the same increment set
-      writeStats(spark.read.parquet(GenDir.live(spark, s"$dir/postings"))
-        .select(col("term"), col("tf")), next, "overwrite")
+      writeStats(spark.read.parquet(GenDir.live(spark, s"$dir/postings")), next)
       IncLog.writeSliceFoldedThrough(spark, next, wGen)
     }
     IncLog.finishFold(spark, dir, Seq(s"$dir/postings", s"$dir/stats"),
@@ -445,16 +351,14 @@ object Retrieval {
       // redelivery rebuild (a full overwrite of that same first batch)
       // instead of wedging the stream permanently
       if (IncLog.bootstrapOnly(spark, dir)) return false
-      // meta is rewritten per PLAIN append: torn meta over complete
-      // postings means an append crashed mid-overwrite — rebuilding
-      // would silently discard the accumulated corpus, so fail LOUDLY
-      // (restore meta from totals, or delete the index to rebuild;
-      // the exactly-once batch paths never rewrite meta and cannot
-      // reach this state past their bootstrap)
+      // any other torn meta over complete postings (appends never
+      // rewrite meta, so past the bootstrap this is damage) must not be
+      // rebuilt over: that would silently discard every appended batch,
+      // so fail LOUDLY (restore meta, or delete the index to rebuild)
       throw new IllegalStateException(
-        s"torn meta over complete postings at $dir: an append crashed " +
-          "mid-meta-overwrite; restore meta (n, total_len) or delete " +
-          "the index directory to rebuild from scratch")
+        s"torn meta over complete postings at $dir: rebuilding would " +
+          "discard appended batches; restore meta (n, total_len) or " +
+          "delete the index directory to rebuild from scratch")
     }
     GenDir.completeDir(spark, s"$dir/meta") && postingsOk
   }
@@ -486,9 +390,7 @@ object Retrieval {
     if (maxDfFrac >= 1.0) return qTerms
     require(maxDfFrac > 0.0, "maxDfFrac must be in (0, 1]")
     require(GenDir.existsLive(spark, s"$dir/stats"),
-      s"df cap requires the stats slice; $dir predates it — re-build, or " +
-        "run bm25IndexCompact with the current version (compact " +
-        "regenerates full-coverage stats from the postings)")
+      s"df cap requires the stats slice, missing at $dir")
     val n = totalsWith(spark, dir, v)._1
     val qTermSet = qTerms.select(col("term")).distinct()
     val hitBuckets = qTermSet.select(termBucket(col("term")).as("pt"))
@@ -574,9 +476,7 @@ object Retrieval {
     import spark.implicits._
     require(hotDfFrac > 0.0 && hotDfFrac <= 1.0, "hotDfFrac must be in (0, 1]")
     require(GenDir.existsLive(spark, s"$dir/stats"),
-      s"max-score search requires the stats slice; $dir predates it — " +
-        "re-build, or run bm25IndexCompact with the current version " +
-        "(compact regenerates full-coverage stats from the postings)")
+      s"max-score search requires the stats slice, missing at $dir")
     val v = IncLog.view(spark, dir) // ONE increment-log listing per call
     val qTerms = tokens(queries, "query_id", "qtext").distinct()
       .localCheckpoint(true)
@@ -751,86 +651,48 @@ object Retrieval {
     phraseRank(qTerms, posts, k)
   }
 
+  /** Per-term position counts (term, n_pos) of one build, batch
+    * increment or compacted generation, bucketed like the positions —
+    * what lets the selective search pick each phrase's RAREST term from
+    * a few bytes instead of counting a stopword's near-corpus-sized
+    * position list. Summed on read across generations and increments,
+    * regenerated by compact. */
+  private def writePhraseStats(pos: DataFrame, statsPath: String): Unit =
+    pos.groupBy(col("term")).agg(count(lit(1)).as("n_pos"))
+      .withColumn("term_pt", termBucket(col("term")))
+      .repartition(col("term_pt")) // AQE-sized, see writeStats
+      .sortWithinPartitions(col("term"))
+      .write.mode("overwrite").partitionBy("term_pt").parquet(statsPath)
+
   /** Build a persisted POSITIONAL index under `dir`: (term, doc_id,
     * pos) in the same term-hash-bucketed, term-sorted layout as the
     * BM25 postings — the artifact phrase search prunes instead of
     * re-tokenizing the corpus per query batch. Positions make it ~dl/|V|
     * larger per document than the tf postings; deployments that never
-    * phrase-search skip building it. */
-  /** Per-term position counts (term, n_pos) of one build/append
-    * generation, bucketed like the positions — what lets the selective
-    * search pick each phrase's RAREST term from a few bytes instead of
-    * counting a stopword's near-corpus-sized position list. Summed on
-    * read across generations, folded by compact. */
-  private def writePhraseStats(pos: DataFrame, statsPath: String,
-                               mode: String): Unit =
-    pos.groupBy(col("term")).agg(count(lit(1)).as("n_pos"))
-      .withColumn("term_pt", termBucket(col("term")))
-      .repartition(col("term_pt")) // AQE-sized, see writeStats
-      .sortWithinPartitions(col("term"))
-      // committer v1 on appends — see [[GenDir.V1AppendCommitter]]
-      .write.options(if (mode == "append") GenDir.V1AppendCommitter
-                     else Map.empty[String, String])
-      .mode(mode).partitionBy("term_pt").parquet(statsPath)
-
+    * phrase-search skip building it. More documents join through
+    * [[phraseIndexAppendBatch]]. */
   def phraseBuildIndex(docs: DataFrame, textCol: String, idCol: String,
-                       dir: String): Unit = {
-    val spark = docs.sparkSession
-    // fresh build starts the generation history over (see bm25BuildIndex)
-    GenDir.resetAll(spark, s"$dir/positions", s"$dir/stats")
-    val pos = positionalTokens(docs.select(col(idCol).as("doc_id"), col(textCol)),
-        "doc_id", textCol)
-      .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
-    // stats first, positions LAST as the commit marker (recover keys
-    // completeness on the positions directory): a crash between the two
-    // writes reads as "no index" and re-builds — the reverse order
-    // would leave a recover-complete index missing its stats slice
-    writePhraseStats(pos.select(col("term")), s"$dir/stats", "overwrite")
-    pos
-      .withColumn("term_pt", termBucket(col("term")))
-      .repartition(spark.sparkContext.defaultParallelism, col("term_pt"))
-      .sortWithinPartitions(col("term"))
-      .write.mode("overwrite").partitionBy("term_pt").parquet(s"$dir/positions")
-    pos.unpersist()
-  }
+                       dir: String): Unit =
+    buildPhrase(docs, textCol, idCol, dir)(())
 
-  /** Append new documents' positions to a persisted positional index:
-    * batch rows land beside the existing generations in their term
-    * buckets (position rows are independent facts — no statistic to
-    * merge), keeping the sort-by-term file discipline. Assumes batch
-    * doc ids are new, like every other index append. A crash between
-    * the two writes can only leave a positions generation without its
-    * stats generation — an EFFICIENCY-only tear: candidate sets always
-    * derive from the positions themselves (any query term's candidates
-    * are lossless by containment), stats merely pick which term
-    * prunes; the next compact folds the tear away. */
-  def phraseIndexAppend(docs: DataFrame, textCol: String, idCol: String,
-                        dir: String): Unit = {
+  /** The one build body of [[phraseBuildIndex]] and
+    * [[phraseBuildIndexBatch]]: reset the generation history AND
+    * increment log (see [[bm25BuildIndex]]), write stats, run
+    * `beforePositions`, then positions LAST as the commit marker
+    * (recover keys completeness on the positions directory): a crash
+    * before them reads as "no index" and re-builds — the reverse order
+    * would leave a recover-complete index missing its stats slice. */
+  private def buildPhrase(docs: DataFrame, textCol: String, idCol: String,
+                          dir: String)(beforePositions: => Unit): Unit = {
     val spark = docs.sparkSession
-    // keep plain and exactly-once lifecycles disjoint (see
-    // [[bm25IndexAppend]]) — uniform across families even though the
-    // phrase index carries no meta to tear
-    IncLog.requireNoCommits(spark, dir)
+    GenDir.resetAll(spark, s"$dir/positions", s"$dir/stats")
+    IncLog.reset(spark, dir, Seq(s"$dir/positions", s"$dir/stats"))
     val pos = positionalTokens(docs.select(col(idCol).as("doc_id"), col(textCol)),
         "doc_id", textCol)
       .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
-    pos
-      .withColumn("term_pt", termBucket(col("term")))
-      .repartition(spark.sparkContext.defaultParallelism, col("term_pt"))
-      .sortWithinPartitions(col("term"))
-      // appends land in the CURRENT generation (single-writer contract)
-      // — committer v1 so a crash leaves the slice row-identical
-      .write.options(GenDir.V1AppendCommitter)
-      .mode("append").partitionBy("term_pt")
-      .parquet(GenDir.live(spark, s"$dir/positions"))
-    // append stats ONLY onto an existing slice (the bm25IndexAppend
-    // discipline): a batch-only slice on a pre-stats index would feed
-    // wrong n_pos into rarest-term selection — efficiency-only for
-    // phrases (candidates stay lossless by containment), but the
-    // coverage invariant is worth keeping uniform across families
-    if (GenDir.existsLive(spark, s"$dir/stats"))
-      writePhraseStats(pos.select(col("term")),
-        GenDir.live(spark, s"$dir/stats"), "append")
+    writePhraseStats(pos, s"$dir/stats")
+    beforePositions
+    writeBucketed(pos, s"$dir/positions")
     pos.unpersist()
   }
 
@@ -845,28 +707,15 @@ object Retrieval {
     * statistics. */
   def phraseBuildIndexBatch(docs: DataFrame, textCol: String, idCol: String,
                             dir: String, batchId: Long,
-                            streamId: String = ""): Unit = {
-    val spark = docs.sparkSession
-    GenDir.resetAll(spark, s"$dir/positions", s"$dir/stats")
-    IncLog.reset(spark, dir, Seq(s"$dir/positions", s"$dir/stats"))
-    val pos = positionalTokens(docs.select(col(idCol).as("doc_id"), col(textCol)),
-        "doc_id", textCol)
-      .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
-    writePhraseStats(pos.select(col("term")), s"$dir/stats", "overwrite")
-    IncLog.commitBatch(spark, dir, batchId, 0L, 0L, streamId)
-    pos
-      .withColumn("term_pt", termBucket(col("term")))
-      .repartition(spark.sparkContext.defaultParallelism, col("term_pt"))
-      .sortWithinPartitions(col("term"))
-      .write.mode("overwrite").partitionBy("term_pt").parquet(s"$dir/positions")
-    pos.unpersist()
-  }
+                            streamId: String = ""): Unit =
+    buildPhrase(docs, textCol, idCol, dir)(
+      IncLog.commitBatch(docs.sparkSession, dir, batchId, 0L, 0L, streamId))
 
-  /** Append one stream batch EXACTLY ONCE ([[IncLog]] — see
-    * [[bm25IndexAppendBatch]]): position (and stats) rows land as
-    * increment directories made visible by the atomic commit marker;
-    * a redelivered batch is skipped, so phrase counts never double.
-    * Returns false on the redelivery skip. */
+  /** Append one batch to a built positional index EXACTLY ONCE
+    * ([[IncLog]] — see [[bm25IndexAppendBatch]]): position and stats
+    * rows land as increment directories made visible by the atomic
+    * commit marker; a redelivered batch is skipped, so phrase counts
+    * never double. Returns false on the redelivery skip. */
   def phraseIndexAppendBatch(docs: DataFrame, textCol: String, idCol: String,
                              dir: String, batchId: Long,
                              streamId: String = ""): Boolean = {
@@ -876,21 +725,10 @@ object Retrieval {
         "doc_id", textCol)
       .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
     // increments are invisible until the marker lands — order-free,
-    // overlapped writes over the persisted positions (guide §2.6; the
-    // bm25IndexAppendBatch discipline)
-    val writePos = () =>
-      pos
-        .withColumn("term_pt", termBucket(col("term")))
-        .repartition(spark.sparkContext.defaultParallelism, col("term_pt"))
-        .sortWithinPartitions(col("term"))
-        .write.mode("overwrite").partitionBy("term_pt")
-        .parquet(IncLog.incPath(s"$dir/positions", batchId, streamId))
-    val writeStat = () =>
-      writePhraseStats(pos.select(col("term")),
-        IncLog.incPath(s"$dir/stats", batchId, streamId), "overwrite")
-    graft.llm.Par.run(Seq(writePos) ++
-      (if (GenDir.existsLive(spark, s"$dir/stats")) Seq(writeStat)
-       else Seq.empty))
+    // overlapped writes over the persisted positions
+    Par.run(Seq(
+      () => writeBucketed(pos, IncLog.incPath(s"$dir/positions", batchId, streamId)),
+      () => writePhraseStats(pos, IncLog.incPath(s"$dir/stats", batchId, streamId))))
     pos.unpersist()
     IncLog.commitBatch(spark, dir, batchId, 0L, 0L, streamId)
     true
@@ -898,7 +736,7 @@ object Retrieval {
 
   /** Rewrite the positions back to the fresh-build layout after a run
     * of appends (each append spreads every touched bucket over another
-    * file generation). Lands as the next [[GenDir]] generation, so
+    * file set). Lands as the next [[GenDir]] generation, so
     * standing phrase queries run CONCURRENTLY with the compaction and
     * flip atomically at the commit marker. Committed batch increments
     * fold in and are GC'd one compaction late ([[IncLog]]). Search
@@ -907,19 +745,12 @@ object Retrieval {
                          dir: String): Unit = {
     val v = IncLog.view(spark, dir)
     val (w0, w, wGen) = IncLog.foldBounds(spark, dir, s"$dir/positions", v)
-    IncLog.foldSliceGen(spark, dir, s"$dir/positions", wGen, v) { (rows, next) =>
-      rows
-        .repartition(spark.sparkContext.defaultParallelism, col("term_pt"))
-        .sortWithinPartitions(col("term"))
-        .write.mode("overwrite").partitionBy("term_pt").parquet(next)
-    }
+    IncLog.foldSliceGen(spark, dir, s"$dir/positions", wGen, v)(writeBucketed)
     // regenerate stats from the compacted positions (the
-    // bm25IndexCompact discipline): exact whatever the index's history,
-    // and upgrades pre-stats indexes in the same pass
+    // bm25IndexCompact discipline)
     GenDir.rewriteGen(spark, s"$dir/stats") { (_, next) =>
       writePhraseStats(
-        spark.read.parquet(GenDir.live(spark, s"$dir/positions"))
-          .select(col("term")), next, "overwrite")
+        spark.read.parquet(GenDir.live(spark, s"$dir/positions")), next)
       IncLog.writeSliceFoldedThrough(spark, next, wGen)
     }
     IncLog.finishFold(spark, dir, Seq(s"$dir/positions", s"$dir/stats"),
@@ -988,9 +819,7 @@ object Retrieval {
     val spark = queries.sparkSession
     import spark.implicits._
     require(GenDir.existsLive(spark, s"$dir/stats"),
-      s"selective phrase search requires the stats slice; $dir predates " +
-        "it — re-build, or run phraseIndexCompact with the current version " +
-        "(compact regenerates full-coverage stats from the positions)")
+      s"selective phrase search requires the stats slice, missing at $dir")
     val v = IncLog.view(spark, dir) // ONE increment-log listing per call
     val qTerms = positionalTokens(queries, "query_id", "qtext")
       .withColumnRenamed("pos", "off")

@@ -64,6 +64,13 @@ object GcraThrottler {
       }
   }
 
+  /** A cell's value as a string; bytes map one-to-one onto ISO-8859-1
+    * chars, so equal byte arrays give equal strings. */
+  private def valueString(v: Any): String = v match {
+    case b: Array[Byte] => new String(b, java.nio.charset.StandardCharsets.ISO_8859_1)
+    case other => String.valueOf(other)
+  }
+
   /** Schema-generic GCRA: same admission algorithm over arbitrary rows —
     * the pipeline-actor form, where the message must flow through with
     * ALL its columns (reference: the throttler actor passes the message
@@ -72,9 +79,11 @@ object GcraThrottler {
     * streaming inputs (flatMapGroupsWithState runs stateless-per-group on
     * batch, keyed-state across micro-batches on streams).
     *
-    * Within-batch order is (event time ns, hashCode of the row's string
-    * form) — deterministic for distinct-timestamp workloads and stable
-    * under retries either way.
+    * Rows group by the key column's VALUE: a binary key (`body` in
+    * every bind/push receiver) groups by its bytes, not by the array's
+    * identity. Within-batch order is (event time ns, hashCode of the
+    * row's string form, binary columns by value) — deterministic for
+    * distinct-timestamp workloads and stable under retries either way.
     */
   def throttleRows(df: DataFrame, keyCol: String, tsCol: String, rps: Double,
                    timeout: GroupStateTimeout = GroupStateTimeout.NoTimeout())
@@ -90,10 +99,11 @@ object GcraThrottler {
       val i = r.getTimestamp(tsIdx).toInstant
       i.getEpochSecond * 1000000000L + i.getNano
     }
-    df.groupByKey(r => String.valueOf(r.get(keyIdx)))(Encoders.STRING)
+    df.groupByKey(r => valueString(r.get(keyIdx)))(Encoders.STRING)
       .flatMapGroupsWithState(OutputMode.Append(), timeout) {
         (_: String, it: Iterator[Row], state: GroupState[Long]) =>
-          admit(it, state, rps)(tsNs, _.mkString("").hashCode.toLong)(
+          admit(it, state, rps)(tsNs,
+            _.toSeq.map(valueString).mkString("").hashCode.toLong)(
             (r, _, admitted) => Row.fromSeq(r.toSeq :+ admitted))
       }(stateEnc, outEnc)
   }

@@ -20,9 +20,13 @@ import graft.llm.Retrieval
   * index between batches.
   *
   * Families ([[Family]]): the order-k n-gram LM
-  * ([[graft.llm.Lm.lmBuildIndexK]]), the BM25 inverted index
-  * ([[graft.llm.Retrieval.bm25BuildIndex]]) and the positional phrase
-  * index ([[graft.llm.Retrieval.phraseBuildIndex]]).
+  * ([[graft.llm.Lm.lmBuildIndexBatchK]] /
+  * [[graft.llm.Lm.lmIndexAppendBatchK]]), the BM25 inverted index
+  * ([[graft.llm.Retrieval.bm25BuildIndexBatch]] /
+  * [[graft.llm.Retrieval.bm25IndexAppendBatch]]) and the positional
+  * phrase index ([[graft.llm.Retrieval.phraseBuildIndexBatch]] /
+  * [[graft.llm.Retrieval.phraseIndexAppendBatch]]) — each family's one
+  * append path.
   */
 object IndexIngest {
 

@@ -116,9 +116,9 @@ class Bm25ExactlyOnceSpec extends SparkSpec {
       Retrieval.bm25IndexRecover(spark, dir)
     }
     assert(e.getMessage.contains("torn meta"))
-    // ... and a PLAIN lifecycle (no markers at all) stays loud too —
-    // bootstrapOnly demands exactly ONE marker, so markerless torn meta
-    // is never mistaken for a bootstrap crash
+    // ... and a build without a marker stays loud too — bootstrapOnly
+    // demands exactly ONE marker, so markerless torn meta is never
+    // mistaken for a bootstrap crash
     val plain = freshDir()
     Retrieval.bm25BuildIndex(b0, "text", "doc_id", plain)
     h.delete(new org.apache.hadoop.fs.Path(s"$plain/meta/_SUCCESS"), false)
@@ -171,29 +171,6 @@ class Bm25ExactlyOnceSpec extends SparkSpec {
       "streamB"))
     assert(search(dir) == adhoc(b0.union(b1).union(b2).union(b3)))
     assert(Retrieval.bm25IndexTotals(spark, dir) == ((6L, 26L)))
-  }
-
-  test("plain append onto an exactly-once index is refused (lifecycles " +
-      "stay disjoint)") {
-    val dir = freshDir()
-    Retrieval.bm25BuildIndexBatch(b0, "text", "doc_id", dir, batchId = 0L)
-    val e = intercept[IllegalArgumentException] {
-      Retrieval.bm25IndexAppend(b1, "text", "doc_id", dir)
-    }
-    assert(e.getMessage.contains("plain append refused"))
-    // still refused after the markers fold into the summary (compact
-    // twice GCs the marker files; the _folded summary remains)
-    assert(Retrieval.bm25IndexAppendBatch(b1, "text", "doc_id", dir, 1L))
-    Retrieval.bm25IndexCompact(spark, dir)
-    Retrieval.bm25IndexCompact(spark, dir)
-    intercept[IllegalArgumentException] {
-      Retrieval.bm25IndexAppend(b2, "text", "doc_id", dir)
-    }
-    // a plain-built index (reset clears _commits) appends freely
-    val plain = freshDir()
-    Retrieval.bm25BuildIndex(b0, "text", "doc_id", plain)
-    Retrieval.bm25IndexAppend(b1, "text", "doc_id", plain)
-    assert(search(plain) == adhoc(b0.union(b1)))
   }
 
   test("compaction folds exactly once; increments GC one compaction late") {

@@ -107,9 +107,9 @@ class CommitterCrashSpec extends SparkSpec {
       s"$dir/grams_1/_temporary/0/_temporary/attempt_x_0000_m_000000_0")
     assert(GenDir.existsLiveComplete(spark, s"$dir/grams_1"))
     assert(rows(Lm.lmScoreIndexK(docs, "text", "doc_id", dir)) == preAppend)
-    // the operational retry: a fresh append over the debris must land
-    // exactly once and match the ad-hoc model of train + batch
-    Lm.lmIndexAppendK(batch, "text", "doc_id", dir)
+    // the operational retry: an exactly-once append over the debris
+    // must land once and match the ad-hoc model of train + batch
+    assert(Lm.lmIndexAppendBatchK(batch, "text", "doc_id", dir, batchId = 1L))
     assert(rows(Lm.lmScoreIndexK(docs, "text", "doc_id", dir)) ==
       rows(Lm.lmScoreK(train.union(batch), docs, "text", "doc_id", k = 2)))
   }

@@ -109,8 +109,8 @@ class LmExactlyOnceSpec extends SparkSpec {
     assert(!Lm.lmIndexRecoverK(spark, boot))
     Lm.lmBuildIndexBatchK(b0, "text", "doc_id", boot, k = 2, batchId = 0L)
     assert(Lm.lmIndexRecoverK(spark, boot))
-    // PAST the bootstrap a torn meta means an append crashed mid-meta:
-    // the slices still hold the model — recover must refuse to bless
+    // PAST the bootstrap a torn meta is damage: the slices and
+    // increments still hold the model — recover must refuse to bless
     // OR silently rebuild, and instead name the repair options
     val dir = freshDir()
     Lm.lmBuildIndexBatchK(b0, "text", "doc_id", dir, k = 2, batchId = 0L)
@@ -120,7 +120,7 @@ class LmExactlyOnceSpec extends SparkSpec {
       Lm.lmIndexRecoverK(spark, dir)
     }
     assert(e.getMessage.contains("torn meta"))
-    // markerless (plain-lifecycle) torn meta stays loud as well
+    // markerless torn meta (a build without a marker) stays loud as well
     val plain = freshDir()
     Lm.lmBuildIndexK(b0, "text", "doc_id", plain, k = 2)
     fs.delete(new org.apache.hadoop.fs.Path(s"$plain/meta/_SUCCESS"), false)

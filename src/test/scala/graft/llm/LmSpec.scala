@@ -93,16 +93,18 @@ class LmSpec extends SparkSpec {
     val dir = freshDir()
     Lm.lmBuildIndexK(corpus.filter($"doc_id" === 0L), "text", "doc_id", dir,
       k = 2)
-    Lm.lmIndexAppendK(corpus.filter($"doc_id" === 2L), "text", "doc_id", dir)
-    Lm.lmIndexAppendK(corpus.filter($"doc_id" === 4L), "text", "doc_id", dir)
-    // pre-compact: generations fold on read
+    Lm.lmIndexAppendBatchK(corpus.filter($"doc_id" === 2L), "text", "doc_id",
+      dir, batchId = 1L)
+    Lm.lmIndexAppendBatchK(corpus.filter($"doc_id" === 4L), "text", "doc_id",
+      dir, batchId = 2L)
+    // pre-compact: increments fold on read
     assert(rows(Lm.lmScoreIndexK(corpus, "text", "doc_id", dir)) == expected)
     Lm.lmIndexCompactK(spark, dir)
     assert(rows(Lm.lmScoreIndexK(corpus, "text", "doc_id", dir)) == expected)
-    // meta totals advanced across appends: t = 5 train tokens, 3 docs,
+    // totals advanced across appends: t = 5 train tokens, 3 docs,
     // order 2 preserved
-    val meta = spark.read.parquet(s"$dir/meta").as[(Long, Long, Long)].head()
-    assert(meta == ((5L, 3L, 2L)))
+    val ord = spark.read.parquet(s"$dir/meta").head().getLong(2)
+    assert((Lm.lmIndexTotalsK(spark, dir), ord) == (((5L, 3L), 2L)))
   }
 
   // Trigram hand-derivation over the same train (c3: only (a,b,a)=1 from d0):
@@ -125,14 +127,16 @@ class LmSpec extends SparkSpec {
     val dir = freshDir()
     Lm.lmBuildIndexK(corpus.filter($"doc_id" === 0L), "text", "doc_id", dir,
       k = 3)
-    Lm.lmIndexAppendK(corpus.filter($"doc_id" === 2L), "text", "doc_id", dir)
-    Lm.lmIndexAppendK(corpus.filter($"doc_id" === 4L), "text", "doc_id", dir)
+    Lm.lmIndexAppendBatchK(corpus.filter($"doc_id" === 2L), "text", "doc_id",
+      dir, batchId = 1L)
+    Lm.lmIndexAppendBatchK(corpus.filter($"doc_id" === 4L), "text", "doc_id",
+      dir, batchId = 2L)
     assert(rows(Lm.lmScoreIndexK(corpus, "text", "doc_id", dir)) == expected3)
     Lm.lmIndexCompactK(spark, dir)
     assert(Lm.lmIndexRecoverK(spark, dir))
     assert(rows(Lm.lmScoreIndexK(corpus, "text", "doc_id", dir)) == expected3)
-    val meta = spark.read.parquet(s"$dir/meta").as[(Long, Long, Long)].head()
-    assert(meta == ((5L, 3L, 3L))) // appends preserve the order
+    val ord = spark.read.parquet(s"$dir/meta").head().getLong(2)
+    assert((Lm.lmIndexTotalsK(spark, dir), ord) == (((5L, 3L), 3L))) // appends preserve the order
   }
 
   test("count-cutoff pruning drops rare bigrams to backoff") {
@@ -152,8 +156,10 @@ class LmSpec extends SparkSpec {
     val dir = freshDir()
     Lm.lmBuildIndexK(corpus.filter($"doc_id" === 0L), "text", "doc_id", dir,
       k = 2)
-    Lm.lmIndexAppendK(corpus.filter($"doc_id" === 2L), "text", "doc_id", dir)
-    Lm.lmIndexAppendK(corpus.filter($"doc_id" === 4L), "text", "doc_id", dir)
+    Lm.lmIndexAppendBatchK(corpus.filter($"doc_id" === 2L), "text", "doc_id",
+      dir, batchId = 1L)
+    Lm.lmIndexAppendBatchK(corpus.filter($"doc_id" === 4L), "text", "doc_id",
+      dir, batchId = 2L)
     def score() = rows(Lm.lmScoreIndexK(corpus, "text", "doc_id", dir))
     assert(score() == expected)
     val fs = org.apache.hadoop.fs.FileSystem.get(
@@ -173,8 +179,9 @@ class LmSpec extends SparkSpec {
     assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$dir/grams_2")),
       "two-generation retention should have GC'd generation 0")
     assert(score() == expected)
-    // appends keep landing in the current generation; reads still fold
-    Lm.lmIndexAppendK(corpus.filter($"doc_id" === 2L), "text", "doc_id", dir)
+    // appends keep landing beside the current generation; reads still fold
+    Lm.lmIndexAppendBatchK(corpus.filter($"doc_id" === 2L), "text", "doc_id",
+      dir, batchId = 3L)
     assert(rows(Lm.lmScoreIndexK(corpus, "text", "doc_id", dir)) ==
       rows(Lm.lmScoreK(train.union(corpus.filter($"doc_id" === 2L)),
         corpus, "text", "doc_id", k = 2)))
@@ -207,21 +214,11 @@ class LmSpec extends SparkSpec {
     assert(rows(Lm.lmScoreIndexK(corpus, "text", "doc_id", dir)) == expected)
   }
 
-  test("retry contract: a completed plain append re-run double-counts; " +
-      "a redelivered batch append is skipped") {
+  test("retry contract: a redelivered batch append is skipped") {
     val batch = corpus.filter($"doc_id" === 2L)
     def adhoc(t: org.apache.spark.sql.DataFrame) =
       rows(Lm.lmScoreK(t, corpus, "text", "doc_id", k = 2))
-    // plain appends carry no idempotence marker: the re-run counts the
-    // batch a second time
-    val plain = freshDir()
-    Lm.lmBuildIndexK(train, "text", "doc_id", plain, k = 2)
-    Lm.lmIndexAppendK(batch, "text", "doc_id", plain)
-    Lm.lmIndexAppendK(batch, "text", "doc_id", plain)
-    val twice = adhoc(train.union(batch).union(batch))
-    assert(twice != adhoc(train.union(batch)))
-    assert(rows(Lm.lmScoreIndexK(corpus, "text", "doc_id", plain)) == twice)
-    // the exactly-once path: the same batch id is a skip
+    // the same batch id is a skip
     val xo = freshDir()
     Lm.lmBuildIndexBatchK(train, "text", "doc_id", xo, k = 2, batchId = 0L)
     assert(Lm.lmIndexAppendBatchK(batch, "text", "doc_id", xo, batchId = 1L))
@@ -265,13 +262,14 @@ class LmSpec extends SparkSpec {
     val train5 = corpus5.filter($"doc_id" % 2 === 0)
     Lm.lmBuildIndexK(corpus5.filter($"doc_id" === 0L), "text", "doc_id",
       dir, k = 5)
-    Lm.lmIndexAppendK(corpus5.filter($"doc_id" === 2L), "text", "doc_id", dir)
+    Lm.lmIndexAppendBatchK(corpus5.filter($"doc_id" === 2L), "text", "doc_id",
+      dir, batchId = 1L)
     assert(rows(Lm.lmScoreIndexK(corpus5, "text", "doc_id", dir)) == expected5)
     Lm.lmIndexCompactK(spark, dir)
     assert(Lm.lmIndexRecoverK(spark, dir))
     assert(rows(Lm.lmScoreIndexK(corpus5, "text", "doc_id", dir)) == expected5)
-    val meta = spark.read.parquet(s"$dir/meta").as[(Long, Long, Long)].head()
-    assert(meta == ((10L, 2L, 5L))) // t, n_docs, order ride meta
+    val ord = spark.read.parquet(s"$dir/meta").head().getLong(2)
+    assert((Lm.lmIndexTotalsK(spark, dir), ord) == (((10L, 2L), 5L))) // t, n_docs, order
     // every order's slice folded to one generation per gram (the live
     // post-compact slice is a GenDir generation — resolve it)
     val unfolded = spark.read.parquet(GenDir.live(spark, s"$dir/grams_5"))

@@ -107,12 +107,12 @@ class RetrievalSpec extends SparkSpec {
     val dir = freshDir()
     val (first, second) = (docs.filter($"doc_id" < 3), docs.filter($"doc_id" >= 3))
     Retrieval.bm25BuildIndex(first, "text", "doc_id", dir)
-    Retrieval.bm25IndexAppend(second, "text", "doc_id", dir)
+    Retrieval.bm25IndexAppendBatch(second, "text", "doc_id", dir, 1L)
     val queries = Seq((1L, "the cat zebra")).toDF("query_id", "qtext")
     assert(rows(Retrieval.bm25SearchIndex(queries, dir, k = 10)) ==
       rows(Retrieval.bm25TopK(docs, queries, k = 10)))
-    // df/idf reflect the appended corpus: meta count advanced to 5
-    assert(spark.read.parquet(s"$dir/meta").head().getLong(0) == 5L)
+    // df/idf reflect the appended corpus: the doc count advanced to 5
+    assert(Retrieval.bm25IndexTotals(spark, dir)._1 == 5L)
   }
 
   test("postings lay out in term_pt directories and a search prunes to its buckets") {
@@ -160,14 +160,14 @@ class RetrievalSpec extends SparkSpec {
   test("bm25IndexCompact: answers unchanged, per-bucket file sets shrink") {
     val dir = freshDir()
     Retrieval.bm25BuildIndex(docs.filter($"doc_id" < 2), "text", "doc_id", dir)
-    Retrieval.bm25IndexAppend(docs.filter($"doc_id" >= 2 && $"doc_id" < 4),
-      "text", "doc_id", dir)
-    Retrieval.bm25IndexAppend(docs.filter($"doc_id" >= 4), "text", "doc_id", dir)
-    def postingFiles(): Int = {
-      val root = java.nio.file.Paths.get(live(dir, "postings"))
-      java.nio.file.Files.walk(root).filter(p => p.toString.endsWith(".parquet"))
-        .count().toInt
-    }
+    Retrieval.bm25IndexAppendBatch(docs.filter($"doc_id" >= 2 && $"doc_id" < 4),
+      "text", "doc_id", dir, 1L)
+    Retrieval.bm25IndexAppendBatch(docs.filter($"doc_id" >= 4), "text", "doc_id",
+      dir, 2L)
+    // the postings files a search opens: the live generation plus its
+    // unfolded batch increments
+    def postingFiles(): Int = IncLog.readSlice(spark, dir, s"$dir/postings",
+      IncLog.view(spark, dir)).inputFiles.length
     val queries = Seq((1L, "the cat zebra")).toDF("query_id", "qtext")
     val before = rows(Retrieval.bm25SearchIndex(queries, dir, k = 10))
     val filesBefore = postingFiles()
@@ -227,7 +227,8 @@ class RetrievalSpec extends SparkSpec {
   test("normalized index search equals the ad-hoc normalized scoring") {
     val dir = freshDir()
     Retrieval.bm25BuildIndex(docs.filter($"doc_id" < 3), "text", "doc_id", dir)
-    Retrieval.bm25IndexAppend(docs.filter($"doc_id" >= 3), "text", "doc_id", dir)
+    Retrieval.bm25IndexAppendBatch(docs.filter($"doc_id" >= 3), "text", "doc_id",
+      dir, 1L)
     val q = Seq((1L, "the cat zebra"), (2L, "dog log")).toDF("query_id", "qtext")
     val fromIndex = Retrieval.bm25SearchIndexNorm(q, dir, k = 10)
       .select($"query_id", $"doc_id", $"score", $"rnk")
@@ -242,9 +243,8 @@ class RetrievalSpec extends SparkSpec {
       assert(rnk == adhoc(key)._2, s"rank mismatch at $key")
       assert(math.abs(s - adhoc(key)._1) < 1e-9, s"score mismatch at $key")
     }
-    // meta carries both totals for O(1) avgdl
-    val meta = spark.read.parquet(s"$dir/meta").head()
-    assert(meta.getLong(0) == 5L && meta.getLong(1) == 24L) // 5 docs, 24 tokens
+    // the totals carry both counts for O(1) avgdl
+    assert(Retrieval.bm25IndexTotals(spark, dir) == ((5L, 24L))) // 5 docs, 24 tokens
   }
 
   test("a query with no indexed terms returns empty, not an error") {
@@ -321,66 +321,6 @@ class RetrievalSpec extends SparkSpec {
     assert(exact.nonEmpty)
   }
 
-  test("pre-stats index + append mints no partial stats; compact regenerates") {
-    val dir = freshDir()
-    Retrieval.bm25BuildIndex(docs.filter($"doc_id" < 3), "text", "doc_id", dir)
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    val statsP = new org.apache.hadoop.fs.Path(s"$dir/stats")
-    // simulate a pre-stats (round-9) index, then append with the
-    // current version — the ADVICE migration path
-    fs.delete(statsP, true)
-    Retrieval.bm25IndexAppend(docs.filter($"doc_id" >= 3), "text", "doc_id", dir)
-    // the append must NOT have minted a batch-only slice: a search
-    // trusting it would under-count df/max_tf and silently break the
-    // max-score row-identity contract
-    assert(!fs.exists(statsP), "append created a partial stats slice")
-    // stats-dependent paths refuse loudly instead of mis-pruning
-    val hotQ = Seq((1L, "the zebra")).toDF("query_id", "qtext")
-    intercept[IllegalArgumentException] {
-      Retrieval.bm25SearchIndex(hotQ, dir, 10, maxDfFrac = 0.5)
-    }
-    intercept[IllegalArgumentException] {
-      Retrieval.bm25SearchIndexMaxScore(hotQ, dir, 10, hotDfFrac = 0.5)
-    }
-    // compact IS the migration: stats regenerate from the postings with
-    // FULL coverage — 'the' sits in 3 of 5 docs across both generations
-    Retrieval.bm25IndexCompact(spark, dir)
-    val want = rows(Retrieval.bm25SearchIndex(
-      Seq((1L, "zebra")).toDF("query_id", "qtext"), dir, k = 10))
-    assert(rows(Retrieval.bm25SearchIndex(hotQ, dir, 10, maxDfFrac = 0.5)) == want)
-    assert(rows(Retrieval.bm25SearchIndexMaxScore(hotQ, dir, 10, hotDfFrac = 0.5)) ==
-      rows(Retrieval.bm25SearchIndex(hotQ, dir, 10)))
-    // regenerated rows carry the true df/max_tf over ALL generations
-    val truth = spark.read.parquet(live(dir, "postings")).groupBy($"term")
-      .agg(max($"tf").as("mtf"), count(lit(1)).as("tdf"))
-    val drift = spark.read.parquet(live(dir, "stats"))
-      .join(truth, "term")
-      .filter($"max_tf" =!= $"mtf" || $"df" =!= $"tdf").count()
-    assert(drift == 0, "compact-regenerated stats disagree with postings")
-  }
-
-  test("pre-stats phrase index: append mints no slice; compact regenerates") {
-    val dir = freshDir()
-    Retrieval.phraseBuildIndex(docs.filter($"doc_id" < 3), "text", "doc_id", dir)
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    val statsP = new org.apache.hadoop.fs.Path(s"$dir/stats")
-    fs.delete(statsP, true)
-    Retrieval.phraseIndexAppend(docs.filter($"doc_id" >= 3), "text", "doc_id", dir)
-    assert(!fs.exists(statsP), "append created a partial stats slice")
-    val q = Seq((1L, "the cat")).toDF("query_id", "qtext")
-    intercept[IllegalArgumentException] {
-      Retrieval.phraseSearchIndexSelective(q, dir, k = 10)
-    }
-    Retrieval.phraseIndexCompact(spark, dir)
-    def phRows(df: org.apache.spark.sql.DataFrame) =
-      df.select($"query_id", $"doc_id", $"phrase_tf", $"rnk")
-        .as[(Long, Long, Long, Int)].collect().toSet
-    assert(phRows(Retrieval.phraseSearchIndexSelective(q, dir, k = 10)) ==
-      phRows(Retrieval.phraseTopK(docs, q, k = 10)))
-  }
-
   // ---- positional phrase search ---------------------------------------
 
   test("phrase search matches consecutive tokens only, in order") {
@@ -434,7 +374,8 @@ class RetrievalSpec extends SparkSpec {
         .as[(Long, Long, Long, Int)].collect().toSet
     val adhoc = rows(Retrieval.phraseTopK(docs, q, k = 10))
     Retrieval.phraseBuildIndex(docs.filter($"doc_id" < 2), "text", "doc_id", dir)
-    Retrieval.phraseIndexAppend(docs.filter($"doc_id" >= 2), "text", "doc_id", dir)
+    Retrieval.phraseIndexAppendBatch(docs.filter($"doc_id" >= 2), "text", "doc_id",
+      dir, 1L)
     assert(rows(Retrieval.phraseSearchIndex(q, dir, k = 10)) == adhoc)
     Retrieval.phraseIndexCompact(spark, dir)
     assert(rows(Retrieval.phraseSearchIndex(q, dir, k = 10)) == adhoc)
@@ -473,10 +414,40 @@ class RetrievalSpec extends SparkSpec {
     assert(rows(Retrieval.phraseSearchIndexSelective(q, dir, k = 10)) == adhoc)
   }
 
+  test("a phrase rebuild starts the increment log over: a dead stream's " +
+      "batches stay out and a new stream's batch 1 applies") {
+    val dir = freshDir()
+    def phRows(df: org.apache.spark.sql.DataFrame) =
+      df.select($"query_id", $"doc_id", $"phrase_tf", $"rnk")
+        .as[(Long, Long, Long, Int)].collect().toSet
+    val q = Seq((1L, "cat sat")).toDF("query_id", "qtext")
+    // a stream bootstraps on docs 1-2 and appends docs 3-4 as batch 1
+    Retrieval.phraseBuildIndexBatch(
+      Seq((1L, "the dog sat"), (2L, "zebra runs")).toDF("doc_id", "text"),
+      "text", "doc_id", dir, batchId = 0L)
+    assert(Retrieval.phraseIndexAppendBatch(
+      Seq((3L, "the cat sat on the mat"), (4L, "cat dog")).toDF("doc_id", "text"),
+      "text", "doc_id", dir, 1L))
+    // a fresh build over a different corpus in the same directory
+    val rebuilt = Seq((10L, "a cat sat here"), (11L, "the dog ran"))
+      .toDF("doc_id", "text")
+    Retrieval.phraseBuildIndex(rebuilt, "text", "doc_id", dir)
+    val want = phRows(Retrieval.phraseTopK(rebuilt, q, k = 10))
+    assert(want.map(_._2) == Set(10L))
+    assert(phRows(Retrieval.phraseSearchIndex(q, dir, k = 10)) == want,
+      "the dead stream's batch 1 leaked into the rebuilt index")
+    // the new lineage's batch 1 is not mistaken for the old one's
+    val more = Seq((12L, "cat sat again")).toDF("doc_id", "text")
+    assert(Retrieval.phraseIndexAppendBatch(more, "text", "doc_id", dir, 1L))
+    assert(phRows(Retrieval.phraseSearchIndex(q, dir, k = 10)) ==
+      phRows(Retrieval.phraseTopK(rebuilt.union(more), q, k = 10)))
+  }
+
   test("phrase searches resolve generation N while N+1 is mid-write") {
     val dir = freshDir()
     Retrieval.phraseBuildIndex(docs.filter($"doc_id" < 3), "text", "doc_id", dir)
-    Retrieval.phraseIndexAppend(docs.filter($"doc_id" >= 3), "text", "doc_id", dir)
+    Retrieval.phraseIndexAppendBatch(docs.filter($"doc_id" >= 3), "text", "doc_id",
+      dir, 1L)
     val q = Seq((1L, "the cat"), (3L, "zebra zebra")).toDF("query_id", "qtext")
     def phRows(df: org.apache.spark.sql.DataFrame) =
       df.select($"query_id", $"doc_id", $"phrase_tf", $"rnk")
@@ -525,9 +496,9 @@ class RetrievalSpec extends SparkSpec {
     assert(rows(Retrieval.phraseSearchIndexSelective(q, dir, k = 10,
       maxCandBroadcast = 0L)) == plain)
     // stats survive append + compact: parity on the grown corpus
-    Retrieval.phraseIndexAppend(
+    Retrieval.phraseIndexAppendBatch(
       Seq((100L, "the cat sat the cat")).toDF("doc_id", "text"),
-      "text", "doc_id", dir)
+      "text", "doc_id", dir, 1L)
     Retrieval.phraseIndexCompact(spark, dir)
     val grown = docs.union(Seq((100L, "the cat sat the cat")).toDF("doc_id", "text"))
     assert(rows(Retrieval.phraseSearchIndexSelective(q, dir, k = 10)) ==
@@ -628,7 +599,8 @@ class RetrievalSpec extends SparkSpec {
   test("df cap: stats generations sum across appends and survive compaction") {
     val dir = freshDir()
     Retrieval.bm25BuildIndex(docs.filter($"doc_id" < 3), "text", "doc_id", dir)
-    Retrieval.bm25IndexAppend(docs.filter($"doc_id" >= 3), "text", "doc_id", dir)
+    Retrieval.bm25IndexAppendBatch(docs.filter($"doc_id" >= 3), "text", "doc_id",
+      dir, 1L)
     // 'the' df over BOTH generations = 3 of 5 docs > 0.5 -> skipped
     val hotQ = Seq((1L, "the zebra")).toDF("query_id", "qtext")
     val want = rows(Retrieval.bm25SearchIndex(
@@ -645,7 +617,8 @@ class RetrievalSpec extends SparkSpec {
   test("searches resolve generation N while N+1 is mid-write (concurrent compact)") {
     val dir = freshDir()
     Retrieval.bm25BuildIndex(docs.filter($"doc_id" < 3), "text", "doc_id", dir)
-    Retrieval.bm25IndexAppend(docs.filter($"doc_id" >= 3), "text", "doc_id", dir)
+    Retrieval.bm25IndexAppendBatch(docs.filter($"doc_id" >= 3), "text", "doc_id",
+      dir, 1L)
     val queries = Seq((1L, "the cat zebra")).toDF("query_id", "qtext")
     val want = rows(Retrieval.bm25SearchIndex(queries, dir, k = 10))
     assert(want.nonEmpty)
@@ -675,8 +648,8 @@ class RetrievalSpec extends SparkSpec {
     assert(fs.exists(new org.apache.hadoop.fs.Path(
       s"$dir/postings.gen-2/_GEN_COMMITTED")))
     // append + search keep working against the generation layout
-    Retrieval.bm25IndexAppend(
-      Seq((100L, "zebra zebra")).toDF("doc_id", "text"), "text", "doc_id", dir)
+    Retrieval.bm25IndexAppendBatch(
+      Seq((100L, "zebra zebra")).toDF("doc_id", "text"), "text", "doc_id", dir, 2L)
     val grown = docs.union(Seq((100L, "zebra zebra")).toDF("doc_id", "text"))
     assert(rows(Retrieval.bm25SearchIndex(queries, dir, k = 10)) ==
       rows(Retrieval.bm25TopK(grown, queries, k = 10)))

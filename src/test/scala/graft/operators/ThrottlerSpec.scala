@@ -79,4 +79,18 @@ class ThrottlerSpec extends SparkSpec {
     val ids = spark.table("gcra_pipe_out").select($"id").as[Long].collect().toSet
     assert(ids == Set(1L, 3L, 4L)) // id 2 is 50ms after id 1 -> throttled out
   }
+
+  test("row-generic GCRA keys a binary column by its bytes, like a string") {
+    // five equal bodies 10 ms apart at 1 rps: one admitted per key — the
+    // same on the binary column every bind/push receiver emits as on
+    // the same bytes as a string
+    val rows = (0 until 5).map(i => ("same", Timestamp.valueOf(
+      f"2024-01-01 00:00:00.${i * 10}%03d"), i.toLong))
+      .toDF("text", "ts", "id")
+      .withColumn("body", $"text".cast("binary"))
+    def admitted(key: String): Long = graft.streaming.GcraThrottler
+      .throttleRows(rows, key, "ts", rps = 1.0).filter($"admitted").count()
+    assert(admitted("text") == 1L)
+    assert(admitted("body") == 1L)
+  }
 }

@@ -458,4 +458,58 @@ class BindPipelineSpec extends SparkSpec {
       compiler.close()
     }
   }
+
+  test("every shipped bind:// example starts as a streaming daemon; the " +
+      "throttled one relays one copy per body") {
+    import scala.jdk.CollectionConverters._
+    val (server, received) = lineServer()
+    val tmp = Files.createTempDirectory("graft-bind-examples-")
+    val names = {
+      val s = Files.list(Paths.get("examples"))
+      try s.iterator.asScala.map(_.getFileName.toString).toList.sorted
+      finally s.close()
+    }.filter(n => n.endsWith(".yml") &&
+      "bind: \"\\w+://".r.findFirstIn(
+        Files.readString(Paths.get(s"examples/$n"))).isDefined)
+    assert(names.contains("unix2tcp_throttled.yml"), names.toString)
+    try names.foreach { name =>
+      // receivers on ephemeral ports / a temp socket, tcp sinks on the
+      // live line server
+      val sock = tmp.resolve(name.stripSuffix(".yml") + ".sock")
+      val yaml = Files.readString(Paths.get(s"examples/$name"))
+        .replaceAll("unix://[^\"]+", s"unix://$sock")
+        .replaceAll("(tcp|udp|http)://:\\d+", "$1://:0")
+        .replaceAll("tcp://127\\.0\\.0\\.1:\\d+",
+          s"tcp://127.0.0.1:${server.getLocalPort}")
+      val cfg = PipelineConfig.parse(yaml)
+      cfg.receivers.foreach(graft.sources.PushReceiver.clear)
+      val compiler = new PipelineCompiler(spark, cfg)
+      try {
+        compiler.startReceivers()
+        val queries = compiler.startStreaming(Map.empty,
+          Trigger.ProcessingTime("100 milliseconds"))
+        try {
+          Thread.sleep(500)
+          queries.foreach { case (sink, q) =>
+            assert(q.isActive && q.exception.isEmpty, s"$name: $sink stopped")
+          }
+          if (name == "unix2tcp_throttled.yml") {
+            val ch = java.nio.channels.SocketChannel.open(
+              java.net.StandardProtocolFamily.UNIX)
+            ch.connect(java.net.UnixDomainSocketAddress.of(sock))
+            ch.write(java.nio.ByteBuffer.wrap(
+              "dup\ndup\nsolo\n".getBytes(StandardCharsets.UTF_8)))
+            ch.close()
+            await(received.size >= 2)
+            Thread.sleep(500) // a second "dup" would still be arriving
+            assert(received.asScala.toList.sorted == List("dup", "solo"),
+              received.toString)
+          }
+        } finally {
+          queries.values.foreach(_.stop())
+          queries.values.foreach(_.awaitTermination(30000))
+        }
+      } finally compiler.close()
+    } finally server.close()
+  }
 }

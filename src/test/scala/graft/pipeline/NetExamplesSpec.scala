@@ -141,10 +141,10 @@ class NetExamplesSpec extends SparkSpec {
         ch.close()
         awaitAtLeast(7)(graft.sources.PushReceiver.size("unix_rcv"))
         val counts = compiler.runBatch()
-        // quota=3 per body per window: 3 of the 5 dups + both solos
-        assert(counts("tcp_sink") == 5L, counts.toString)
-        awaitAtLeast(5)(server.size)
-        assert(server.lines.count(_ == "dup") == 3, server.lines.toString)
+        // GCRA at 1 rps per body: 1 of the 5 same-instant dups + both solos
+        assert(counts("tcp_sink") == 3L, counts.toString)
+        awaitAtLeast(3)(server.size)
+        assert(server.lines.count(_ == "dup") == 1, server.lines.toString)
         assert(server.lines.count(_.startsWith("solo-")) == 2, server.lines.toString)
       } finally compiler.close()
     } finally server.close()
