@@ -16,8 +16,9 @@ import graft.pipeline.{PipelineCompiler, PipelineConfig}
   * --explain prints the Graphviz DOT of the DAG (the /pipeline/describe
   * admin surface) before running; --explain-config prints every resolved
   * key with the provider that won it and the layers it shadowed (the
-  * reference's repository explain surface); --stream runs each sink as an
-  * availableNow streaming query (file receivers need `schema_from`
+  * reference's repository explain surface); --stream runs the pipeline
+  * as one availableNow streaming query, writing every sink per
+  * micro-batch (file receivers need `schema_from`
   * params pointing at a parquet file to infer from), and refuses before
   * any sink writes a pipeline with an actor that has no streaming form
   * (warc receivers, replicator mode fanout, wet sinks:

@@ -89,6 +89,10 @@ object GraftSession {
       // compression trades cheap CPU for it (guide §2.3). Local A/B
       // (OPTIMIZATION_r16.md §6) shows no regression.
       .config("spark.rdd.compress", rddCompress)
+      // streaming offset/commit logs on local paths without a process
+      // fork per write (streaming.CheckpointFiles scaladoc)
+      .config("spark.sql.streaming.checkpointFileManagerClass",
+        classOf[graft.streaming.CheckpointFiles].getName)
       .config("spark.ui.enabled", "false")
   }
 

@@ -75,6 +75,7 @@ import org.apache.spark.sql.SparkSession
 private[graft] object IncLog {
 
   private val FoldedFile = "_folded"
+  private val BootstrapFile = "_bootstrap"
   private val SliceFoldMarker = "_FOLDED_THROUGH"
   private val BatchPrefix = "batch-"
   /** Token for the empty stream id in watermark files (a bare "" would
@@ -146,16 +147,34 @@ private[graft] object IncLog {
   def commitBatch(spark: SparkSession, modelDir: String, batchId: Long,
                   tDelta: Long, nDelta: Long,
                   streamId: String = ""): Unit = {
+    // replacing an existing marker keeps redelivery of the commit
+    // itself idempotent
+    writeCommitFile(spark, modelDir, markerName(streamId, batchId), s"$tDelta $nDelta")
+  }
+
+  /** Writes `_commits/<name>` via a temp name + rename, replacing it. */
+  private def writeCommitFile(spark: SparkSession, modelDir: String, name: String,
+                              body: String): Unit = {
     val (fs, c) = fsOf(spark, commitsPath(modelDir))
     fs.mkdirs(c)
-    val name = markerName(streamId, batchId)
     val tmp = new Path(c, s".$name.tmp")
     val out = fs.create(tmp, true)
-    out.write(s"$tDelta $nDelta".getBytes("UTF-8"))
+    out.write(body.getBytes("UTF-8"))
     out.close()
     val dst = new Path(c, name)
-    fs.delete(dst, false) // idempotent redelivery of the commit itself
-    require(fs.rename(tmp, dst), s"commit rename failed for batch $batchId")
+    fs.delete(dst, false)
+    require(fs.rename(tmp, dst), s"commit rename failed for $dst")
+  }
+
+  /** Commit a stream's FIRST batch as the exactly-once bootstrap: record
+    * its marker name in `_commits/_bootstrap` (temp + rename), then
+    * commit it with zero deltas like any batch. [[bootstrapOnly]]
+    * requires this record, so a plain build followed by one append —
+    * also a single marker — is never taken for a bootstrap. */
+  def commitBootstrap(spark: SparkSession, modelDir: String, batchId: Long,
+                      streamId: String = ""): Unit = {
+    writeCommitFile(spark, modelDir, BootstrapFile, markerName(streamId, batchId))
+    commitBatch(spark, modelDir, batchId, 0L, 0L, streamId)
   }
 
   /** Committed batches above their stream's watermark in `after`,
@@ -216,35 +235,34 @@ private[graft] object IncLog {
   }
 
   /** True when the log's state is provably an exactly-once BOOTSTRAP's
-    * own: exactly one commit marker (over ALL streams) and nothing
-    * folded yet. Recover paths use this to disambiguate torn meta over
-    * complete slices — the bootstrap commits its marker BEFORE writing
-    * meta, so a crash during that first meta write leaves this exact
-    * state, and redelivery can safely rebuild (a full overwrite of one
-    * batch). Appends never rewrite meta, so any other torn meta is
-    * damage: a build without a marker shows none, and a bootstrap
-    * followed by an append shows >= 2 markers or an advanced fold
-    * watermark. (A build without a marker followed by exactly one
-    * append also shows one marker; its meta can only be torn by
-    * damage after the fact.) */
-  def bootstrapOnly(spark: SparkSession, modelDir: String): Boolean =
-    foldedSummary(spark, modelDir).marks.isEmpty &&
-      committedAfter(spark, modelDir, Map.empty).size == 1
+    * own: exactly one commit marker (over ALL streams), the one
+    * [[commitBootstrap]] recorded, and nothing folded yet. Recover paths
+    * use this to disambiguate torn meta over complete slices — the
+    * bootstrap commits its marker BEFORE writing meta, so a crash
+    * during that first meta write leaves this exact state, and
+    * redelivery can safely rebuild (a full overwrite of one batch).
+    * Appends never rewrite meta, so any other torn meta is damage: a
+    * build without a marker shows no bootstrap record (even after one
+    * append, whose marker is the only one), and a bootstrap followed by
+    * an append shows >= 2 markers or an advanced fold watermark. */
+  def bootstrapOnly(spark: SparkSession, modelDir: String): Boolean = {
+    val (fs, c) = fsOf(spark, commitsPath(modelDir))
+    val record = new Path(c, BootstrapFile)
+    foldedSummary(spark, modelDir).marks.isEmpty && fs.exists(record) && {
+      val in = fs.open(record)
+      val name = try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
+      finally in.close()
+      committedAfter(spark, modelDir, Map.empty) match {
+        case Seq(only) => markerName(only.stream, only.id) == name
+        case _ => false
+      }
+    }
+  }
 
   /** Advance the folded summary (temp-and-rename atomic). */
   def writeFoldedSummary(spark: SparkSession, modelDir: String, m: Marks,
-                         t: Long, n: Long): Unit = {
-    val (fs, c) = fsOf(spark, commitsPath(modelDir))
-    fs.mkdirs(c)
-    val body = (s"v2 $t $n" +: markLines(m)).mkString("\n")
-    val tmp = new Path(c, s".$FoldedFile.tmp")
-    val out = fs.create(tmp, true)
-    out.write(body.getBytes("UTF-8"))
-    out.close()
-    val dst = new Path(c, FoldedFile)
-    fs.delete(dst, false)
-    require(fs.rename(tmp, dst), "folded-summary rename failed")
-  }
+                         t: Long, n: Long): Unit =
+    writeCommitFile(spark, modelDir, FoldedFile, (s"v2 $t $n" +: markLines(m)).mkString("\n"))
 
   /** Fold watermarks of one slice GENERATION (the `_FOLDED_THROUGH`
     * file inside it): readers of this generation skip increments at or

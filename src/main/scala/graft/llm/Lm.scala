@@ -396,7 +396,7 @@ object Lm {
                          dir: String, k: Int, batchId: Long,
                          streamId: String = ""): Unit =
     buildK(train, textCol, idCol, dir, k)(
-      IncLog.commitBatch(train.sparkSession, dir, batchId, 0L, 0L, streamId))
+      IncLog.commitBootstrap(train.sparkSession, dir, batchId, streamId))
 
   /** Append one batch to a built model EXACTLY ONCE — the one way
     * training documents join it: counts land as increment

@@ -272,7 +272,7 @@ object Retrieval {
                           dir: String, batchId: Long,
                           streamId: String = ""): Unit =
     buildBm25(docs, textCol, idCol, dir)(
-      IncLog.commitBatch(docs.sparkSession, dir, batchId, 0L, 0L, streamId))
+      IncLog.commitBootstrap(docs.sparkSession, dir, batchId, streamId))
 
   /** Append one batch to a built BM25 index EXACTLY ONCE: postings and
     * stats land as increment directories — idempotent overwrite — made
@@ -709,7 +709,7 @@ object Retrieval {
                             dir: String, batchId: Long,
                             streamId: String = ""): Unit =
     buildPhrase(docs, textCol, idCol, dir)(
-      IncLog.commitBatch(docs.sparkSession, dir, batchId, 0L, 0L, streamId))
+      IncLog.commitBootstrap(docs.sparkSession, dir, batchId, streamId))
 
   /** Append one batch to a built positional index EXACTLY ONCE
     * ([[IncLog]] — see [[bm25IndexAppendBatch]]): position and stats

@@ -187,8 +187,9 @@ object ParamSchema {
       "ngram_n" -> PLong, "min_shared" -> PLong, "bloom" -> PBool),
     "core.sink" -> Map("format" -> PString, "path" -> PString,
       "mode" -> PString, "partition_by" -> PStringList, "rows" -> PLong,
-      // daemon-restart resume: startStreaming only; runStreamingOnce
-      // starts from a fresh checkpoint on every run
+      // daemon-restart resume: pins the checkpoint of the pipeline's one
+      // query (sinks naming different ones are refused); startStreaming
+      // only, runStreamingOnce starts from a fresh checkpoint every run
       "checkpoint" -> PString,
       // sink transport by URI scheme (sink_head_factory.go:17-46):
       // tcp://host:port, udp://host:port, unix:///path, file://STDOUT

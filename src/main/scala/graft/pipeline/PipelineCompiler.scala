@@ -34,8 +34,15 @@ import graft.streaming.{NetSinks, ReliableSink, Streams}
   * differ (scan or channel snapshot vs file or DSv2 stream). Streaming
   * runs refuse, before anything starts, a pipeline with an actor that
   * has no streaming form ([[PipelineCompiler.cannotStream]]) or a sink
-  * plan Spark would refuse to stream, then run each sink branch as one
-  * foreachBatch query over the shared source.
+  * plan Spark would refuse to stream. A streaming run is ONE
+  * foreachBatch query per pipeline, under one checkpoint: the query
+  * reads the frontier (receivers, actors whose streaming form keeps
+  * state across batches — [[PipelineCompiler.keepsStreamState]] — and
+  * their upstreams; several frontier outputs go in as one tagged
+  * union), so each message is read once per trigger. Each micro-batch
+  * is pinned once, at the deepest node every sink reads through, and
+  * every sink branch is rebuilt over it with the batch [[build]] and
+  * written, all sinks at once.
   *
   * The per-node DataFrame is memoized, so a diamond topology builds
   * each node's plan once. Evaluation is once per batch run: an actor
@@ -74,6 +81,12 @@ object PipelineCompiler {
     case _ => false
   }
 
+  /** Whether `a`'s streaming form keeps state across micro-batches (the
+    * GCRA TAT per key, the windowed throttler's window ranks). A
+    * streaming run keeps such an actor, and everything upstream of it,
+    * in its streaming plan; every other actor runs per micro-batch. */
+  def keepsStreamState(a: ActorDef): Boolean = a.module == "core.throttler"
+
   /** Why `a` has no streaming form, if it has none. Streaming runs
     * check every actor before any listener or query starts. */
   def cannotStream(a: ActorDef): Option[String] = {
@@ -91,9 +104,20 @@ object PipelineCompiler {
       case _ => None
     }
   }
+
+  /** A pipeline's one streaming query: `query` reads the frontier (every
+    * receiver, every actor that [[keepsStreamState]], and everything
+    * upstream of those); each micro-batch seeds the memo keys in
+    * `leaves` with its rows and rebuilds every sink branch over them.
+    * `pin` is the memo key of the deepest node every sink reads through,
+    * if there is one below the frontier. */
+  private final case class StreamPlan(sinks: Seq[ActorDef], query: DataFrame,
+                                      leaves: Seq[(String, String)],
+                                      pin: Option[(String, String)])
 }
 
 class PipelineCompiler(spark: SparkSession, cfg0: PipelineConfig) {
+  import PipelineCompiler.StreamPlan
 
   private val cfg = PipelineCompiler.validateParams(cfg0)
 
@@ -115,11 +139,11 @@ class PipelineCompiler(spark: SparkSession, cfg0: PipelineConfig) {
 
   /** Router and replicator emit a DIFFERENT branch per downstream; all
     * other actors are downstream-agnostic and share one memo entry. */
-  private def memoKey(name: String, forDownstream: String): (String, String) = {
-    val module = cfg.actors(name).module
-    val routeSensitive = module == "core.router" || module == "core.replicator"
-    (name, if (routeSensitive) forDownstream else "")
-  }
+  private def memoKey(name: String, forDownstream: String): (String, String) =
+    (name, if (routeSensitive(name)) forDownstream else "")
+
+  private def routeSensitive(name: String): Boolean =
+    Set("core.router", "core.replicator")(cfg.actors(name).module)
 
   def outputOf(name: String, forDownstream: String = ""): DataFrame =
     memo.getOrElseUpdate(memoKey(name, forDownstream),
@@ -1165,21 +1189,31 @@ class PipelineCompiler(spark: SparkSession, cfg0: PipelineConfig) {
     }
   }
 
-  /** Every sink with its streaming plan: the same [[build]] as a batch
-    * run, with each receiver compiled to its stream. Refuses the whole
-    * pipeline, naming the actor, before any listener or query starts:
-    * when an actor has no streaming form
-    * ([[PipelineCompiler.cannotStream]]), and when a sink's plan fails
-    * the check Spark runs as its append-mode query starts (e.g. an
-    * aggregation without a watermark). */
-  private def streamingPlans(schemas: Map[String, StructType]): Seq[(ActorDef, DataFrame)] = {
+  /** Column of the frontier union carrying leaf `i`'s rows as one struct
+    * (null on the other leaves' rows). */
+  private def leafTag(i: Int): String = s"_graft_leaf$i"
+
+  /** The streaming plan: the same [[build]] as a batch run, with each
+    * receiver compiled to its stream. Refuses the whole pipeline, naming
+    * the actor, before any query starts: when an actor has no streaming
+    * form ([[PipelineCompiler.cannotStream]]), and when a sink's full
+    * streaming plan fails the check Spark runs as an append-mode query
+    * starts (e.g. an aggregation without a watermark). */
+  private def streamingPlan(schemas: Map[String, StructType]): StreamPlan = {
     cfg.actors.values.toSeq.sortBy(_.name).foreach(a =>
       PipelineCompiler.cannotStream(a).foreach(why =>
         throw new IllegalArgumentException(s"${a.name}: $why")))
+    def withUpstream(n: String): Set[String] = cfg.upstream(n).toSet.flatMap(withUpstream) + n
+    val frontier = cfg.actors.values
+      .filter(a => cfg.upstream(a.name).isEmpty || PipelineCompiler.keepsStreamState(a))
+      .flatMap(a => withUpstream(a.name)).toSet
+    val leaves = frontier.toSeq.sorted.flatMap(u =>
+      cfg.downstream(u).filterNot(frontier).map(memoKey(u, _))).distinct
+    val sinks = sinkDefs
     memo.clear()
     streamSchemas = Some(schemas)
-    val plans =
-      try sinkDefs.map(a => a -> outputOf(a.name))
+    val (plans, leafPlans) =
+      try (sinks.map(a => a -> outputOf(a.name)), leaves.map(memo))
       finally { streamSchemas = None; memo.clear() }
     plans.foreach { case (a, df) =>
       try UnsupportedOperationChecker.checkForStreaming(
@@ -1188,48 +1222,134 @@ class PipelineCompiler(spark: SparkSession, cfg0: PipelineConfig) {
         throw new IllegalArgumentException(
           s"${a.name}: cannot stream: ${e.getMessage}", e) }
     }
-    plans
+    val query = leafPlans match {
+      case Seq(one) => one
+      case several => several.zipWithIndex
+        .map { case (df, i) => df.select(struct(col("*")).as(leafTag(i))) }
+        .reduce(_.unionByName(_, allowMissingColumns = true))
+    }
+    // every path from the frontier to `to` passes `via`
+    def dominates(via: String, to: String): Boolean =
+      to == via || (!frontier(to) && cfg.upstream(to).forall(dominates(via, _)))
+    def ancestors(n: String): Set[String] = withUpstream(n) - n
+    val pin =
+      if (sinks.size < 2) None
+      else cfg.actors.keys
+        .filter(n => !frontier(n) && !routeSensitive(n) && sinks.forall(s => dominates(n, s.name)))
+        .maxByOption(ancestors(_).size).map(memoKey(_, ""))
+    StreamPlan(sinks, query, leaves, pin)
   }
 
-  /** Starts sink `a`'s foreachBatch query, named after the sink, over its
-    * streaming plan `df`. */
-  private def startQuery(a: ActorDef, df: DataFrame, trigger: Trigger, checkpoint: String,
-                         write: (DataFrame, Long) => Unit): StreamingQuery =
-    df.writeStream.queryName(a.name).foreachBatch(write)
-      .option("checkpointLocation", checkpoint).trigger(trigger).start()
+  /** One micro-batch of the pipeline query. The batch is evaluated once:
+    * pinned as an eager localCheckpoint at the plan's `pin`, or as a
+    * whole when several sinks read it and there is no pin. Every sink
+    * branch is rebuilt over it through the batch [[build]] and written
+    * through its `write`, all sinks at once; the pins are released after
+    * the last write. */
+  private def runMicroBatch(plan: StreamPlan, batch: DataFrame, batchId: Long,
+                            write: Map[String, (DataFrame, Long) => Unit]): Unit = {
+    memo.clear()
+    val pinnedBatch =
+      if (plan.pin.isEmpty && plan.sinks.size > 1) Some(batch.localCheckpoint(eager = true))
+      else None
+    try {
+      val in = pinnedBatch.getOrElse(batch)
+      plan.leaves.zipWithIndex.foreach { case (key, i) =>
+        memo(key) =
+          if (plan.leaves.size == 1) in
+          else in.filter(col(leafTag(i)).isNotNull).select(s"${leafTag(i)}.*")
+      }
+      plan.pin.foreach(k => memo(k) = checkpoints.getOrElseUpdate(k,
+        outputOf(k._1, k._2).localCheckpoint(eager = true)))
+      val branches = plan.sinks.map(a => a -> outputOf(a.name))
+      writeAll(batch.sparkSession, branches.map { case (a, df) =>
+        a.name -> (() => write(a.name)(df, batchId)) })
+    } finally {
+      pinnedBatch.foreach(GraftBridge.releaseCheckpoint)
+      releaseCheckpoints()
+    }
+  }
 
-  /** Streaming run: each sink branch runs as one foreachBatch query with
-    * Trigger.AvailableNow under a fresh checkpoint, started once the
-    * previous sink's query finished (SURVEY §2.6.5). Sinks WRITE their
-    * outputs per micro-batch through [[writeSink]], so `Flowd --stream`
-    * emits, not just counts; a failing write fails the run. Returns sink
-    * name -> rows written. */
-  def runStreamingOnce(receiverSchemas: Map[String, StructType]): Map[String, Long] =
-    streamingPlans(receiverSchemas).map { case (a, df) =>
-      var n = 0L
-      startQuery(a, df, Trigger.AvailableNow(), Streams.newCheckpointDir(),
-        (batch, _) => n += writeSink(a, batch, append = true)).awaitTermination()
-      a.name -> n
-    }.toMap
+  /** Runs every sink's write at once, each on its own thread with the
+    * calling thread's Spark local properties (so stopping the query
+    * cancels its jobs), and returns once all have ended, rethrowing a
+    * failure. An interrupt (the query stopping) interrupts the writers
+    * and waits for them. A single write runs on the calling thread. */
+  private def writeAll(session: SparkSession, writes: Seq[(String, () => Unit)]): Unit =
+    if (writes.size == 1) writes.head._2()
+    else {
+      val props = GraftBridge.localProperties(session)
+      val failures = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+      val writers = writes.map { case (sink, w) =>
+        val t = new Thread(() =>
+          try GraftBridge.withThreadContext(session, props)(w())
+          catch { case e: Throwable => failures.add(e) },
+          s"graft-sink-writer-$sink")
+        t.setDaemon(true)
+        t.start()
+        t
+      }
+      try writers.foreach(_.join())
+      catch {
+        case e: InterruptedException =>
+          writers.foreach(_.interrupt())
+          writers.foreach(_.join())
+          throw e
+      }
+      Option(failures.peek()).foreach(e => throw e)
+    }
 
-  /** Daemon mode (the reference's long-running flowd): start every sink
-    * branch as a CONTINUOUS foreachBatch query and return the live
-    * queries — the pipeline keeps draining newly-arriving files/messages
-    * until each query is stopped (or `spark.streams.awaitAnyTermination`
-    * unblocks). Sinks write through [[writeSink]] as in
-    * [[runStreamingOnce]], each micro-batch one plain action. Pair with
+  /** Starts the pipeline's foreachBatch query, named after its sinks. */
+  private def startQuery(plan: StreamPlan, trigger: Trigger, checkpoint: String,
+                         write: Map[String, (DataFrame, Long) => Unit]): StreamingQuery = {
+    val each: (DataFrame, Long) => Unit = runMicroBatch(plan, _, _, write)
+    plan.query.writeStream.queryName(plan.sinks.map(_.name).mkString(","))
+      .foreachBatch(each).option("checkpointLocation", checkpoint).trigger(trigger).start()
+  }
+
+  /** Streaming run: the pipeline runs as one foreachBatch query with
+    * Trigger.AvailableNow under a fresh checkpoint (SURVEY §2.6.5), so
+    * each message is read once and each trigger commits once. Sinks
+    * WRITE their outputs per micro-batch through [[writeSink]], so
+    * `Flowd --stream` emits, not just counts; a failing write fails the
+    * run. Returns sink name -> rows written. */
+  def runStreamingOnce(receiverSchemas: Map[String, StructType]): Map[String, Long] = {
+    val plan = streamingPlan(receiverSchemas)
+    val rows = plan.sinks.map(_.name -> new java.util.concurrent.atomic.AtomicLong).toMap
+    startQuery(plan, Trigger.AvailableNow(), Streams.newCheckpointDir(),
+      plan.sinks.map { a =>
+        a.name -> ((batch: DataFrame, _: Long) =>
+          rows(a.name).addAndGet(writeSink(a, batch, append = true)): Unit)
+      }.toMap).awaitTermination()
+    rows.map { case (s, n) => s -> n.get }
+  }
+
+  /** Daemon mode (the reference's long-running flowd): start the
+    * pipeline as one CONTINUOUS foreachBatch query and return sink ->
+    * that query — the pipeline keeps draining newly-arriving
+    * files/messages until the query is stopped (or
+    * `spark.streams.awaitAnyTermination` unblocks). Each trigger reads
+    * the source once and commits one checkpoint; sinks write through
+    * [[writeSink]] as in [[runStreamingOnce]], each micro-batch one
+    * plain action per sink, all sinks at once. Pair with
     * [[graft.streaming.AdminServer]] for live /progress while it runs.
     *
-    * A sink's `checkpoint` param pins its query's checkpointLocation, so
+    * A sink's `checkpoint` param pins the query's checkpointLocation, so
     * a restarted `--follow` daemon resumes from committed offsets instead
     * of re-ingesting the whole backlog into an append sink; without it a
     * fresh ephemeral dir is used (every restart replays from scratch).
-    * Caveat either way: foreachBatch + append is at-least-once — a batch
-    * retried after a mid-write crash appends its rows twice. */
+    * Sinks naming different checkpoints are refused before the query
+    * starts. Caveat either way: foreachBatch + append is at-least-once —
+    * a batch retried after a mid-write crash appends its rows twice. */
   def startStreaming(receiverSchemas: Map[String, StructType],
                      trigger: Trigger = Trigger.ProcessingTime("1 second"))
-      : Map[String, StreamingQuery] =
-    streamingPlans(receiverSchemas).map { case (a, df) =>
+      : Map[String, StreamingQuery] = {
+    val pinned = sinkDefs.flatMap(a => p(a, "checkpoint").map(a.name -> _))
+    require(pinned.map(_._2).distinct.size <= 1,
+      "one pipeline runs one query, but its sinks pin different checkpoints: " +
+        pinned.map { case (s, c) => s"$s=$c" }.mkString(", "))
+    val plan = streamingPlan(receiverSchemas)
+    val write = plan.sinks.map { a =>
       // the reference sink's reconnect discipline (sink.go:80-110 /
       // buffer.go:33-93): a failing micro-batch write retries in-batch
       // with exponential backoff — every attempt opens fresh
@@ -1241,13 +1361,15 @@ class PipelineCompiler(spark: SparkSession, cfg0: PipelineConfig) {
         maxAttempts = p(a, "max_attempts").map(_.toInt).getOrElse(16),
         minBackoffMs = p(a, "min_backoff_ms").map(_.toLong).getOrElse(50L),
         maxBackoffMs = p(a, "max_backoff_ms").map(_.toLong).getOrElse(5000L))
-      val write = ReliableSink.withRetry(
+      a.name -> ReliableSink.withRetry(
         (batch, _) => writeSink(a, batch, append = true, counted = false): Unit,
         (batch, batchId, err) => recordDeadLetter(a.name, batchId, batch, err),
         policy)
-      a.name -> startQuery(a, df, trigger,
-        p(a, "checkpoint").getOrElse(Streams.newCheckpointDir()), write)
     }.toMap
+    val query = startQuery(plan, trigger,
+      pinned.headOption.fold(Streams.newCheckpointDir())(_._2), write)
+    plan.sinks.map(_.name -> query).toMap
+  }
 
   /** memory-sink name -> the persisted DataFrame backing its temp view;
     * consulted on view replacement so the superseded cache is released. */

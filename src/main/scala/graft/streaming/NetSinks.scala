@@ -1,5 +1,6 @@
 package graft.streaming
 
+import java.io.BufferedOutputStream
 import java.net.{DatagramPacket, DatagramSocket, InetAddress, Socket, StandardProtocolFamily, UnixDomainSocketAddress}
 import java.nio.ByteBuffer
 import java.nio.channels.SocketChannel
@@ -17,19 +18,25 @@ import org.apache.spark.sql.{ForeachWriter, Row}
   */
 object NetSinks {
 
+  /** TCP writer: rows go through one 64 KiB buffer per partition-task,
+    * flushed only when the task closes cleanly — an errored task sends
+    * nothing more, and the batch's retry resends it whole. */
   def tcpWriter(host: String, port: Int, column: String = "body"): ForeachWriter[Row] =
     new ForeachWriter[Row] {
       @transient private var socket: Socket = _
+      @transient private var out: BufferedOutputStream = _
       override def open(partitionId: Long, epochId: Long): Boolean = {
-        socket = new Socket(host, port); true
+        socket = new Socket(host, port)
+        socket.setTcpNoDelay(true)
+        out = new BufferedOutputStream(socket.getOutputStream, 1 << 16)
+        true
       }
       override def process(row: Row): Unit = {
-        val bytes = valueBytes(row, column)
-        val out = socket.getOutputStream
-        out.write(bytes); out.write('\r'); out.write('\n'); out.flush()
+        out.write(valueBytes(row, column)); out.write('\r'); out.write('\n')
       }
       override def close(errorOrNull: Throwable): Unit =
-        if (socket != null) socket.close()
+        if (socket != null)
+          try if (errorOrNull == null) out.flush() finally socket.close()
     }
 
   def udpWriter(host: String, port: Int, column: String = "body"): ForeachWriter[Row] =

@@ -48,6 +48,8 @@ object ReliableSink {
             write(cur, batchId)
             done = true
           } catch {
+            // a stopped query interrupts its writer: end, do not retry
+            case e: InterruptedException => throw e
             case e: Exception =>
               lastErr = e
               attempt += 1

@@ -50,6 +50,29 @@ object GraftBridge {
     case _ =>
   }
 
+  /** A copy of the calling thread's Spark local properties: job group,
+    * job description, SQL execution ids. */
+  def localProperties(spark: SparkSession): java.util.Properties =
+    org.apache.spark.util.Utils.cloneProperties(spark.sparkContext.getLocalProperties)
+
+  /** Runs `f` on the calling thread with `props` (from [[localProperties]]
+    * on another thread) as its local properties and `spark` as its
+    * active session, then restores both. Work handed from a streaming
+    * micro-batch to another thread keeps the query's job group this way,
+    * so stopping the query cancels that work's jobs too. */
+  def withThreadContext[T](spark: SparkSession, props: java.util.Properties)(f: => T): T = {
+    val sc = spark.sparkContext
+    val oldProps = sc.getLocalProperties
+    val oldSession = SparkSession.getActiveSession
+    sc.setLocalProperties(org.apache.spark.util.Utils.cloneProperties(props))
+    SparkSession.setActiveSession(spark)
+    try f
+    finally {
+      sc.setLocalProperties(oldProps)
+      oldSession.fold(SparkSession.clearActiveSession())(SparkSession.setActiveSession)
+    }
+  }
+
   /** True when the session's CacheManager pins no cached plans — the spec
     * hook for operators contracted to release their internal caches
     * before returning (localCheckpoint blocks are NOT CacheManager

@@ -128,6 +128,17 @@ class Bm25ExactlyOnceSpec extends SparkSpec {
     assert(e2.getMessage.contains("torn meta"))
   }
 
+  test("a plain build plus one append is no bootstrap: torn meta stays loud") {
+    // one commit marker, nothing folded — the bootstrap's shape, but no
+    // bootstrap record: rebuilding would discard the appended batch
+    val dir = freshDir()
+    Retrieval.bm25BuildIndex(b0, "text", "doc_id", dir)
+    assert(Retrieval.bm25IndexAppendBatch(b1, "text", "doc_id", dir, 1L))
+    fs.delete(new org.apache.hadoop.fs.Path(s"$dir/meta/_SUCCESS"), false)
+    val e = intercept[IllegalStateException](Retrieval.bm25IndexRecover(spark, dir))
+    assert(e.getMessage.contains("torn meta"))
+  }
+
   test("stream-scoped markers: a fresh checkpoint lineage appends under " +
       "its own stream id instead of colliding with old markers") {
     val dir = freshDir()

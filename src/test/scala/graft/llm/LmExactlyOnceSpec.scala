@@ -134,6 +134,17 @@ class LmExactlyOnceSpec extends SparkSpec {
     assert(!Lm.lmIndexRecoverK(spark, torn))
   }
 
+  test("a plain build plus one append is no bootstrap: torn meta stays loud") {
+    // one commit marker, nothing folded — the bootstrap's shape, but no
+    // bootstrap record: rebuilding would discard the appended batch
+    val dir = freshDir()
+    Lm.lmBuildIndexK(b0, "text", "doc_id", dir, k = 2)
+    assert(Lm.lmIndexAppendBatchK(b1, "text", "doc_id", dir, batchId = 1L))
+    fs.delete(new org.apache.hadoop.fs.Path(s"$dir/meta/_SUCCESS"), false)
+    val e = intercept[IllegalStateException](Lm.lmIndexRecoverK(spark, dir))
+    assert(e.getMessage.contains("torn meta"))
+  }
+
   test("a crash between slice folds and the summary double-counts nothing") {
     val dir = freshDir()
     Lm.lmBuildIndexBatchK(b0, "text", "doc_id", dir, k = 2, batchId = 0L)
