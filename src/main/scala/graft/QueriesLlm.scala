@@ -885,7 +885,7 @@ FROM enc GROUP BY doc_id"""
         // the index it anti-joins against
         val pass1 = graft.sources.Warc.dedupByDigestIndexed(snapB, idx)
           .localCheckpoint(true)
-        graft.sources.Warc.digestIndexAppend(pass1, idx, "snapB")
+        graft.sources.Warc.digestIndexAppendBatch(pass1, idx, "snapB", batchId = 0L)
         val pass2 = graft.sources.Warc.dedupByDigestIndexed(snapB, idx)
         pass1.withColumn("pass", lit(1))
           .unionByName(pass2.withColumn("pass", lit(2)))
@@ -3264,7 +3264,7 @@ FROM ann"""
     Some(lm5OracleSql)) :+ QueryDef(
     // the order-5 persisted lifecycle (build %4==0 / append %4==2 /
     // compact / recover / score) against the SAME 5-gram oracle —
-    // order rides meta, every grams_n slice stays in step
+    // order rides meta, every order stays in step
     "llm_lm5_index",
     (s, dir) => {
       val idx = java.nio.file.Files.createTempDirectory("graft-lm5-index-").toString

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 
 /** Scale soak for the persisted LSH dedup index
   * ([[graft.llm.Dedup.lshBuildIndex]] / `lshIndexMatches` /
-  * `lshIndexAppend`): a corpus far past the oracle SFs is indexed ONCE,
+  * `lshIndexAppendBatch`): a corpus far past the oracle SFs is indexed ONCE,
   * then a small "daily" batch is deduped against it — the incremental
   * loop whose cost profile the index exists for. Reports the observables
   * the claim rests on: build wall + index bytes (the one-time cost),
@@ -77,7 +77,8 @@ object SoakDedupIndex {
     val matchBytes = settleBytes() - before
 
     t0 = System.nanoTime()
-    graft.llm.Dedup.lshIndexAppend(batch, "text", "doc_id", s"$dir/index")
+    graft.llm.Dedup.lshIndexAppendBatch(batch, "text", "doc_id", s"$dir/index",
+      batchId = 1L)
     val appendSec = (System.nanoTime() - t0) / 1e9
 
     println(s"""{"soak":"dedup_index","n_corpus":$n,"n_batch":$nBatch,""" +

@@ -52,7 +52,10 @@ object SoakLm {
       .walk(java.nio.file.Paths.get(s"$dir/model"))
       .filter(java.nio.file.Files.isRegularFile(_))
       .mapToLong(java.nio.file.Files.size(_)).sum()
-    val biRows = spark.read.parquet(s"$dir/model/grams_2").count()
+    def liveBigrams(): Long =
+      graft.llm.IndexStore.read(spark, s"$dir/model", graft.llm.Lm.LmModel.primary)
+        .filter(org.apache.spark.sql.functions.col("ord") === 2).count()
+    val biRows = liveBigrams()
 
     // bulk curation pass: score the whole corpus against the model
     t0 = System.nanoTime()
@@ -90,14 +93,11 @@ object SoakLm {
     // count-cutoff pruning: at uniform-random bigrams nearly all pairs
     // are singletons, so minCount=2 collapses the model to the
     // (tiny) repeated-pair head — the size lever a deployment pulls.
-    // Post-compact slices live in GenDir generations — resolve them.
-    def liveBigrams(): String =
-      graft.llm.GenDir.live(spark, s"$dir/model/grams_2")
-    val prePrune = spark.read.parquet(liveBigrams()).count()
+    val prePrune = liveBigrams()
     t0 = System.nanoTime()
     graft.llm.Lm.lmIndexCompactK(spark, s"$dir/model", minCount = 2L)
     val pruneSec = (System.nanoTime() - t0) / 1e9
-    val postPrune = spark.read.parquet(liveBigrams()).count()
+    val postPrune = liveBigrams()
 
     // trigram leg: order-3 build + full scoring — the added slice is
     // another ~token-count rows at this worst-case corpus, so the

@@ -6,7 +6,7 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 
 /** Scale soak for the persisted exact-substring index
   * ([[graft.llm.Dedup.spanBuildIndex]] / `spanIndexMatches` /
-  * `spanIndexAppend`): a corpus far past the oracle SFs is indexed
+  * `spanIndexAppendBatch`): a corpus far past the oracle SFs is indexed
   * ONCE, then a "daily" batch with PLANTED corpus runs reports its
   * duplicated spans against the index alone. Window hashes are uniform,
   * so unlike the LSH index no catalog slice prunes — the honest claim is
@@ -81,9 +81,11 @@ object SoakSpanIndex {
     val expected = nBatch / 2
 
     t0 = System.nanoTime()
-    graft.llm.Dedup.spanIndexAppend(batch, "doc_id", "text", s"$dir/index")
+    graft.llm.Dedup.spanIndexAppendBatch(batch, "doc_id", "text", s"$dir/index",
+      batchId = 1L)
     val appendSec = (System.nanoTime() - t0) / 1e9
-    val appended = spark.read.parquet(s"$dir/index/windows").count() - indexRows
+    val appended = graft.llm.IndexStore.read(spark, s"$dir/index",
+      graft.llm.Dedup.Windows).count() - indexRows
 
     println(s"""{"soak":"span_index","n_corpus":$n,"n_batch":$nBatch,""" +
       f""""build_sec":$buildSec%.1f,"index_bytes":$indexBytes,"index_rows":$indexRows,""" +

@@ -58,7 +58,8 @@ object SoakStreamSpans {
         last = System.nanoTime()
         stats += f"""{"batch":$batchId,"sec":$sec%.1f,"rows":$n,"docs_cut_to_40":$cut40}"""
       })
-    val indexRows = spark.read.parquet(s"$dir/index/windows").count()
+    val indexRows = graft.llm.IndexStore.read(spark, s"$dir/index",
+      graft.llm.Dedup.Windows).count()
     println(s"""{"soak":"stream_spans","n_batches":$nBatches,""" +
       s""""docs_per_batch":$perBatch,"index_rows":$indexRows,""" +
       s""""batches":[${stats.mkString(",")}]}""")

@@ -509,18 +509,6 @@ object Dedup {
       .select(col(idCol), col("cluster_root"), col("keep"))
   }
 
-  /** Directory-partition fan-out of the persisted index's shingle slice:
-    * candidate ids map to `pmod(xxhash64(id), IndexIdBuckets)` directories,
-    * so a batch whose candidates touch few buckets prunes the verify scan
-    * at the PARTITION level (catalog pruning works for arbitrarily long
-    * id lists, unlike parquet row-group In-pushdown which caps at a
-    * handful of literals). 256 keeps the bucket list a bounded collect
-    * (<= 256 values) at any corpus size. */
-  val IndexIdBuckets = 256
-
-  private def idBucket(id: Column): Column =
-    pmod(xxhash64(id), lit(IndexIdBuckets)).cast("int")
-
   /** (shingleN, numBands, rowsPerBand) a persisted index was built with —
     * for callers that must sign OTHER frames compatibly. */
   def lshIndexParams(spark: org.apache.spark.sql.SparkSession,
@@ -528,105 +516,83 @@ object Dedup {
 
   private def readIndexMeta(spark: org.apache.spark.sql.SparkSession,
                             dir: String): (Int, Int, Int) = {
-    val m = spark.read.parquet(s"$dir/meta").head()
+    val m = IndexStore.meta(spark, dir).head()
     (m.getAs[Int]("shingle_n"), m.getAs[Int]("num_bands"),
       m.getAs[Int]("rows_per_band"))
   }
+
+  /** (id, sh, id_pt): hashed shingle sets keyed by the id's bucket
+    * ([[IndexStore.bucket]]), so a batch whose candidates touch few
+    * buckets prunes the verify scan at the PARTITION level (catalog
+    * pruning works for arbitrarily long id lists, unlike parquet
+    * row-group In-pushdown). */
+  private def hashedRows(df: DataFrame, textCol: String, idCol: String,
+                         shingleN: Int): DataFrame =
+    df.repartition(df.sparkSession.sparkContext.defaultParallelism)
+      .select(col(idCol).as("id"),
+        HashFunctions.shingleHashes(shingleN)(TextFunctions.tokens(col(textCol))).as("sh"),
+        IndexStore.bucket(col(idCol)).as("id_pt"))
+
+  /** Co-locate each id_pt directory's rows before the partitioned write
+    * (a task holding random rows would open up to 256 files each), sorted
+    * by id within files. */
+  private def writeShingles(hashed: DataFrame, path: String): Unit =
+    hashed.repartition(hashed.sparkSession.sparkContext.defaultParallelism, col("id_pt"))
+      .sortWithinPartitions(col("id"))
+      .write.mode("overwrite").partitionBy("id_pt").parquet(path)
+
+  private def bandRows(hashed: DataFrame, numBands: Int, rowsPerBand: Int): DataFrame =
+    hashed
+      .withColumn("sig", HashFunctions.minhashSigLongs(numBands * rowsPerBand)(col("sh")))
+      .select(col("id"), posexplode(HashFunctions.bandKeys(numBands, rowsPerBand)(col("sig"))))
+      .select(col("pos").as("band_idx"), col("col").as("band_key"), col("id"))
+
+  /** The LSH dedup index: `shingles/` (id, sh) partitioned by `id_pt`,
+    * the exact-verify side; `bands/` (band_idx, band_key, id), the
+    * corpus's LSH keys derived from the shingles, compacted by folding
+    * its own increments (one parallelism-wide file set), so compaction
+    * never re-hashes the corpus; meta (shingle_n, num_bands,
+    * rows_per_band), so a batch can never be signed with mismatched
+    * knobs. */
+  private def lshLayout(numBands: Int, rowsPerBand: Int) = IndexStore.Layout(
+    IndexStore.Slice("shingles", writeShingles),
+    Seq(IndexStore.Slice("bands", (rows, path) => rows.write.mode("overwrite").parquet(path),
+      fold = Some(df => df.repartition(df.sparkSession.sparkContext.defaultParallelism)),
+      derive = bandRows(_, numBands, rowsPerBand))))
+
+  /** The LSH slices for reads, recover and compact, which never sign. */
+  private val Lsh = lshLayout(0, 0)
 
   /** Build a persisted MinHash-LSH dedup index under `dir` — the
     * build-once/query-many shape for INCREMENTAL dedup: hash the corpus
     * once, then dedup every incoming batch against the index without
     * recomputing the corpus (the daily-crawl-vs-warehouse loop of a
     * training-data pipeline). The persisted-index counterpart of
-    * [[minhashLshPairs]], mirroring [[Similarity.ivfBuildIndex]]'s
-    * layout discipline.
-    *
-    * Layout under `dir`:
-    *  - `meta`: one row (shingle_n, num_bands, rows_per_band) — the query
-    *    side derives its parameters from the index, so a batch can never
-    *    be signed with mismatched knobs;
-    *  - `shingles/` partitioned by `id_pt` (see [[IndexIdBuckets]]):
-    *    (id, sh) hashed shingle sets, sorted by id within files — the
-    *    exact-verify side, partition-pruned per batch;
-    *  - `bands/`: (band_idx, band_key, id) — the corpus's LSH keys, the
-    *    candidate-generation side.
-    *
-    * The corpus is hashed ONCE: the shingle slice is written first and
-    * the band slice derives from reading it back — no second pass over
-    * the raw text and no corpus-sized cache pinned during the build. */
+    * [[minhashLshPairs]]. The corpus is hashed ONCE; both slices write
+    * from that one pass. */
   def lshBuildIndex(df: DataFrame, textCol: String, idCol: String, dir: String,
                     shingleN: Int = 3, numBands: Int = 16,
                     rowsPerBand: Int = 4): Unit = {
     val spark = df.sparkSession
     import spark.implicits._
-    // fresh build starts both slices' generation history over
-    GenDir.resetAll(spark, s"$dir/shingles", s"$dir/bands")
-    Seq((shingleN, numBands, rowsPerBand))
-      .toDF("shingle_n", "num_bands", "rows_per_band")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/meta")
-    // ONE hashing pass into a DISK_ONLY persist; the two slices write
-    // OVERLAPPED from it (guide §2.6 — order-free inside a build:
-    // lshIndexRecover demands meta AND shingles AND bands complete, so
-    // any crash point reads as "no index" whichever slice landed first).
-    // Pre-r15 the band slice re-read the just-written shingles.
-    val hashed = df.repartition(spark.sparkContext.defaultParallelism)
-      .select(col(idCol).as("id"),
-        HashFunctions.shingleHashes(shingleN)(TextFunctions.tokens(col(textCol))).as("sh"),
-        idBucket(col(idCol)).as("id_pt"))
-      .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
-    Par.run(Seq(
-      () => hashed
-        // co-locate each id_pt directory's rows before the partitioned
-        // write: a task holding random rows would open up to IndexIdBuckets
-        // files each (tasks x buckets small files); keyed, each directory
-        // is written by the task(s) owning its bucket
-        .repartition(spark.sparkContext.defaultParallelism, col("id_pt"))
-        .sortWithinPartitions(col("id"))
-        .write.mode("overwrite").partitionBy("id_pt").parquet(s"$dir/shingles"),
-      () => writeBandSlice(spark, s"$dir/bands", numBands, rowsPerBand,
-        hashed, org.apache.spark.sql.SaveMode.Overwrite)))
-    hashed.unpersist()
+    IndexStore.build(dir, lshLayout(numBands, rowsPerBand),
+      hashedRows(df, textCol, idCol, shingleN))(_ =>
+      Seq((shingleN, numBands, rowsPerBand))
+        .toDF("shingle_n", "num_bands", "rows_per_band"))
   }
 
-  /** Append already-accepted documents to a persisted index — the
-    * maintenance half of the incremental loop: dedup a batch with
-    * [[lshIndexMatches]], then append its survivors. Batch-sized, so the
-    * one localCheckpoint (feeding both slices without re-hashing the
-    * text) is bounded by the batch, never the corpus. */
-  def lshIndexAppend(df: DataFrame, textCol: String, idCol: String,
-                     dir: String): Unit = {
+  /** Append already-accepted documents EXACTLY ONCE — the maintenance
+    * half of the incremental loop: dedup a batch with
+    * [[lshIndexMatches]], then append its survivors. Returns false on
+    * the redelivery skip. */
+  def lshIndexAppendBatch(df: DataFrame, textCol: String, idCol: String,
+                          dir: String, batchId: Long,
+                          streamId: String = ""): Boolean = {
     val spark = df.sparkSession
     val (shingleN, numBands, rowsPerBand) = readIndexMeta(spark, dir)
-    val hashed = df.repartition(spark.sparkContext.defaultParallelism)
-      .select(col(idCol).as("id"),
-        HashFunctions.shingleHashes(shingleN)(TextFunctions.tokens(col(textCol))).as("sh"),
-        idBucket(col(idCol)).as("id_pt"))
-      .localCheckpoint(true)
-    hashed.repartition(spark.sparkContext.defaultParallelism, col("id_pt"))
-      .sortWithinPartitions(col("id"))
-      // appends land in the CURRENT generation (single-writer contract)
-      // — committer v1 so a crash leaves the slice row-identical
-      .write.options(GenDir.V1AppendCommitter)
-      .mode("append").partitionBy("id_pt")
-      .parquet(GenDir.live(spark, s"$dir/shingles"))
-    writeBandSlice(spark, GenDir.live(spark, s"$dir/bands"), numBands,
-      rowsPerBand, hashed, org.apache.spark.sql.SaveMode.Append)
+    IndexStore.appendBatch(spark, dir, lshLayout(numBands, rowsPerBand),
+      batchId, streamId)(hashedRows(df, textCol, idCol, shingleN))(_ => (0L, 0L))
   }
-
-  private def writeBandSlice(spark: org.apache.spark.sql.SparkSession,
-                             path: String, numBands: Int, rowsPerBand: Int,
-                             hashed: DataFrame,
-                             mode: org.apache.spark.sql.SaveMode): Unit =
-    hashed
-      .withColumn("sig", HashFunctions.minhashSigLongs(numBands * rowsPerBand)(col("sh")))
-      .select(col("id"), posexplode(HashFunctions.bandKeys(numBands, rowsPerBand)(col("sig"))))
-      .select(col("pos").as("band_idx"), col("col").as("band_key"), col("id"))
-      // committer v1 on appends — see [[GenDir.V1AppendCommitter]]
-      .write.options(
-        if (mode == org.apache.spark.sql.SaveMode.Append)
-          GenDir.V1AppendCommitter
-        else Map.empty[String, String])
-      .mode(mode).parquet(path)
 
   /** Near-dup matches of a batch AGAINST a persisted index (see
     * [[lshBuildIndex]]): (batch_id, corpus_id, jaccard) for every pair at
@@ -642,7 +608,7 @@ object Dedup {
     *    AQE broadcasts it under the threshold and degrades to a shuffle
     *    join for a giant backfill batch, the index side never shuffles;
     *  - exact verify reads ONLY the shingle partitions the candidate ids
-    *    hash into (a <= [[IndexIdBuckets]] bounded collect drives catalog
+    *    hash into (a <= [[IndexStore.Buckets]] bounded collect drives catalog
     *    partition pruning — `ivfSearchIndex`'s probed-cells discipline,
     *    adapted to ids), then joins the slim candidate pairs broadcast —
     *    gated: the candidate count is known exactly (the set is an eager
@@ -656,6 +622,7 @@ object Dedup {
                       broadcastCandMaxRows: Long = 4L << 20): DataFrame = {
     val spark = batch.sparkSession
     val (shingleN, numBands, rowsPerBand) = readIndexMeta(spark, dir)
+    val v = IndexStore.view(spark, dir) // ONE increment-log listing per call
     val hashed = batch.repartition(spark.sparkContext.defaultParallelism)
       .select(col(idCol).as("qid"),
         HashFunctions.shingleHashes(shingleN)(TextFunctions.tokens(col(textCol))).as("sh_a"))
@@ -665,14 +632,14 @@ object Dedup {
       .select(col("qid"), posexplode(HashFunctions.bandKeys(numBands, rowsPerBand)(col("sig"))))
       .select(col("qid"), col("pos").as("band_idx"), col("col").as("band_key"))
     val cands = qBands
-      .join(spark.read.parquet(GenDir.live(spark, s"$dir/bands")),
+      .join(IndexStore.read(spark, dir, Lsh.derived.head, v),
         Seq("band_idx", "band_key"))
       .select(col("qid"), col("id")).distinct()
       .localCheckpoint(true)
-    // bounded by construction: <= IndexIdBuckets distinct values
-    val hitBuckets = cands.select(idBucket(col("id")).as("pt")).distinct()
+    // bounded by construction: <= IndexStore.Buckets distinct values
+    val hitBuckets = cands.select(IndexStore.bucket(col("id")).as("pt")).distinct()
       .collect().map(_.getInt(0))
-    val idxSh = spark.read.parquet(GenDir.live(spark, s"$dir/shingles"))
+    val idxSh = IndexStore.read(spark, dir, Lsh.primary, v)
       .filter(col("id_pt").isInCollection(hitBuckets.toSeq))
       .select(col("id"), col("sh").as("sh_b"))
     // count is free: cands is an eager localCheckpoint
@@ -710,15 +677,20 @@ object Dedup {
     val spark = docs.sparkSession
     import spark.implicits._
     require(w >= 2, s"window must be >= 2 tokens, got $w")
-    // fresh build starts the window slice's generation history over
-    GenDir.resetAll(spark, s"$dir/windows")
-    Seq(w).toDF("w").coalesce(1).write.mode("overwrite").parquet(s"$dir/meta")
-    batchWindowHashes(docs, idCol, textCol, w)
-      .select(col("wh")).distinct()
-      .repartitionByRange(spark.sparkContext.defaultParallelism, col("wh"))
-      .sortWithinPartitions(col("wh"))
-      .write.mode("overwrite").parquet(s"$dir/windows")
+    IndexStore.build(dir, Span,
+      batchWindowHashes(docs, idCol, textCol, w).select(col("wh")).distinct())(
+      _ => Seq(w).toDF("w"))
   }
+
+  /** The window slice: distinct hashes range-partitioned and sorted, so
+    * each file's row groups carry tight hash ranges. */
+  private[graft] val Windows = IndexStore.Slice("windows", (rows, path) =>
+    rows.repartitionByRange(rows.sparkSession.sparkContext.defaultParallelism, col("wh"))
+      .sortWithinPartitions(col("wh"))
+      .write.mode("overwrite").parquet(path))
+
+  /** The span index: `windows/` (wh) and meta (w). */
+  private val Span = IndexStore.Layout(Windows)
 
   /** (qid, pos, wh) for every window position of every doc. */
   private def batchWindowHashes(docs: DataFrame, idCol: String,
@@ -730,7 +702,7 @@ object Dedup {
 
   private def readSpanMeta(spark: org.apache.spark.sql.SparkSession,
                            dir: String): Int =
-    spark.read.parquet(s"$dir/meta").head().getInt(0)
+    IndexStore.meta(spark, dir).head().getInt(0)
 
   /** The window size a persisted span index was built with — public for
     * callers that must sign auxiliary work (e.g. intra-batch cuts) with
@@ -743,7 +715,7 @@ object Dedup {
     * covered by windows already present in the corpus — [[dupSpans]]'
     * report with the corpus side served entirely from the index
     * (batch-internal duplication deliberately NOT flagged; admit the
-    * batch with [[spanIndexAppend]] and the next batch will see it).
+    * batch with [[spanIndexAppendBatch]] and the next batch will see it).
     *
     * Scale shape: the batch's distinct hashes broadcast into ONE
     * streamed scan of the index (no index shuffle, no driver state);
@@ -757,7 +729,7 @@ object Dedup {
     val w = readSpanMeta(spark, dir)
     val bw = batchWindowHashes(batch, idCol, textCol, w).cache()
     val bHashes = bw.select(col("wh")).distinct()
-    val hits = spark.read.parquet(GenDir.live(spark, s"$dir/windows"))
+    val hits = IndexStore.read(spark, dir, Windows)
       .join(broadcast(bHashes), "wh")
       .select(col("wh")) // distinct by construction: index side is distinct
     val byDoc = org.apache.spark.sql.expressions.Window
@@ -869,98 +841,49 @@ object Dedup {
       .withColumn("contaminated", col("shared_ngrams") >= minShared)
   }
 
-  /** Admit a batch's windows into the index: append ONLY hashes the
-    * index has never seen (novel = batch distinct minus one streamed
+  /** Admit a batch's windows into the index EXACTLY ONCE: only hashes
+    * the index has never seen (novel = batch distinct minus one streamed
     * intersection scan), sorted into their own tight-stat files. On a
-    * dup-heavy feed the index grows with novelty, not batch count. */
-  def spanIndexAppend(docs: DataFrame, idCol: String, textCol: String,
-                      dir: String): Unit = {
+    * dup-heavy feed the index grows with novelty, not batch count.
+    * Returns false on the redelivery skip. */
+  def spanIndexAppendBatch(docs: DataFrame, idCol: String, textCol: String,
+                           dir: String, batchId: Long,
+                           streamId: String = ""): Boolean = {
     val spark = docs.sparkSession
-    val w = readSpanMeta(spark, dir)
-    val live = GenDir.live(spark, s"$dir/windows")
-    val bHashes = batchWindowHashes(docs, idCol, textCol, w)
-      .select(col("wh")).distinct().localCheckpoint(true)
-    val seen = spark.read.parquet(live)
-      .join(broadcast(bHashes), "wh").select(col("wh"))
-    bHashes.join(seen, Seq("wh"), "left_anti")
-      .repartitionByRange(spark.sparkContext.defaultParallelism, col("wh"))
-      .sortWithinPartitions(col("wh"))
-      // into the CURRENT generation (single-writer contract) —
-      // committer v1 so a crash leaves the slice row-identical
-      .write.options(GenDir.V1AppendCommitter)
-      .mode("append").parquet(live)
+    IndexStore.appendBatch(spark, dir, Span, batchId, streamId) {
+      val bHashes = batchWindowHashes(docs, idCol, textCol, readSpanMeta(spark, dir))
+        .select(col("wh")).distinct().localCheckpoint(true)
+      val seen = IndexStore.read(spark, dir, Windows)
+        .join(broadcast(bHashes), "wh").select(col("wh"))
+      bHashes.join(seen, Seq("wh"), "left_anti")
+    }(_ => (0L, 0L))
   }
 
-  // ---- index compaction (the operational close of the append loop) ----
+  // ---- index compaction and recover (the close of the append loop) ----
 
-  /** Replace `path` with the parquet rendering of `rewrite` as the next
-    * [[GenDir]] generation — crash-safe (every crash point heals on the
-    * next compact/recover) AND concurrent with reads: standing queries
-    * keep resolving the previous generation until the commit marker
-    * lands. Same discipline as [[Retrieval.bm25IndexCompact]]. */
-  private def genRewrite(spark: org.apache.spark.sql.SparkSession,
-                         path: String)(rewrite: DataFrame =>
-                         org.apache.spark.sql.DataFrameWriter[
-                           org.apache.spark.sql.Row]): Unit =
-    GenDir.rewriteGen(spark, path) { (live, next) =>
-      rewrite(spark.read.parquet(live)).parquet(next)
-    }
-
-  /** Compact a persisted LSH dedup index after a run of appends: every
-    * [[lshIndexAppend]] lays new files into each touched `id_pt`
-    * directory and appends a band-slice generation, so batch matching
-    * opens ~N file generations per bucket. Rewrites both slices back to
-    * the fresh-build layout (shingles bucket-keyed + id-sorted, bands
-    * one parallelism-wide set); `meta` is untouched, answers unchanged. */
+  /** Fold a persisted LSH dedup index's appended batches into the next
+    * shingle and band generations; matches are unchanged. */
   def lshIndexCompact(spark: org.apache.spark.sql.SparkSession,
-                      dir: String): Unit = {
-    val parts = spark.sparkContext.defaultParallelism
-    // the two slices rewrite within their own GenDirs — independent
-    // directories, overlapped jobs (guide §2.6)
-    Par.run(Seq(
-      () => genRewrite(spark, s"$dir/shingles")(df =>
-        df.repartition(parts, col("id_pt"))
-          .sortWithinPartitions(col("id"))
-          .write.mode("overwrite").partitionBy("id_pt")),
-      () => genRewrite(spark, s"$dir/bands")(df =>
-        df.repartition(parts).write.mode("overwrite"))))
-  }
+                      dir: String): Unit =
+    IndexStore.compact(spark, dir, Lsh)
 
-  /** Heal any interrupted compaction on a persisted LSH dedup
-    * index and report whether `dir` holds a complete index (meta,
-    * shingles AND bands); same contract as
-    * [[Retrieval.bm25IndexRecover]]. */
+  /** Heal crash leftovers and report whether `dir` holds a complete
+    * LSH dedup index. */
   def lshIndexRecover(spark: org.apache.spark.sql.SparkSession,
-                      dir: String): Boolean = {
-    GenDir.recover(spark, s"$dir/shingles")
-    GenDir.recover(spark, s"$dir/bands")
-    // completeness demands FINISHED writes ([[GenDir.completeDir]] /
-    // existsLiveComplete): a build that died mid-slice leaves torn
-    // directories bare fs.exists would bless. Meta here is build-time
-    // only, so torn meta always means "rebuild", never data loss.
-    GenDir.completeDir(spark, s"$dir/meta") &&
-      GenDir.existsLiveComplete(spark, s"$dir/shingles") &&
-      GenDir.existsLiveComplete(spark, s"$dir/bands")
-  }
+                      dir: String): Boolean =
+    IndexStore.recover(spark, dir, Lsh)
 
-  /** [[lshIndexRecover]] for the span index's single window slice. */
+  /** [[lshIndexRecover]] for the span index. */
   def spanIndexRecover(spark: org.apache.spark.sql.SparkSession,
-                       dir: String): Boolean = {
-    GenDir.recover(spark, s"$dir/windows")
-    GenDir.completeDir(spark, s"$dir/meta") &&
-      GenDir.existsLiveComplete(spark, s"$dir/windows")
-  }
+                       dir: String): Boolean =
+    IndexStore.recover(spark, dir, Span)
 
-  /** Compact a persisted span index's window slice back to one
-    * range-partitioned sorted file set (see [[lshIndexCompact]]); the
-    * slice stays distinct by construction (appends admit only novel
-    * hashes), so this is purely a layout rewrite. */
+  /** Fold a persisted span index's appended batches into one
+    * range-partitioned sorted generation; the slice stays distinct by
+    * construction (batches admit only novel hashes). */
   def spanIndexCompact(spark: org.apache.spark.sql.SparkSession,
                        dir: String): Unit =
-    genRewrite(spark, s"$dir/windows")(df =>
-      df.repartitionByRange(spark.sparkContext.defaultParallelism, col("wh"))
-        .sortWithinPartitions(col("wh"))
-        .write.mode("overwrite"))
+    IndexStore.compact(spark, dir, Span)
 
   /** SimHash near-dup pairs: hamming(sig_a, sig_b) <= maxDist.
     * Candidate generation: split the 64-bit signature into

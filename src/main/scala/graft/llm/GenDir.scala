@@ -5,9 +5,8 @@ import org.apache.spark.sql.SparkSession
 
 /** Generation-directory protocol: crash-safe index compaction whose
   * rewrites are CONCURRENT WITH READS (no rename-aside window, so no
-  * read quiesce). Every persisted index family (BM25 postings/stats,
-  * phrase positions/stats, LM count slices, LSH shingles/bands, span
-  * windows, IVF cells, IVFADC codes) compacts through this protocol.
+  * read quiesce). Every slice of every persisted index family compacts
+  * through this protocol, called only by [[IndexStore]].
   *
   * Layout for an artifact base path `P` (e.g. `dir/postings`):
   *
@@ -33,10 +32,8 @@ import org.apache.spark.sql.SparkSession
   * ever leaves the resolvable state incomplete — and unlike the rename
   * protocol there is no moment when NO live directory exists.
   *
-  * Writer contract: ONE writer at a time —
-  * appends land in the current generation, so an append racing a
-  * compaction could write rows into a generation about to be
-  * superseded. Reads are what this protocol makes concurrent.
+  * Writer contract: ONE writer at a time. Reads are what this protocol
+  * makes concurrent.
   *
   * FILESYSTEM REQUIREMENT: commit atomicity rests on single-file
   * `create` being all-or-nothing and instantly visible — the contract
@@ -62,9 +59,10 @@ private[graft] object GenDir {
     * leave a torn append that [[existsLiveComplete]]/readers bless as
     * complete. Under v1 every new row stays in `_temporary` until the
     * single job commit, so a crashed append leaves the directory
-    * row-identical to its pre-append state — the crash contract the
-    * append paths document. Apply with
-    * `.options(GenDir.V1AppendCommitter)` on every in-place append. */
+    * row-identical to its pre-append state. No index writes in place
+    * ([[IndexStore]] appends are marker-committed increments); the
+    * pipeline's append sinks apply it with
+    * `.options(GenDir.V1AppendCommitter)`. */
   val V1AppendCommitter: Map[String, String] =
     Map("mapreduce.fileoutputcommitter.algorithm.version" -> "1")
 
@@ -154,64 +152,17 @@ private[graft] object GenDir {
     resolve(fs, p).toString
   }
 
-  /** True when a committed generation (or the plain gen-0 directory)
-    * of the artifact exists — the generation-aware `fs.exists`. */
-  def existsLive(spark: SparkSession, path: String): Boolean = {
-    val (fs, p) = fsOf(spark, path)
-    fs.exists(resolve(fs, p))
-  }
-
-  /** [[existsLive]] that additionally demands JOB-LEVEL completeness of
-    * a plain (generation-0) directory via Spark's own `_SUCCESS`
-    * marker. A build that crashed mid-write leaves the directory in
-    * existence (with `_temporary` debris but no `_SUCCESS`), and a
-    * recover that trusts bare existence would bless a TORN index —
-    * appends would land on a partial base and reads would either throw
-    * (no readable footer) or silently miss the lost rows. Committed
-    * generation directories prove completeness by their own marker
-    * (written only after the generation's job finished), so only the
-    * gen-0 layout needs the `_SUCCESS` check. Appends into a live
-    * gen-0 directory rewrite `_SUCCESS` at job commit, so the marker
-    * stays present across the append lifecycle. Every index family's
-    * recover routes through this for its completeness key. */
+  /** True when the artifact's live generation exists and its writing
+    * job FINISHED: a committed generation proves it by its own marker;
+    * the plain generation-0 directory by Spark's `_SUCCESS` (a build
+    * that crashed mid-write leaves the directory with `_temporary`
+    * debris and no `_SUCCESS`, which bare existence would bless). */
   def existsLiveComplete(spark: SparkSession, path: String): Boolean = {
     val (fs, p) = fsOf(spark, path)
     val live = resolve(fs, p)
     if (live != p) fs.exists(live) // a committed generation
     else fs.exists(p) && fs.exists(new Path(p, "_SUCCESS"))
   }
-
-  /** Completeness of a PLAIN directory artifact that is never
-    * generational (meta slices, centroids, codebooks): it exists AND
-    * its writing job finished (`_SUCCESS`). `fs.exists` alone blesses
-    * the torn remains of a crashed write. */
-  def completeDir(spark: SparkSession, path: String): Boolean = {
-    val (fs, p) = fsOf(spark, path)
-    fs.exists(p) && fs.exists(new Path(p, "_SUCCESS"))
-  }
-
-  /** A directory that EXISTS but whose writing job never finished —
-    * the torn-write state [[completeDir]] rejects. */
-  def tornDir(spark: SparkSession, path: String): Boolean = {
-    val (fs, p) = fsOf(spark, path)
-    fs.exists(p) && !fs.exists(new Path(p, "_SUCCESS"))
-  }
-
-  /** [[recover]] by path string — index recover entry points call this
-    * per artifact before trusting existence. */
-  def recover(spark: SparkSession, path: String): Unit = {
-    val (fs, p) = fsOf(spark, path)
-    recover(fs, p)
-  }
-
-  /** Start each artifact over at generation 0 — fresh builds call this
-    * before their plain-directory overwrite so readers resolve what the
-    * build writes, not a leftover higher generation. */
-  def resetAll(spark: SparkSession, paths: String*): Unit =
-    paths.foreach { path =>
-      val (fs, p) = fsOf(spark, path)
-      reset(fs, p)
-    }
 
   /** Crash-safe concurrent-read rewrite of one artifact: heal stale
     * attempts, hand `write` the live generation's path and the next

@@ -11,8 +11,8 @@ import org.apache.spark.sql.SparkSession
   * REDELIVERED after restart, and an unkeyed additive append would apply
   * its counts twice. This object closes that window with batchId-keyed
   * staging plus an atomic commit, and it is the ONLY way a batch joins
-  * a built BM25, phrase or LM index (the `*AppendBatch*` calls, driven
-  * by [[graft.streaming.IndexIngest]] or called directly):
+  * a built index ([[IndexStore.appendBatch]], driven by
+  * [[graft.streaming.IndexIngest]] or called directly):
   *
   *  - a batch's count deltas land under `slice.inc/batch-<id>[_<stream>]/`
   *    (full-directory overwrite, so REDELIVERY IS IDEMPOTENT — the
@@ -384,47 +384,6 @@ private[graft] object IncLog {
         .foldLeft(rd(live))((df, p) => df.unionByName(rd(p)))
       write(rows, next)
       writeSliceFoldedThrough(spark, next, mGen)
-    }
-  }
-
-  /** Multi-slice [[foldSliceGen]]: the rewriteGen prologue (heal,
-    * resolve live, pick the next generation) runs per slice, but the
-    * caller receives EVERY slice's foldable rows (live generation ∪
-    * committed increments in that slice's window) and every next-gen
-    * target at once, so it can land all the rewrites as ONE Spark job
-    * (the staged (ord, pt)-partitioned write + renames of the LM
-    * family). Watermarks, commit markers and GC then run per slice,
-    * exactly as k foldSliceGen calls would — readers racing the fold
-    * see each slice flip atomically on its own marker, and a crash
-    * before any marker leaves only uncommitted next-gen dirs recover
-    * deletes. */
-  def foldSlicesGen(spark: SparkSession, modelDir: String,
-                    bases: Seq[String], mGen: Marks, v: IncView,
-                    schema: Option[String] = None)(
-      write: (Seq[org.apache.spark.sql.DataFrame], Seq[String]) => Unit): Unit = {
-    def rd(p: String) =
-      schema.fold(spark.read)(s => spark.read.schema(s)).parquet(p)
-    val prepped = bases.map { base =>
-      val (fs, p) = fsOf(spark, base)
-      GenDir.recover(fs, p)
-      val live = GenDir.resolve(fs, p).toString
-      val next = GenDir.nextGenPath(fs, p).toString
-      val sliceW = sliceFoldedThrough(spark, live)
-      val rows = v.commits
-        .filter(cm => cm.id > markOf(sliceW, cm.stream) &&
-          cm.id <= markOf(mGen, cm.stream))
-        .map(cm => incPath(base, cm.id, cm.stream))
-        .filter(p2 => fs.exists(new Path(p2)))
-        .filter(p2 => schema.isDefined || hasDataFiles(spark, p2))
-        .foldLeft(rd(live))((df, p2) => df.unionByName(rd(p2)))
-      (base, rows, next)
-    }
-    write(prepped.map(_._2), prepped.map(_._3))
-    prepped.foreach { case (base, _, next) =>
-      val (fs, p) = fsOf(spark, base)
-      writeSliceFoldedThrough(spark, next, mGen)
-      GenDir.commitGen(fs, new Path(next))
-      GenDir.gc(fs, p)
     }
   }
 

@@ -60,12 +60,6 @@ import org.apache.spark.sql.functions._
   */
 object Lm {
 
-  /** Same catalog-pruning bucket space as [[Retrieval.TermBuckets]]. */
-  val TermBuckets = 256
-
-  private def bucket(c: Column): Column =
-    pmod(xxhash64(c), lit(TermBuckets)).cast("int")
-
   /** PER-LANGUAGE [[lmScoreK]] at k = 2 — CCNet's actual configuration
     * (Wenzek et al. §4.3 score each language against ITS OWN reference
     * model): the order-k counts, totals and scoring joins all carry the
@@ -103,8 +97,8 @@ object Lm {
   }
 
   /** Persisted PER-LANGUAGE models: one model directory per language
-    * (`dir/lang=<l>/` — CCNet's shard layout), each a full [[GenDir]]
-    * lifecycle (build/append/compact/score work per shard unchanged).
+    * (`dir/lang=<l>/` — CCNet's shard layout), each a full
+    * [[IndexStore]] lifecycle (build/append/compact/score work per shard unchanged).
     * The language list is a bounded driver collect (ISO codes, not
     * corpus rows); the per-language builds run as successive jobs,
     * which is exactly how CCNet materializes its per-lang KenLM shards.
@@ -220,7 +214,7 @@ object Lm {
     * exact [[kGramCounts]] groups), one shared groupBy aggregates them
     * all. The result is (ord, gram, c) — model-sized, orders of
     * magnitude smaller than the corpus — and the index writers persist
-    * it so the k slice writes, the unigram total and the meta totals
+    * it so the slice write, the unigram total and the meta totals
     * re-read the aggregate instead of re-running the tokenize+explode
     * lineage once per slice (the pre-r15 build paid k+1 full corpus
     * passes per build/append; guide §1.2/§2.4: remove redundant
@@ -293,12 +287,10 @@ object Lm {
       if (keys.isEmpty) joined.crossJoin(broadcast(total))
       else joined.join(broadcast(total), keys, "left")
     val factSql = backoffFactors(k).mkString("array(", "L, ", "L)")
-    // the unigram count is clamped to the total: a state where unigram
-    // counts outran the total (CommitterCrashSpec builds such a crash
-    // prefix by hand) has c1 > t, which would push a contribution past
-    // 1e6 ppm (in every committed state c1 <= t, so this never changes
-    // a committed score). `if`, not least(): least() skips nulls and
-    // would turn an unseen token's null c1 into t
+    // the unigram count is clamped to the total: c1 > t would push a
+    // contribution past 1e6 ppm (in every committed state c1 <= t, so
+    // this never changes a committed score). `if`, not least(): least()
+    // skips nulls and would turn an unseen token's null c1 into t
     var contrib: Column = coalesce(expr(
       s"(if(c1_term > t, t, c1_term) * element_at($factSql, lvl + 1)) div t"),
       lit(0L))
@@ -333,242 +325,108 @@ object Lm {
     scoreWithK(docs, textCol, idCol, cnts, total, k)
   }
 
-  private def gramSlices(dir: String, k: Int): Seq[String] =
-    (1 to k).map(n => s"$dir/grams_$n")
+  /** Lay (ord, gram, c) counts down partitioned by (ord, pt), pt = the
+    * bucket of the gram's FIRST token: every token of a gram a scored
+    * batch needs is a batch token, so the batch's term buckets prune
+    * every order at the catalog level (see [[lmScoreIndexK]]). One job
+    * writes every order; the (ord, pt, gram) sort satisfies the
+    * partitioned writer's required ordering, so no extra sort is
+    * planned and files stay gram-sorted. */
+  private def writeGrams(all: DataFrame, path: String): Unit =
+    all.select(col("ord"), col("gram"), col("c"),
+        IndexStore.bucket(substring_index(col("gram"), " ", 1)).as("pt"))
+      .repartition(col("ord"), col("pt"))
+      .sortWithinPartitions(col("ord"), col("pt"), col("gram"))
+      .write.mode("overwrite").partitionBy("ord", "pt").parquet(path)
 
-  /** ONE corpus pass for all k orders: the [[allGramCountsK]]
-    * aggregate, persisted (DISK_ONLY — the bm25BuildIndex lesson: never
-    * race execution memory at scale) so `write` (one staged slice-write
-    * job) and the unigram total both re-read the model-sized aggregate.
-    * Returns the total. */
-  private def writeCountsK(train: DataFrame, textCol: String, idCol: String,
-                           k: Int)(write: DataFrame => Unit): Long = {
-    val all = allGramCountsK(train, textCol, idCol, k)
-      .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
-    try { write(all); totalFromAll(all) } finally all.unpersist()
-  }
+  /** The `grams/` slice: counts of every order, folded by summing per
+    * (ord, gram); `minCount` > 1 prunes rare HIGHER-order grams on
+    * compaction (unigrams never — backoff mass and T depend on them),
+    * the Brants count cutoff. The explicit schema reads an empty
+    * increment (a batch with no tokens) as zero rows. */
+  private def gramsSlice(minCount: Long) = IndexStore.Slice("grams", writeGrams,
+    fold = Some(_.groupBy(col("ord"), col("gram")).agg(sum(col("c")).as("c"))
+      .filter(col("ord") === 1 || col("c") >= minCount)),
+    schema = Some("gram STRING, c BIGINT, ord INT, pt INT"))
 
-  private def writeMetaK(spark: SparkSession, dir: String, t: Long,
-                         nDocs: Long, k: Int): Unit = {
-    import spark.implicits._
-    Seq((t, nDocs, k.toLong)).toDF("t", "n_docs", "ord")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/meta")
-  }
+  /** The order-k model: the `grams/` slice and meta (t, n_docs, ord). */
+  private def lmModel(minCount: Long) =
+    IndexStore.Layout(gramsSlice(minCount), totals = true)
 
-  /** Fresh build: reset the generation history AND increment log, write
-    * every slice from one staged job, run `beforeMeta`, then meta. */
+  private[graft] val LmModel = lmModel(1L)
+
   private def buildK(train: DataFrame, textCol: String, idCol: String,
-                     dir: String, k: Int)(beforeMeta: => Unit): Unit = {
+                     dir: String, k: Int, bootstrap: Option[(Long, String)]): Unit = {
     requireOrder(k)
     val spark = train.sparkSession
-    GenDir.resetAll(spark, gramSlices(dir, k): _*)
-    IncLog.reset(spark, dir, gramSlices(dir, k))
-    val t = writeCountsK(train, textCol, idCol, k)(
-      writeGramSlicesStaged(_, k, dir, n => s"$dir/grams_$n"))
-    beforeMeta
-    writeMetaK(spark, dir, t, train.count(), k)
+    import spark.implicits._
+    IndexStore.build(dir, LmModel, allGramCountsK(train, textCol, idCol, k), bootstrap)(
+      all => Seq((totalFromAll(all), train.count(), k.toLong)).toDF("t", "n_docs", "ord"))
   }
 
-  /** Persist an order-k model: one `grams_n/` slice per order (gram,
-    * c), partitioned by the hash bucket of the gram's FIRST token —
-    * every token of a gram a scored batch needs is a batch token, so
-    * the batch's term buckets prune every slice at the catalog level
-    * (see [[lmScoreIndexK]]). Meta (t, n_docs, ord) lands LAST as the
-    * commit marker. */
+  /** Persist an order-k model (see [[writeGrams]]); more training
+    * documents join through [[lmIndexAppendBatchK]]. */
   def lmBuildIndexK(train: DataFrame, textCol: String, idCol: String,
                     dir: String, k: Int): Unit =
-    buildK(train, textCol, idCol, dir, k)(())
-
-  // ---- exactly-once batch ingest (the [[IncLog]] protocol) --------------
+    buildK(train, textCol, idCol, dir, k, None)
 
   /** Bootstrap an order-k model from a stream's FIRST batch, exactly
-    * once under redelivery: the batch's commit marker lands BEFORE
-    * meta, so every crash point replays safely — dying before the
-    * marker leaves no meta ([[lmIndexRecoverK]] false → redelivery
-    * rebuilds, a full overwrite), dying between marker and meta
-    * likewise rebuilds, and once meta lands the marker makes
-    * [[lmIndexAppendBatchK]] skip the redelivered batch. Dying DURING
-    * the meta write itself leaves torn meta beside this sole marker,
-    * which recover reads as "no model" ([[IncLog.bootstrapOnly]]), so
-    * redelivery rebuilds. The marker carries ZERO deltas — the build's
-    * totals are already in meta. */
+    * once under redelivery ([[IndexStore.build]] with its bootstrap
+    * marker). */
   def lmBuildIndexBatchK(train: DataFrame, textCol: String, idCol: String,
                          dir: String, k: Int, batchId: Long,
                          streamId: String = ""): Unit =
-    buildK(train, textCol, idCol, dir, k)(
-      IncLog.commitBootstrap(train.sparkSession, dir, batchId, streamId))
+    buildK(train, textCol, idCol, dir, k, Some((batchId, streamId)))
 
   /** Append one batch to a built model EXACTLY ONCE — the one way
-    * training documents join it: counts land as increment
-    * directories (`grams_n.inc/batch-<id>` — overwrite, so redelivery
-    * is idempotent) made visible by the atomic batch commit marker,
-    * which also carries the batch's token/doc deltas — meta is never
-    * rewritten per batch, so there is no read-modify-write to double.
-    * Returns false (and does nothing) when the batch was already
-    * applied — the redelivery skip. */
+    * training documents join it; its marker carries the batch's token
+    * and document deltas, so meta is never rewritten. Returns false
+    * (and does nothing) on the redelivery skip. */
   def lmIndexAppendBatchK(train: DataFrame, textCol: String, idCol: String,
                           dir: String, batchId: Long,
                           streamId: String = ""): Boolean = {
     val spark = train.sparkSession
-    if (IncLog.isApplied(spark, dir, batchId, streamId)) return false
-    val ord = readMetaK(spark, dir)._2
-    // one staged slice-write job into the batch's increment dirs
-    // (idempotent: the stage rename deletes a redelivered batch's
-    // leftovers first; nothing is visible until the commit marker below)
-    val t = writeCountsK(train, textCol, idCol, ord)(
-      writeGramSlicesStaged(_, ord, dir,
-        n => IncLog.incPath(s"$dir/grams_$n", batchId, streamId)))
-    IncLog.commitBatch(spark, dir, batchId, t, train.count(), streamId)
-    true
+    IndexStore.appendBatch(spark, dir, LmModel, batchId, streamId)(
+      allGramCountsK(train, textCol, idCol, readMetaK(spark, dir)._2))(
+      all => (totalFromAll(all), train.count()))
   }
 
-  /** Effective totals (t, n_docs) of an order-k model: base meta plus
-    * the folded summary plus every committed-but-unfolded batch delta.
-    * Exact at every crash point of the ingest/compact loop. */
+  /** Effective totals (t, n_docs) of an order-k model: meta plus every
+    * applied batch's deltas. */
   def lmIndexTotalsK(spark: SparkSession, dir: String): (Long, Long) = {
-    val meta = spark.read.parquet(s"$dir/meta").head()
-    val (tD, nD) = IncLog.view(spark, dir).deltas
+    val meta = IndexStore.meta(spark, dir).head()
+    val (tD, nD) = IndexStore.view(spark, dir).deltas
     (meta.getLong(0) + tD, meta.getLong(1) + nD)
   }
 
   private def readMetaK(spark: SparkSession, dir: String): (Long, Int) = {
-    val meta = spark.read.parquet(s"$dir/meta").head()
+    val meta = IndexStore.meta(spark, dir).head()
     (meta.getLong(0), meta.getLong(2).toInt)
   }
 
-  /** Explicit slice schema so an EMPTY slice or increment (a batch
-    * with no order-n grams) reads as zero rows instead of failing
-    * inference. */
-  private val GramSchema = Some("gram STRING, c BIGINT, pt INT")
-
-  /** Write EVERY order's slice from one persisted [[allGramCountsK]]
-    * frame as ONE Spark job: a single (ord, pt)-partitioned write into
-    * a dot-prefixed staging dir beside the model, then a per-order
-    * directory RENAME into each slice destination (same filesystem —
-    * metadata ops) plus the `_SUCCESS` marker the gen-0 completeness
-    * check keys on. Replaces k overlapped write jobs — k scheduling
-    * rounds and k partitioned-write commits — with one job and k
-    * renames (guide §1.2: fewer jobs/passes; §6: one commit). The
-    * explicit (ord, pt, gram) sort satisfies the dynamic-partition
-    * writer's required ordering, so no extra sort is planned and files
-    * stay gram-sorted exactly like the per-slice writes. Crash points:
-    * dying inside the staged write leaves only the dot-dir (invisible
-    * to readers and to every protocol listing); dying mid-renames
-    * leaves some destinations complete and others absent with the
-    * caller's own commit marker (meta / IncLog batch marker) still
-    * unwritten — the torn build/increment state recover already treats
-    * as absent. Callers own the destinations (fresh build after
-    * resetAll, a batch's own increment dirs, uncommitted next
-    * generations). */
-  private def writeGramSlicesStaged(all: DataFrame, k: Int,
-                                    stagingBase: String,
-                                    destFor: Int => String): Unit = {
-    val staging = new Path(s"$stagingBase/.stage-${java.util.UUID.randomUUID()}")
-    val fs = staging.getFileSystem(
-      all.sparkSession.sparkContext.hadoopConfiguration)
-    // the staging dir is deleted whatever happens (a killed driver
-    // leaves it for [[lmIndexRecoverK]])
-    try {
-      all.withColumn("pt", bucket(substring_index(col("gram"), " ", 1)))
-        .repartition(col("ord"), col("pt"))
-        .sortWithinPartitions(col("ord"), col("pt"), col("gram"))
-        .write.mode("overwrite").partitionBy("ord", "pt").parquet(staging.toString)
-      (1 to k).foreach { n =>
-        val src = new Path(staging, s"ord=$n")
-        val dst = new Path(destFor(n))
-        fs.delete(dst, true)
-        Option(dst.getParent).foreach(fs.mkdirs)
-        if (fs.exists(src))
-          require(fs.rename(src, dst), s"rename $src -> $dst failed")
-        else fs.mkdirs(dst) // an order with zero grams: empty slice
-        fs.create(new Path(dst, "_SUCCESS"), true).close()
-      }
-    } finally fs.delete(staging, true)
-  }
-
-  /** Fold the committed batch increments of every slice into its live
-    * generation, one row per gram. Each slice's rewrite lands as the next
-    * [[GenDir]] generation carrying its fold watermark, so a standing
-    * scorer runs CONCURRENTLY with the compaction and flips atomically
-    * per slice (each generation is complete, and skips exactly the
-    * increments it folded; a scorer straddling the flip still folds a
-    * complete count set). Increments and markers the PREVIOUS summary
-    * already covered are garbage-collected — one compaction late, the
-    * GenDir retention window, so readers mid-scan on the previous
-    * generation keep their increments. `minCount` > 1 prunes rare
-    * HIGHER-order grams (orders 2..k; unigrams never — backoff mass
-    * and T depend on them), the Brants count cutoff. */
+  /** Fold the appended batches into the next generation of the model,
+    * one row per (ord, gram), concurrently with scorers (see
+    * [[gramsSlice]] for `minCount`). */
   def lmIndexCompactK(spark: SparkSession, dir: String,
-                      minCount: Long = 1L): Unit = {
-    val ord = readMetaK(spark, dir)._2
-    val v = IncLog.view(spark, dir)
-    val (w0, w, wGen) = IncLog.foldBounds(spark, dir, s"$dir/grams_1", v)
-    // ONE fold job for every slice (was k overlapped jobs): union each
-    // slice's foldable rows under its ord tag, one shared groupBy, one
-    // staged (ord, pt)-partitioned write renamed into each slice's
-    // next generation; per-slice watermarks/markers/GC unchanged, so
-    // readers still flip atomically per slice (pt is a pure function
-    // of the gram, so recomputing it in the staged write reproduces
-    // the stored bucket exactly)
-    IncLog.foldSlicesGen(spark, dir, gramSlices(dir, ord), wGen, v,
-      GramSchema) { (rowsPerSlice, nextPaths) =>
-      val all = rowsPerSlice.zipWithIndex.map { case (df, i) =>
-        df.select(lit(i + 1).as("ord"), col("gram"), col("c"))
-      }.reduce(_ unionByName _)
-      val folded = all
-        .groupBy(col("ord"), col("gram")).agg(sum(col("c")).as("c"))
-        .filter(col("ord") === 1 || col("c") >= minCount)
-      writeGramSlicesStaged(folded, ord, dir, n => nextPaths(n - 1))
-    }
-    IncLog.finishFold(spark, dir, gramSlices(dir, ord), v, w0, w)
-  }
+                      minCount: Long = 1L): Unit =
+    IndexStore.compact(spark, dir, lmModel(minCount))
 
-  /** Heal interrupted compactions and report whether `dir` holds a
-    * complete order-k model (meta plus every grams_1..grams_ord
-    * slice). Also deletes the `.stage-*` dirs a killed staged write
-    * ([[writeGramSlicesStaged]]) left behind — model-sized, invisible to readers, and otherwise never
-    * collected. Run it from the single writer, never beside one. */
-  def lmIndexRecoverK(spark: SparkSession, dir: String): Boolean = {
-    val dirP = new Path(dir)
-    val fs = dirP.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    Option(fs.globStatus(new Path(dirP, ".stage-*"))).toSeq.flatten
-      .foreach(st => fs.delete(st.getPath, true))
-    // torn meta (a write that never finished) must not be READ — and
-    // over complete count slices past the bootstrap (appends never
-    // rewrite meta, so this is damage) a silent rebuild would discard
-    // every appended batch: fail loudly instead
-    if (GenDir.tornDir(spark, s"$dir/meta")) {
-      if (GenDir.existsLiveComplete(spark, s"$dir/grams_1") &&
-          // exactly-once bootstrap exception: marker-before-meta means
-          // a sole marker + nothing folded is the bootstrap's own meta
-          // crash — rebuild via redelivery instead of wedging the
-          // stream (see [[IncLog.bootstrapOnly]])
-          !IncLog.bootstrapOnly(spark, dir))
-        throw new IllegalStateException(
-          s"torn meta over complete count slices at $dir: rebuilding " +
-            "would discard appended batches; restore meta (t, n_docs, " +
-            "ord) or delete the model directory to rebuild from scratch")
-      return false // build crashed during its first meta write: rebuild
-    }
-    if (!GenDir.completeDir(spark, s"$dir/meta")) return false
-    val ord = spark.read.parquet(s"$dir/meta").head().getLong(2).toInt
-    (1 to ord).forall { n =>
-      GenDir.recover(spark, s"$dir/grams_$n")
-      GenDir.existsLiveComplete(spark, s"$dir/grams_$n")
-    }
-  }
+  /** Heal crash leftovers and report whether `dir` holds a complete
+    * order-k model. */
+  def lmIndexRecoverK(spark: SparkSession, dir: String): Boolean =
+    IndexStore.recover(spark, dir, LmModel)
 
   /** Score `docs` against a persisted order-k model — row-identical to
     * [[lmScoreK]] over the same training corpus. The batch's distinct
-    * terms drive catalog pruning on every slice (any gram the batch
+    * terms drive catalog pruning on every order (any gram the batch
     * needs starts with a batch token) and a broadcast first-token
     * semi-join drops non-batch grams at the scan; increments fold
-    * with sum; T is meta's total plus the committed increments'. */
+    * with sum; T is meta's total plus the applied batches'. */
   def lmScoreIndexK(docs: DataFrame, textCol: String, idCol: String,
                     dir: String): DataFrame = {
     val spark = docs.sparkSession
-    val v = IncLog.view(spark, dir) // ONE increment-log listing per call
-    val meta = spark.read.parquet(s"$dir/meta").head()
+    val v = IndexStore.view(spark, dir) // ONE increment-log listing per call
+    val meta = IndexStore.meta(spark, dir).head()
     val ord = meta.getLong(2).toInt
     val t = meta.getLong(0) + v.deltas._1
     import spark.implicits._
@@ -576,11 +434,12 @@ object Lm {
       .select(explode(graft.functions.TextFunctions.tokens(col(textCol))).as("w1"))
       .distinct()
       .localCheckpoint(true) // feeds the bucket collect and every semi-join
-    val hitBuckets = batchTerms.select(bucket(col("w1")).as("pt"))
+    val hitBuckets = batchTerms.select(IndexStore.bucket(col("w1")).as("pt"))
       .distinct().collect().map(_.getInt(0)).toSeq
+    val grams = IndexStore.read(spark, dir, LmModel.primary, v)
     val cnts = (1 to ord).map { n =>
-      n -> IncLog.readSlice(spark, dir, s"$dir/grams_$n", v, GramSchema)
-        .filter(col("pt").isInCollection(hitBuckets))
+      n -> grams
+        .filter(col("ord") === n && col("pt").isInCollection(hitBuckets))
         .withColumn("w1", substring_index(col("gram"), " ", 1))
         .join(broadcast(batchTerms), "w1")
         .groupBy(col("gram")).agg(sum(col("c")).as("c"))

@@ -107,33 +107,6 @@ object Retrieval {
 
   // ---- persisted inverted index (build once / query many) --------------
 
-  /** Postings directories are keyed by `pmod(xxhash64(term), TermBuckets)`
-    * — same catalog-pruning discipline as [[Dedup.IndexIdBuckets]]: a
-    * query's term set touches a bounded (<= 256) set of bucket
-    * directories however large the corpus vocabulary, so the per-query
-    * scan opens only those slices instead of the whole postings file
-    * set. */
-  val TermBuckets = 256
-
-  private def termBucket(t: Column): Column =
-    pmod(xxhash64(t), lit(TermBuckets)).cast("int")
-
-  /** Effective corpus totals (n docs, total token length) of a BM25
-    * index: base meta plus the folded summary plus every
-    * committed-but-unfolded batch delta — exact at every crash point
-    * of the exactly-once ingest/compact loop, and just the meta row
-    * for an index that took no appends. */
-  def bm25IndexTotals(spark: org.apache.spark.sql.SparkSession,
-                      dir: String): (Long, Long) =
-    totalsWith(spark, dir, IncLog.view(spark, dir))
-
-  private def totalsWith(spark: org.apache.spark.sql.SparkSession,
-                         dir: String, v: IncLog.IncView): (Long, Long) = {
-    val meta0 = spark.read.parquet(s"$dir/meta").head()
-    val (lenD, nD) = v.deltas
-    (meta0.getLong(0) + nD, meta0.getLong(1) + lenD)
-  }
-
   /** (doc_id, term, tf, dl) for a batch: tf per posting plus the
     * document length riding each row — dl = Σ tf over the doc's terms,
     * denormalized onto the posting so length-normalized scoring
@@ -157,39 +130,30 @@ object Retrieval {
     }
 
   /** Lay postings or positions down under `path` in their term
-    * buckets: co-locate each bucket's rows before the partitioned write
-    * (the lshBuildIndex small-files discipline), then sort by term so
-    * each file's row groups carry tight term ranges. */
+    * buckets ([[IndexStore.bucket]]): co-locate each bucket's rows
+    * before the partitioned write, then sort by term so each file's row
+    * groups carry tight term ranges. A query's term set touches a
+    * bounded set of bucket directories however large the vocabulary. */
   private def writeBucketed(rows: DataFrame, path: String): Unit =
     rows
-      .withColumn("term_pt", termBucket(col("term")))
+      .withColumn("term_pt", IndexStore.bucket(col("term")))
       .repartition(rows.sparkSession.sparkContext.defaultParallelism,
         col("term_pt"))
       .sortWithinPartitions(col("term"))
       .write.mode("overwrite").partitionBy("term_pt").parquet(path)
 
-  /** Per-term statistics slice: (term, df, max_tf) of one build, batch
-    * increment or compacted generation, bucketed like the postings.
-    * Searches aggregate them (sum df / max max_tf — exact because
-    * appends carry only new doc ids), so appends need no
-    * read-modify-write. This is what lets a search DECIDE about a term
-    * — e.g. the [[bm25SearchIndex]] df/N hot-term cap, or a max-score
-    * bound via max_tf — WITHOUT reading a single posting of it: the
-    * stats row is a few bytes where a stopword's postings list is
-    * near-corpus-sized.
-    *
-    * COVERAGE INVARIANT: the stats slice covers EVERY postings
-    * generation and increment. Builds create it whole, each batch
-    * append writes its stats increment beside its postings increment
-    * under the same commit marker, and compact regenerates it from the
-    * postings — so a search may trust it (a partial slice would
-    * under-count df/max_tf and silently invalidate the max-score upper
-    * bounds). */
+  /** Per-term statistics slice (term, df, max_tf, sum_tf), derived from
+    * the postings and bucketed like them. Searches aggregate it (sum df
+    * / max max_tf — exact because batches carry only new doc ids), which
+    * lets a search DECIDE about a term — the [[bm25SearchIndex]] df/N
+    * hot-term cap, the max-score bound via max_tf — WITHOUT reading a
+    * posting of it. It covers every postings generation and increment,
+    * so a search may trust it. */
   private def writeStats(post: DataFrame, statsPath: String): Unit =
     post.groupBy(col("term"))
       .agg(count(lit(1)).as("df"), max(col("tf")).as("max_tf"),
         sum(col("tf")).as("sum_tf"))
-      .withColumn("term_pt", termBucket(col("term")))
+      .withColumn("term_pt", IndexStore.bucket(col("term")))
       // AQE-sized repartition (no fixed N): the stats slice is
       // vocabulary-sized — often a single small partition at batch
       // granularity, where a fixed 32-way exchange just mints 32×256
@@ -198,183 +162,75 @@ object Retrieval {
       .sortWithinPartitions(col("term"))
       .write.mode("overwrite").partitionBy("term_pt").parquet(statsPath)
 
-  /** Build a persisted BM25 inverted index under `dir` — the
-    * build-once/query-many form of [[bm25TopK]], which recomputes corpus
-    * term statistics on every call (a full-corpus pass per query batch —
-    * exactly what an index retires at 100 TB). Mirrors the layout
-    * discipline of [[Dedup.lshBuildIndex]] / [[Similarity.ivfBuildIndex]]:
-    *
-    *  - `meta`: one row (n, total_len) — the corpus document count
-    *    driving idf and the token total behind avgdl;
-    *  - `postings/` partitioned by `term_pt` (see [[TermBuckets]]):
-    *    (term, doc_id, tf, dl), sorted by term within files so row-group
-    *    stats prune within a bucket too;
-    *  - `stats/` bucketed the same way (see [[writeStats]]).
-    *
-    * Document frequency is NOT persisted per posting: a search derives
-    * exact df for its query terms from the pruned postings slices it
-    * reads anyway (the bucket holds every posting of each term it owns),
-    * which makes appends trivially correct — no incremental df merge to
-    * drift. More documents join through [[bm25IndexAppendBatch]]. */
-  def bm25BuildIndex(docs: DataFrame, textCol: String, idCol: String,
-                     dir: String): Unit =
-    buildBm25(docs, textCol, idCol, dir)(())
+  private val Postings = IndexStore.Slice("postings", writeBucketed)
+  private val Bm25Stats = IndexStore.Slice("stats", writeStats, fold = None)
 
-  /** The one build body of [[bm25BuildIndex]] and
-    * [[bm25BuildIndexBatch]]: reset the generation history AND
-    * increment log, write postings and stats, run `beforeMeta`, then
-    * meta. */
-  private def buildBm25(docs: DataFrame, textCol: String, idCol: String,
-                        dir: String)(beforeMeta: => Unit): Unit = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    // a fresh build starts the generation history AND increment log
-    // over: drop every postings/stats generation so reads resolve the
-    // plain (gen-0) layout the overwrite below creates
-    GenDir.resetAll(spark, s"$dir/postings", s"$dir/stats")
-    IncLog.reset(spark, dir, Seq(s"$dir/postings", s"$dir/stats"))
-    // ONE streamed pass over the corpus postings into a DISK_ONLY
-    // persist — disk-only never races the partial aggregation for
-    // unified memory, where MEMORY_AND_DISK caching observed
-    // AGGREGATE_OUT_OF_MEMORY at 60M postings on an 8g heap; postings
-    // and stats then write OVERLAPPED from the cache (order-free: meta
-    // below is the commit marker, so everything before it is invisible
-    // to recover either way) and total_len aggregates the cache instead
-    // of re-reading the written stats slice.
-    val post = postingsWithLen(docs, textCol, idCol)
-      .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
-    Par.run(Seq(() => writeBucketed(post, s"$dir/postings"),
-      () => writeStats(post, s"$dir/stats")))
-    val totalLen = totalTf(post)
-    post.unpersist()
-    beforeMeta
-    // meta is the COMMIT MARKER and therefore lands LAST: a crash
-    // mid-build leaves postings without meta, which the ingest
-    // bootstrap treats as "no index" and re-builds — the reverse order
-    // would leave meta without postings and invite appends onto a
-    // missing corpus
-    Seq((docs.count(), totalLen)).toDF("n", "total_len")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/meta")
+  /** The BM25 index: `postings/` (term, doc_id, tf, dl) bucketed by term
+    * and sorted by term within files, the derived `stats/` slice, and
+    * meta (n, total_len) — the document count driving idf and the token
+    * total behind avgdl. Document frequency is NOT persisted per
+    * posting: a search derives exact df for its query terms from the
+    * pruned postings it reads anyway (a bucket holds every posting of
+    * the terms it owns), so a batch needs no df merge. */
+  private val Bm25 = IndexStore.Layout(Postings, Seq(Bm25Stats), totals = true)
+
+  /** Effective corpus totals (n docs, total token length) of a BM25
+    * index: meta plus every applied batch's deltas. */
+  def bm25IndexTotals(spark: org.apache.spark.sql.SparkSession,
+                      dir: String): (Long, Long) =
+    totalsWith(spark, dir, IndexStore.view(spark, dir))
+
+  private def totalsWith(spark: org.apache.spark.sql.SparkSession,
+                         dir: String, v: IndexStore.View): (Long, Long) = {
+    val meta0 = IndexStore.meta(spark, dir).head()
+    val (lenD, nD) = v.deltas
+    (meta0.getLong(0) + nD, meta0.getLong(1) + lenD)
   }
 
-  // ---- exactly-once batch append (the [[IncLog]] protocol) -------------
+  /** Build a persisted BM25 inverted index under `dir` — the
+    * build-once/query-many form of [[bm25TopK]], which recomputes corpus
+    * term statistics on every call. More documents join through
+    * [[bm25IndexAppendBatch]]. */
+  def bm25BuildIndex(docs: DataFrame, textCol: String, idCol: String,
+                     dir: String): Unit =
+    buildBm25(docs, textCol, idCol, dir, None)
+
+  private def buildBm25(docs: DataFrame, textCol: String, idCol: String,
+                        dir: String, bootstrap: Option[(Long, String)]): Unit = {
+    val spark = docs.sparkSession
+    import spark.implicits._
+    IndexStore.build(dir, Bm25, postingsWithLen(docs, textCol, idCol), bootstrap)(
+      post => Seq((docs.count(), totalTf(post))).toDF("n", "total_len"))
+  }
 
   /** Bootstrap from a stream's FIRST batch, exactly once under
-    * redelivery: the batch's commit marker lands BEFORE meta, so every
-    * crash point replays safely (no meta → recover false → redelivery
-    * rebuilds, a full overwrite; meta present → the marker makes
-    * [[bm25IndexAppendBatch]] skip the redelivered batch). A crash
-    * DURING the meta write leaves torn meta beside this sole marker,
-    * which recover reads as "no index" ([[IncLog.bootstrapOnly]]), so
-    * redelivery rebuilds. The marker carries ZERO deltas — the build's
-    * totals are already in meta. */
+    * redelivery ([[IndexStore.build]] with its bootstrap marker). */
   def bm25BuildIndexBatch(docs: DataFrame, textCol: String, idCol: String,
                           dir: String, batchId: Long,
                           streamId: String = ""): Unit =
-    buildBm25(docs, textCol, idCol, dir)(
-      IncLog.commitBootstrap(docs.sparkSession, dir, batchId, streamId))
+    buildBm25(docs, textCol, idCol, dir, Some((batchId, streamId)))
 
-  /** Append one batch to a built BM25 index EXACTLY ONCE: postings and
-    * stats land as increment directories — idempotent overwrite — made
-    * visible by the atomic batch commit marker, which also carries the
-    * batch's (total_len, n) deltas so meta never sees a
-    * read-modify-write. Returns false (and does nothing) when the batch
-    * was already applied — the redelivery skip. Searches fold committed
-    * increments with the live generations. Assumes batch doc ids are
-    * new, like every other index append. */
+  /** Append one batch to a built BM25 index EXACTLY ONCE; its marker
+    * carries the batch's (total_len, n) deltas. Returns false on the
+    * redelivery skip. Assumes batch doc ids are new. */
   def bm25IndexAppendBatch(docs: DataFrame, textCol: String, idCol: String,
                            dir: String, batchId: Long,
-                           streamId: String = ""): Boolean = {
-    val spark = docs.sparkSession
-    if (IncLog.isApplied(spark, dir, batchId, streamId)) return false
-    val post = postingsWithLen(docs, textCol, idCol)
-      .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
-    val batchLen = totalTf(post)
-    // both increments are INVISIBLE until the commit marker below lands
-    // (the IncLog contract), so they are order-free — overlapped jobs
-    // over the persisted postings
-    Par.run(Seq(
-      () => writeBucketed(post, IncLog.incPath(s"$dir/postings", batchId, streamId)),
-      () => writeStats(post, IncLog.incPath(s"$dir/stats", batchId, streamId))))
-    post.unpersist()
-    IncLog.commitBatch(spark, dir, batchId, batchLen, docs.count(), streamId)
-    true
-  }
+                           streamId: String = ""): Boolean =
+    IndexStore.appendBatch(docs.sparkSession, dir, Bm25, batchId, streamId)(
+      postingsWithLen(docs, textCol, idCol))(post => (totalTf(post), docs.count()))
 
-  /** Compact a persisted BM25 index's postings after a run of appends:
-    * each append lays its batch down as new files inside every touched
-    * term bucket, so a bucket's postings spread over ~N file generations
-    * and a search opens N times the files a fresh build would. The
-    * rewrite lands as the NEXT [[GenDir]] generation — readers keep
-    * resolving generation N until the commit marker of N+1 appears, so
-    * standing queries run concurrently with the compaction. Search
-    * results are unchanged; meta is untouched.
-    *
-    * Stats REGENERATE from the compacted postings instead of folding
-    * their own increments: one recount, exact whatever the index's
-    * history, in the build's shape. */
+  /** Fold the appended batches into the next postings generation and
+    * regenerate the stats from it; search results are unchanged. */
   def bm25IndexCompact(spark: org.apache.spark.sql.SparkSession,
-                       dir: String): Unit = {
-    val v = IncLog.view(spark, dir)
-    val (w0, w, wGen) = IncLog.foldBounds(spark, dir, s"$dir/postings", v)
-    IncLog.foldSliceGen(spark, dir, s"$dir/postings", wGen, v)(writeBucketed)
-    GenDir.rewriteGen(spark, s"$dir/stats") { (_, next) =>
-      // regenerated from the just-committed postings generation, which
-      // already contains every folded increment — so this generation's
-      // watermark skips the same increment set
-      writeStats(spark.read.parquet(GenDir.live(spark, s"$dir/postings")), next)
-      IncLog.writeSliceFoldedThrough(spark, next, wGen)
-    }
-    IncLog.finishFold(spark, dir, Seq(s"$dir/postings", s"$dir/stats"),
-      v, w0, w)
-  }
+                       dir: String): Unit =
+    IndexStore.compact(spark, dir, Bm25)
 
-  /** Heal any interrupted compaction and report whether `dir` holds a
-    * complete index (meta AND resolvable postings). Ingest bootstraps
-    * call this before choosing append over build — meta existence alone
-    * is not proof of postings. Heals [[GenDir]] uncommitted leftovers
-    * (an interrupted compaction). */
+  /** Heal crash leftovers and report whether `dir` holds a complete
+    * BM25 index ([[IndexStore.recover]]). */
   def bm25IndexRecover(spark: org.apache.spark.sql.SparkSession,
-                       dir: String): Boolean = {
-    GenDir.recover(spark, s"$dir/postings")
-    GenDir.recover(spark, s"$dir/stats")
-    // completeness demands FINISHED writes, not bare directories: a
-    // build that died mid-postings (or mid-meta) leaves torn debris
-    // that bare fs.exists would bless — appends onto a torn base lose
-    // the batch, reads of torn meta throw forever
-    val postingsOk = GenDir.existsLiveComplete(spark, s"$dir/postings")
-    if (GenDir.tornDir(spark, s"$dir/meta") && postingsOk) {
-      // ONE provably-safe torn-meta case: the exactly-once BOOTSTRAP
-      // ([[bm25BuildIndexBatch]]) commits its marker before meta, so a
-      // sole marker with nothing folded means the torn meta is the
-      // bootstrap's own crashed write — report "no index" and let
-      // redelivery rebuild (a full overwrite of that same first batch)
-      // instead of wedging the stream permanently
-      if (IncLog.bootstrapOnly(spark, dir)) return false
-      // any other torn meta over complete postings (appends never
-      // rewrite meta, so past the bootstrap this is damage) must not be
-      // rebuilt over: that would silently discard every appended batch,
-      // so fail LOUDLY (restore meta, or delete the index to rebuild)
-      throw new IllegalStateException(
-        s"torn meta over complete postings at $dir: rebuilding would " +
-          "discard appended batches; restore meta (n, total_len) or " +
-          "delete the index directory to rebuild from scratch")
-    }
-    GenDir.completeDir(spark, s"$dir/meta") && postingsOk
-  }
+                       dir: String): Boolean =
+    IndexStore.recover(spark, dir, Bm25)
 
-  /** Top-`k` documents per query against a persisted index (see
-    * [[bm25BuildIndex]]) — row-identical to [[bm25TopK]] over the same
-    * corpus (the llm_bm25_index oracle reuses llm_bm25_topk's DuckDB twin
-    * verbatim to pin that).
-    *
-    * Scale shape: the query term set drives everything — its distinct
-    * term buckets (a bounded <= [[TermBuckets]] collect) prune the
-    * postings scan at the catalog level, the broadcast term semi-join
-    * drops non-query postings at the scan, df aggregates over only those
-    * pruned rows (exact: a bucket owns every posting of its terms), and
-    * ranking is the same map-capped TopKPerKey. The index side never
-    * shuffles corpus-sized data. */
   /** Query terms surviving the df/N hot-term cap, decided ENTIRELY from
     * the persisted stats slice — no posting of a skipped term is ever
     * read (the point: a stopword-frequency term's postings list is
@@ -386,16 +242,14 @@ object Retrieval {
     * scoring). maxDfFrac = 1.0 disables the cap and touches no stats. */
   private def capHotTerms(spark: org.apache.spark.sql.SparkSession,
                           qTerms: DataFrame, dir: String,
-                          maxDfFrac: Double, v: IncLog.IncView): DataFrame = {
+                          maxDfFrac: Double, v: IndexStore.View): DataFrame = {
     if (maxDfFrac >= 1.0) return qTerms
     require(maxDfFrac > 0.0, "maxDfFrac must be in (0, 1]")
-    require(GenDir.existsLive(spark, s"$dir/stats"),
-      s"df cap requires the stats slice, missing at $dir")
     val n = totalsWith(spark, dir, v)._1
     val qTermSet = qTerms.select(col("term")).distinct()
-    val hitBuckets = qTermSet.select(termBucket(col("term")).as("pt"))
+    val hitBuckets = qTermSet.select(IndexStore.bucket(col("term")).as("pt"))
       .distinct().collect().map(_.getInt(0))
-    val hot = IncLog.readSlice(spark, dir, s"$dir/stats", v)
+    val hot = IndexStore.read(spark, dir, Bm25Stats, v)
       .filter(col("term_pt").isInCollection(hitBuckets.toSeq))
       .join(broadcast(qTermSet), "term")
       .groupBy(col("term")).agg(sum(col("df")).as("df"))
@@ -406,7 +260,20 @@ object Retrieval {
       .localCheckpoint(true)
   }
 
-  /** @param maxDfFrac skip query terms present in more than this
+  /** Top-`k` documents per query against a persisted index (see
+    * [[bm25BuildIndex]]) — row-identical to [[bm25TopK]] over the same
+    * corpus (the llm_bm25_index oracle reuses llm_bm25_topk's DuckDB twin
+    * verbatim to pin that).
+    *
+    * Scale shape: the query term set drives everything — its distinct
+    * term buckets (a bounded <= [[IndexStore.Buckets]] collect) prune the
+    * postings scan at the catalog level, the broadcast term semi-join
+    * drops non-query postings at the scan, df aggregates over only those
+    * pruned rows (exact: a bucket owns every posting of its terms), and
+    * ranking is the same map-capped TopKPerKey. The index side never
+    * shuffles corpus-sized data.
+    *
+    * @param maxDfFrac skip query terms present in more than this
     *        fraction of the corpus (default 1.0 = exact, no skipping).
     *        The capped ranking equals scoring with those terms deleted
     *        from the queries — the classic stopword-pruning
@@ -416,16 +283,16 @@ object Retrieval {
                       maxDfFrac: Double = 1.0): DataFrame = {
     val spark = queries.sparkSession
     import spark.implicits._
-    val v = IncLog.view(spark, dir) // ONE increment-log listing per call
+    val v = IndexStore.view(spark, dir) // ONE increment-log listing per call
     val qTerms = capHotTerms(spark,
       tokens(queries, "query_id", "qtext").distinct()
         .localCheckpoint(true), // feeds bucket collect, semi-join, scoring
       dir, maxDfFrac, v)
     val qTermSet = qTerms.select(col("term")).distinct()
-    // bounded by construction: <= TermBuckets distinct values
-    val hitBuckets = qTermSet.select(termBucket(col("term")).as("pt"))
+    // bounded by construction: <= IndexStore.Buckets distinct values
+    val hitBuckets = qTermSet.select(IndexStore.bucket(col("term")).as("pt"))
       .distinct().collect().map(_.getInt(0))
-    val postings = IncLog.readSlice(spark, dir, s"$dir/postings", v)
+    val postings = IndexStore.read(spark, dir, Postings, v)
       .filter(col("term_pt").isInCollection(hitBuckets.toSeq))
       .join(broadcast(qTermSet), "term")
       .select(col("doc_id"), col("term"), col("tf"))
@@ -475,18 +342,16 @@ object Retrieval {
     val spark = queries.sparkSession
     import spark.implicits._
     require(hotDfFrac > 0.0 && hotDfFrac <= 1.0, "hotDfFrac must be in (0, 1]")
-    require(GenDir.existsLive(spark, s"$dir/stats"),
-      s"max-score search requires the stats slice, missing at $dir")
-    val v = IncLog.view(spark, dir) // ONE increment-log listing per call
+    val v = IndexStore.view(spark, dir) // ONE increment-log listing per call
     val qTerms = tokens(queries, "query_id", "qtext").distinct()
       .localCheckpoint(true)
     val qTermSet = qTerms.select(col("term")).distinct()
-    val hitBuckets = qTermSet.select(termBucket(col("term")).as("pt"))
+    val hitBuckets = qTermSet.select(IndexStore.bucket(col("term")).as("pt"))
       .distinct().collect().map(_.getInt(0)).toSeq
     val n = totalsWith(spark, dir, v)._1
 
     // per-query-term stats — bounded collect (<= #query terms)
-    val termStats = IncLog.readSlice(spark, dir, s"$dir/stats", v)
+    val termStats = IndexStore.read(spark, dir, Bm25Stats, v)
       .filter(col("term_pt").isInCollection(hitBuckets))
       .join(broadcast(qTermSet), "term")
       .groupBy(col("term"))
@@ -507,7 +372,7 @@ object Retrieval {
 
     // phase 1: exact scoring over rare terms only
     val rareQTerms = qTerms.filter(!col("term").isInCollection(hotTerms))
-    val rarePostings = IncLog.readSlice(spark, dir, s"$dir/postings", v)
+    val rarePostings = IndexStore.read(spark, dir, Postings, v)
       .filter(col("term_pt").isInCollection(hitBuckets))
       .join(broadcast(rareQTerms.select(col("term")).distinct()), "term")
       .select(col("doc_id"), col("term"), col("tf"))
@@ -565,7 +430,7 @@ object Retrieval {
     val hotDfDf = hot.toSeq.map { case (t, (df, _)) => (t, df) }.toDF("term", "hdf")
     val candKeys = candidates
       .select(col("query_id").as("c_qid"), col("doc_id").as("c_did")).distinct()
-    val hotContrib = IncLog.readSlice(spark, dir, s"$dir/postings", v)
+    val hotContrib = IndexStore.read(spark, dir, Postings, v)
       .filter(col("term_pt").isInCollection(hitBuckets))
       .join(broadcast(hotQTerms), "term")
       .join(broadcast(candKeys),
@@ -651,123 +516,69 @@ object Retrieval {
     phraseRank(qTerms, posts, k)
   }
 
-  /** Per-term position counts (term, n_pos) of one build, batch
-    * increment or compacted generation, bucketed like the positions —
-    * what lets the selective search pick each phrase's RAREST term from
-    * a few bytes instead of counting a stopword's near-corpus-sized
-    * position list. Summed on read across generations and increments,
-    * regenerated by compact. */
+  /** Per-term position counts (term, n_pos), derived from the positions
+    * and bucketed like them — what lets the selective search pick each
+    * phrase's RAREST term from a few bytes instead of counting a
+    * stopword's near-corpus-sized position list. Summed on read. */
   private def writePhraseStats(pos: DataFrame, statsPath: String): Unit =
     pos.groupBy(col("term")).agg(count(lit(1)).as("n_pos"))
-      .withColumn("term_pt", termBucket(col("term")))
+      .withColumn("term_pt", IndexStore.bucket(col("term")))
       .repartition(col("term_pt")) // AQE-sized, see writeStats
       .sortWithinPartitions(col("term"))
       .write.mode("overwrite").partitionBy("term_pt").parquet(statsPath)
 
-  /** Build a persisted POSITIONAL index under `dir`: (term, doc_id,
-    * pos) in the same term-hash-bucketed, term-sorted layout as the
-    * BM25 postings — the artifact phrase search prunes instead of
+  private val Positions = IndexStore.Slice("positions", writeBucketed)
+  private val PhraseStats = IndexStore.Slice("stats", writePhraseStats, fold = None)
+
+  /** The positional index: `positions/` (term, doc_id, pos) in the BM25
+    * postings' term-bucketed, term-sorted layout, the derived `stats/`
+    * slice, and a constant meta — the artifact phrase search prunes instead of
     * re-tokenizing the corpus per query batch. Positions make it ~dl/|V|
-    * larger per document than the tf postings; deployments that never
-    * phrase-search skip building it. More documents join through
-    * [[phraseIndexAppendBatch]]. */
+    * larger per document than the tf postings. */
+  private val Phrase = IndexStore.Layout(Positions, Seq(PhraseStats))
+
+  private def positionRows(docs: DataFrame, textCol: String, idCol: String) =
+    positionalTokens(docs.select(col(idCol).as("doc_id"), col(textCol)),
+      "doc_id", textCol)
+
+  /** Build a persisted positional index under `dir`. More documents
+    * join through [[phraseIndexAppendBatch]]. */
   def phraseBuildIndex(docs: DataFrame, textCol: String, idCol: String,
                        dir: String): Unit =
-    buildPhrase(docs, textCol, idCol, dir)(())
+    buildPhrase(docs, textCol, idCol, dir, None)
 
-  /** The one build body of [[phraseBuildIndex]] and
-    * [[phraseBuildIndexBatch]]: reset the generation history AND
-    * increment log (see [[bm25BuildIndex]]), write stats, run
-    * `beforePositions`, then positions LAST as the commit marker
-    * (recover keys completeness on the positions directory): a crash
-    * before them reads as "no index" and re-builds — the reverse order
-    * would leave a recover-complete index missing its stats slice. */
   private def buildPhrase(docs: DataFrame, textCol: String, idCol: String,
-                          dir: String)(beforePositions: => Unit): Unit = {
-    val spark = docs.sparkSession
-    GenDir.resetAll(spark, s"$dir/positions", s"$dir/stats")
-    IncLog.reset(spark, dir, Seq(s"$dir/positions", s"$dir/stats"))
-    val pos = positionalTokens(docs.select(col(idCol).as("doc_id"), col(textCol)),
-        "doc_id", textCol)
-      .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
-    writePhraseStats(pos, s"$dir/stats")
-    beforePositions
-    writeBucketed(pos, s"$dir/positions")
-    pos.unpersist()
-  }
+                          dir: String, bootstrap: Option[(Long, String)]): Unit =
+    IndexStore.build(dir, Phrase, positionRows(docs, textCol, idCol), bootstrap)(
+      _ => IndexStore.commitOnly(docs.sparkSession))
 
   /** Bootstrap from a stream's FIRST batch, exactly once under
-    * redelivery ([[IncLog]]; the [[bm25BuildIndexBatch]] discipline
-    * with the phrase family's commit key): stats, then the batch's
-    * commit marker, then positions LAST — recover keys completeness on
-    * positions, so dying before positions replays as a clean rebuild
-    * (which resets the marker), and once positions land the marker
-    * makes [[phraseIndexAppendBatch]] skip the redelivered batch. No
-    * totals ride the marker — phrase ranking needs no corpus
-    * statistics. */
+    * redelivery (see [[bm25BuildIndexBatch]]). */
   def phraseBuildIndexBatch(docs: DataFrame, textCol: String, idCol: String,
                             dir: String, batchId: Long,
                             streamId: String = ""): Unit =
-    buildPhrase(docs, textCol, idCol, dir)(
-      IncLog.commitBootstrap(docs.sparkSession, dir, batchId, streamId))
+    buildPhrase(docs, textCol, idCol, dir, Some((batchId, streamId)))
 
-  /** Append one batch to a built positional index EXACTLY ONCE
-    * ([[IncLog]] — see [[bm25IndexAppendBatch]]): position and stats
-    * rows land as increment directories made visible by the atomic
-    * commit marker; a redelivered batch is skipped, so phrase counts
-    * never double. Returns false on the redelivery skip. */
+  /** Append one batch to a built positional index EXACTLY ONCE — a
+    * redelivered batch is skipped, so phrase counts never double.
+    * Returns false on the redelivery skip. */
   def phraseIndexAppendBatch(docs: DataFrame, textCol: String, idCol: String,
                              dir: String, batchId: Long,
-                             streamId: String = ""): Boolean = {
-    val spark = docs.sparkSession
-    if (IncLog.isApplied(spark, dir, batchId, streamId)) return false
-    val pos = positionalTokens(docs.select(col(idCol).as("doc_id"), col(textCol)),
-        "doc_id", textCol)
-      .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
-    // increments are invisible until the marker lands — order-free,
-    // overlapped writes over the persisted positions
-    Par.run(Seq(
-      () => writeBucketed(pos, IncLog.incPath(s"$dir/positions", batchId, streamId)),
-      () => writePhraseStats(pos, IncLog.incPath(s"$dir/stats", batchId, streamId))))
-    pos.unpersist()
-    IncLog.commitBatch(spark, dir, batchId, 0L, 0L, streamId)
-    true
-  }
+                             streamId: String = ""): Boolean =
+    IndexStore.appendBatch(docs.sparkSession, dir, Phrase, batchId, streamId)(
+      positionRows(docs, textCol, idCol))(_ => (0L, 0L))
 
-  /** Rewrite the positions back to the fresh-build layout after a run
-    * of appends (each append spreads every touched bucket over another
-    * file set). Lands as the next [[GenDir]] generation, so
-    * standing phrase queries run CONCURRENTLY with the compaction and
-    * flip atomically at the commit marker. Committed batch increments
-    * fold in and are GC'd one compaction late ([[IncLog]]). Search
-    * results are unchanged. */
+  /** Fold the appended batches into the next positions generation and
+    * regenerate the stats from it; search results are unchanged. */
   def phraseIndexCompact(spark: org.apache.spark.sql.SparkSession,
-                         dir: String): Unit = {
-    val v = IncLog.view(spark, dir)
-    val (w0, w, wGen) = IncLog.foldBounds(spark, dir, s"$dir/positions", v)
-    IncLog.foldSliceGen(spark, dir, s"$dir/positions", wGen, v)(writeBucketed)
-    // regenerate stats from the compacted positions (the
-    // bm25IndexCompact discipline)
-    GenDir.rewriteGen(spark, s"$dir/stats") { (_, next) =>
-      writePhraseStats(
-        spark.read.parquet(GenDir.live(spark, s"$dir/positions")), next)
-      IncLog.writeSliceFoldedThrough(spark, next, wGen)
-    }
-    IncLog.finishFold(spark, dir, Seq(s"$dir/positions", s"$dir/stats"),
-      v, w0, w)
-  }
+                         dir: String): Unit =
+    IndexStore.compact(spark, dir, Phrase)
 
-  /** Heal any interrupted compaction (see [[GenDir.recover]]) and
-    * report whether `dir` holds a positional index. */
+  /** Heal crash leftovers and report whether `dir` holds a complete
+    * positional index. */
   def phraseIndexRecover(spark: org.apache.spark.sql.SparkSession,
-                         dir: String): Boolean = {
-    GenDir.recover(spark, s"$dir/positions")
-    GenDir.recover(spark, s"$dir/stats")
-    // a build that died mid-positions leaves a torn directory: bare
-    // existence would bless it (the batch's data lost, its redelivery
-    // marker-skipped), so completeness demands the write FINISHED
-    GenDir.existsLiveComplete(spark, s"$dir/positions")
-  }
+                         dir: String): Boolean =
+    IndexStore.recover(spark, dir, Phrase)
 
   /** [[phraseTopK]] against a persisted positional index — row-identical
     * over the same corpus (the gated query reuses the ad-hoc oracle
@@ -775,14 +586,14 @@ object Retrieval {
     * bucket collect → catalog pruning → broadcast term semi-join. */
   def phraseSearchIndex(queries: DataFrame, dir: String, k: Int): DataFrame = {
     val spark = queries.sparkSession
-    val v = IncLog.view(spark, dir) // ONE increment-log listing per call
+    val v = IndexStore.view(spark, dir) // ONE increment-log listing per call
     val qTerms = positionalTokens(queries, "query_id", "qtext")
       .withColumnRenamed("pos", "off")
       .localCheckpoint(true)
     val qTermSet = qTerms.select(col("term")).distinct()
-    val hitBuckets = qTermSet.select(termBucket(col("term")).as("pt"))
+    val hitBuckets = qTermSet.select(IndexStore.bucket(col("term")).as("pt"))
       .distinct().collect().map(_.getInt(0))
-    val posts = IncLog.readSlice(spark, dir, s"$dir/positions", v)
+    val posts = IndexStore.read(spark, dir, Positions, v)
       .filter(col("term_pt").isInCollection(hitBuckets.toSeq))
       .join(broadcast(qTermSet), "term")
       .select(col("doc_id"), col("term"), col("pos"))
@@ -818,21 +629,19 @@ object Retrieval {
                                  maxCandBroadcast: Long = 2000000L): DataFrame = {
     val spark = queries.sparkSession
     import spark.implicits._
-    require(GenDir.existsLive(spark, s"$dir/stats"),
-      s"selective phrase search requires the stats slice, missing at $dir")
-    val v = IncLog.view(spark, dir) // ONE increment-log listing per call
+    val v = IndexStore.view(spark, dir) // ONE increment-log listing per call
     val qTerms = positionalTokens(queries, "query_id", "qtext")
       .withColumnRenamed("pos", "off")
       .localCheckpoint(true)
     // DRIVER JOB 1: the query batch's (query_id, term, bucket) pairs
     val qRows = qTerms
-      .select(col("query_id"), col("term"), termBucket(col("term")).as("pt"))
+      .select(col("query_id"), col("term"), IndexStore.bucket(col("term")).as("pt"))
       .distinct().as[(Long, String, Int)].collect()
     val termSeq = qRows.map(_._2).distinct.toSeq
     val hitBuckets = qRows.map(_._3).distinct.toSeq
     val qTermSet = termSeq.toDF("term") // local rows — no job to build
     // DRIVER JOB 2: the stats slice over the query vocabulary
-    val nPos = IncLog.readSlice(spark, dir, s"$dir/stats", v)
+    val nPos = IndexStore.read(spark, dir, PhraseStats, v)
       .filter(col("term_pt").isInCollection(hitBuckets))
       .join(broadcast(qTermSet), "term")
       .groupBy(col("term")).agg(sum(col("n_pos")).as("n_pos"))
@@ -848,7 +657,7 @@ object Retrieval {
     if (rarest.map { case (_, t) => nPos.getOrElse(t, 0L) }.sum >
         maxCandBroadcast)
       return phraseSearchIndex(queries, dir, k)
-    val posts = IncLog.readSlice(spark, dir, s"$dir/positions", v)
+    val posts = IndexStore.read(spark, dir, Positions, v)
       .filter(col("term_pt").isInCollection(hitBuckets))
       .join(broadcast(qTermSet), "term")
       .select(col("doc_id"), col("term"), col("pos"))
@@ -923,15 +732,15 @@ object Retrieval {
                           maxDfFrac: Double = 1.0): DataFrame = {
     val spark = queries.sparkSession
     import spark.implicits._
-    val v = IncLog.view(spark, dir) // ONE increment-log listing per call
+    val v = IndexStore.view(spark, dir) // ONE increment-log listing per call
     val qTerms = capHotTerms(spark,
       tokens(queries, "query_id", "qtext").distinct()
         .localCheckpoint(true),
       dir, maxDfFrac, v)
     val qTermSet = qTerms.select(col("term")).distinct()
-    val hitBuckets = qTermSet.select(termBucket(col("term")).as("pt"))
+    val hitBuckets = qTermSet.select(IndexStore.bucket(col("term")).as("pt"))
       .distinct().collect().map(_.getInt(0))
-    val postings = IncLog.readSlice(spark, dir, s"$dir/postings", v)
+    val postings = IndexStore.read(spark, dir, Postings, v)
       .filter(col("term_pt").isInCollection(hitBuckets.toSeq))
       .join(broadcast(qTermSet), "term")
       .select(col("doc_id"), col("term"), col("tf"), col("dl"))

@@ -529,38 +529,78 @@ object Similarity {
     * production shape: quantizer training and corpus assignment run ONCE
     * (the expensive pass over a 100-TB corpus), and every subsequent
     * query batch reads the index instead of re-scanning the corpus.
-    *
-    * Layout:
-    *  - `dir/centroids`: (cell INT, c ARRAY<DOUBLE>) — nlist rows; exact
-    *    doubles round-trip through parquet, so a loaded quantizer is
-    *    bit-identical to the trained one.
-    *  - `dir/cells`: (vec_id, cell, embedding, norm) range-partitioned
-    *    AND sorted by cell, so parquet row-group stats prune a probe of
-    *    few cells to few row groups — the partition-pruning story that
-    *    makes small query batches cheap against a huge corpus.
-    *
-    * Zero-norm vectors are dropped at build (cosine undefined), matching
-    * [[ivfKnn]]'s withNorm discipline. */
+    * Layout: see [[Ivf]]. */
   def ivfBuildIndex(emb: DataFrame, dir: String, nlist: Int = 16,
                     iters: Int = 10, maxTrain: Int = 65536): Unit = {
     val spark = emb.sparkSession
     import spark.implicits._
-    // fresh build starts the cell slice's generation history over
-    GenDir.resetAll(spark, s"$dir/cells")
     val centroids = trainIvfCentroids(emb, nlist, iters, maxTrain)
-    centroids.zipWithIndex
-      .map { case (c, i) => (i, c.toSeq) }
-      .toDF("cell", "c")
-      .coalesce(1)
-      .write.mode("overwrite").parquet(s"$dir/centroids")
-    val quantizer = graft.functions.NearestCellsFloat.quantizer(spark, centroids)
+    IndexStore.build(dir, Ivf, assignCells(emb, centroids))(_ =>
+      centroids.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toDF("cell", "c"))
+  }
+
+  /** Range-partition and sort a cell-keyed slice by cell, so parquet
+    * row-group stats prune a probe of few cells to few row groups; each
+    * batch's files carry their own tight cell stats. */
+  private def writeCells(rows: DataFrame, path: String): Unit =
+    rows.repartitionByRange(rows.sparkSession.sparkContext.defaultParallelism, col("cell"))
+      .sortWithinPartitions(col("cell"))
+      .write.mode("overwrite").parquet(path)
+
+  private val Cells = IndexStore.Slice("cells", writeCells)
+
+  /** The IVF index: `cells/` (vec_id, embedding, norm, cell) and meta,
+    * the frozen quantizer (cell INT, c ARRAY<DOUBLE>) — nlist rows; exact
+    * doubles round-trip through parquet, so a loaded quantizer is
+    * bit-identical to the trained one. */
+  private val Ivf = IndexStore.Layout(Cells)
+
+  /** Assign vectors to their nearest cell; zero-norm vectors are dropped
+    * (cosine undefined), matching [[ivfKnn]]'s withNorm discipline. */
+  private def assignCells(emb: DataFrame, centroids: Vector[Array[Double]]): DataFrame = {
+    val quantizer = graft.functions.NearestCellsFloat.quantizer(emb.sparkSession, centroids)
     withNorm(emb, "vec_id", "embedding", "norm")
       .select(col("vec_id"), col("embedding"), col("norm"),
         quantizer.nearestCells(col("embedding"), 1).getItem(0).as("cell"))
-      .repartitionByRange(spark.sparkContext.defaultParallelism, col("cell"))
-      .sortWithinPartitions(col("cell"))
-      .write.mode("overwrite").parquet(s"$dir/cells")
   }
+
+  /** The frozen quantizer of a persisted index: <= nlist rows — a
+    * bounded collect by construction. */
+  private def loadCentroids(spark: org.apache.spark.sql.SparkSession,
+                            dir: String): Vector[Array[Double]] =
+    IndexStore.meta(spark, dir)
+      .select(col("cell"), col("c"))
+      .collect()
+      .sortBy(_.getInt(0))
+      .map(_.getSeq[Double](1).toArray)
+      .toVector
+
+  /** Append new vectors to a persisted IVF index EXACTLY ONCE, assigned
+    * against the FROZEN quantizer (centroids unchanged, so existing cells
+    * and past search results stay valid; retrain drift by rebuilding).
+    * Returns false on the redelivery skip. */
+  def ivfIndexAppendBatch(emb: DataFrame, dir: String, batchId: Long,
+                          streamId: String = ""): Boolean = {
+    val spark = emb.sparkSession
+    IndexStore.appendBatch(spark, dir, Ivf, batchId, streamId) {
+      val centroids = loadCentroids(spark, dir)
+      require(centroids.nonEmpty, s"empty IVF index at $dir")
+      assignCells(emb, centroids)
+    }(_ => (0L, 0L))
+  }
+
+  /** Fold the appended batches into the next cell generation (one
+    * range-partitioned, cell-sorted file set); the quantizer is
+    * untouched and search results are unchanged. */
+  def ivfIndexCompact(spark: org.apache.spark.sql.SparkSession,
+                      dir: String): Unit =
+    IndexStore.compact(spark, dir, Ivf)
+
+  /** Heal crash leftovers and report whether `dir` holds a complete IVF
+    * index. */
+  def ivfIndexRecover(spark: org.apache.spark.sql.SparkSession,
+                      dir: String): Boolean =
+    IndexStore.recover(spark, dir, Ivf)
 
   /** Top-k cosine neighbors of `queries` against a persisted IVF index
     * (see [[ivfBuildIndex]]). Row-identical to running [[ivfKnn]] with
@@ -569,8 +609,8 @@ object Similarity {
     * reuses llm_ann_ivf's DuckDB twin verbatim.
     *
     * Scale shape, same discipline as [[ivfKnn]]:
-    *  - the quantizer loads from `dir/centroids` (<= nlist rows — a
-    *    bounded collect by construction) and probe assignment is the
+    *  - the quantizer loads from meta (<= nlist rows — a bounded
+    *    collect by construction) and probe assignment is the
     *    NearestCellsFloat codegen kernel;
     *  - when the distinct probed cells are few (a small query batch
     *    against a big index), an IN filter on `cell` pushes into the
@@ -581,81 +621,6 @@ object Similarity {
     *  - the scored-join volume is estimated exactly up front from the
     *    probe histogram x index cell histogram and the query side is
     *    hash-sharded sequentially under `shuffleBudgetBytes`. */
-  /** The frozen quantizer of a persisted index: <= nlist rows — a
-    * bounded collect by construction. */
-  private def loadCentroids(spark: org.apache.spark.sql.SparkSession,
-                            dir: String): Vector[Array[Double]] =
-    spark.read.parquet(s"$dir/centroids")
-      .select(col("cell"), col("c"))
-      .collect()
-      .sortBy(_.getInt(0))
-      .map(_.getSeq[Double](1).toArray)
-      .toVector
-
-  /** Append new vectors to a persisted IVF index: assign against the
-    * FROZEN quantizer (centroids unchanged, so existing cells and past
-    * search results stay valid; retrain drift by rebuilding), and write
-    * the new cell slices with the same range-partition + sort-by-cell
-    * discipline as [[ivfBuildIndex]] — appended files carry their own
-    * tight cell row-group stats, so sparse-probe pruning keeps skipping
-    * them too. The daily-embedding-ingest twin of
-    * [[Dedup.lshIndexAppend]]. Zero-norm vectors are dropped, matching
-    * build. */
-  def ivfIndexAppend(emb: DataFrame, dir: String): Unit = {
-    val spark = emb.sparkSession
-    val centroids = loadCentroids(spark, dir)
-    require(centroids.nonEmpty, s"empty IVF index at $dir")
-    val quantizer = graft.functions.NearestCellsFloat.quantizer(spark, centroids)
-    withNorm(emb, "vec_id", "embedding", "norm")
-      .select(col("vec_id"), col("embedding"), col("norm"),
-        quantizer.nearestCells(col("embedding"), 1).getItem(0).as("cell"))
-      .repartitionByRange(spark.sparkContext.defaultParallelism, col("cell"))
-      .sortWithinPartitions(col("cell"))
-      // into the CURRENT generation (single-writer contract) —
-      // committer v1 so a crash leaves the slice row-identical
-      .write.options(GenDir.V1AppendCommitter)
-      .mode("append").parquet(GenDir.live(spark, s"$dir/cells"))
-  }
-
-  /** Rewrite a cell-keyed index slice back to the fresh-build layout
-    * (one range-partitioned, cell-sorted file set): every append lays
-    * down its own parallelism-wide set of sorted files, so after N daily
-    * appends a probed cell's rows are spread over ~N file generations —
-    * the scan opens N times the files (and their footers) a fresh build
-    * would. Compaction is the operational close of the append loop:
-    * rewrite as the next [[GenDir]] generation, crash-safe AND
-    * concurrent with reads — standing searches keep resolving the
-    * previous generation until the commit marker lands. Search results
-    * are unchanged (same rows, same layout discipline); only the
-    * file-count/bytes-read profile resets to fresh-build shape. */
-  private def compactCellSlice(spark: org.apache.spark.sql.SparkSession,
-                               path: String): Unit =
-    GenDir.rewriteGen(spark, path) { (live, next) =>
-      spark.read.parquet(live)
-        .repartitionByRange(spark.sparkContext.defaultParallelism, col("cell"))
-        .sortWithinPartitions(col("cell"))
-        .write.mode("overwrite").parquet(next)
-    }
-
-  /** Compact a persisted IVF index's cell slices after a run of appends
-    * (see [[compactCellSlice]]); centroids are untouched. */
-  def ivfIndexCompact(spark: org.apache.spark.sql.SparkSession,
-                      dir: String): Unit =
-    compactCellSlice(spark, s"$dir/cells")
-
-  /** Heal any interrupted compaction and report whether `dir`
-    * holds a complete IVF index (centroids AND cells) — same bootstrap
-    * contract as [[Retrieval.bm25IndexRecover]]. */
-  def ivfIndexRecover(spark: org.apache.spark.sql.SparkSession,
-                      dir: String): Boolean = {
-    GenDir.recover(spark, s"$dir/cells")
-    // FINISHED writes only (GenDir.completeDir/existsLiveComplete): a
-    // build that died mid-write leaves torn directories that bare
-    // fs.exists would bless; both artifacts here are build-time-only
-    GenDir.completeDir(spark, s"$dir/centroids") &&
-      GenDir.existsLiveComplete(spark, s"$dir/cells")
-  }
-
   def ivfSearchIndex(queries: DataFrame, dir: String, k: Int, nprobe: Int = 4,
                      excludeSelf: Boolean = false,
                      shuffleBudgetBytes: Long = 32L << 30): DataFrame = {
@@ -670,7 +635,7 @@ object Similarity {
       .repartition(spark.sparkContext.defaultParallelism) // see ivfKnn note
       .localCheckpoint(true)
     val a = withNorm(queries, "vec_id", "embedding", "norm_a")
-    val index = spark.read.parquet(GenDir.live(spark, s"$dir/cells"))
+    val index = IndexStore.read(spark, dir, Cells)
     // distinct probed cells are <= nlist by construction, so this is a
     // bounded collect; pruning only pays when the probe set is sparse
     val probed = qCells.select(explode(col("probe_cells")).as("cell"))
@@ -1384,8 +1349,6 @@ object Similarity {
                       maxTrain: Int = 65536, residual: Boolean = true): Unit = {
     val spark = emb.sparkSession
     import spark.implicits._
-    // fresh build starts the code slice's generation history over
-    GenDir.resetAll(spark, s"$dir/codes")
     val sample = pqSampleNormalized(emb, maxTrain)
     val coarse = pqTrainCodebooksOn(sample, 1, nlist, iters)(0)
     val pqSample =
@@ -1394,19 +1357,25 @@ object Similarity {
     val pqCbs = pqTrainCodebooksOn(pqSample, m, ksub, iters)
     // kind 0 row = coarse codebook; kind 1 rows = PQ subspace s;
     // kind 2 row = params (nlist, m, ksub, residual flag) so search
-    // needs no inference. A 3-element params row (pre-residual index)
-    // reads as the raw form — appends and searches stay code-valid.
+    // needs no inference
     val metaRows = (0, 0, coarse.toSeq) +:
       (2, 0, Seq[Double](nlist, m, ksub, if (residual) 1.0 else 0.0)) +:
       pqCbs.toSeq.zipWithIndex.map { case (cb, s) => (1, s, cb.toSeq) }
-    metaRows.toDF("kind", "s", "flat").coalesce(1)
-      .write.mode("overwrite").parquet(s"$dir/codebooks")
-    ivfPqCorpusSide(emb, spark.sparkContext.broadcast(coarse),
-      spark.sparkContext.broadcast(pqCbs), m, residual)
+    IndexStore.build(dir, IvfPq, pqCodes(emb, coarse, pqCbs, residual))(_ =>
+      metaRows.toDF("kind", "s", "flat"))
+  }
+
+  private val Codes = IndexStore.Slice("codes", writeCells)
+
+  /** The IVFADC index: `codes/` (vec_id, cell, codes) and meta, the
+    * codebooks (coarse + per-subspace PQ, a handful of rows). */
+  private val IvfPq = IndexStore.Layout(Codes)
+
+  private def pqCodes(emb: DataFrame, coarse: Array[Double],
+                      pqCbs: Array[Array[Double]], residual: Boolean): DataFrame = {
+    val sc = emb.sparkSession.sparkContext
+    ivfPqCorpusSide(emb, sc.broadcast(coarse), sc.broadcast(pqCbs), pqCbs.length, residual)
       .select(col("neighbor_id").as("vec_id"), col("cell"), col("codes"))
-      .repartitionByRange(spark.sparkContext.defaultParallelism, col("cell"))
-      .sortWithinPartitions(col("cell"))
-      .write.mode("overwrite").parquet(s"$dir/codes")
   }
 
   /** Frozen codebooks + params of a persisted IVFADC index: 2 + m rows
@@ -1418,49 +1387,38 @@ object Similarity {
     * mis-gate the cell IN-pushdown. */
   private def loadPqCodebooks(spark: org.apache.spark.sql.SparkSession,
       dir: String): (Array[Double], Array[Array[Double]], Int, Int, Boolean) = {
-    val rows = spark.read.parquet(s"$dir/codebooks")
+    val rows = IndexStore.meta(spark, dir)
       .select(col("kind"), col("s"), col("flat")).collect()
     val coarse = rows.filter(_.getInt(0) == 0).head.getSeq[Double](2).toArray
     val pq = rows.filter(_.getInt(0) == 1).sortBy(_.getInt(1))
       .map(_.getSeq[Double](2).toArray)
     val params = rows.filter(_.getInt(0) == 2).head.getSeq[Double](2)
     require(coarse.nonEmpty && pq.nonEmpty, s"empty IVFADC index at $dir")
-    // 3-element params = pre-residual index (raw form)
-    val residual = params.length > 3 && params(3) == 1.0
-    (coarse, pq, params(2).toInt, params(0).toInt, residual)
+    (coarse, pq, params(2).toInt, params(0).toInt, params(3) == 1.0)
   }
 
-  /** Append vectors to a persisted IVFADC index against the FROZEN
-    * codebooks (cells and codes of existing rows stay valid; retrain
-    * drift by rebuilding) with the same range+sort discipline, so the
-    * appended files carry their own tight cell row-group stats. */
-  def ivfPqIndexAppend(emb: DataFrame, dir: String): Unit = {
+  /** Append vectors to a persisted IVFADC index EXACTLY ONCE against the
+    * FROZEN codebooks (cells and codes of existing rows stay valid;
+    * retrain drift by rebuilding). Returns false on the redelivery skip. */
+  def ivfPqIndexAppendBatch(emb: DataFrame, dir: String, batchId: Long,
+                            streamId: String = ""): Boolean = {
     val spark = emb.sparkSession
-    val (coarse, pqCbs, _, _, residual) = loadPqCodebooks(spark, dir)
-    ivfPqCorpusSide(emb, spark.sparkContext.broadcast(coarse),
-      spark.sparkContext.broadcast(pqCbs), pqCbs.length, residual)
-      .select(col("neighbor_id").as("vec_id"), col("cell"), col("codes"))
-      .repartitionByRange(spark.sparkContext.defaultParallelism, col("cell"))
-      .sortWithinPartitions(col("cell"))
-      // into the CURRENT generation (single-writer contract) —
-      // committer v1 so a crash leaves the slice row-identical
-      .write.options(GenDir.V1AppendCommitter)
-      .mode("append").parquet(GenDir.live(spark, s"$dir/codes"))
+    IndexStore.appendBatch(spark, dir, IvfPq, batchId, streamId) {
+      val (coarse, pqCbs, _, _, residual) = loadPqCodebooks(spark, dir)
+      pqCodes(emb, coarse, pqCbs, residual)
+    }(_ => (0L, 0L))
   }
 
-  /** Compact a persisted IVFADC index's code slices after a run of
-    * appends (see [[compactCellSlice]]); codebooks are untouched. */
+  /** Fold the appended batches into the next code generation; codebooks
+    * are untouched. */
   def ivfPqIndexCompact(spark: org.apache.spark.sql.SparkSession,
                         dir: String): Unit =
-    compactCellSlice(spark, s"$dir/codes")
+    IndexStore.compact(spark, dir, IvfPq)
 
-  /** [[ivfIndexRecover]] for an IVFADC index (codebooks AND codes). */
+  /** [[ivfIndexRecover]] for an IVFADC index. */
   def ivfPqIndexRecover(spark: org.apache.spark.sql.SparkSession,
-                        dir: String): Boolean = {
-    GenDir.recover(spark, s"$dir/codes")
-    GenDir.completeDir(spark, s"$dir/codebooks") &&
-      GenDir.existsLiveComplete(spark, s"$dir/codes")
-  }
+                        dir: String): Boolean =
+    IndexStore.recover(spark, dir, IvfPq)
 
   /** ADC top-k of `queries` against a persisted IVFADC index — row-
     * identical to [[ivfPqKnn]] with the same knobs when `queries` IS the
@@ -1478,7 +1436,7 @@ object Similarity {
       spark.sparkContext.broadcast(coarse),
       spark.sparkContext.broadcast(pqCbs), m, ksub, nprobe, residual)
       .localCheckpoint(true) // probed-cell collect must not re-run the kernel
-    val index = spark.read.parquet(GenDir.live(spark, s"$dir/codes"))
+    val index = IndexStore.read(spark, dir, Codes)
       .select(col("vec_id").as("neighbor_id"), col("cell"), col("codes"))
     // distinct probed cells are <= nlist by construction — bounded
     // collect; the IN filter pushes into the build-sorted codes scan

@@ -351,7 +351,7 @@ class PipelineCompiler(spark: SparkSession, cfg0: PipelineConfig) {
         // digest_index_path additionally drops every payload ANY prior
         // snapshot carried (the persisted digest index) — appending
         // the accepted snapshot's digests stays the ingest job's
-        // explicit step (Warc.digestIndexAppend), not a compile-time
+        // explicit step (Warc.digestIndexAppendBatch), not a compile-time
         // side effect
         return p(a, "digest_index_path") match {
           case Some(ip) =>

@@ -6,6 +6,8 @@ import java.util.zip.GZIPInputStream
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.llm.IndexStore
+
 /** WARC/WET container front door (ISO 28500): the raw-crawl reader a
   * pretraining pipeline starts from — CommonCrawl ships crawl data as
   * WARC (response records carrying HTTP payloads) and WET (conversion
@@ -302,25 +304,12 @@ object Warc {
     recs.filter(col("payload_digest") === "").unionByName(withDigest)
   }
 
-  // ---- persisted digest-dedup index (the seventh index family) -------
+  // ---- persisted digest-dedup index ----------------------------------
   //
   // [[dedupByDigest]] dedups WITHIN the loaded batch only; real crawls
   // dedup each monthly snapshot against ALL prior snapshots without
   // reloading them. The payload-digest SET is the smallest possible
-  // index payload (one short string per unique document body), carried
-  // under the same GenDir build/append/compact/recover
-  // discipline as the other six families.
-  //
-  // Layout under `dir`:
-  //  - `digests/` partitioned by `d_pt` = pmod(xxhash64(digest), 256):
-  //    (digest, snapshot) rows — snapshot is provenance only, dedup
-  //    keys on digest. Partition pruning lets a small batch read only
-  //    the buckets its own digests hash into.
-
-  private val DigestIdBuckets = 256
-
-  private def digestBucket(d: Column): Column =
-    pmod(xxhash64(d), lit(DigestIdBuckets)).cast("int")
+  // index payload (one short string per unique document body).
 
   /** Distinct non-empty digests of a record frame, bucketed for the
     * partitioned layout. */
@@ -329,63 +318,46 @@ object Warc {
       .select(col("payload_digest").as("digest"))
       .distinct()
       .select(col("digest"), lit(snapshot).as("snapshot"),
-        digestBucket(col("digest")).as("d_pt"))
+        IndexStore.bucket(col("digest")).as("d_pt"))
+
+  /** The digest index: `digests/` (digest, snapshot) partitioned by
+    * `d_pt` — snapshot is provenance only, dedup keys on digest, and
+    * partition pruning lets a small batch read only the buckets its own
+    * digests hash into — and a constant meta.
+    * Compaction collapses digests that several snapshots appended (keep
+    * the FIRST snapshot by sort — deterministic). */
+  private val Digests = IndexStore.Slice("digests", (rows, path) =>
+      rows.repartition(rows.sparkSession.sparkContext.defaultParallelism, col("d_pt"))
+        .write.mode("overwrite").partitionBy("d_pt").parquet(path),
+    fold = Some(_.groupBy(col("digest"), col("d_pt"))
+      .agg(min(col("snapshot")).as("snapshot"))))
+
+  private val DigestIndex = IndexStore.Layout(Digests)
 
   /** Fresh-build the digest index from a snapshot's records. */
   def digestIndexBuild(recs: DataFrame, dir: String,
-                       snapshot: String): Unit = {
-    val spark = recs.sparkSession
-    graft.llm.GenDir.resetAll(spark, s"$dir/digests")
-    digestRows(recs, snapshot)
-      .repartition(spark.sparkContext.defaultParallelism, col("d_pt"))
-      .write.mode("overwrite").partitionBy("d_pt")
-      .parquet(s"$dir/digests")
-  }
+                       snapshot: String): Unit =
+    IndexStore.build(dir, DigestIndex, digestRows(recs, snapshot))(_ =>
+      IndexStore.commitOnly(recs.sparkSession))
 
-  /** Append a new snapshot's digests into the live generation —
-    * normally the SURVIVORS of [[dedupByDigestIndexed]], so the index
-    * stays a set; cross-append repeats (two snapshots appended without
-    * dedup between) are tolerated and collapsed by the next
-    * [[digestIndexCompact]], and never change dedup semantics (an
-    * anti-join treats 1 and 2 copies alike). */
-  def digestIndexAppend(recs: DataFrame, dir: String,
-                        snapshot: String): Unit = {
-    val spark = recs.sparkSession
-    digestRows(recs, snapshot)
-      .repartition(spark.sparkContext.defaultParallelism, col("d_pt"))
-      // committer v1 on in-place appends — a crashed append must leave
-      // the slice row-identical (see [[graft.llm.GenDir.V1AppendCommitter]])
-      .write.options(graft.llm.GenDir.V1AppendCommitter)
-      .mode("append").partitionBy("d_pt")
-      .parquet(graft.llm.GenDir.live(spark, s"$dir/digests"))
-  }
+  /** Append a snapshot's digests EXACTLY ONCE — normally the SURVIVORS
+    * of [[dedupByDigestIndexed]], so the index stays a set. The snapshot
+    * name is the stream id: batch ids count within one snapshot. Returns
+    * false on the redelivery skip. */
+  def digestIndexAppendBatch(recs: DataFrame, dir: String, snapshot: String,
+                             batchId: Long): Boolean =
+    IndexStore.appendBatch(recs.sparkSession, dir, DigestIndex, batchId, snapshot)(
+      digestRows(recs, snapshot))(_ => (0L, 0L))
 
-  /** Rewrite the digest slice into the next generation, collapsing
-    * append-accumulated duplicate digests (keep the FIRST snapshot by
-    * sort — deterministic) and re-clustering small append files. A
-    * layout rewrite only: the digest SET is unchanged. */
-  def digestIndexCompact(spark: SparkSession, dir: String): Unit = {
-    val base = s"$dir/digests"
-    graft.llm.GenDir.recover(spark, base)
-    val fs = new org.apache.hadoop.fs.Path(base)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val live = graft.llm.GenDir.live(spark, base)
-    val next = graft.llm.GenDir.nextGenPath(fs,
-      new org.apache.hadoop.fs.Path(base))
-    spark.read.parquet(live)
-      .groupBy(col("digest"), col("d_pt"))
-      .agg(min(col("snapshot")).as("snapshot"))
-      .select(col("digest"), col("snapshot"), col("d_pt"))
-      .repartition(spark.sparkContext.defaultParallelism, col("d_pt"))
-      .write.mode("overwrite").partitionBy("d_pt").parquet(next.toString)
-    graft.llm.GenDir.commitGen(fs, next)
-    graft.llm.GenDir.gc(fs, new org.apache.hadoop.fs.Path(base))
-  }
+  /** Fold the appended snapshots into the next generation, collapsing
+    * repeated digests; the digest SET is unchanged. */
+  def digestIndexCompact(spark: SparkSession, dir: String): Unit =
+    IndexStore.compact(spark, dir, DigestIndex)
 
-  /** Heal crash leftovers (uncommitted generations) — call before
-    * trusting the index after a restart. */
-  def digestIndexRecover(spark: SparkSession, dir: String): Unit =
-    graft.llm.GenDir.recover(spark, s"$dir/digests")
+  /** Heal crash leftovers and report whether `dir` holds a complete
+    * digest index. */
+  def digestIndexRecover(spark: SparkSession, dir: String): Boolean =
+    IndexStore.recover(spark, dir, DigestIndex)
 
   /** [[dedupByDigest]] against the PERSISTED index: within-batch
     * first-copy dedup, then an anti-join that drops every record whose
@@ -398,17 +370,16 @@ object Warc {
     * billion-digest warehouse reads only its own buckets' slices; the
     * anti-join is one digest-keyed shuffle of (pruned index slice +
     * batch), the same cost class as the in-batch window. The caller
-    * appends the survivors' digests ([[digestIndexAppend]]) to close
+    * appends the survivors' digests ([[digestIndexAppendBatch]]) to close
     * the admission loop. */
   def dedupByDigestIndexed(recs: DataFrame, dir: String): DataFrame = {
     val spark = recs.sparkSession
     val inBatch = dedupByDigest(recs)
     val withDigest = inBatch.filter(col("payload_digest") =!= "")
-    val live = graft.llm.GenDir.live(spark, s"$dir/digests")
-    // bounded by construction: <= DigestIdBuckets distinct values
-    val pts = withDigest.select(digestBucket(col("payload_digest")))
+    // bounded by construction: <= IndexStore.Buckets distinct values
+    val pts = withDigest.select(IndexStore.bucket(col("payload_digest")))
       .distinct().collect().map(_.getInt(0))
-    val idx = spark.read.parquet(live)
+    val idx = IndexStore.read(spark, dir, Digests)
       .filter(col("d_pt").isin(pts.toIndexedSeq: _*))
       .select(col("digest"))
     val survivors = withDigest.join(idx,

@@ -21,9 +21,7 @@ class ReachabilitySpec extends AnyFunSuite {
     "src/main/scala/graft/functions/VectorFunctions.scala" ->
       "SimilaritySpec's reference implementation",
     "src/main/scala/graft/streaming/StatusMetrics.scala" ->
-      "reads the compiler's named streaming observations; ROADMAP item 4 wires it into Flowd",
-    "src/main/scala/graft/streaming/IndexIngest.scala" ->
-      "ROADMAP item 3's single exactly-once ingest")
+      "reads the compiler's named streaming observations; ROADMAP item 4 wires it into Flowd")
 
   /** `src` with comments, string literals and char literals blanked. */
   private def stripLiterals(src: String): String = {

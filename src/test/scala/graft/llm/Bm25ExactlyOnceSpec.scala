@@ -128,6 +128,18 @@ class Bm25ExactlyOnceSpec extends SparkSpec {
     assert(e2.getMessage.contains("torn meta"))
   }
 
+  test("a failing batch write releases its disk persist") {
+    val dir = freshDir()
+    Retrieval.bm25BuildIndex(b0, "text", "doc_id", dir)
+    // a regular file where the postings increments go: the batch's
+    // slice write throws inside the persisted section
+    fs.create(new org.apache.hadoop.fs.Path(s"$dir/postings.inc"), true).close()
+    val before = spark.sparkContext.getPersistentRDDs.size
+    intercept[Exception](Retrieval.bm25IndexAppendBatch(b1, "text", "doc_id", dir, 1L))
+    assert(spark.sparkContext.getPersistentRDDs.size == before,
+      "the failed append left its postings persisted")
+  }
+
   test("a plain build plus one append is no bootstrap: torn meta stays loud") {
     // one commit marker, nothing folded — the bootstrap's shape, but no
     // bootstrap record: rebuilding would discard the appended batch

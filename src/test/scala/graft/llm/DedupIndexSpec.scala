@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.SparkSpec
 
 /** Persisted LSH dedup index (Dedup.lshBuildIndex / lshIndexMatches /
-  * lshIndexAppend): the incremental batch-vs-corpus dedup loop. Expected
+  * lshIndexAppendBatch): the incremental batch-vs-corpus dedup loop. Expected
   * answers are brute-force word-shingle jaccard computed in plain Scala —
   * independent of every Spark-side expression under test. */
 class DedupIndexSpec extends SparkSpec {
@@ -66,7 +66,8 @@ class DedupIndexSpec extends SparkSpec {
     val dir = freshDir()
     val (first, second) = corpusDocs.splitAt(20)
     Dedup.lshBuildIndex(first.toDF("doc_id", "text"), "text", "doc_id", dir)
-    Dedup.lshIndexAppend(second.toDF("doc_id", "text"), "text", "doc_id", dir)
+    assert(Dedup.lshIndexAppendBatch(second.toDF("doc_id", "text"), "text", "doc_id", dir,
+      batchId = 1L))
     val got = Dedup.lshIndexMatches(batchDocs.toDF("doc_id", "text"),
         "text", "doc_id", dir, threshold = 0.5)
       .as[(Long, Long, Double)].collect().toSet
@@ -90,7 +91,7 @@ class DedupIndexSpec extends SparkSpec {
     Dedup.lshBuildIndex(corpusDocs.toDF("doc_id", "text"), "text", "doc_id", dir)
     val parts = new java.io.File(s"$dir/shingles").listFiles()
       .filter(_.getName.startsWith("id_pt=")).map(_.getName)
-    assert(parts.nonEmpty && parts.length <= Dedup.IndexIdBuckets)
+    assert(parts.nonEmpty && parts.length <= IndexStore.Buckets)
     // a single-bucket filter plans with a partition-pruned scan: only the
     // matching directory's files are read
     val one = spark.read.parquet(s"$dir/shingles")
@@ -142,16 +143,12 @@ class DedupIndexSpec extends SparkSpec {
     val dir = freshDir()
     val chunks = corpusDocs.grouped(10).toSeq
     Dedup.lshBuildIndex(chunks.head.toDF("doc_id", "text"), "text", "doc_id", dir)
-    chunks.tail.foreach(c =>
-      Dedup.lshIndexAppend(c.toDF("doc_id", "text"), "text", "doc_id", dir))
-    // post-compact the live slice is a GenDir generation — resolve it
-    // (.toUri.getPath strips the file: scheme for the java.nio walk)
-    def files(sub: String): Int = {
-      val root = java.nio.file.Paths.get(new org.apache.hadoop.fs.Path(
-        GenDir.live(spark, s"$dir/$sub")).toUri.getPath)
-      java.nio.file.Files.walk(root).filter(_.toString.endsWith(".parquet"))
-        .count().toInt
+    chunks.tail.zipWithIndex.foreach { case (c, b) =>
+      Dedup.lshIndexAppendBatch(c.toDF("doc_id", "text"), "text", "doc_id", dir, b.toLong)
     }
+    // the files a read opens: live generation + committed increments
+    def files(sub: String): Int = IncLog.readSlice(spark, dir, s"$dir/$sub",
+      IncLog.view(spark, dir)).inputFiles.length
     val before = Dedup.lshIndexMatches(batchDocs.toDF("doc_id", "text"),
       "text", "doc_id", dir, threshold = 0.5).as[(Long, Long, Double)].collect().toSet
     val (sh0, bd0) = (files("shingles"), files("bands"))
@@ -171,8 +168,9 @@ class DedupIndexSpec extends SparkSpec {
     val dir = freshDir()
     val chunks = corpusDocs.grouped(20).toSeq
     Dedup.lshBuildIndex(chunks.head.toDF("doc_id", "text"), "text", "doc_id", dir)
-    chunks.tail.foreach(c =>
-      Dedup.lshIndexAppend(c.toDF("doc_id", "text"), "text", "doc_id", dir))
+    chunks.tail.zipWithIndex.foreach { case (c, b) =>
+      Dedup.lshIndexAppendBatch(c.toDF("doc_id", "text"), "text", "doc_id", dir, b.toLong)
+    }
     def matches(): Set[(Long, Long, Double)] =
       Dedup.lshIndexMatches(batchDocs.toDF("doc_id", "text"),
         "text", "doc_id", dir, threshold = 0.5)
@@ -201,8 +199,8 @@ class DedupIndexSpec extends SparkSpec {
       "two-generation retention should have GC'd generation 0")
     assert(matches() == want)
     // append + match keep working against the generation layout
-    Dedup.lshIndexAppend(Seq((5000L, randomDoc(60))).toDF("doc_id", "text"),
-      "text", "doc_id", dir)
+    Dedup.lshIndexAppendBatch(Seq((5000L, randomDoc(60))).toDF("doc_id", "text"),
+      "text", "doc_id", dir, batchId = 9L)
     assert(matches() == want) // an unrelated append changes no match
   }
 

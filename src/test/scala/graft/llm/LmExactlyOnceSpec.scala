@@ -58,9 +58,9 @@ class LmExactlyOnceSpec extends SparkSpec {
     val want = score(dir)
     // a batch that died after its increment write but BEFORE the
     // marker: counts on disk, invisible to scorers
-    Seq(("a", 100L, 0)).toDF("gram", "c", "pt")
-      .write.mode("overwrite").partitionBy("pt")
-      .parquet(IncLog.incPath(s"$dir/grams_1", 9L))
+    Seq(("a", 100L, 1, 0)).toDF("gram", "c", "ord", "pt")
+      .write.mode("overwrite").partitionBy("ord", "pt")
+      .parquet(IncLog.incPath(s"$dir/grams", 9L))
     assert(score(dir) == want, "an uncommitted increment leaked into scoring")
     assert(Lm.lmIndexTotalsK(spark, dir) == ((8L, 3L)))
     // positive control: redelivery completes the batch (overwrite +
@@ -83,7 +83,7 @@ class LmExactlyOnceSpec extends SparkSpec {
     // folded increments survive THIS compaction (a reader mid-scan on
     // the previous generation still needs them) ...
     assert(fs.exists(new org.apache.hadoop.fs.Path(
-      IncLog.incPath(s"$dir/grams_1", 1L))))
+      IncLog.incPath(s"$dir/grams", 1L))))
     // ... and a redelivered FOLDED batch is still skipped (its marker
     // may be gone later; the summary watermark covers it)
     assert(!Lm.lmIndexAppendBatchK(b1, "text", "doc_id", dir, batchId = 1L))
@@ -91,7 +91,7 @@ class LmExactlyOnceSpec extends SparkSpec {
     // the NEXT compaction garbage-collects them
     Lm.lmIndexCompactK(spark, dir)
     assert(!fs.exists(new org.apache.hadoop.fs.Path(
-      IncLog.incPath(s"$dir/grams_1", 1L))))
+      IncLog.incPath(s"$dir/grams", 1L))))
     assert(!Lm.lmIndexAppendBatchK(b2, "text", "doc_id", dir, batchId = 2L))
     assert(score(dir) == want)
     // post-fold batches keep flowing
@@ -130,7 +130,7 @@ class LmExactlyOnceSpec extends SparkSpec {
     assert(e2.getMessage.contains("torn meta"))
     // a build that died mid-slice (torn grams, no meta): plain rebuild
     val torn = freshDir()
-    fs.mkdirs(new org.apache.hadoop.fs.Path(s"$torn/grams_1/_temporary"))
+    fs.mkdirs(new org.apache.hadoop.fs.Path(s"$torn/grams/_temporary"))
     assert(!Lm.lmIndexRecoverK(spark, torn))
   }
 
@@ -151,8 +151,8 @@ class LmExactlyOnceSpec extends SparkSpec {
     assert(Lm.lmIndexAppendBatchK(b1, "text", "doc_id", dir, batchId = 1L))
     val want = score(dir)
     Lm.lmIndexCompactK(spark, dir)
-    // simulate the compactor dying AFTER both slice generations folded
-    // (their _FOLDED_THROUGH = 1) but BEFORE the summary advanced: the
+    // simulate the compactor dying AFTER the slice generation folded
+    // (its _FOLDED_THROUGH = 1) but BEFORE the summary advanced: the
     // markers still carry the deltas, the generations skip the folded
     // increments — counts and totals must both stay exact
     fs.delete(new org.apache.hadoop.fs.Path(s"$dir/_commits/_folded"), false)

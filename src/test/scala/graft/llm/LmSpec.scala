@@ -164,19 +164,19 @@ class LmSpec extends SparkSpec {
     assert(score() == expected)
     val fs = org.apache.hadoop.fs.FileSystem.get(
       spark.sparkContext.hadoopConfiguration)
-    // a compaction MID-WRITE on the bigram slice: uncommitted garbage
+    // a compaction MID-WRITE on the count slice: uncommitted garbage
     // generation — scorers must never resolve it
-    val midWrite = new org.apache.hadoop.fs.Path(s"$dir/grams_2.gen-1")
+    val midWrite = new org.apache.hadoop.fs.Path(s"$dir/grams.gen-1")
     fs.mkdirs(midWrite)
     assert(score() == expected, "a scorer resolved an uncommitted generation")
     Lm.lmIndexCompactK(spark, dir)
     assert(score() == expected)
     assert(fs.exists(new org.apache.hadoop.fs.Path(
-      s"$dir/grams_2.gen-1/_GEN_COMMITTED")))
+      s"$dir/grams.gen-1/_GEN_COMMITTED")))
     // previous generation survives one compaction, GC'd by the next
-    assert(fs.exists(new org.apache.hadoop.fs.Path(s"$dir/grams_2")))
+    assert(fs.exists(new org.apache.hadoop.fs.Path(s"$dir/grams")))
     Lm.lmIndexCompactK(spark, dir)
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$dir/grams_2")),
+    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$dir/grams")),
       "two-generation retention should have GC'd generation 0")
     assert(score() == expected)
     // appends keep landing beside the current generation; reads still fold
@@ -270,10 +270,9 @@ class LmSpec extends SparkSpec {
     assert(rows(Lm.lmScoreIndexK(corpus5, "text", "doc_id", dir)) == expected5)
     val ord = spark.read.parquet(s"$dir/meta").head().getLong(2)
     assert((Lm.lmIndexTotalsK(spark, dir), ord) == (((10L, 2L), 5L))) // t, n_docs, order
-    // every order's slice folded to one generation per gram (the live
-    // post-compact slice is a GenDir generation — resolve it)
-    val unfolded = spark.read.parquet(GenDir.live(spark, s"$dir/grams_5"))
-      .groupBy($"gram").count().filter($"count" > 1).count()
+    // every order folded to one row per gram
+    val unfolded = IndexStore.read(spark, dir, Lm.LmModel.primary)
+      .filter($"ord" === 5).groupBy($"gram").count().filter($"count" > 1).count()
     assert(unfolded == 0, "compact left multiple generations per gram")
     // ad-hoc parity on the identical train split
     assert(rows(Lm.lmScoreK(train5, corpus5, "text", "doc_id", k = 5)) ==
@@ -292,7 +291,7 @@ class LmSpec extends SparkSpec {
       dir, k = 5)
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(s"$dir/grams_4"), true)
+    fs.delete(new org.apache.hadoop.fs.Path(s"$dir/grams"), true)
     assert(!Lm.lmIndexRecoverK(spark, dir))
     intercept[IllegalArgumentException] {
       Lm.lmScoreK(train, corpus, "text", "doc_id", k = 1)

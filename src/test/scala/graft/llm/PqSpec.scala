@@ -186,7 +186,7 @@ class PqSpec extends SparkSpec {
     // plant exact duplicates of vectors 0..9 under new ids 1000..1009
     val twins = emb.filter($"vec_id" < 10)
       .select(($"vec_id" + 1000L).as("vec_id"), $"embedding")
-    Similarity.ivfPqIndexAppend(twins, dir)
+    assert(Similarity.ivfPqIndexAppendBatch(twins, dir, batchId = 1L))
     // an exact twin shares the query's own code, and a query's own code
     // is the argmin of every subspace table — so the twin must surface
     // with the MINIMAL adc distance of that query's result set (ties

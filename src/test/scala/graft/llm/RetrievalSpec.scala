@@ -123,7 +123,7 @@ class RetrievalSpec extends SparkSpec {
     Retrieval.bm25BuildIndex(wide, "text", "doc_id", dir)
     val parts = new java.io.File(s"$dir/postings").listFiles()
       .filter(_.getName.startsWith("term_pt=")).map(_.getName)
-    assert(parts.length > 1 && parts.length <= Retrieval.TermBuckets)
+    assert(parts.length > 1 && parts.length <= IndexStore.Buckets)
 
     // one-term search: the postings scan carries a partition filter on
     // term_pt (catalog pruning), so only that bucket's files open

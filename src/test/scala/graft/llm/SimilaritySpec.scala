@@ -246,7 +246,7 @@ class SimilaritySpec extends SparkSpec {
     val first = emb.filter($"vec_id" < 50)
     val rest = emb.filter($"vec_id" >= 50)
     Similarity.ivfBuildIndex(first, dir, nlist = 8)
-    Similarity.ivfIndexAppend(rest, dir)
+    assert(Similarity.ivfIndexAppendBatch(rest, dir, batchId = 1L))
 
     // appended ids must appear on BOTH sides of the search
     val got = Similarity.ivfSearchIndex(emb, dir, k = 3, nprobe = 8,
@@ -270,14 +270,13 @@ class SimilaritySpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("graft-ivf-idx-").toString
     Similarity.ivfBuildIndex(emb.filter($"vec_id" < 40), dir, nlist = 8)
     // three append generations: each lays down its own sorted file set
-    Seq((40L, 60L), (60L, 80L), (80L, 100L)).foreach { case (lo, hi) =>
-      Similarity.ivfIndexAppend(emb.filter($"vec_id" >= lo && $"vec_id" < hi), dir)
+    Seq((40L, 60L), (60L, 80L), (80L, 100L)).zipWithIndex.foreach { case ((lo, hi), b) =>
+      Similarity.ivfIndexAppendBatch(emb.filter($"vec_id" >= lo && $"vec_id" < hi), dir,
+        batchId = b.toLong)
     }
-    // post-compact the live slice is a GenDir generation — resolve it
-    // (.toUri.getPath strips the file: scheme for java.io.File)
-    def cellFiles(): Int = new java.io.File(new org.apache.hadoop.fs.Path(
-        GenDir.live(spark, s"$dir/cells")).toUri.getPath).listFiles()
-      .count(f => f.getName.endsWith(".parquet"))
+    // the files an exhaustive search opens: live generation + increments
+    def cellFiles(): Int = Similarity.ivfSearchIndex(emb, dir, k = 3, nprobe = 8)
+      .inputFiles.count(_.endsWith(".parquet"))
     val before = Similarity.ivfSearchIndex(emb, dir, k = 3, nprobe = 3,
         excludeSelf = true).orderBy($"vec_id", $"rank").collect().toSeq
     val filesBefore = cellFiles()
@@ -303,7 +302,7 @@ class SimilaritySpec extends SparkSpec {
   test("IVF searches resolve generation N while N+1 is mid-write") {
     val dir = java.nio.file.Files.createTempDirectory("graft-ivf-gen-").toString
     Similarity.ivfBuildIndex(emb.filter($"vec_id" < 60), dir, nlist = 8)
-    Similarity.ivfIndexAppend(emb.filter($"vec_id" >= 60), dir)
+    Similarity.ivfIndexAppendBatch(emb.filter($"vec_id" >= 60), dir, batchId = 1L)
     def knn() = Similarity.ivfSearchIndex(emb, dir, k = 3, nprobe = 3,
       excludeSelf = true).orderBy($"vec_id", $"rank").collect().toSeq
     val want = knn()
@@ -332,12 +331,12 @@ class SimilaritySpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("graft-ivfpq-idx-").toString
     Similarity.ivfPqBuildIndex(emb.filter($"vec_id" < 50), dir,
       nlist = 8, m = 4, ksub = 8, iters = 2)
-    Seq((50L, 75L), (75L, 100L)).foreach { case (lo, hi) =>
-      Similarity.ivfPqIndexAppend(emb.filter($"vec_id" >= lo && $"vec_id" < hi), dir)
+    Seq((50L, 75L), (75L, 100L)).zipWithIndex.foreach { case ((lo, hi), b) =>
+      Similarity.ivfPqIndexAppendBatch(emb.filter($"vec_id" >= lo && $"vec_id" < hi), dir,
+        batchId = b.toLong)
     }
-    def codeFiles(): Int = new java.io.File(new org.apache.hadoop.fs.Path(
-        GenDir.live(spark, s"$dir/codes")).toUri.getPath).listFiles()
-      .count(f => f.getName.endsWith(".parquet"))
+    def codeFiles(): Int = Similarity.ivfPqSearchIndex(emb, dir, k = 3, nprobe = 8)
+      .inputFiles.count(_.endsWith(".parquet"))
     val before = Similarity.ivfPqSearchIndex(emb, dir, k = 3, nprobe = 8,
         excludeSelf = true).orderBy($"vec_id", $"rank").collect().toSeq
     val filesBefore = codeFiles()

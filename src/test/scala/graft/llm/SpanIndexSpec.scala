@@ -5,7 +5,7 @@ import java.nio.file.Files
 import graft.SparkSpec
 
 /** The persisted exact-substring index ([[Dedup.spanBuildIndex]] /
-  * `spanIndexMatches` / `spanIndexAppend`): planted-answer matching,
+  * `spanIndexMatches` / `spanIndexAppendBatch`): planted-answer matching,
   * corpus-only semantics (batch-internal dups invisible), novel-only
   * append convergence, and the append round-trip. */
 class SpanIndexSpec extends SparkSpec {
@@ -14,6 +14,9 @@ class SpanIndexSpec extends SparkSpec {
   private def uniq(tag: String, n: Int): String =
     (1 to n).map(i => s"u${tag}_$i").mkString(" ")
   private val shared = (1 to 12).map(i => s"s$i").mkString(" ")
+  /** Windows the index holds: live generation + committed increments. */
+  private def windows(dir: String): Long =
+    IndexStore.read(spark, dir, Dedup.Windows).count()
 
   test("matches report exactly the corpus-covered spans of a batch") {
     val dir = Files.createTempDirectory("graft-span-idx-spec-").toString
@@ -37,18 +40,18 @@ class SpanIndexSpec extends SparkSpec {
     val dir = Files.createTempDirectory("graft-span-idx-spec2-").toString
     val corpus = Seq((1L, uniq("c", 30))).toDF("doc_id", "text")
     Dedup.spanBuildIndex(corpus, "doc_id", "text", dir, w = 8)
-    val sizeAfterBuild = spark.read.parquet(s"$dir/windows").count()
+    val sizeAfterBuild = windows(dir)
     assert(sizeAfterBuild == 30 - 8 + 1)
 
     // re-appending the corpus itself adds NOTHING (novel-only)
-    Dedup.spanIndexAppend(corpus, "doc_id", "text", dir)
-    assert(spark.read.parquet(s"$dir/windows").count() == sizeAfterBuild)
+    assert(Dedup.spanIndexAppendBatch(corpus, "doc_id", "text", dir, batchId = 0L))
+    assert(windows(dir) == sizeAfterBuild)
 
     // batch1 carries a new run; before append the index cannot see it
     val batch1 = Seq((10L, s"${uniq("n", 3)} $shared")).toDF("doc_id", "text")
     assert(Dedup.spanIndexMatches(batch1, "doc_id", "text", dir).count() == 0)
-    Dedup.spanIndexAppend(batch1, "doc_id", "text", dir)
-    val sizeAfterBatch1 = spark.read.parquet(s"$dir/windows").count()
+    assert(Dedup.spanIndexAppendBatch(batch1, "doc_id", "text", dir, batchId = 1L))
+    val sizeAfterBatch1 = windows(dir)
     assert(sizeAfterBatch1 > sizeAfterBuild)
 
     // batch2 repeats batch1's run -> now flagged from the index alone
@@ -59,8 +62,8 @@ class SpanIndexSpec extends SparkSpec {
 
     // appending batch2 adds only its novel windows (the ones crossing
     // from the shared run into its unique tail)
-    Dedup.spanIndexAppend(batch2, "doc_id", "text", dir)
-    val sizeAfterBatch2 = spark.read.parquet(s"$dir/windows").count()
+    assert(Dedup.spanIndexAppendBatch(batch2, "doc_id", "text", dir, batchId = 2L))
+    val sizeAfterBatch2 = windows(dir)
     // batch2 has 18-8+1=11 windows, 5 fully inside the shared run are
     // already indexed (12-8+1), so 6 are novel
     assert(sizeAfterBatch2 == sizeAfterBatch1 + 6,
@@ -71,8 +74,8 @@ class SpanIndexSpec extends SparkSpec {
     val dir = Files.createTempDirectory("graft-span-idx-gen-").toString
     val corpus = Seq((1L, s"${uniq("c", 10)} $shared")).toDF("doc_id", "text")
     Dedup.spanBuildIndex(corpus, "doc_id", "text", dir, w = 8)
-    Dedup.spanIndexAppend(Seq((2L, uniq("g", 20))).toDF("doc_id", "text"),
-      "doc_id", "text", dir)
+    Dedup.spanIndexAppendBatch(Seq((2L, uniq("g", 20))).toDF("doc_id", "text"),
+      "doc_id", "text", dir, batchId = 1L)
     val batch = Seq((50L, s"$shared ${uniq("z", 4)}")).toDF("doc_id", "text")
     def matches(): Set[(Long, Long, Long, Long)] =
       Dedup.spanIndexMatches(batch, "doc_id", "text", dir)
@@ -102,20 +105,16 @@ class SpanIndexSpec extends SparkSpec {
     val corpus = Seq((1L, s"${uniq("c", 10)} $shared")).toDF("doc_id", "text")
     Dedup.spanBuildIndex(corpus, "doc_id", "text", dir, w = 8)
     (0 until 3).foreach { i =>
-      Dedup.spanIndexAppend(
+      Dedup.spanIndexAppendBatch(
         Seq((100L + i, uniq(s"g$i", 20))).toDF("doc_id", "text"),
-        "doc_id", "text", dir)
+        "doc_id", "text", dir, batchId = i.toLong)
     }
-    // post-compact the live slice is a GenDir generation — resolve it
-    // (.toUri.getPath strips the file: scheme for the java.nio walk)
-    def files(): Int = java.nio.file.Files.walk(
-        java.nio.file.Paths.get(new org.apache.hadoop.fs.Path(
-          GenDir.live(spark, s"$dir/windows")).toUri.getPath))
-      .filter(_.toString.endsWith(".parquet")).count().toInt
+    // the files a read opens: live generation + committed increments
+    def files(): Int = IndexStore.read(spark, dir, Dedup.Windows).inputFiles.length
     val batch = Seq((50L, s"$shared ${uniq("z", 4)}")).toDF("doc_id", "text")
     val before = Dedup.spanIndexMatches(batch, "doc_id", "text", dir)
       .as[(Long, Long, Long, Long)].collect().toSet
-    val rows0 = spark.read.parquet(s"$dir/windows").count()
+    val rows0 = windows(dir)
     val f0 = files()
 
     Dedup.spanIndexCompact(spark, dir)
@@ -123,8 +122,7 @@ class SpanIndexSpec extends SparkSpec {
     assert(Dedup.spanIndexMatches(batch, "doc_id", "text", dir)
       .as[(Long, Long, Long, Long)].collect().toSet == before)
     assert(before.nonEmpty)
-    assert(spark.read.parquet(
-      GenDir.live(spark, s"$dir/windows")).count() == rows0)
+    assert(windows(dir) == rows0)
     assert(files() < f0, s"compaction did not shrink: $f0 -> ${files()}")
     assert(Dedup.spanIndexParams(spark, dir) == 8)
   }

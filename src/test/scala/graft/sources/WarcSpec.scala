@@ -513,7 +513,7 @@ class WarcSpec extends SparkSpec {
     assert(kept1.count(_._2 == "") == 1) // rec 108 (the only i%9==0)
     // append survivors; re-running the same snapshot now drops every
     // digest-carrying row (exactly-once admission)
-    Warc.digestIndexAppend(s1, dir, "2026-08")
+    assert(Warc.digestIndexAppendBatch(s1, dir, "2026-08", batchId = 0L))
     val s2 = Warc.dedupByDigestIndexed(snapB, dir)
     assert(s2.filter($"payload_digest" =!= "").count() == 0)
     assert(s2.filter($"payload_digest" === "").count() == 1)
@@ -531,7 +531,7 @@ class WarcSpec extends SparkSpec {
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val torn = new org.apache.hadoop.fs.Path(s"$dir/digests.gen-99")
     fs.mkdirs(torn)
-    Warc.digestIndexRecover(spark, dir)
+    assert(Warc.digestIndexRecover(spark, dir))
     assert(!fs.exists(torn))
     assert(Warc.dedupByDigestIndexed(snapC, dir)
       .select($"payload_digest").as[String].collect().toSet == keptC)

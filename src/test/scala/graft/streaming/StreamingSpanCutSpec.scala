@@ -62,4 +62,32 @@ class StreamingSpanCutSpec extends SparkSpec {
     val applied = Dedup.applySpanCuts(probe, spans)
     assert(applied.count() == 0, "fully-historical doc must drop")
   }
+
+  test("a second run over the same index admits its text; a later batch cuts it") {
+    // each run takes a fresh checkpoint, so its batch ids restart at 0:
+    // the second run's batch 0 must not be mistaken for the first run's
+    val idx = java.nio.file.Files.createTempDirectory("graft-ssc-rerun-").toString
+    Dedup.spanBuildIndex(Seq((1L, uniq("c", 12))).toDF("doc_id", "text"),
+      "doc_id", "text", idx, w = 8)
+    def drain(batches: Seq[Seq[(Long, String)]]): Map[Long, String] = {
+      val srcDir = java.nio.file.Files.createTempDirectory("graft-ssc-rsrc-").toString
+      batches.foreach(b =>
+        b.toDF("doc_id", "text").coalesce(1).write.mode("append").parquet(srcDir))
+      val src = Streams.fileSource(spark, srcDir,
+        spark.read.parquet(srcDir).schema, maxFilesPerTrigger = Some(1))
+      val out = scala.collection.mutable.Map.empty[Long, String]
+      StreamingSpanCut.run(src, "text", "doc_id", idx,
+        (clean, _) => clean.as[(Long, String)].collect().foreach {
+          case (id, t) => out(id) = t
+        })
+      out.toMap
+    }
+    assert(drain(Seq(Seq((100L, uniq("first", 12))))) ==
+      Map(100L -> uniq("first", 12)))
+    val second = drain(Seq(
+      Seq((200L, uniq("second", 12))),                      // admitted
+      Seq((300L, s"${uniq("second", 12)} ${uniq("n", 9)}")))) // cut
+    assert(second(200L) == uniq("second", 12), second)
+    assert(second(300L) == uniq("n", 9), second)
+  }
 }
